@@ -105,7 +105,7 @@ final class Cube(
     * the superseded version and is never read again).
     */
   @volatile private var stateVersion: Long = 0L
-  private val cache = TrieMap[(Long, Seq[Long], Vector[Int]), Option[Double]]()
+  private val cache = new Cube.ResultCache[(Long, Seq[Long], Vector[Int]), Option[Double]]
 
   private[graft] def currentStateVersion: Long = stateVersion
 
@@ -908,8 +908,9 @@ final class Cube(
   private[core] def restorePayload(ids: Vector[Int], p: String): Unit =
     stateLock.synchronized { payloads = payloads.updated(ids, p) }
 
-  /** Cell read: base cells are point lookups (overlay first, then a
-    * pushed-down filter job); aggregated cells are closure-join rollups.
+  /** Cell read: base cells are point lookups (overlay first, then the
+    * driver point index, or a pushed-down filter job when the base is not
+    * persisted); aggregated cells are closure-join rollups.
     * Rules intercept per scope (≙ `cube.py:334-497`).
     */
   def get(address: Seq[String]): Option[Double] = getByBolt(bolt(address))
@@ -930,12 +931,7 @@ final class Cube(
       // under the OLD version, which no later read ever looks up — the
       // wholesale clear() on write is memory hygiene, not correctness.
       val key = (stateVersion, refCubeVersions, b.ids)
-      // hit-detection via the thunk flag can misreport under concurrent
-      // reads (TrieMap may discard a losing thread's computed value and
-      // return the winner's) — acceptable for driver-side observability;
-      // the returned VALUE is always consistent.
-      var hit = true
-      val r = cache.getOrElseUpdate(key, { hit = false; compute })
+      val (r, hit) = cache.getOrElseUpdate(key, compute)
       if (hit) bump(3)
       r
     }
@@ -943,72 +939,114 @@ final class Cube(
 
   // ---- driver-resident point index ---------------------------------------
 
-  /** Base-cell point index: the reference's in-process dict
-    * (`facttable.py:146-170` answers point reads from a Python dict in
-    * O(1)), made an EXPLICIT opt-in here because on Spark the base frame is
-    * distributed — a driver map only exists if someone pays a bounded
-    * collect for it. Mirrors the `base` frame ONLY: overlay writes/deletes
-    * are consulted BEFORE the index (so in-session writes read correctly
-    * with no invalidation), and any bulk base swap changes the `base`
-    * frame's object identity, which the read-side `eq` check detects — a
-    * stale index can never serve. At 100 TB this is a HOT-CUBE accelerator
-    * (a summary cube, a scratch cube, the working set), never the full
-    * fact table; the cap refuses to build past `cap` cells rather than
-    * silently ballooning the driver (~250 B/entry at 8 dims).
+  /** Base-cell point index ([[PointIndex]]): the reference answers a base
+    * cell from an in-process dict (`facttable.py:146-170`); here the first
+    * base read of a PERSISTED base frame of at most [[Cube.PointIndexCap]]
+    * cells collects that frame into a sorted driver index, and every later
+    * base read is a binary search — no Spark job. The build is
+    * single-flight: concurrent readers wait on [[pointIdxBuildLock]], while
+    * writers never do (the build runs outside [[stateLock]]). A refusal —
+    * over the cap, or [[disablePointIndex]] — is remembered for that frame,
+    * so a 1e8-cell cube counts itself once. Unpersisted bases (as-of
+    * snapshots, store- and table-backed bases, streaming merges) keep the
+    * pushed-down filter job: collecting them would re-read their source.
+    *
+    * The index mirrors the `base` frame ONLY: overlay writes/deletes are
+    * consulted BEFORE it (in-session writes read correctly with no
+    * invalidation), and a bulk base swap changes the frame's object
+    * identity, which the read-side `eq` check detects — a stale index can
+    * never serve. Two base rows at one address fail the build loudly.
+    *
+    * `pointIdxBase` names the frame the index state belongs to;
+    * `pointIdx == null` there means refused. Both under [[stateLock]].
     */
-  private var pointIdx: java.util.HashMap[Vector[Int], java.lang.Double] = null
+  private var pointIdx: PointIndex = null
   private var pointIdxBase: DataFrame = null
+  private val pointIdxBuildLock = new Object
+  private val pointIdxBuilds = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Build (or refresh) the point index if the base holds ≤ `cap` cells;
-    * returns whether the index is in place. Idempotent while the base is
-    * unchanged. */
-  def enablePointIndex(cap: Long = 2000000L): Boolean = {
+  /** Point-index builds attempted on this cube (each runs one count job). */
+  private[graft] def pointIndexBuilds: Int = pointIdxBuilds.get
+
+  /** Bytes the point index holds (0 when none is in place). */
+  private[graft] def pointIndexBytes: Long = stateLock.synchronized {
+    if (pointIdx != null && (pointIdxBase eq base)) pointIdx.byteSize else 0L
+  }
+
+  /** Build (or refresh) the point index if the base holds ≤ `cap` cells,
+    * whatever its storage level; returns whether the index is in place.
+    * Idempotent while the base is unchanged. Base reads build it on their
+    * own for persisted bases — this is for unpersisted bases and for
+    * timing a build. */
+  def enablePointIndex(cap: Long = Cube.PointIndexCap): Boolean = {
     val b = stateLock.synchronized {
       if (pointIdx != null && (pointIdxBase eq base)) return true
       base
     }
-    if (b.count() > cap) return false
-    val rows = b.select((dimCols.map(col) :+ col("value").cast(DoubleType)): _*)
-      .collect()
-    val m = new java.util.HashMap[Vector[Int], java.lang.Double](rows.length * 2)
-    rows.foreach { r =>
-      if (!r.isNullAt(nDims))
-        m.put(Vector.tabulate(nDims)(r.getInt), r.getDouble(nDims))
+    pointIdxBuildLock.synchronized {
+      if (!pointIndexEnabled) buildPointIndex(b, cap)
     }
-    stateLock.synchronized {
-      if (base eq b) { pointIdx = m; pointIdxBase = b; true }
-      else false // base swapped mid-build: refuse rather than serve stale
-    }
+    pointIndexEnabled
   }
 
   def pointIndexEnabled: Boolean = stateLock.synchronized {
     pointIdx != null && (pointIdxBase eq base)
   }
 
-  /** Drop the point index (reads fall back to base-frame jobs); the next
-    * [[enablePointIndex]] re-collects — the re-timing lever for benchmarks
-    * and the release valve for a driver under memory pressure. */
+  /** Drop the point index and keep base reads of the current frame on the
+    * filter job; the next [[enablePointIndex]] re-collects — the re-timing
+    * lever for benchmarks and the release valve for a driver under memory
+    * pressure. */
   def disablePointIndex(): Unit = stateLock.synchronized {
-    pointIdx = null; pointIdxBase = null
+    pointIdx = null; pointIdxBase = base
   }
 
+  /** Count, then collect `b` unless it holds more than `cap` cells; install
+    * the outcome (index or refusal) if `b` is still the base. Callers hold
+    * [[pointIdxBuildLock]]. */
+  private def buildPointIndex(b: DataFrame, cap: Long): PointIndex = {
+    pointIdxBuilds.incrementAndGet()
+    val idx =
+      if (b.count() > cap) null
+      else PointIndex.collect(b, nDims, ids => ids.indices.map { i =>
+        scala.util.Try(dimAt(i).nameOf(ids(i))).getOrElse(s"#${ids(i)}")
+      }.mkString("[", ", ", s"] of cube '$name'"))
+    stateLock.synchronized {
+      if (base eq b) { pointIdx = idx; pointIdxBase = b }
+    }
+    idx
+  }
+
+  /** The index over `b` for a base read, building it first if `b` is
+    * persisted and no outcome is recorded for it; null → filter job. */
+  private def autoPointIndex(b: DataFrame): PointIndex =
+    if (b.storageLevel == org.apache.spark.storage.StorageLevel.NONE) null
+    else pointIdxBuildLock.synchronized {
+      stateLock.synchronized(if (pointIdxBase eq b) Some(pointIdx) else None)
+        .getOrElse(buildPointIndex(b, Cube.PointIndexCap))
+    }
+
   private def pointRead(ids: Vector[Int]): Option[Double] = {
-    // snapshot overlay-hit-or-index-or-base under the lock; the filter job
-    // (if any) then runs lock-free on the immutable base frame
-    val snapshot: Either[Option[Double], DataFrame] = stateLock.synchronized {
+    // snapshot overlay-hit-or-index-or-base under the lock; an index build
+    // or the filter job then runs lock-free on the immutable base frame
+    val snapshot: Either[Option[Double], (DataFrame, Boolean)] = stateLock.synchronized {
       overlay.get(ids) match {
         case Some(v) => Left(v)
-        case None if pointIdx != null && (pointIdxBase eq base) =>
-          Left(Option(pointIdx.get(ids)).map(_.doubleValue))
-        case None => Right(base)
+        case None if pointIdxBase eq base =>
+          if (pointIdx != null) Left(pointIdx.get(ids)) else Right((base, false))
+        case None => Right((base, true))
       }
     }
     snapshot match {
       case Left(v) => v
-      case Right(b) =>
-        val pred = dimCols.zip(ids).map { case (c, id) => col(c) === id }.reduce(_ && _)
-        b.filter(pred).select(col("value").cast(DoubleType))
-          .collect().headOption.map(_.getDouble(0))
+      case Right((b, mayIndex)) =>
+        val idx = if (mayIndex) autoPointIndex(b) else null
+        if (idx != null) idx.get(ids)
+        else {
+          val pred = dimCols.zip(ids).map { case (c, id) => col(c) === id }.reduce(_ && _)
+          b.filter(pred).select(col("value").cast(DoubleType))
+            .collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+        }
     }
   }
 
@@ -1209,4 +1247,32 @@ object Cube {
       base: DataFrame,
       overlay: scala.collection.immutable.HashMap[Vector[Int], Option[Double]],
       payloads: scala.collection.immutable.HashMap[Vector[Int], String])
+
+  /** Largest base frame (in cells) the driver point index will hold. */
+  val PointIndexCap: Long = 2000000L
+
+  /** The result cache: a `TrieMap` plus an entry counter, so the bound
+    * check on every cached read is O(1) — `TrieMap.size` snapshots and
+    * counts the whole map. The count is approximate under races (two
+    * readers computing one key both count it; a clear racing an insert
+    * may drop one): it only drives the wholesale eviction bound.
+    */
+  private[core] final class ResultCache[K, V] {
+    private val map = TrieMap[K, V]()
+    private val entries = new java.util.concurrent.atomic.AtomicInteger
+    def size: Int = entries.get
+    def clear(): Unit = { map.clear(); entries.set(0) }
+
+    /** The value for `k`, computing it on a miss, and whether it was a hit.
+      * Hit detection can misreport under concurrent reads (TrieMap may
+      * discard a losing thread's computed value and return the winner's) —
+      * acceptable for driver-side observability; the returned VALUE is
+      * always consistent. */
+    def getOrElseUpdate(k: K, v: => V): (V, Boolean) = {
+      var hit = true
+      val r = map.getOrElseUpdate(k, { hit = false; v })
+      if (!hit) entries.incrementAndGet()
+      (r, hit)
+    }
+  }
 }

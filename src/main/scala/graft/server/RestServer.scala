@@ -55,6 +55,14 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
   private val dbMap = databases.map(d => d.name.toLowerCase -> d).toMap
   private val locks = databases.map(d =>
     d.name.toLowerCase -> new ReentrantReadWriteLock()).toMap
+  // TCP_NODELAY on every accepted connection: the JDK server writes a
+  // response's headers and body as separate segments, and with Nagle on
+  // the body waits up to 40 ms for the client's delayed ACK of the
+  // headers. The JDK reads this property once per JVM (ServerConfig's
+  // static init, at the first HttpServer.create) and defaults it to false,
+  // so it must be set before that; it then holds for every server in the
+  // JVM.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(
     new java.net.InetSocketAddress("127.0.0.1", port), 0)
   @volatile private var started = false
@@ -216,12 +224,13 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
 
     server.createContext("/cells", (ex: HttpExchange) => handle(ex) {
       segments(ex) match {
-        // batched reads: ONE Spark job resolves every base-cell address
-        // (broadcast the address list against the merged facts, one
-        // per-address aggregation) — a per-cell HTTP loop can never
+        // batched reads: ONE Spark job resolves every distinct base-cell
+        // address (broadcast the address list against the merged facts,
+        // one per-address aggregation) — a per-cell HTTP loop can never
         // amortize the per-request floor, so the engine-native shape
-        // (Cube.readBatch's join) gets its own route. Addresses naming
-        // AGGREGATED members fall back to per-address rollup gets.
+        // (Cube.readBatch's join) gets its own route. Each address listed
+        // more than once is read once and answers every listing. Addresses
+        // naming AGGREGATED members fall back to per-address rollup gets.
         case Seq("cells", dbName, cubeName, "batch")
             if ex.getRequestMethod == "POST" =>
           implicit val fmts: Formats = DefaultFormats
@@ -244,7 +253,7 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
               val s = c.spark
               val addrDf = s.createDataFrame(
                 s.sparkContext.parallelize(
-                  baseIdx.map(x => org.apache.spark.sql.Row.fromSeq(x._1)), 1),
+                  baseIdx.map(_._1).distinct.map(org.apache.spark.sql.Row.fromSeq), 1),
                 org.apache.spark.sql.types.StructType(c.dimCols.map(n =>
                   org.apache.spark.sql.types.StructField(n,
                     org.apache.spark.sql.types.IntegerType))))

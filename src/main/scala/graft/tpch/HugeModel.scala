@@ -51,7 +51,7 @@ object HugeModel {
     persisted.remove(s"huge-$rows").foreach(_.unpersist(blocking))
   }
 
-  /** 100^k as a long literal column (packed-generator digit extraction). */
+  /** 100^k as a long literal column (the packed grouping key's digit weights). */
   private def pow100(k: Int) =
     lit(Seq.fill(k)(100L).foldLeft(1L)(_ * _))
 
@@ -89,22 +89,16 @@ object HugeModel {
     */
   private[graft] def factsFrame(spark: SparkSession, rows: Long): DataFrame = {
     // leaf ids are 1..100 ("All" gets id 0 as the first-created member).
-    // Generator variants + input-slice width are env-tunable for the GC
+    // Input-slice width and storage level are env-tunable for the GC
     // experiments the 1e8 rows drive (r16 verdict #5) — the default stays
     // the measured-best configuration; see ARCHITECTURE §6e.
-    //  - SPARK_GRAFT_HUGE_GEN=packed: 2 xxhash64 calls per row, 4 dims
-    //    decoded from each by base-100 digits (vs 8 independent hashes)
     //  - SPARK_GRAFT_HUGE_SLICES=n: explicit range slices (map-side agg
     //    hash tables shrink as rows/slices)
     //  - SPARK_GRAFT_HUGE_PERSIST=MEMORY_AND_DISK_SER|OFF_HEAP|...
-    // digit_i ∈ [0, 99] per dimension — the SAME hash digits under either
-    // generator; d_i = digit_i + 1 everywhere below
-    val digitCols: Seq[Column] =
-      if (sys.env.get("SPARK_GRAFT_HUGE_GEN").contains("packed")) {
-        val h = Array(xxhash64(col("id")), xxhash64(col("id"), lit(1)))
-        (0 until NDims).map(i => pmod(h(i / 4) / pow100(i % 4), lit(LeavesPerDim.toLong)))
-      } else (0 until NDims).map(i =>
-        pmod(xxhash64(col("id"), lit(i)), lit(LeavesPerDim.toLong)))
+    // digit_i ∈ [0, 99] per dimension, one xxhash64 per dimension;
+    // d_i = digit_i + 1 everywhere below
+    val digitCols: Seq[Column] = (0 until NDims).map(i =>
+      pmod(xxhash64(col("id"), lit(i)), lit(LeavesPerDim.toLong)))
     val range = sys.env.get("SPARK_GRAFT_HUGE_SLICES").map(_.toInt) match {
       case Some(n) => spark.range(0, rows, 1, n)
       case None => spark.range(rows)
@@ -177,10 +171,12 @@ object HugeModel {
   /** Name-addressed point-read loop against the cube API — the reference's
     * literal benchmark shape (`samples/huge.py:134-157`: a Python loop of
     * `cube[name, …]` dict hits). With the cube's driver-resident point
-    * index enabled ([[graft.core.Cube.enablePointIndex]]) each read is a
-    * name→id bolt resolve + one hash probe, no Spark job — the apples-to-
-    * apples answer to the reference's 100k reads/s. Without the index this
-    * loop would pay a filter JOB per cell; callers must enable it first.
+    * index in place ([[graft.core.Cube.enablePointIndex]]; base reads of
+    * the persisted huge model build it on their own) each read is a
+    * name→id bolt resolve + one binary search, no Spark job — the apples-
+    * to-apples answer to the reference's 100k reads/s. Without the index
+    * this loop would pay a filter JOB per cell, so it requires the index
+    * to be in place first (callers enable it to keep the build untimed).
     * Returns the number of non-empty cells (self-check: > 0).
     */
   def pointReadLoop(cube: Cube, n: Int): Long =

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *                                              pass
   *   Test/runMain graft.Profile huge8 [build|zstore|both] [passes]
   *                                              1e8 variant harness (env:
-  *                                              SPARK_GRAFT_HUGE_GEN/SLICES/
+  *                                              SPARK_GRAFT_HUGE_SLICES/
   *                                              PERSIST, SPARK_GRAFT_OFFHEAP,
   *                                              SPARK_GRAFT_HUGE8_ROWS)
   *
@@ -236,7 +236,7 @@ object Profile {
           println(f"[huge8] $name ${(System.nanoTime() - t0) / 1e9}%8.2f s " +
             f"gc=${gcMs - g0} ms")
         }
-        val variant = Seq("SPARK_GRAFT_HUGE_GEN", "SPARK_GRAFT_HUGE_SLICES",
+        val variant = Seq("SPARK_GRAFT_HUGE_SLICES",
           "SPARK_GRAFT_HUGE_PERSIST", "SPARK_GRAFT_OFFHEAP", "SPARK_GRAFT_HUGE_GROUP")
           .flatMap(k => sys.env.get(k).map(v => s"$k=$v")).mkString(" ") match {
           case "" => "baseline"; case s => s

@@ -120,6 +120,52 @@ class RestServerSpec extends AnyFunSuite {
       .statusCode() == 400)
   }
 
+  test("a batch listing an address more than once answers every listing like Cube.get") {
+    val c = db.cube("sales")
+    c.set(Seq("2022", "Mar", "West", "coupe", "Sales"), 12.5)
+    val baseA = List("2022", "Mar", "West", "coupe", "Sales")
+    val aggA = List("All years", "Q1", "Total", "Total", "Sales")
+    val listed = List(baseA, aggA, baseA, aggA, baseA)
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    val r = post("/cells/tiny/sales/batch", compact(render("addresses" -> listed)))
+    assert(r.statusCode() == 200, r.body())
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val values = (parse(r.body()) \ "cells").extract[List[org.json4s.JValue]]
+      .map(cell => (cell \ "value").extractOpt[Double])
+    assert(values == listed.map(c.get(_)), "each listing reads its cell once")
+    assert(values.head.contains(12.5))
+  }
+
+  test("indexed GET /cells answers under the 40 ms delayed-ACK floor") {
+    // a dedicated database+server: compact() persists the base, so base
+    // reads serve from the driver point index instead of Spark jobs
+    val db2 = TinyModel.build(spark)
+    val c = db2.cube("sales")
+    val months = Seq("Jan", "Feb", "Mar", "Apr", "Mai", "Jun", "Jul", "Aug", "Sep", "Oct")
+    val addrs = for (y <- Seq("2021", "2022", "2023"); m <- months)
+      yield Seq(y, m, "North", "sedan", "Sales")
+    addrs.zipWithIndex.foreach { case (a, i) => c.set(a, i + 0.5) }
+    assert(c.compact())
+    val srv = new RestServer(Seq(db2)).start()
+    try {
+      def read(a: Seq[String]) = req(java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+        s"http://127.0.0.1:${srv.boundPort}/cells/tiny/sales?address=${a.mkString(",")}")))
+      // warm-up on other cells: builds the index, JIT-compiles the route
+      (0 until 5).foreach(i => read(Seq("2021", months(i), "South", "van", "Cost")))
+      assert(c.pointIndexEnabled)
+      val ms = addrs.zipWithIndex.map { case (a, i) =>
+        val t0 = System.nanoTime()
+        val r = read(a)
+        val dt = (System.nanoTime() - t0) / 1e6
+        assert(r.statusCode() == 200 && r.body().contains(s"${i + 0.5}"), r.body())
+        dt
+      }.sorted
+      assert(ms.size == 30)
+      assert(ms(15) < 30.0, s"median ${ms(15)} ms over 30 sequential reads: ${ms.mkString(", ")}")
+    } finally srv.stop()
+  }
+
   test("dialect query route returns rows as JSON records") {
     val sql = "SELECT * FROM sales WHERE '2021', 'Jan', North, 'motorcycles', 'Sales'"
     val r = post("/query/tiny", sql)

@@ -2,84 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the round-12 additions around the driver-resident point index
-  * ([[graft.core.Cube.enablePointIndex]]): indexed reads must be
-  * indistinguishable from the filter-job path, overlay writes/deletes must
-  * keep precedence, bulk base swaps must invalidate by frame identity, and
-  * the cap must refuse rather than balloon the driver.
+/** Pins the round-12 text normalization function
+  * ([[graft.functions.NormalizeText]]); the round's point-index tests live
+  * in [[PointIndexSpec]].
   */
 class Round12FixesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  private def freshCube(tag: String) = {
-    val db = TinyModel.build(spark)
-    val c = db.cube("sales")
-    val cube = new graft.core.Cube(s"sales_$tag", c.dimensions, spark, Some(c.facts))
-    cube.set(Seq("2021", "Jan", "North", "motorcycles", "Sales"), 123.0)
-    cube.set(Seq("2021", "Feb", "North", "sedan", "Sales"), 456.0)
-    cube
-  }
-
-  test("point index serves base cells identically to the filter-job path") {
-    val cube = freshCube("pidx")
-    val present = Seq("2021", "Jan", "North", "motorcycles", "Sales")
-    val absent = Seq("2023", "Dec", "East", "van", "Cost")
-    cube.cacheEnabled = false
-    // compact the overlay into base first (the index mirrors `base` only),
-    // then read both cells through the FILTER-JOB path as the baseline
-    cube.replaceFacts(cube.facts)
-    val jobPresent = cube.get(present)
-    val jobAbsent = cube.get(absent)
-    assert(cube.enablePointIndex())
-    assert(cube.pointIndexEnabled)
-    assert(cube.get(present) == jobPresent && jobPresent.contains(123.0))
-    assert(cube.get(absent) == jobAbsent && jobAbsent.isEmpty)
-    // aggregates still roll up through the normal path, seeing indexed data
-    assert(cube.get(Seq("2021", "Q1", "Total", "Total", "Sales"))
-      .contains(123.0 + 456.0))
-  }
-
-  test("overlay writes and deletes take precedence over the index") {
-    val cube = freshCube("pidxw")
-    cube.cacheEnabled = false
-    assert(cube.enablePointIndex())
-    val a = Seq("2021", "Jan", "North", "motorcycles", "Sales")
-    cube.set(a, 999.0) // overlay upsert AFTER the index was built
-    assert(cube.get(a).contains(999.0),
-      "an in-session write must shadow the indexed base value")
-    cube.delete(a)
-    assert(cube.get(a).isEmpty,
-      "an in-session delete must shadow the indexed base value")
-    // the index itself is still in place — base never changed identity
-    assert(cube.pointIndexEnabled)
-    val b = Seq("2021", "Feb", "North", "sedan", "Sales")
-    assert(cube.get(b).contains(456.0))
-  }
-
-  test("a bulk base swap invalidates the index by frame identity") {
-    val cube = freshCube("pidxb")
-    cube.cacheEnabled = false
-    cube.replaceFacts(cube.facts)
-    assert(cube.enablePointIndex())
-    assert(cube.pointIndexEnabled)
-    // bulk-replace with a frame holding ONE cell at a new value: a stale
-    // index would still answer 123.0 / 456.0
-    val one = cube.facts.limit(0).sparkSession.createDataFrame(
-      spark.sparkContext.parallelize(List(org.apache.spark.sql.Row(
-        cube.dimensions(0).idOf("2021"), cube.dimensions(1).idOf("Jan"),
-        cube.dimensions(2).idOf("North"), cube.dimensions(3).idOf("motorcycles"),
-        cube.dimensions(4).idOf("Sales"), 7.0)), 1),
-      cube.facts.schema)
-    cube.replaceFacts(one)
-    assert(!cube.pointIndexEnabled, "a base swap must invalidate the index")
-    assert(cube.get(Seq("2021", "Jan", "North", "motorcycles", "Sales"))
-      .contains(7.0))
-    assert(cube.get(Seq("2021", "Feb", "North", "sedan", "Sales")).isEmpty)
-    // rebuilding over the new base serves the new world
-    assert(cube.enablePointIndex())
-    assert(cube.get(Seq("2021", "Jan", "North", "motorcycles", "Sales"))
-      .contains(7.0))
-  }
 
   test("NormalizeText: NFC unifies composed/decomposed, folds accents+case, stays codegen") {
     import org.apache.spark.sql.functions._
@@ -102,16 +30,5 @@ class Round12FixesSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.treeString
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       s"normalization must not plan as a UDF:\n$plan")
-  }
-
-  test("the cap refuses to build; reads fall back to the job path") {
-    val cube = freshCube("pidxc")
-    cube.cacheEnabled = false
-    cube.replaceFacts(cube.facts)
-    assert(!cube.enablePointIndex(cap = 1L),
-      "a base larger than the cap must refuse to index")
-    assert(!cube.pointIndexEnabled)
-    assert(cube.get(Seq("2021", "Jan", "North", "motorcycles", "Sales"))
-      .contains(123.0))
   }
 }
