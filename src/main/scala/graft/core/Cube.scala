@@ -33,9 +33,11 @@ object CellValue {
 /** An N-dimensional cube (≙ `cube.py:65`): an ordered list of [[Dimension]]s
   * plus a fact DataFrame with schema `(d0:Int, …, dN-1:Int, value:Double)`
   * holding base-level cells only. Aggregated cells are computed on read as
-  * broadcast closure-join + weighted sum — the Spark-native replacement for
-  * the reference's write-time ancestor inverted index (`cube.py:542-549`):
-  * fan-out happens at join time on executors, not at write time.
+  * closure-join + weighted sum — the Spark-native replacement for the
+  * reference's write-time ancestor inverted index (`cube.py:542-549`):
+  * fan-out happens at read time, on executors through broadcast joins, or
+  * in one driver pass over the point index for a working-set cube
+  * ([[gridAggregate]]), not at write time.
   *
   * Writes land in a driver-side overlay (point upserts/deletes) merged into
   * the fact frame lazily; `compact()` materializes. Any write invalidates the
@@ -196,18 +198,21 @@ final class Cube(
   private[graft] def rules: Vector[graft.olap.RuleDef] = rulesVec
 
   /** Read-path counters (≙ `cube.py:183-207`): requests, rule evaluations,
-    * aggregation jobs, cache hits, weighted aggregations (rollups whose
-    * plan carried a non-unit closure weight factor, ≙ `cube.py:198`).
-    * Driver-side observability only.
+    * aggregated cell reads, cache hits, weighted aggregations (rollups whose
+    * plan carried a non-unit closure weight factor, ≙ `cube.py:198`), and
+    * grids — scalar rollups included — that the driver kernel served
+    * instead of a Spark job ([[gridAggregate]]). Driver-side observability
+    * only.
     */
-  private val counters = new java.util.concurrent.atomic.AtomicLongArray(5)
+  private val counters = new java.util.concurrent.atomic.AtomicLongArray(6)
   private def bump(i: Int): Unit = { counters.incrementAndGet(i); () }
   def counterCellRequests: Long = counters.get(0)
   def counterRuleRequests: Long = counters.get(1)
   def counterAggregations: Long = counters.get(2)
   def counterCacheHits: Long = counters.get(3)
   def counterWeightedAggregations: Long = counters.get(4)
-  def resetCounters(): Unit = (0 until 5).foreach(counters.set(_, 0L))
+  def counterDriverAggregations: Long = counters.get(5)
+  def resetCounters(): Unit = (0 until counters.length).foreach(counters.set(_, 0L))
 
   private var historyOpt: Option[History] = None
   /** Per-cell comments (≙ `comments.py`); keyed by idx address. */
@@ -294,7 +299,8 @@ final class Cube(
     * is decimal so weighted sums stay EXACT (order-independent).
     */
   private[graft] def weightExpr: Column =
-    if (decimalValues) col("weight").cast("decimal(10,4)") else col("weight")
+    if (decimalValues) col("weight").cast(DecimalType(DriverGrid.WeightPrecision, DriverGrid.WeightScale))
+    else col("weight")
 
   private[graft] def needsWeight(i: Int): Boolean = !unitWeightDim(i)
 
@@ -326,7 +332,10 @@ final class Cube(
     * snapshot taken under the state lock; the returned frame is immutable,
     * so jobs planned from it run lock-free.
     */
-  def facts: DataFrame = stateLock.synchronized {
+  def facts: DataFrame = stateLock.synchronized(factsOf(base, overlay))
+
+  private def factsOf(base: DataFrame,
+      overlay: scala.collection.immutable.HashMap[Vector[Int], Option[Double]]): DataFrame =
     if (overlay.isEmpty) base
     else {
       val rows = overlay.toSeq.map { case (ids, v) =>
@@ -341,7 +350,6 @@ final class Cube(
       base.join(broadcast(deltaCast.select(dimCols.map(col): _*)), dimCols, "left_anti")
         .unionByName(deltaCast.filter(col("value").isNotNull))
     }
-  }
 
   /** RAW bulk swap of the fact frame — a hook-BYPASSING primitive, on
     * purpose: every in-package caller (Area transforms/copies/enumeration,
@@ -1050,107 +1058,208 @@ final class Cube(
     }
   }
 
-  /** Weighted rollup of one aggregated cell: per aggregated dimension a
-    * broadcast closure join contributes its weight; leaf dimensions are plain
-    * pushed-down filters (≙ `cube.py:440-497` + `facttable.py:190-231`).
+  /** Weighted rollup of one aggregated cell (≙ `cube.py:440-497` +
+    * `facttable.py:190-231`): the one-cell grid of [[gridAggregate]] over
+    * one-member selections, read from whichever path answered it.
     */
   private def rollup(ids: Vector[Int]): Option[Double] = {
-    var df = facts
-    var weightCols = List.empty[Column]
-    ids.zipWithIndex.foreach { case (id, i) =>
-      if (dimensions(i).isDegenerate) {
-        // leaf = pushed-down filter on the raw key; the "all" rollup needs
-        // NO closure (and none exists) — just don't filter this dimension
-        if (id != Dimension.DegenerateAllId) df = df.filter(col(s"d$i") === id)
-      } else if (dimensions(i).levelOf(id) == 0) {
-        df = df.filter(col(s"d$i") === id)
-      } else if (dimensions(i).coversAllLeavesUnit(id)) {
-        // identity rollup (full coverage at unit weight — the top `All`):
-        // the closure join would match every row exactly once with weight
-        // 1, so skip it. Contract: facts addressing members REMOVED from
-        // the catalog are undefined until purgeUnknownMembers()
-        // (ARCHITECTURE §1) — the join was never a reliable orphan filter,
-        // since leaf point reads don't closure-join either.
-      } else {
-        val cl = closureDf(i).filter(col("anc") === id)
-          .select(col("leaf").as(s"leaf_$i"), weightExpr.as(s"w_$i"))
-        df = df.join(broadcast(cl), col(s"d$i") === col(s"leaf_$i"))
-        if (needsWeight(i)) weightCols ::= col(s"w_$i")
-      }
+    val sels = ids.map(Seq(_))
+    val kinds = gridKinds(sels)
+    if ((0 until nDims).exists(i => kinds(i) == Cube.GridClosure && needsWeight(i))) bump(4)
+    grid(sels, kinds, identity) match {
+      case Right((g, _)) => if (g.present(0)) Some(g.doubleValue(0)) else None
+      case Left(df) =>
+        df.collect().find(r => ids.indices.forall(i => !r.isNullAt(i) && r.getInt(i) == ids(i)))
+          .flatMap(r => Option(r.get(nDims)).map {
+            case d: java.lang.Double => d.doubleValue()
+            case bd: java.math.BigDecimal => bd.doubleValue()
+          })
     }
-    if (weightCols.nonEmpty) bump(4)
-    val weighted = weightCols.foldLeft(col("value"))(_ * _)
-    df.agg(sum(weighted)).collect().headOption.flatMap(r => Option(r.get(0)).map {
-      case d: java.lang.Double => d.doubleValue()
-      case bd: java.math.BigDecimal => bd.doubleValue()
-    })
   }
 
-  // ---- batched grid aggregation (views / query dialect) -------------------
+  // ---- grid aggregation (cells, views, query dialect) ---------------------
 
-  /** One Spark job computing a whole grid of aggregated cells: for each
-    * dimension a list of requested members (leaf or aggregated, mixed). The
-    * result has one row per non-empty address combination with columns
+  /** A whole grid of aggregated cells: for each dimension a list of
+    * requested members (leaf or aggregated, mixed). The result has one row
+    * per non-empty address combination with columns
     * `(a0:Int, …, aN-1:Int, value)` where `a_i` is the requested member id.
     *
     * This replaces the reference's per-cell loop (`query.py:101-136`,
-    * `view.py:769-911`) with a single Catalyst-planned job: per dimension one
-    * broadcast join against the closure subset (fan-out = matching ancestors),
-    * then one hash aggregation. At scale this shuffles once, on the grid keys.
+    * `view.py:769-911`) with one pass over the facts, on one of two paths
+    * that answer identically (same rows, same schema):
+    *  - the DRIVER KERNEL ([[DriverGrid]]) scans the base frame's
+    *    [[PointIndex]] plus the overlay and returns a local relation. It
+    *    serves a grid when the base is indexable by the rule that governs
+    *    base reads (persisted, at most [[Cube.PointIndexCap]] cells; the
+    *    first use builds the index), no dimension is degenerate, the grid
+    *    has at most [[DriverGrid.MaxCells]] cells, `valueExpr` is the
+    *    identity, and the sums can be made exact (double values, or decimal
+    *    values with at most one weighted closure join, no null-valued base
+    *    row and no overflow). At working-set size a scan of ~200k indexed
+    *    cells takes milliseconds, where planning and scheduling a job costs
+    *    hundreds.
+    *  - otherwise ONE Catalyst-planned Spark job: per dimension one
+    *    broadcast join against the closure subset (fan-out = matching
+    *    ancestors), then one hash aggregation — at scale it shuffles once,
+    *    on the grid keys.
+    * [[counterDriverAggregations]] counts the grids the kernel served.
     */
   def gridAggregate(selections: Seq[Seq[Int]], valueExpr: Column => Column = identity): DataFrame = {
     require(selections.length == nDims)
+    grid(selections, gridKinds(selections), valueExpr) match {
+      case Left(df) => df
+      case Right((g, schema)) =>
+        val rows = new java.util.ArrayList[Row]()
+        var c = 0
+        while (c < g.present.length) {
+          if (g.present(c)) rows.add(Row.fromSeq(g.key(c).toSeq.map(Int.box) :+ g.value(c)))
+          c += 1
+        }
+        spark.createDataFrame(rows, schema)
+    }
+  }
+
+  /** How each dimension enters a grid — decided once, for the Spark plan
+    * and the driver kernel alike: raw keys of a degenerate dimension;
+    * leaves (a filter, or none when the selection is every leaf); the
+    * identity rollup (full unit coverage, the top `All`: no join, constant
+    * key); or a broadcast closure join. */
+  private def gridKinds(selections: Seq[Seq[Int]]): Array[Int] = Array.tabulate(nDims) { i =>
+    val sel = selections(i)
+    val d = dimAt(i)
+    if (d.isDegenerate) {
+      require(!(sel.contains(Dimension.DegenerateAllId) ||
+          sel.contains(Dimension.DegenerateLeafAllId)) || sel.size == 1,
+        s"degenerate dimension '${d.name}': the all-member / " +
+          "leaf-all sentinels cannot be mixed with raw keys in one grid selection")
+      Cube.GridRaw
+    } else if (sel.forall(d.levelOf(_) == 0)) {
+      val leaves = d.leafMembers
+      if (sel.size == leaves.size && sel.toSet == leaves.map(_.id).toSet) Cube.GridAllLeaves
+      else Cube.GridLeaves
+    } else if (sel.size == 1 && d.coversAllLeavesUnit(sel.head)) Cube.GridIdentity
+    else Cube.GridClosure
+  }
+
+  /** The grid over ONE (base, overlay) snapshot: the driver kernel's answer
+    * (with the schema the Spark plan would have) when it can give one, else
+    * the Spark plan. The snapshot is taken under [[stateLock]]; the index
+    * build and the kernel run lock-free. */
+  private def grid(selections: Seq[Seq[Int]], kinds: Array[Int],
+      valueExpr: Column => Column): Either[DataFrame, (DriverGrid.Result, StructType)] = {
+    val (b, ov, known, idx0) = stateLock.synchronized((base, overlay, pointIdxBase eq base, pointIdx))
+    val served = driverPlan(selections, kinds, valueExpr, b).flatMap { case (axes, decimal, resultPrecision) =>
+      val idx = if (known) idx0 else autoPointIndex(b)
+      if (idx == null || idx.nullRows > 0) None
+      else DriverGrid.run(idx, ov, axes, decimal, resultPrecision).map { r =>
+        val keyFields = (0 until nDims).map { i =>
+          val f = b.schema(s"d$i")
+          kinds(i) match {
+            case Cube.GridIdentity => StructField(s"a$i", IntegerType, nullable = false)
+            case Cube.GridClosure => StructField(s"a$i", IntegerType)
+            case _ => StructField(s"a$i", IntegerType, f.nullable || ov.nonEmpty, f.metadata)
+          }
+        }
+        val vt = if (decimal.isEmpty) DoubleType else DecimalType(resultPrecision, r.scale)
+        (r, StructType(keyFields :+ StructField("value", vt)))
+      }
+    }
+    served match {
+      case Some(g) => bump(5); Right(g)
+      case None => Left(sparkGrid(factsOf(b, ov), selections, kinds, valueExpr))
+    }
+  }
+
+  /** The kernel's axes for a grid it may answer, with the decimal
+    * `(precision, scale)` of the value field and the precision of Spark's
+    * sum type; None sends the grid to the Spark plan. A decimal cube with
+    * two weighted joins goes to Spark: there the product type exceeds 38
+    * digits and Spark rounds. */
+  private def driverPlan(selections: Seq[Seq[Int]], kinds: Array[Int], valueExpr: Column => Column,
+      b: DataFrame): Option[(Array[DriverGrid.Axis], Option[(Int, Int)], Int)] = {
+    val members = selections.map(_.distinct.toArray)
+    val schema = b.schema
+    val vt = schema("value").dataType
+    val nWeighted = (0 until nDims).count(i => kinds(i) == Cube.GridClosure && needsWeight(i))
+    val numeric: Option[(Option[(Int, Int)], Int)] = vt match {
+      case DoubleType => Some((None, 0))
+      case d: DecimalType if nWeighted == 0 =>
+        Some((Some((d.precision, d.scale)), math.min(38, d.precision + 10)))
+      case d: DecimalType if nWeighted == 1 && d.precision + DriverGrid.WeightPrecision + 1 <= 38 =>
+        Some((Some((d.precision, d.scale)), math.min(38, d.precision + DriverGrid.WeightPrecision + 11)))
+      case _ => None
+    }
+    if (kinds.contains(Cube.GridRaw) || vt != valueField.dataType ||
+        members.foldLeft(1L)(_ * _.length) > DriverGrid.MaxCells ||
+        dimCols.exists(c => schema(c).dataType != IntegerType) ||
+        valueExpr(col("value")) != col("value")) None
+    else numeric.map { case (decimal, resultPrecision) =>
+      val axes = Array.tabulate(nDims) { i =>
+        val ms = members(i)
+        kinds(i) match {
+          case Cube.GridIdentity => DriverGrid.Axis.identity(ms.head)
+          case Cube.GridClosure =>
+            val slot = ms.zipWithIndex.toMap
+            DriverGrid.Axis(ms, dimAt(i).closureRows.flatMap(r => slot.get(r.anc).map((r.leaf, _, r.weight))),
+              weighted = needsWeight(i), strict = false)
+          case kind =>
+            DriverGrid.Axis(ms, ms.indices.map(k => (ms(k), k, 1.0)),
+              weighted = false, strict = kind == Cube.GridAllLeaves)
+        }
+      }
+      (axes, decimal, resultPrecision)
+    }
+  }
+
+  /** The grid as one Spark job over `facts`. */
+  private def sparkGrid(facts: DataFrame, selections: Seq[Seq[Int]], kinds: Array[Int],
+      valueExpr: Column => Column): DataFrame = {
     var df = facts
     var weightCols = List.empty[Column]
-    val outCols = mutable.ArrayBuffer[Column]()
     selections.zipWithIndex.foreach { case (sel, i) =>
-      if (dimensions(i).isDegenerate) {
-        // raw keys: pushed-down filter, group key = the fact column itself.
-        // The "all" member: no filter, constant group key — never a closure.
-        // The leaf-all sentinel: no filter, FULL resolution (the summary-
-        // build shape — the key space cannot be enumerated driver-side).
-        require(!(sel.contains(Dimension.DegenerateAllId) ||
-            sel.contains(Dimension.DegenerateLeafAllId)) || sel.size == 1,
-          s"degenerate dimension '${dimensions(i).name}': the all-member / " +
-            "leaf-all sentinels cannot be mixed with raw keys in one grid selection")
-        if (sel == Seq(Dimension.DegenerateAllId)) {
-          df = df.withColumn(s"a$i", lit(Dimension.DegenerateAllId))
-        } else if (sel == Seq(Dimension.DegenerateLeafAllId)) {
-          df = df.withColumn(s"a$i", col(s"d$i"))
-        } else {
-          df = if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
-               else df.filter(col(s"d$i").isin(sel: _*))
-          df = df.withColumn(s"a$i", col(s"d$i"))
-        }
-        outCols += col(s"a$i")
-      } else {
-        val allLeaf = sel.forall(dimensions(i).levelOf(_) == 0)
-        if (allLeaf) {
+      kinds(i) match {
+        case Cube.GridRaw =>
+          // raw keys: pushed-down filter, group key = the fact column itself.
+          // The "all" member: no filter, constant group key — never a closure.
+          // The leaf-all sentinel: no filter, FULL resolution (the summary-
+          // build shape — the key space cannot be enumerated driver-side).
+          if (sel == Seq(Dimension.DegenerateAllId)) {
+            df = df.withColumn(s"a$i", lit(Dimension.DegenerateAllId))
+          } else if (sel == Seq(Dimension.DegenerateLeafAllId)) {
+            df = df.withColumn(s"a$i", col(s"d$i"))
+          } else {
+            df = if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
+                 else df.filter(col(s"d$i").isin(sel: _*))
+            df = df.withColumn(s"a$i", col(s"d$i"))
+          }
+        case Cube.GridAllLeaves =>
           // a selection of EVERY leaf is a no-op predicate — skip it (facts
           // carry only leaf ids; stale ids of removed members are undefined
           // until purgeUnknownMembers, with or without the filter). Keeps
           // full-resolution grids — e.g. aggregate-summary builds — pure
           // scans instead of scans behind a catalog-sized IN list.
-          val leaves = dimensions(i).leafMembers
-          val isAllLeaves = sel.size == leaves.size && sel.toSet == leaves.map(_.id).toSet
-          df = if (isAllLeaves) df
-               else if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
+          df = df.withColumn(s"a$i", col(s"d$i"))
+        case Cube.GridLeaves =>
+          df = if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
                else df.filter(col(s"d$i").isin(sel: _*))
           df = df.withColumn(s"a$i", col(s"d$i"))
-        } else if (sel.size == 1 && dimensions(i).coversAllLeavesUnit(sel.head)) {
-          // identity rollup (see Cube.rollup): constant grid key, no join
+        case Cube.GridIdentity =>
+          // identity rollup: the closure join would match every row exactly
+          // once with weight 1, so skip it — constant grid key, no join.
+          // Contract: facts addressing members REMOVED from the catalog are
+          // undefined until purgeUnknownMembers() (ARCHITECTURE §1) — the
+          // join was never a reliable orphan filter, since leaf point reads
+          // don't closure-join either.
           df = df.withColumn(s"a$i", lit(sel.head))
-        } else {
+        case _ =>
           val cl = closureDf(i).filter(col("anc").isin(sel: _*))
             .select(col("anc").as(s"a$i"), col("leaf").as(s"leaf_$i"), weightExpr.as(s"w_$i"))
           df = df.join(broadcast(cl), col(s"d$i") === col(s"leaf_$i"))
           if (needsWeight(i)) weightCols ::= col(s"w_$i")
-        }
-        outCols += col(s"a$i")
       }
     }
     val weighted = weightCols.foldLeft(valueExpr(col("value")))(_ * _)
-    df.groupBy(outCols.toSeq: _*).agg(sum(weighted).as("value"))
+    df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(weighted).as("value"))
   }
 
   /** Leaf-level ids under the given members (no weights — membership only). */
@@ -1250,6 +1359,14 @@ object Cube {
 
   /** Largest base frame (in cells) the driver point index will hold. */
   val PointIndexCap: Long = 2000000L
+
+  /** How a dimension enters a grid ([[Cube.gridAggregate]]). */
+  private final val GridRaw = 0
+  private final val GridLeaves = 1
+  private final val GridAllLeaves = 2
+  private final val GridIdentity = 3
+  private final val GridClosure = 4
+
 
   /** The result cache: a `TrieMap` plus an entry counter, so the bound
     * check on every cached read is O(1) — `TrieMap.size` snapshots and

@@ -2,21 +2,26 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Driver-resident base-cell index (≙ the reference's in-process fact dict,
   * `facttable.py:146-170`): the base frame's addresses sorted, stored
-  * row-major as `size × nDims` member ids beside their values, and probed
-  * by binary search. No per-entry object exists, so an entry costs
+  * row-major as `size × nDims` member ids beside one 8-byte value each, and
+  * probed by binary search. No per-entry object exists, so an entry costs
   * `nDims × 4 + 8` bytes (24 B at 4 dimensions) where a boxed
   * `HashMap[Vector[Int], java.lang.Double]` cost ~175 B. Ids and values
   * live in pages of [[PointIndex.PageSize]] elements: a single array past
   * half a G1 region is allocated as whole regions, which added ~45% to the
-  * heap of a 180k-cell index. Rows with a null value are absent: they read
-  * as empty, like the filter-job path.
+  * heap of a 180k-cell index.
+  *
+  * A decimal value field is stored EXACTLY, as its unscaled long at the
+  * field's `scale`; any other value type is stored as the bits of its double
+  * (`scale == -1`). Rows with a null value are absent — they read as empty,
+  * like the filter-job path — and counted in `nullRows`.
   */
 private[graft] final class PointIndex private (
-    nDims: Int, val size: Int, keys: Array[Array[Int]], values: Array[Array[Double]]) {
+    nDims: Int, val size: Int, val nullRows: Int, val scale: Int,
+    keys: Array[Array[Int]], values: Array[Array[Long]]) {
   import PointIndex.{PageBits, PageMask}
 
   /** Bytes held by the pages and their page tables, headers included. */
@@ -32,16 +37,28 @@ private[graft] final class PointIndex private (
       val c = compareAt(mid, ids)
       if (c < 0) lo = mid + 1
       else if (c > 0) hi = mid - 1
-      else return Some(values(mid >>> PageBits)(mid & PageMask))
+      else return Some(
+        if (scale < 0) java.lang.Double.longBitsToDouble(rawAt(mid))
+        else java.math.BigDecimal.valueOf(rawAt(mid), scale).doubleValue)
     }
     None
   }
 
-  private def compareAt(row: Int, ids: Vector[Int]): Int = {
-    val off = row * nDims
+  /** Member id of dimension `dim` at `row` (rows are in address order). */
+  def idAt(row: Int, dim: Int): Int = {
+    val k = row * nDims + dim
+    keys(k >>> PageBits)(k & PageMask)
+  }
+
+  /** The stored value at `row`: an unscaled decimal at [[scale]], or the
+    * bits of a double when `scale < 0`. */
+  def rawAt(row: Int): Long = values(row >>> PageBits)(row & PageMask)
+
+  /** Compare the address at `row` with `ids`, lexicographically. */
+  def compareAt(row: Int, ids: Vector[Int]): Int = {
     var i = 0
     while (i < nDims) {
-      val a = keys((off + i) >>> PageBits)((off + i) & PageMask)
+      val a = idAt(row, i)
       val b = ids(i)
       if (a != b) return if (a < b) -1 else 1
       i += 1
@@ -62,38 +79,51 @@ private[graft] object PointIndex {
 
   /** Collect `base` — columns `d0…dN-1, value` — into an index, sorted by
     * address on the driver. Each partition ships as one compact chunk (ids,
-    * values, positions of null values), never as per-row objects. Throws an
-    * [[IllegalStateException]] naming the address (through `describe`) when
-    * two base rows share one: a point read there has no single answer.
+    * values, positions of null values), never as per-row objects. Returns
+    * null — a refusal — when a decimal value's unscaled form does not fit a
+    * long. Throws an [[IllegalStateException]] naming the address (through
+    * `describe`) when two base rows share one: a point read there has no
+    * single answer.
     */
   def collect(base: DataFrame, nDims: Int, describe: Vector[Int] => String): PointIndex = {
-    val chunks = base.select((0 until nDims).map(i => col(s"d$i")) :+
-        col("value").cast(DoubleType): _*)
+    val (valueCol, scale, precision) = base.schema("value").dataType match {
+      case d: DecimalType => (col("value"), d.scale, d.precision)
+      case _ => (col("value").cast(DoubleType), -1, 0)
+    }
+    val chunks = base.select((0 until nDims).map(i => col(s"d$i")) :+ valueCol: _*)
       .queryExecution.toRdd
       .mapPartitions { rows =>
         val ids = Array.newBuilder[Int]
-        val vals = Array.newBuilder[Double]
+        val vals = Array.newBuilder[Long]
         val nulls = Array.newBuilder[Int]
+        var fits = true
         var n = 0
         rows.foreach { r =>
           var i = 0
           while (i < nDims) { ids += r.getInt(i); i += 1 }
-          if (r.isNullAt(nDims)) { nulls += n; vals += 0.0 } else vals += r.getDouble(nDims)
+          if (r.isNullAt(nDims)) { nulls += n; vals += 0L }
+          else if (scale < 0) vals += java.lang.Double.doubleToRawLongBits(r.getDouble(nDims))
+          else {
+            val u = r.getDecimal(nDims, precision, scale).toJavaBigDecimal.unscaledValue
+            if (u.bitLength > 63) fits = false
+            vals += u.longValue
+          }
           n += 1
         }
-        Iterator((ids.result(), vals.result(), nulls.result()))
+        Iterator((ids.result(), vals.result(), nulls.result(), fits))
       }
       .collect()
+    if (!chunks.forall(_._4)) return null
     val ids = chunks.flatMap(_._1)
     val vals = chunks.flatMap(_._2)
     val isNull = new java.util.BitSet(vals.length)
     var off = 0
-    chunks.foreach { case (_, v, nulls) => nulls.foreach(r => isNull.set(off + r)); off += v.length }
+    chunks.foreach { case (_, v, nulls, _) => nulls.foreach(r => isNull.set(off + r)); off += v.length }
     val order = Array.tabulate[Integer](vals.length)(Int.box)
     java.util.Arrays.sort(order, (a: Integer, b: Integer) => compareRows(ids, a, b, nDims))
     val n = vals.length - isNull.cardinality
     val keys = pages[Int](n * nDims)
-    val values = pages[Double](n)
+    val values = pages[Long](n)
     var out = 0
     var i = 0
     while (i < order.length) {
@@ -114,7 +144,7 @@ private[graft] object PointIndex {
       }
       i += 1
     }
-    new PointIndex(nDims, n, keys, values)
+    new PointIndex(nDims, n, vals.length - n, scale, keys, values)
   }
 
   private def compareRows(ids: Array[Int], a: Int, b: Int, nDims: Int): Int = {

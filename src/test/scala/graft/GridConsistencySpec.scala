@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-parent members ("best sellers"). The two paths share semantics but
   * not code shape (grid: joins + groupBy; get: per-cell plan), so any
   * divergence — a bad join elision, a dropped weight factor, a wrong grid
-  * key — shows up as a cell mismatch.
+  * key — shows up as a cell mismatch. It runs on two inputs: writes held in
+  * the overlay over an unpersisted base (the Spark plan), and the same cells
+  * compacted into a persisted base (the driver kernel).
   */
 class GridConsistencySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -24,7 +26,16 @@ class GridConsistencySpec extends AnyFunSuite {
     cube.set(Seq("2021", "Jan", "South", "sedan", "Cost"), 20.0)
     cube.set(Seq("2022", "Mar", "West", "sports", "Sales"), 7.0)
     cube.set(Seq("2022", "Mar", "West", "sports", "Cost"), 3.0)
+    checkGridAgainstGet(cube)
+    assert(cube.counterDriverAggregations == 0L)
 
+    val persisted = new graft.core.Cube("sales_persisted", cube.dimensions, spark, Some(cube.facts))
+    assert(persisted.compact())
+    checkGridAgainstGet(persisted)
+    assert(persisted.counterDriverAggregations > 0L, "the persisted input must reach the driver kernel")
+  }
+
+  private def checkGridAgainstGet(cube: graft.core.Cube): Unit = {
     val pools: Seq[Seq[String]] = Seq(
       Seq("2021", "2022", "All years"),
       Seq("Jan", "Feb", "Mar", "Q1", "Year"),

@@ -45,13 +45,15 @@ class ScaleOpsSpec extends AnyFunSuite {
     val cube = db.addCube("plansales", db.cube("sales").dimensions)
     cube.set(Seq("2021", "Jan", "North", "sedan", "Sales"), 5.0)
     cube.compact() // pin the fact frame so the plan reads the stable shape
+    cube.disablePointIndex() // a persisted base is otherwise served by the driver kernel
     val months = db.dimension("months")
-    val grid = cube.gridAggregate(Seq(
+    val sels = Seq(
       Seq(db.dimension("years").idOf("All years")),
       Seq("Q1", "Q2", "Q3", "Q4").map(months.idOf),
       Seq(db.dimension("regions").idOf("Total")),
       Seq(db.dimension("products").idOf("Total")),
-      Seq(db.dimension("measures").idOf("Sales"))))
+      Seq(db.dimension("measures").idOf("Sales")))
+    val grid = cube.gridAggregate(sels)
     val plan = grid.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"closure joins must broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("SortMergeJoin"),
@@ -61,6 +63,9 @@ class ScaleOpsSpec extends AnyFunSuite {
     val shuffles = "(?m)^.*Exchange (hash|range|SinglePartition)".r
       .findAllIn(plan).size
     assert(shuffles <= 1, s"grid must shuffle at most once, saw $shuffles:\n$plan")
+    assert(cube.enablePointIndex() &&
+      cube.gridAggregate(sels).collect().toSet == grid.collect().toSet,
+      "the indexed cube must return the same rows")
   }
 
   test("compactToPartitioned: sliced grids partition-prune, values unchanged") {

@@ -8,6 +8,8 @@ Exports the base commit (`git archive`) into DIR, once, then runs
 `perfbench/run.py` on both trees for each seed, alternating which side runs
 first. For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles and how many of the pairs the working tree won.
+A run that fails or is not `correct` is counted per side in the summary,
+left out of every pair it belongs to, and makes the script exit 1.
 Run it from the repository root on an otherwise idle host.
 """
 import argparse
@@ -41,6 +43,7 @@ def run(tree, workload, seed, seconds):
     if not res.get("correct"):
         print(f"  {tree} seed {seed}: failed run (exit {p.returncode})\n" +
               "\n".join((p.stdout + p.stderr).splitlines()[-15:]), file=sys.stderr)
+        return None
     return {k: v["value"] for k, v in res.get("metrics", {}).items()}
 
 
@@ -59,12 +62,17 @@ def main():
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {side: run(trees[side], a.workload, seed, a.seconds) for side in order}
         pairs.append({"seed": seed, "first": order[0], **pair})
-        print(f"seed {seed}: " + "  ".join(f"{s} {pair[s].get('throughput_ops_s', float('nan')):.2f}/s"
-                                           for s in order), flush=True)
+        print(f"seed {seed}: " + "  ".join(
+            f"{s} {pair[s].get('throughput_ops_s', float('nan')):.2f}/s" if pair[s] is not None
+            else f"{s} FAILED"
+            for s in order), flush=True)
     if a.out:
         json.dump({"base": sha, "workload": a.workload, "pairs": pairs}, open(a.out, "w"), indent=1)
     metrics = json.load(open("BENCHMARK.json"))["end_to_end"]
-    print(f"\n{a.workload}, base {sha[:10]} vs working tree, {len(pairs)} pairs")
+    failed = {side: sum(p[side] is None for p in pairs) for side in ("base", "change")}
+    pairs = [p for p in pairs if p["base"] is not None and p["change"] is not None]
+    print(f"\n{a.workload}, base {sha[:10]} vs working tree, {len(pairs)} complete pairs; "
+          f"failed runs: base {failed['base']}, change {failed['change']}")
     print(f"{'metric':20} {'base median [q1, q3]':>30} {'change median [q1, q3]':>30} wins")
     for m in metrics:
         name, higher = m["name"], m["better"] == "higher"
@@ -78,6 +86,8 @@ def main():
         wins = sum((p["change"][name] > p["base"][name]) == higher
                    and p["change"][name] != p["base"][name] for p in ok)
         print(f"{name:20} {cols[0]:>30} {cols[1]:>30} {wins}/{len(ok)}")
+    if any(failed.values()):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
