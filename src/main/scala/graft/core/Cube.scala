@@ -958,6 +958,8 @@ final class Cube(
     * so a 1e8-cell cube counts itself once. Unpersisted bases (as-of
     * snapshots, store- and table-backed bases, streaming merges) keep the
     * pushed-down filter job: collecting them would re-read their source.
+    * Once in place, the index also feeds the driver grid kernel of
+    * [[gridAggregate]]; grids never build it themselves.
     *
     * The index mirrors the `base` frame ONLY: overlay writes/deletes are
     * consulted BEFORE it (in-session writes read correctly with no
@@ -1004,7 +1006,8 @@ final class Cube(
   /** Drop the point index and keep base reads of the current frame on the
     * filter job; the next [[enablePointIndex]] re-collects — the re-timing
     * lever for benchmarks and the release valve for a driver under memory
-    * pressure. */
+    * pressure. It also turns off the driver grid kernel for that frame:
+    * every grid and aggregated cell then runs the Spark plan. */
   def disablePointIndex(): Unit = stateLock.synchronized {
     pointIdx = null; pointIdxBase = base
   }
@@ -1060,7 +1063,8 @@ final class Cube(
 
   /** Weighted rollup of one aggregated cell (≙ `cube.py:440-497` +
     * `facttable.py:190-231`): the one-cell grid of [[gridAggregate]] over
-    * one-member selections, read from whichever path answered it.
+    * one-member selections, read from whichever path answered it (on the
+    * Spark path the same filtered, joined input, summed without a key).
     */
   private def rollup(ids: Vector[Int]): Option[Double] = {
     val sels = ids.map(Seq(_))
@@ -1068,12 +1072,13 @@ final class Cube(
     if ((0 until nDims).exists(i => kinds(i) == Cube.GridClosure && needsWeight(i))) bump(4)
     grid(sels, kinds, identity) match {
       case Right((g, _)) => if (g.present(0)) Some(g.doubleValue(0)) else None
-      case Left(df) =>
-        df.collect().find(r => ids.indices.forall(i => !r.isNullAt(i) && r.getInt(i) == ids(i)))
-          .flatMap(r => Option(r.get(nDims)).map {
-            case d: java.lang.Double => d.doubleValue()
-            case bd: java.math.BigDecimal => bd.doubleValue()
-          })
+      case Left((df, value)) =>
+        // one cell: a global sum — a constant grid key would only add a
+        // hash-aggregation probe per fact row
+        df.agg(sum(value)).collect().headOption.flatMap(r => Option(r.get(0)).map {
+          case d: java.lang.Double => d.doubleValue()
+          case bd: java.math.BigDecimal => bd.doubleValue()
+        })
     }
   }
 
@@ -1089,15 +1094,16 @@ final class Cube(
     * that answer identically (same rows, same schema):
     *  - the DRIVER KERNEL ([[DriverGrid]]) scans the base frame's
     *    [[PointIndex]] plus the overlay and returns a local relation. It
-    *    serves a grid when the base is indexable by the rule that governs
-    *    base reads (persisted, at most [[Cube.PointIndexCap]] cells; the
-    *    first use builds the index), no dimension is degenerate, the grid
-    *    has at most [[DriverGrid.MaxCells]] cells, `valueExpr` is the
-    *    identity, and the sums can be made exact (double values, or decimal
-    *    values with at most one weighted closure join, no null-valued base
-    *    row and no overflow). At working-set size a scan of ~200k indexed
-    *    cells takes milliseconds, where planning and scheduling a job costs
-    *    hundreds.
+    *    serves a grid when base reads have already put an index in place
+    *    for the current base frame (a grid never starts a build), no
+    *    dimension is degenerate, the grid has at most
+    *    [[DriverGrid.MaxCells]] cells, `valueExpr` is the identity, and the
+    *    sums can be made exact (double values, or decimal values with at
+    *    most one weighted closure join, no null-valued base row and no
+    *    overflow). At working-set size a scan of ~200k indexed cells takes
+    *    milliseconds, where planning and scheduling a job costs hundreds.
+    *    The kernel runs when this method is called (its result is already
+    *    computed); [[disablePointIndex]] turns it off for the frame.
     *  - otherwise ONE Catalyst-planned Spark job: per dimension one
     *    broadcast join against the closure subset (fan-out = matching
     *    ancestors), then one hash aggregation — at scale it shuffles once,
@@ -1107,7 +1113,7 @@ final class Cube(
   def gridAggregate(selections: Seq[Seq[Int]], valueExpr: Column => Column = identity): DataFrame = {
     require(selections.length == nDims)
     grid(selections, gridKinds(selections), valueExpr) match {
-      case Left(df) => df
+      case Left((df, value)) => df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(value).as("value"))
       case Right((g, schema)) =>
         val rows = new java.util.ArrayList[Row]()
         var c = 0
@@ -1141,17 +1147,18 @@ final class Cube(
     else Cube.GridClosure
   }
 
-  /** The grid over ONE (base, overlay) snapshot: the driver kernel's answer
-    * (with the schema the Spark plan would have) when it can give one, else
-    * the Spark plan. The snapshot is taken under [[stateLock]]; the index
-    * build and the kernel run lock-free. */
+  /** The grid over ONE (base, overlay, index) snapshot: the driver kernel's
+    * answer (with the schema the Spark plan would have) when it can give
+    * one, else the Spark plan's input to the sum. The snapshot is taken under [[stateLock]];
+    * the kernel runs lock-free. It never starts an index build: only an
+    * index that base reads (or [[enablePointIndex]]) put in place for the
+    * current frame is used. */
   private def grid(selections: Seq[Seq[Int]], kinds: Array[Int],
-      valueExpr: Column => Column): Either[DataFrame, (DriverGrid.Result, StructType)] = {
-    val (b, ov, known, idx0) = stateLock.synchronized((base, overlay, pointIdxBase eq base, pointIdx))
-    val served = driverPlan(selections, kinds, valueExpr, b).flatMap { case (axes, decimal, resultPrecision) =>
-      val idx = if (known) idx0 else autoPointIndex(b)
-      if (idx == null || idx.nullRows > 0) None
-      else DriverGrid.run(idx, ov, axes, decimal, resultPrecision).map { r =>
+      valueExpr: Column => Column): Either[(DataFrame, Column), (DriverGrid.Result, StructType)] = {
+    val (b, ov, idx) = stateLock.synchronized((base, overlay, if (pointIdxBase eq base) pointIdx else null))
+    val served = if (idx == null || idx.nullRows > 0) None
+    else driverPlan(selections, kinds, valueExpr, b).flatMap { case (axes, decimal, resultPrecision) =>
+      DriverGrid.run(idx, ov, axes, decimal, resultPrecision).map { r =>
         val keyFields = (0 until nDims).map { i =>
           val f = b.schema(s"d$i")
           kinds(i) match {
@@ -1166,7 +1173,7 @@ final class Cube(
     }
     served match {
       case Some(g) => bump(5); Right(g)
-      case None => Left(sparkGrid(factsOf(b, ov), selections, kinds, valueExpr))
+      case None => Left(sparkGridInput(factsOf(b, ov), selections, kinds, valueExpr))
     }
   }
 
@@ -1201,19 +1208,20 @@ final class Cube(
           case Cube.GridClosure =>
             val slot = ms.zipWithIndex.toMap
             DriverGrid.Axis(ms, dimAt(i).closureRows.flatMap(r => slot.get(r.anc).map((r.leaf, _, r.weight))),
-              weighted = needsWeight(i), strict = false)
-          case kind =>
-            DriverGrid.Axis(ms, ms.indices.map(k => (ms(k), k, 1.0)),
-              weighted = false, strict = kind == Cube.GridAllLeaves)
+              weighted = needsWeight(i))
+          case _ =>
+            DriverGrid.Axis(ms, ms.indices.map(k => (ms(k), k, 1.0)), weighted = false)
         }
       }
       (axes, decimal, resultPrecision)
     }
   }
 
-  /** The grid as one Spark job over `facts`. */
-  private def sparkGrid(facts: DataFrame, selections: Seq[Seq[Int]], kinds: Array[Int],
-      valueExpr: Column => Column): DataFrame = {
+  /** The Spark plan's input to the grid sum: `facts` filtered and
+    * closure-joined per dimension, with the grid keys `a0 … aN-1`, and the
+    * weighted value column to sum per key. */
+  private def sparkGridInput(facts: DataFrame, selections: Seq[Seq[Int]], kinds: Array[Int],
+      valueExpr: Column => Column): (DataFrame, Column) = {
     var df = facts
     var weightCols = List.empty[Column]
     selections.zipWithIndex.foreach { case (sel, i) =>
@@ -1258,8 +1266,7 @@ final class Cube(
           if (needsWeight(i)) weightCols ::= col(s"w_$i")
       }
     }
-    val weighted = weightCols.foldLeft(valueExpr(col("value")))(_ * _)
-    df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(weighted).as("value"))
+    (df, weightCols.foldLeft(valueExpr(col("value")))(_ * _))
   }
 
   /** Leaf-level ids under the given members (no weights — membership only). */

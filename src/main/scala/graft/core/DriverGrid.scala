@@ -28,19 +28,18 @@ private[core] object DriverGrid {
     * (the identity rollup). Otherwise leaf `l` contributes the entries
     * `start(l) until start(l + 1)`: slot `slots(e)` at weight `weights(e)`
     * (`weights == null`: unweighted). A row whose leaf has no entry is
-    * dropped, or — when `strict` — makes the whole grid unanswerable here
-    * (the Spark plan keeps such a row under its own key).
+    * dropped — also under an all-leaves selection, where a fact addressing
+    * a removed member is undefined until `purgeUnknownMembers`.
     */
   final class Axis private (val members: Array[Int], val start: Array[Int],
-      val slots: Array[Int], val weights: Array[Double], val strict: Boolean)
+      val slots: Array[Int], val weights: Array[Double])
 
   object Axis {
-    def identity(member: Int): Axis = new Axis(Array(member), null, Array(0), null, false)
+    def identity(member: Int): Axis = new Axis(Array(member), null, Array(0), null)
 
     /** `entries` are `(leaf, slot, weight)`; weights are dropped unless
       * `weighted`. */
-    def apply(members: Array[Int], entries: Seq[(Int, Int, Double)], weighted: Boolean,
-        strict: Boolean): Axis = {
+    def apply(members: Array[Int], entries: Seq[(Int, Int, Double)], weighted: Boolean): Axis = {
       val maxLeaf = entries.foldLeft(-1)((m, e) => math.max(m, e._1))
       val start = new Array[Int](maxLeaf + 2)
       entries.foreach(e => start(e._1 + 1) += 1)
@@ -54,7 +53,7 @@ private[core] object DriverGrid {
         slots(e) = slot
         if (weighted) weights(e) = w
       }
-      new Axis(members, start, slots, weights, strict)
+      new Axis(members, start, slots, weights)
     }
   }
 
@@ -91,8 +90,6 @@ private[core] object DriverGrid {
         if (u.bitLength > 63) None else Some(u.longValue)
       }
     } catch { case _: NumberFormatException => None }
-
-  private final class Unanswerable extends RuntimeException(null, null, false, false)
 
   /** Sum `idx` (overlaid by `overlay`: Some = upsert, None = delete) into
     * the grid of `axes`. `decimal = Some((precision, scale))` for a decimal
@@ -135,7 +132,7 @@ private[core] object DriverGrid {
           val id = addr(d)
           if (id >= 0 && id < ax.start.length - 1) { lo(d) = ax.start(id); hi(d) = ax.start(id + 1) }
           else { lo(d) = 0; hi(d) = 0 }
-          if (lo(d) == hi(d)) { if (ax.strict) throw new Unanswerable else return }
+          if (lo(d) == hi(d)) return
         }
         pos(d) = lo(d)
         d += 1
@@ -182,7 +179,7 @@ private[core] object DriverGrid {
         }
       }
     } catch {
-      case _: Unanswerable | _: ArithmeticException => return None
+      case _: ArithmeticException => return None
     }
     if (longs != null && resultPrecision < 19) {
       val bound = java.math.BigInteger.TEN.pow(resultPrecision)

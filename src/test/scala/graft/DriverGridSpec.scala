@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver grid kernel (`graft.core.DriverGrid`) against the Spark grid
   * plan. On the sf0.01 `sales` cube (decimal(21,4) facts) a cube over a
-  * persisted base — served by the kernel — must answer string for string
+  * persisted base whose index a base read has built — served by the
+  * kernel — must answer string for string
   * what a cube over the same facts behind an unpersisted frame — served by
   * Spark — answers (a `select("*")` of a cached frame reports the cache's
   * storage level, so the reference re-wraps the rows instead): cells, grids (schema included), ruled grids
@@ -36,8 +37,20 @@ class DriverGridSpec extends AnyFunSuite {
     c
   }
 
-  private def pair(tag: String): (Cube, Cube) =
-    (cubeOver(s"dg_idx_$tag", facts), cubeOver(s"dg_ref_$tag", spark.createDataFrame(facts.rdd, facts.schema)))
+  private def pair(tag: String): (Cube, Cube) = {
+    val r = facts.head()
+    val idx = indexed(cubeOver(s"dg_idx_$tag", facts),
+      (0 until 4).map(i => model.cube.dimensions(i).nameOf(r.getInt(i))))
+    (idx, cubeOver(s"dg_ref_$tag", spark.createDataFrame(facts.rdd, facts.schema)))
+  }
+
+  /** `c` after one base read at `addr`, which builds its point index — the
+    * kernel only serves from an index base reads have put in place. */
+  private def indexed(c: Cube, addr: Seq[String]): Cube = {
+    c.get(addr)
+    assert(c.pointIndexEnabled, s"a base read of cube '${c.name}' must build its index")
+    c
+  }
 
   /** Members of a dimension by level, the measures without the rule. */
   private def levels(d: Dimension): IndexedSeq[IndexedSeq[Int]] =
@@ -142,6 +155,12 @@ class DriverGridSpec extends AnyFunSuite {
       Seq(model.product.idOf("AllBrands")), gross)
     // the reference cube stands for every unpersisted base
     assert(ref.gridAggregate(everywhere).count() == 1L && ref.counterDriverAggregations == 0L)
+    // a persisted base no base read has indexed: grids never start a build
+    val cold = cubeOver("dg_cold", facts)
+    viaSpark(cold, everywhere, ref)
+    val top = Seq("World", "AllTime", "AllBrands", "gross")
+    assert(cold.get(top).toString == ref.get(top).toString)
+    assert(cold.pointIndexBuilds == 0 && !cold.pointIndexEnabled && cold.counterDriverAggregations == 0L)
     // a grid over the bound: customers × months × 2 measures > 65,536 cells
     val big = Seq(model.geo.leafMembers.map(_.id), model.calendar.membersByLevel(1).map(_.id),
       Seq(model.product.idOf("AllBrands")), Seq(m.idOf("gross"), m.idOf("net")))
@@ -166,7 +185,8 @@ class DriverGridSpec extends AnyFunSuite {
     // a degenerate dimension
     val degRows = Seq(Row(7, region.idOf("North"), meas.idOf("sales"), bd("1.5000")),
       Row(9, region.idOf("South"), meas.idOf("cost"), bd("0.2500")))
-    val degIdx = smallCube("dg_deg", Seq(deg, region, meas), degRows, dec, persisted = true)
+    val degIdx = indexed(smallCube("dg_deg", Seq(deg, region, meas), degRows, dec, persisted = true),
+      Seq("C#7", "North", "sales"))
     val degRef = smallCube("dg_deg_ref", Seq(deg, region, meas), degRows, dec, persisted = false)
     viaSpark(degIdx, Seq(Seq(Dimension.DegenerateAllId), Seq(region.idOf("Total")),
       Seq(meas.idOf("profit"))), degRef)
@@ -174,7 +194,8 @@ class DriverGridSpec extends AnyFunSuite {
     // two weighted closure joins on a decimal cube (Spark rounds the product)
     val wRows = for (r <- Seq("North", "South"); mm <- Seq("sales", "cost"); s <- Seq("actual", "plan"))
       yield Row(region.idOf(r), meas.idOf(mm), scen.idOf(s), bd(s"${r.length}.${mm.length}${s.length}37"))
-    val wIdx = smallCube("dg_w2", Seq(region, meas, scen), wRows, dec, persisted = true)
+    val wIdx = indexed(smallCube("dg_w2", Seq(region, meas, scen), wRows, dec, persisted = true),
+      Seq("North", "sales", "actual"))
     val wRef = smallCube("dg_w2_ref", Seq(region, meas, scen), wRows, dec, persisted = false)
     val twoWeighted = Seq(Seq(region.idOf("Total")), Seq(meas.idOf("profit")), Seq(scen.idOf("gap")))
     viaSpark(wIdx, twoWeighted, wRef)
@@ -187,7 +208,8 @@ class DriverGridSpec extends AnyFunSuite {
     // a null-valued base row: Spark keeps its all-null group as a row
     val nRows = Seq(Row(region.idOf("North"), meas.idOf("sales"), scen.idOf("actual"), null),
       Row(region.idOf("South"), meas.idOf("sales"), scen.idOf("actual"), bd("2.0000")))
-    val nIdx = smallCube("dg_null", Seq(region, meas, scen), nRows, dec, persisted = true)
+    val nIdx = indexed(smallCube("dg_null", Seq(region, meas, scen), nRows, dec, persisted = true),
+      Seq("South", "sales", "actual"))
     val nRef = smallCube("dg_null_ref", Seq(region, meas, scen), nRows, dec, persisted = false)
     val perRegion = Seq(Seq(region.idOf("North"), region.idOf("South")), Seq(meas.idOf("sales")),
       Seq(scen.idOf("actual")))
@@ -195,7 +217,8 @@ class DriverGridSpec extends AnyFunSuite {
     assert(rows(nRef.gridAggregate(perRegion)).exists(_.endsWith(",null]")))
 
     // an overlay value the decimal cannot hold: the same error as Spark's
-    val oIdx = smallCube("dg_over", Seq(region, meas, scen), wRows, dec, persisted = true)
+    val oIdx = indexed(smallCube("dg_over", Seq(region, meas, scen), wRows, dec, persisted = true),
+      Seq("South", "sales", "actual"))
     val oRef = smallCube("dg_over_ref", Seq(region, meas, scen), wRows, dec, persisted = false)
     Seq(oIdx, oRef).foreach(_.set(Seq("North", "sales", "actual"), 1e30))
     viaSpark(oIdx, oneWeighted, oRef)

@@ -6,12 +6,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * for cell with the per-address `cube.get` path across arbitrary mixed
   * selections — leaves, weighted members (Profit = Sales − Cost),
   * full-coverage members (the identity-rollup join elision path), and
-  * multi-parent members ("best sellers"). The two paths share semantics but
-  * not code shape (grid: joins + groupBy; get: per-cell plan), so any
-  * divergence — a bad join elision, a dropped weight factor, a wrong grid
-  * key — shows up as a cell mismatch. It runs on two inputs: writes held in
-  * the overlay over an unpersisted base (the Spark plan), and the same cells
-  * compacted into a persisted base (the driver kernel).
+  * multi-parent members ("best sellers"). An aggregated `cube.get` is the
+  * one-cell grid of the same `gridAggregate`, so on one input this checks
+  * that a grid's cells do not depend on what else it selects (a bad join
+  * elision or a wrong grid key shows up as a mismatch). It runs on two
+  * inputs:
+  *  - writes held in the overlay over an unpersisted base: every grid runs
+  *    the Spark plan;
+  *  - the same cells compacted into a persisted base whose index a base
+  *    read has built: every grid runs the driver kernel, and each grid is
+  *    also compared row for row with the Spark plan's grid on the first
+  *    input — the independent check of the kernel's double sums, weights
+  *    (Profit = Sales − Cost) and multi-parent members.
   */
 class GridConsistencySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,16 +32,21 @@ class GridConsistencySpec extends AnyFunSuite {
     cube.set(Seq("2021", "Jan", "South", "sedan", "Cost"), 20.0)
     cube.set(Seq("2022", "Mar", "West", "sports", "Sales"), 7.0)
     cube.set(Seq("2022", "Mar", "West", "sports", "Cost"), 3.0)
-    checkGridAgainstGet(cube)
+    checkGridAgainstGet(cube, None)
     assert(cube.counterDriverAggregations == 0L)
 
     val persisted = new graft.core.Cube("sales_persisted", cube.dimensions, spark, Some(cube.facts))
     assert(persisted.compact())
-    checkGridAgainstGet(persisted)
+    // a base read builds the index the kernel serves from
+    assert(persisted.get(Seq("2021", "Jan", "North", "motorcycles", "Sales")).contains(123.0))
+    assert(persisted.pointIndexEnabled)
+    checkGridAgainstGet(persisted, Some(cube))
     assert(persisted.counterDriverAggregations > 0L, "the persisted input must reach the driver kernel")
+    assert(cube.counterDriverAggregations == 0L)
   }
 
-  private def checkGridAgainstGet(cube: graft.core.Cube): Unit = {
+  /** `sparkRef`: a cube over the same cells whose grids run the Spark plan. */
+  private def checkGridAgainstGet(cube: graft.core.Cube, sparkRef: Option[graft.core.Cube]): Unit = {
     val pools: Seq[Seq[String]] = Seq(
       Seq("2021", "2022", "All years"),
       Seq("Jan", "Feb", "Mar", "Q1", "Year"),
@@ -53,7 +64,12 @@ class GridConsistencySpec extends AnyFunSuite {
       val ids = sel.zipWithIndex.map { case (ms, i) =>
         ms.map(cube.dimensions(i).idOf)
       }
-      val grid = cube.gridAggregate(ids).collect().map { r =>
+      val gridRows = cube.gridAggregate(ids).collect()
+      sparkRef.foreach { ref =>
+        assert(gridRows.toSet == ref.gridAggregate(ids).collect().toSet,
+          s"trial $trial: the grid differs from the Spark plan's over ${sel.mkString("/")}")
+      }
+      val grid = gridRows.map { r =>
         (0 until 5).map(i => r.getInt(i)).toVector -> r.getDouble(5)
       }.toMap
       // sampled addresses from the cross-product must agree with cube.get

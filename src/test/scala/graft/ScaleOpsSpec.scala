@@ -45,7 +45,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val cube = db.addCube("plansales", db.cube("sales").dimensions)
     cube.set(Seq("2021", "Jan", "North", "sedan", "Sales"), 5.0)
     cube.compact() // pin the fact frame so the plan reads the stable shape
-    cube.disablePointIndex() // a persisted base is otherwise served by the driver kernel
+    cube.disablePointIndex() // keep the grid on the Spark plan whatever the index state
     val months = db.dimension("months")
     val sels = Seq(
       Seq(db.dimension("years").idOf("All years")),
