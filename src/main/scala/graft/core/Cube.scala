@@ -36,7 +36,7 @@ object CellValue {
   * closure-join + weighted sum — the Spark-native replacement for the
   * reference's write-time ancestor inverted index (`cube.py:542-549`):
   * fan-out happens at read time, on executors through broadcast joins, or
-  * in one driver pass over the point index for a working-set cube
+  * in one driver pass over the point index once base reads have built it
   * ([[gridAggregate]]), not at write time.
   *
   * Writes land in a driver-side overlay (point upserts/deletes) merged into

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * Execution deviates from the reference by design (SURVEY §3.2): instead of
   * a per-address `cube[...]` loop over the cartesian product, the whole grid
   * is ONE aggregation pass — [[graft.core.Cube.gridAggregate]]: a driver
-  * scan of the point index for a working-set cube, else one Catalyst job
+  * scan of the point index once base reads have built it, else one Catalyst job
   * (closure joins + hash aggregation); only non-empty cells are returned.
   */
 final class OlapQuery(db: Database, sql: String,

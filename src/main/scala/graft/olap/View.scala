@@ -47,8 +47,8 @@ final case class ViewStats(
     rulePositions: Int = 0)
 
 /** Pivot-grid report over a cube. The whole grid — every axis combination —
-  * is ONE grid aggregation ([[Cube.gridAggregate]]: a driver pass for a
-  * working-set cube, else a closure-join Spark job), then `groupBy(rowKeys)
+  * is ONE grid aggregation ([[Cube.gridAggregate]]: a driver pass once
+  * base reads have built the point index, else a closure-join Spark job), then `groupBy(rowKeys)
   * .pivot(colKey)` (≙ the per-cell loop `view.py:769-911`, re-planned as
   * SURVEY §2.10 V3 prescribes).
   *
