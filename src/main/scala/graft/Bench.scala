@@ -67,7 +67,7 @@ object Bench {
     "olap_rollup_region",   // closure-join rollup through 4-level hierarchy
     "olap_rollup_net_year", // weighted rollup (net = gross - disc)
     "olap_multiparent",     // multi-parent fan-out rollup
-    "olap_view_pivot",      // whole pivot grid, one job
+    "olap_view_pivot",      // whole pivot grid: one grid, pivoted on the driver
     "olap_grid_dense",      // ~2100 aggregated cells, one job (cells/sec story)
     "olap_area_records",    // area enumeration with name joins
     "rel_join_broadcast",   // broadcast hash join

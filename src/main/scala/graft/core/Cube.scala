@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Resolved cell address: member ids per dimension + super level (sum of
   * member levels — ≙ the reference "bolt", `cube.py:601-627`).
@@ -1109,21 +1110,56 @@ final class Cube(
     *    ancestors), then one hash aggregation — at scale it shuffles once,
     *    on the grid keys.
     * [[counterDriverAggregations]] counts the grids the kernel served.
+    * Reports (views, dialect queries, cross-cube slices) take their grid
+    * through [[reportGrid]] instead, which keeps small grids on the driver.
     */
   def gridAggregate(selections: Seq[Seq[Int]], valueExpr: Column => Column = identity): DataFrame = {
     require(selections.length == nDims)
     grid(selections, gridKinds(selections), valueExpr) match {
-      case Left((df, value)) => df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(value).as("value"))
-      case Right((g, schema)) =>
-        val rows = new java.util.ArrayList[Row]()
-        var c = 0
-        while (c < g.present.length) {
-          if (g.present(c)) rows.add(Row.fromSeq(g.key(c).toSeq.map(Int.box) :+ g.value(c)))
-          c += 1
-        }
-        spark.createDataFrame(rows, schema)
+      case Left((df, value)) => sumPlan(df, value)
+      case Right((g, schema)) => Cube.GridRows(schema, kernelRows(g)).toDF(spark)
     }
   }
+
+  /** The grid of a report — a view, a dialect query, a cross-cube slice —
+    * on the path that finishes it: its rows on the driver when the kernel
+    * serves it (see [[gridAggregate]]), or when the Spark grid is small
+    * enough to collect — at most [[DriverGrid.MaxCells]] cells, or any size
+    * with `collectAny` (a caller that collects the whole grid anyway) — and
+    * otherwise the Spark grid plan, uncollected, for the caller to page.
+    * This is the one place a report's path is chosen; the rows carry the
+    * schema [[gridAggregate]] gives.
+    */
+  def reportGrid(selections: Seq[Seq[Int]], collectAny: Boolean = false): Either[DataFrame, Cube.GridRows] = {
+    require(selections.length == nDims)
+    grid(selections, gridKinds(selections), identity) match {
+      case Right((g, schema)) => Right(Cube.GridRows(schema, kernelRows(g)))
+      case Left((df, value)) =>
+        val plan = sumPlan(df, value)
+        val bounded = !selections.contains(Seq(Dimension.DegenerateLeafAllId)) && withinKernelBound(selections)
+        if (collectAny || bounded) Right(Cube.GridRows(plan.schema, plan.collect().toIndexedSeq))
+        else Left(plan)
+    }
+  }
+
+  private def sumPlan(df: DataFrame, value: Column): DataFrame =
+    df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(value).as("value"))
+
+  /** The kernel's present cells as grid rows, row-major. */
+  private def kernelRows(g: DriverGrid.Result): IndexedSeq[Row] = {
+    val rows = Vector.newBuilder[Row]
+    var c = 0
+    while (c < g.present.length) {
+      if (g.present(c)) rows += Row.fromSeq(g.key(c).toSeq.map(Int.box) :+ g.value(c))
+      c += 1
+    }
+    rows.result()
+  }
+
+  /** Whether the selections span at most [[DriverGrid.MaxCells]] cells. */
+  private def withinKernelBound(selections: Seq[Seq[Int]]): Boolean =
+    selections.foldLeft(1L)((n, s) => if (n > DriverGrid.MaxCells) n else n * s.distinct.size) <=
+      DriverGrid.MaxCells
 
   /** How each dimension enters a grid — decided once, for the Spark plan
     * and the driver kernel alike: raw keys of a degenerate dimension;
@@ -1197,7 +1233,7 @@ final class Cube(
       case _ => None
     }
     if (kinds.contains(Cube.GridRaw) || vt != valueField.dataType ||
-        members.foldLeft(1L)(_ * _.length) > DriverGrid.MaxCells ||
+        !withinKernelBound(selections) ||
         dimCols.exists(c => schema(c).dataType != IntegerType) ||
         valueExpr(col("value")) != col("value")) None
     else numeric.map { case (decimal, resultPrecision) =>
@@ -1366,6 +1402,13 @@ object Cube {
 
   /** Largest base frame (in cells) the driver point index will hold. */
   val PointIndexCap: Long = 2000000L
+
+  /** A grid's rows held on the driver, with the schema of the Spark plan
+    * for the same grid. */
+  final case class GridRows(schema: StructType, rows: IndexedSeq[Row]) {
+    /** The rows as a local relation: actions on it run no Spark job. */
+    def toDF(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
+  }
 
   /** How a dimension enters a grid ([[Cube.gridAggregate]]). */
   private final val GridRaw = 0

@@ -509,6 +509,10 @@ final class Dimension(val name: String) {
   def memberById(id: Int): MemberDef =
     if (isDegenerate) degMember(id) else byId(id)
   def nameOf(id: Int): String = memberById(id).name
+  /** The member with `id`, if the catalog holds it (a degenerate dimension
+    * holds every raw key). */
+  def memberOpt(id: Int): Option[MemberDef] =
+    if (isDegenerate) Some(degMember(id)) else byId.get(id)
   def levelOf(id: Int): Int = memberById(id).level
 
   def leafMembers: Vector[MemberDef] = committed.filter(_.level == 0)

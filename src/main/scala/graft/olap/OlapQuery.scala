@@ -115,11 +115,11 @@ final class OlapQuery(db: Database, sql: String,
     }.toVector
   }
 
-  /** Run the query as one grid job and project the requested fields. The
-    * grid computes rule-backed members of (at most) one dimension
-    * post-pivot inside the same job (≙ rule cells in the dialect's dense
-    * grid, `query.py:101-136` — still no per-cell loop); rule matching,
-    * transitive ref expansion, and deps-first ordering are the shared
+  /** Run the query as one grid pass and project the requested fields. The
+    * grid computes rule-backed members of (at most) one dimension after a
+    * pivot (≙ rule cells in the dialect's dense grid, `query.py:101-136` —
+    * still no per-cell loop); rule matching, transitive ref expansion, and
+    * deps-first ordering are the shared
     * [[Rules.gridRuleFor]]/[[Rules.expandRuled]] helpers — one semantics
     * for dialect grids, views, and the scalar path.
     */
@@ -127,17 +127,68 @@ final class OlapQuery(db: Database, sql: String,
 
   /** The same grid + projection against a ROUTED target (an aggregate
     * summary whose derived dimensions carry the same member names) — used
-    * by [[OlapQuery.routed]]; `sels` are the target cube's member ids. */
-  private[olap] def executeOn(target: Cube, sels: Vector[Seq[Int]]): DataFrame = {
-    var df = Rules.ruledGrid(target, sels)
-    val projected = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
-    val wantAll = fields.exists(_ == "*")
+    * by [[OlapQuery.routed]]; `sels` are the target cube's member ids.
+    * A grid [[Cube.reportGrid]] keeps on the driver is named and projected
+    * there, and the answer is a local relation (no Spark job); a larger
+    * grid — a `'*'` cross product the REST route pages — keeps the
+    * DataFrame plan with broadcast name joins.
+    */
+  private[olap] def executeOn(target: Cube, sels: Vector[Seq[Int]]): DataFrame =
+    Rules.ruledReport(target, sels) match {
+      case Right(g) => project(target, g).toDF(target.spark)
+      case Left(df) => projectPlan(target, df)
+    }
 
+  private def wantAll: Boolean = fields.exists(_ == "*")
+  private def wantDim(d: Dimension): Boolean = wantAll || fields.exists(_.equalsIgnoreCase(d.name))
+  private def wantValue: Boolean = wantAll || fields.exists(_.equalsIgnoreCase("value"))
+  private def attrFields(d: Dimension): Seq[String] =
+    fields.filter(f => f.toLowerCase.startsWith(d.name.toLowerCase + "."))
+
+  /** The projection on driver rows: an address whose member (or attribute
+    * holder) is not in the catalog is dropped, as the name join drops it;
+    * the fields and types are those of [[projectPlan]]. */
+  private def project(target: Cube, g: Cube.GridRows): Cube.GridRows = {
+    val outFields = scala.collection.mutable.ArrayBuffer[StructField]()
+    val getters = scala.collection.mutable.ArrayBuffer[Row => Any]()
+    val inCatalog = scala.collection.mutable.ArrayBuffer[Row => Boolean]()
     target.dimensions.zipWithIndex.foreach { case (d, i) =>
-      val wantDim = wantAll || fields.exists(_.equalsIgnoreCase(d.name))
-      val attrFields = fields.filter(f => f.toLowerCase.startsWith(d.name.toLowerCase + "."))
-      if (wantDim || attrFields.nonEmpty) {
-        require(!(d.isDegenerate && attrFields.nonEmpty),
+      val attrs = attrFields(d)
+      if (wantDim(d) || attrs.nonEmpty) {
+        require(!(d.isDegenerate && attrs.nonEmpty),
+          s"dimension '${d.name}' is degenerate — it has no attributes")
+        // a degenerate dimension's member is its functional name, computed
+        val member: Row => Option[graft.core.MemberDef] = r =>
+          if (r.isNullAt(i)) None else d.memberOpt(r.getInt(i))
+        if (!d.isDegenerate) inCatalog += (r => member(r).isDefined)
+        if (wantDim(d)) {
+          outFields += StructField(d.name, StringType, !d.isDegenerate || g.schema(i).nullable)
+          getters += (r => member(r).map(_.name).orNull)
+        }
+        attrs.foreach { f =>
+          val field = d.attribute(f.substring(d.name.length + 1))
+          outFields += StructField(f, StringType)
+          getters += (r => member(r).flatMap(m => field.get(m.id)).orNull)
+        }
+      }
+    }
+    if (wantValue) {
+      outFields += g.schema("value")
+      getters += (r => r.get(r.length - 1))
+    }
+    val rows = g.rows.filter(r => inCatalog.forall(_(r))).map(r => Row.fromSeq(getters.map(_(r)).toSeq))
+    Cube.GridRows(StructType(outFields.toSeq), rows)
+  }
+
+  /** The projection as a plan: broadcast joins of member names and
+    * attribute values onto the grid. */
+  private def projectPlan(target: Cube, grid: DataFrame): DataFrame = {
+    var df = grid
+    val projected = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
+    target.dimensions.zipWithIndex.foreach { case (d, i) =>
+      val attrs = attrFields(d)
+      if (wantDim(d) || attrs.nonEmpty) {
+        require(!(d.isDegenerate && attrs.nonEmpty),
           s"dimension '${d.name}' is degenerate — it has no attributes")
         if (d.isDegenerate) {
           // functional name: computed, never joined (the catalog is empty —
@@ -148,8 +199,8 @@ final class OlapQuery(db: Database, sql: String,
             .select(col("id").as(s"__id$i"), col("mname").as(d.name))
           df = df.join(broadcast(names), col(s"a$i") === col(s"__id$i")).drop(s"__id$i")
         }
-        if (wantDim) projected += col(d.name)
-        attrFields.foreach { f =>
+        if (wantDim(d)) projected += col(d.name)
+        attrs.foreach { f =>
           val attrName = f.substring(d.name.length + 1)
           val field = d.attribute(attrName)
           val spark = target.spark
@@ -163,8 +214,7 @@ final class OlapQuery(db: Database, sql: String,
         }
       }
     }
-    if (wantAll || fields.exists(_.equalsIgnoreCase("value")))
-      projected += col("value")
+    if (wantValue) projected += col("value")
     df.select(projected.toSeq: _*)
   }
 }

@@ -1,8 +1,9 @@
 package graft.olap
 
 import graft.core.{Bolt, Cube, Dimension}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, IntegerType, StructField, StructType}
 import scala.collection.mutable
 
 /** Rule scopes (≙ `rules.py:24-41`). */
@@ -659,36 +660,18 @@ object Rules {
         }
         // referenced cells go through the full read path so chained rules fire
         cube.getByBolt(rb)
-      case CubeRef(cn, parts) =>
-        val db = cube.databaseRef.getOrElse(throw RuleError("#REF!",
-          s"cube '${cube.name}' is not attached to a database — cross-cube ref needs one"))
-        val target = try db.cube(cn) catch { case _: NoSuchElementException =>
-          throw RuleError("#REF!", s"unknown cube '$cn' in cross-cube ref") }
-        if (parts.size != target.nDims) throw RuleError("#REF!",
-          s"cross-cube ref to '$cn' needs ${target.nDims} members, got ${parts.size}")
-        def dimIdx(d: String): Int = {
-          val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(d))
-          if (i < 0) throw RuleError("#REF!", s"unknown dimension '$d' in cross-cube ref")
-          i
-        }
+      case cr @ CubeRef(_, parts) =>
+        val target = cubeRefTarget(cube, cr)
         val names = parts.map {
           case CubeRefPart.Carry(d) =>
-            val i = dimIdx(d); cube.dimensions(i).nameOf(b.ids(i))
+            val i = cubeRefSource(cube, d); cube.dimensions(i).nameOf(b.ids(i))
           case CubeRefPart.AttrOf(d, a) =>
-            val i = dimIdx(d)
-            if (!cube.dimensions(i).hasAttribute(a)) throw RuleError("#REF!",
-              s"dimension '$d' has no attribute '$a' for cross-cube ref")
-            val m = cube.dimensions(i).nameOf(b.ids(i))
-            cube.dimensions(i).getAttribute(a, m).getOrElse(throw RuleError("#REF!",
-              s"member '$m' carries no '$a' attribute value for cross-cube ref"))
+            val i = cubeRefSource(cube, d)
+            cubeRefAttr(cube.dimensions(i), d, a)(cube.dimensions(i).nameOf(b.ids(i)))
           case CubeRefPart.Fixed(m) => m
         }
         // full read path on the target: its rules fire, its cache serves
-        try target.get(names) catch {
-          case e: RuleError => throw e
-          case _: NoSuchElementException => throw RuleError("#REF!",
-            s"cross-cube ref to '$cn': no such member address ${names.mkString("(", ", ", ")")}")
-        }
+        pinnedRead(target, names)
       case Shift(dimName, offset) =>
         val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dimName))
         if (i < 0) throw RuleError("#REF!", s"unknown dimension '$dimName' in rule shift")
@@ -701,34 +684,40 @@ object Rules {
           val sl = newIds.zipWithIndex.map { case (id, j) => cube.dimensions(j).levelOf(id) }.sum
           cube.getByBolt(Bolt(sl, newIds))
         }
-      case Add(a, bb) => (ev(a), ev(bb)) match {
-        case (None, None) => None
-        case (x, y) => Some(x.getOrElse(0.0) + y.getOrElse(0.0))
-      }
-      case Sub(a, bb) => (ev(a), ev(bb)) match {
-        case (None, None) => None
-        case (x, y) => Some(x.getOrElse(0.0) - y.getOrElse(0.0))
-      }
-      case Mul(a, bb) => for (x <- ev(a); y <- ev(bb)) yield x * y
-      case Div(a, bb) => (ev(a), ev(bb)) match {
-        case (Some(x), Some(y)) if y != 0.0 => Some(x / y)
-        // explicit division by a STORED zero is an error, not an empty cell
-        // (≙ `#DIV/0!`, `rules.py:15-20`); NaN is the in-band sentinel that
-        // `Cube.getCell` / view renders surface as the error code
-        case (Some(_), Some(_)) => Some(Double.NaN)
-        case _ => None
-      }
+      case Add(a, bb) => plus(ev(a), ev(bb))
+      case Sub(a, bb) => minus(ev(a), ev(bb))
+      case Mul(a, bb) => times(ev(a), ev(bb))
+      case Div(a, bb) => div(ev(a), ev(bb))
       case Neg(a) => ev(a).map(-_)
       case Fn("abs", a) => ev(a).map(math.abs)
-      // HALF_UP away from zero, matching column mode's Spark `round` —
-      // math.round (floor(x+0.5)) would disagree on negative halves
-      // (round(-2.5): -2 vs -3) and break scalar/bulk/grid parity
-      case Fn("round", a) => ev(a).map(v =>
-        if (v.isNaN || v.isInfinite) v
-        else BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      case Fn("round", a) => ev(a).map(roundHalfUp)
       case Fn(n, _) => throw RuleError("#ERR!", s"unknown rule function '$n'")
     }
   }
+
+  // ---- rule arithmetic on doubles: one definition for scalar reads and
+  // driver grids, agreeing bit for bit with the column compiler ----------
+
+  private def plus(x: Option[Double], y: Option[Double]): Option[Double] =
+    if (x.isEmpty && y.isEmpty) None else Some(x.getOrElse(0.0) + y.getOrElse(0.0))
+  private def minus(x: Option[Double], y: Option[Double]): Option[Double] =
+    if (x.isEmpty && y.isEmpty) None else Some(x.getOrElse(0.0) - y.getOrElse(0.0))
+  private def times(x: Option[Double], y: Option[Double]): Option[Double] =
+    for (a <- x; b <- y) yield a * b
+  private def div(x: Option[Double], y: Option[Double]): Option[Double] = (x, y) match {
+    case (Some(a), Some(b)) if b != 0.0 => Some(a / b)
+    // explicit division by a STORED zero is an error, not an empty cell
+    // (≙ `#DIV/0!`, `rules.py:15-20`); NaN is the in-band sentinel that
+    // `Cube.getCell` / view renders surface as the error code
+    case (Some(_), Some(_)) => Some(Double.NaN)
+    case _ => None
+  }
+  // HALF_UP away from zero, matching column mode's Spark `round` —
+  // math.round (floor(x+0.5)) would disagree on negative halves
+  // (round(-2.5): -2 vs -3) and break scalar/bulk/grid parity
+  private def roundHalfUp(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** THE column-mode rule compiler: one shared translation of RuleExpr
     * arithmetic to Catalyst Columns (null semantics, decimal preservation,
@@ -777,6 +766,121 @@ object Rules {
       case Input => input.getOrElse(throw new IllegalArgumentException(
         "on-entry Input is not expressible in column mode"))
     }
+    c(e)
+  }
+
+  /** A rule column held on the driver over a grid's rows: the Spark type
+    * and nullability [[toColumnWith]] gives the same expression, and the
+    * value at each row — a boxed Double, a `java.math.BigDecimal` at the
+    * type's scale, or null.
+    */
+  private[olap] final case class Cells(dataType: DataType, nullable: Boolean, at: Int => Any)
+
+  /** The session settings decimal arithmetic depends on. */
+  private[olap] final case class DecimalMode(ansi: Boolean, precisionLoss: Boolean)
+  private[olap] object DecimalMode {
+    def of(spark: org.apache.spark.sql.SparkSession): DecimalMode = DecimalMode(
+      spark.conf.get("spark.sql.ansi.enabled").toBoolean,
+      spark.conf.get("spark.sql.decimalOperations.allowPrecisionLoss").toBoolean)
+  }
+
+  /** A decimal or double cell as the double Spark's cast gives. */
+  private[olap] def toDouble(v: Any): java.lang.Double = v match {
+    case null => null
+    case d: java.lang.Double => d
+    case b: java.math.BigDecimal => Decimal(b).toDouble
+  }
+
+  /** The driver interpreter of [[toColumnWith]]: the same expression gives
+    * the same type, nullability and bits with no Spark job. Doubles use the
+    * scalar path's arithmetic. Decimal `+`, `−` and `×` take Spark's
+    * decimal result type (capped at 38 digits, HALF_UP to the result scale,
+    * an overflow raising under ANSI and null otherwise); a decimal meeting a
+    * double, and every `/`, is a double. Operands compile in the column
+    * compiler's order, so the first error it would raise is the one raised
+    * here.
+    */
+  private[olap] def toCells(resolve: String => Cells, cubeRef: RuleExpr.CubeRef => Cells,
+      mode: DecimalMode)(e: RuleExpr): Cells = {
+    import RuleExpr._
+    def opt(c: Cells, i: Int): Option[Double] = Option(toDouble(c.at(i))).map(_.doubleValue)
+    def boxed(v: Option[Double]): Any = v.map(Double.box).orNull
+    def fit(d: Decimal, t: DecimalType): Any =
+      if (d.changePrecision(t.precision, t.scale)) d.toJavaBigDecimal
+      else if (mode.ansi) throw new ArithmeticException(
+        s"rule value ${d.toJavaBigDecimal} cannot be represented as decimal(${t.precision}, ${t.scale})")
+      else null
+    def dec(v: Any): Decimal = if (v == null) Decimal(0) else Decimal(v.asInstanceOf[java.math.BigDecimal])
+    def resultType(p: Int, s: Int): DecimalType =
+      if (p <= DecimalType.MAX_PRECISION) DecimalType(p, s)
+      else if (!mode.precisionLoss) DecimalType(DecimalType.MAX_PRECISION, math.min(s, DecimalType.MAX_PRECISION))
+      else DecimalType(DecimalType.MAX_PRECISION, math.max(DecimalType.MAX_PRECISION - (p - s), math.min(s, 6)))
+    // the type of coalesce(x, 0): an int zero widens a decimal to 10 integer digits
+    def orZero(t: DataType): DataType = t match {
+      case d: DecimalType if d.precision - d.scale < 10 =>
+        DecimalType(math.min(DecimalType.MAX_PRECISION, 10 + d.scale), d.scale)
+      case other => other
+    }
+    def additive(a: Cells, b: Cells, sub: Boolean): Cells = (orZero(a.dataType), orZero(b.dataType)) match {
+      case (x: DecimalType, y: DecimalType) =>
+        val s = math.max(x.scale, y.scale)
+        val t = resultType(math.max(x.precision - x.scale, y.precision - y.scale) + s + 1, s)
+        Cells(t, nullable = true, i => {
+          val (x, y) = (a.at(i), b.at(i))
+          if (x == null && y == null) null else fit(if (sub) dec(x) - dec(y) else dec(x) + dec(y), t)
+        })
+      case _ =>
+        Cells(DoubleType, nullable = true, i => boxed(if (sub) minus(opt(a, i), opt(b, i)) else plus(opt(a, i), opt(b, i))))
+    }
+    def c(x: RuleExpr): Cells = x match {
+      case Lit(v) => val b = Double.box(v); Cells(DoubleType, nullable = false, _ => b)
+      case Ref(spec) if !spec.contains(":") => resolve(spec)
+      case Ref(spec) => throw new IllegalArgumentException(
+        s"cross-dimension ref '$spec' not expressible in column mode")
+      case Add(a, b) => val ca = c(a); additive(ca, c(b), sub = false)
+      case Sub(a, b) => val ca = c(a); additive(ca, c(b), sub = true)
+      case Mul(a, b) =>
+        val ca = c(a); val cb = c(b)
+        (ca.dataType, cb.dataType) match {
+          case (x: DecimalType, y: DecimalType) =>
+            val t = resultType(x.precision + y.precision + 1, x.scale + y.scale)
+            Cells(t, ca.nullable || cb.nullable || !mode.ansi, i => {
+              val (x, y) = (ca.at(i), cb.at(i))
+              if (x == null || y == null) null else fit(dec(x) * dec(y), t)
+            })
+          case _ => Cells(DoubleType, ca.nullable || cb.nullable, i => boxed(times(opt(ca, i), opt(cb, i))))
+        }
+      case Div(a, b) =>
+        // the column compiler reads the denominator first
+        val cb = c(b); val ca = c(a)
+        Cells(DoubleType, nullable = true, i => boxed(div(opt(ca, i), opt(cb, i))))
+      case Neg(a) => unary(c(a), -_, _.negate)
+      case Fn("abs", a) => unary(c(a), math.abs, _.abs)
+      case Fn("round", a) =>
+        val ca = c(a)
+        ca.dataType match {
+          case t: DecimalType =>
+            Cells(DecimalType(math.min(DecimalType.MAX_PRECISION, t.precision - t.scale + 1), 0), nullable = true, i =>
+              ca.at(i) match {
+                case null => null
+                case v: java.math.BigDecimal => v.setScale(0, java.math.RoundingMode.HALF_UP)
+              })
+          // Spark's round is nullable whatever its input
+          case _ => unary(ca, roundHalfUp, identity).copy(nullable = true)
+        }
+      case Fn(n, _) => throw RuleError("#ERR!", s"unknown rule function '$n'")
+      case Shift(d, _) => throw new IllegalArgumentException(
+        s"relative shift on '$d' not expressible in column mode")
+      case cr @ CubeRef(_, _) => cubeRef(cr)
+      case Input => throw new IllegalArgumentException(
+        "on-entry Input is not expressible in column mode")
+    }
+    def unary(a: Cells, onDouble: Double => Double, onDecimal: java.math.BigDecimal => java.math.BigDecimal): Cells =
+      Cells(a.dataType, a.nullable, i => a.at(i) match {
+        case null => null
+        case d: java.lang.Double => Double.box(onDouble(d))
+        case b: java.math.BigDecimal => onDecimal(b)
+      })
     c(e)
   }
 
@@ -1034,19 +1138,7 @@ object Rules {
     val crCols = mutable.LinkedHashMap[String, String]()
     def cubeRefColumn(cr: RuleExpr.CubeRef): Column = {
       import RuleExpr.CubeRefPart
-      val db = cube.databaseRef.getOrElse(throw RuleError("#REF!",
-        s"cube '${cube.name}' is not attached to a database — cross-cube ref needs one"))
-      val target = try db.cube(cr.cubeName) catch {
-        case _: NoSuchElementException =>
-          throw RuleError("#REF!", s"unknown cube '${cr.cubeName}' in cross-cube ref")
-      }
-      if (cr.parts.size != target.nDims) throw RuleError("#REF!",
-        s"cross-cube ref to '${cr.cubeName}' needs ${target.nDims} members, got ${cr.parts.size}")
-      def srcDim(dn: String): Int = {
-        val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dn))
-        if (i < 0) throw RuleError("#REF!", s"unknown dimension '$dn' in cross-cube ref")
-        i
-      }
+      val target = cubeRefTarget(cube, cr)
       // the cell's member name(s) on source dim i at base grain
       def nameAt(i: Int): Either[String, Seq[(Int, String)]] =
         if (i == measureDim) Left(rule.trigger.collectFirst {
@@ -1067,18 +1159,14 @@ object Rules {
       val resolved: Seq[Either[String, (Int, Seq[(Int, String)])]] = cr.parts.map {
         case CubeRefPart.Fixed(mm) => Left(mm)
         case CubeRefPart.Carry(dn) =>
-          val i = srcDim(dn)
+          val i = cubeRefSource(cube, dn)
           nameAt(i) match {
             case Left(n) => Left(n)
             case Right(pairs) => Right((i, pairs))
           }
         case CubeRefPart.AttrOf(dn, a) =>
-          val i = srcDim(dn); val dim = cube.dimensions(i)
-          if (!dim.hasAttribute(a)) throw RuleError("#REF!",
-            s"dimension '$dn' has no attribute '$a' for cross-cube ref")
-          def attrOf(n: String): String = dim.getAttribute(a, n).getOrElse(
-            throw RuleError("#REF!",
-              s"member '$n' carries no '$a' attribute value for cross-cube ref"))
+          val i = cubeRefSource(cube, dn)
+          val attrOf = cubeRefAttr(cube.dimensions(i), dn, a)
           nameAt(i) match {
             case Left(n) => Left(attrOf(n))
             case Right(pairs) => Right((i, pairs.map { case (id, n) => id -> attrOf(n) }))
@@ -1090,28 +1178,15 @@ object Rules {
           s"@$i:${pairs.map(p => p._1.toString + ">" + p._2).mkString(",")}"
       }.mkString(" ")
       crCols.get(sig).map(col).getOrElse {
-        def idOfOr(td: Dimension, n: String): Int =
-          if (td.contains(n)) td.idOf(n)
-          else throw RuleError("#REF!",
-            s"cross-cube ref to '${target.name}': no member '$n' in dimension '${td.name}'")
         val valName = s"__cr${crCols.size}"
         if (resolved.forall(_.isLeft)) {
-          val names = resolved.map {
-            case Left(n) => n
-            case Right(_) => throw new IllegalStateException("unreachable")
-          }
-          val v = try target.get(names) catch {
-            case e: RuleError => throw e
-            case _: NoSuchElementException => throw RuleError("#REF!",
-              s"cross-cube ref to '${target.name}': no such member address " +
-                names.mkString("(", ", ", ")"))
-          }
+          val v = pinnedRead(target, resolved.map(_.swap.toOption.get))
           frame = frame.withColumn(valName,
             v.map(lit(_)).getOrElse(lit(null).cast("double")))
         } else {
           val selIds: Seq[Seq[Int]] = resolved.zip(target.dimensions).map {
-            case (Left(n), td) => Seq(idOfOr(td, n))
-            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(idOfOr(td, _))
+            case (Left(n), td) => Seq(cubeRefTargetId(target, td, n))
+            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(cubeRefTargetId(target, td, _))
           }
           var slice = ruledGrid(target, selIds, 1)
           val keys = resolved.zipWithIndex.collect {
@@ -1252,34 +1327,46 @@ object Rules {
   }
 
   /** Grid over `selections` with rule-backed members of (at most) one
-    * dimension computed post-pivot inside the same job (≙ rule cells in the
-    * dialect's dense grid, `query.py:101-136` — still no per-cell loop).
+    * dimension computed after a pivot of the stored grid (≙ rule cells in
+    * the dialect's dense grid, `query.py:101-136` — still no per-cell loop).
     * Rule matching, transitive ref expansion, and deps-first ordering are
     * the shared [[gridRuleFor]]/[[expandRuled]] helpers — ONE semantics for
     * dialect grids, views, cross-cube slice fetches, and the scalar path.
     *
     * Cross-cube refs ([[RuleExpr.CubeRef]]) compute here too: each distinct
-    * ref shape becomes ONE broadcast LEFT join of the target cube's
-    * (rule-aware, recursively via this method) slice onto the pivoted grid,
-    * keyed in id space — `Carry`/`AttrOf` parts over OTHER grid dimensions
-    * vary per row (srcId → targetId map literal over the bounded selection),
-    * parts over the ruled dimension or pinned dims are constants, and a
-    * fully-pinned address is a bounded scalar read. Resolution failures
-    * (missing attribute on a selected member, unknown target member) raise
-    * the scalar path's RuleError — the dialect has no cell-level sentinel
-    * channel. `depth` guards cyclic cube references (A→B→A).
+    * ref shape reads the target cube's (rule-aware, recursively via this
+    * method) slice once, keyed in id space — `Carry`/`AttrOf` parts over
+    * OTHER grid dimensions vary per row (source id → target id over the
+    * bounded selection), parts over the ruled dimension or pinned dims are
+    * constants, and a fully-pinned address is a bounded scalar read.
+    * Resolution failures (missing attribute on a selected member, unknown
+    * target member) raise the scalar path's RuleError — the dialect has no
+    * cell-level sentinel channel. `depth` guards cyclic cube references
+    * (A→B→A).
     *
-    * Output: `a0..aN-1, value` (double), non-empty addresses only.
+    * When [[Cube.reportGrid]] hands back the stored grid as driver rows,
+    * the pivot, the rule cells ([[toCells]]) and the stack back to one row
+    * per address run in Scala, with no Spark job; a grid too large to
+    * collect keeps the DataFrame plan (pivot → rule columns → stack).
+    *
+    * Output: `a0..aN-1, value`, non-empty addresses only; the value is a
+    * double once a rule-backed member is selected, else the grid's own sum.
     */
-  def ruledGrid(cube: Cube, selections: Seq[Seq[Int]],
-      depth: Int = 0): org.apache.spark.sql.DataFrame = {
+  def ruledGrid(cube: Cube, selections: Seq[Seq[Int]], depth: Int = 0): DataFrame =
+    ruledReport(cube, selections, depth).fold(identity, _.toDF(cube.spark))
+
+  /** [[ruledGrid]] as driver rows when [[Cube.reportGrid]] gives the stored
+    * grid as rows (always, with `collectAny`), else as the DataFrame plan.
+    */
+  private[olap] def ruledReport(cube: Cube, selections: Seq[Seq[Int]], depth: Int = 0,
+      collectAny: Boolean = false): Either[DataFrame, Cube.GridRows] = {
     require(depth < 8, s"cross-cube reference chain deeper than 8 at cube " +
       s"'${cube.name}' (cycle?)")
     def ruleAt(di: Int)(id: Int): Option[RuleDef] =
       gridRuleFor(cube, di, id, selections(_))
     val ruledDims = cube.dimensions.indices
       .filter(i => selections(i).exists(id => ruleAt(i)(id).isDefined))
-    if (ruledDims.isEmpty) return cube.gridAggregate(selections)
+    if (ruledDims.isEmpty) return cube.reportGrid(selections, collectAny)
     require(ruledDims.size == 1,
       "rule-backed members supported in one dimension per query")
     val di = ruledDims.head
@@ -1291,86 +1378,137 @@ object Rules {
       throw RuleError(code, s"rule-backed member '${d.nameOf(id)}' has a dangling reference") }
     require(fetchIds.nonEmpty,
       s"dimension '${d.name}': every selected member is rule-backed with no stored refs")
-    val allIds = fetchIds
-    val g = cube.gridAggregate(selections.updated(di, allIds))
-    val otherCols = cube.dimensions.indices.filterNot(_ == di).map(i => s"a$i")
+    val shape = RuledShape(cube, selections, di, ruled, order, fetchIds, depth)
+    cube.reportGrid(selections.updated(di, fetchIds), collectAny) match {
+      case Right(g) => Right(ruledRows(shape, g))
+      case Left(g) => Left(ruledPlan(shape, g))
+    }
+  }
+
+  /** A ruled grid request after rule expansion on its ruled dimension `di`. */
+  private final case class RuledShape(cube: Cube, selections: Seq[Seq[Int]], di: Int,
+      ruled: Map[Int, RuleDef], order: Seq[Int], fetchIds: Seq[Int], depth: Int) {
+    def d: Dimension = cube.dimensions(di)
+
+    /** A cross-cube ref of the rule carried by member `carriedId`, resolved
+      * against this grid: the target cube, a signature naming the slice,
+      * and per target part a constant member NAME (Left) or the source
+      * dimension with ordered (source id → target member name) pairs.
+      */
+    def cubeRef(cr: RuleExpr.CubeRef, carriedId: Int): (Cube, String, Seq[Either[String, (Int, Seq[(Int, String)])]]) = {
+      import RuleExpr.CubeRefPart
+      val target = cubeRefTarget(cube, cr)
+      val resolved = cr.parts.map {
+        case CubeRefPart.Fixed(mm) => Left(mm)
+        case CubeRefPart.Carry(dn) =>
+          val i = cubeRefSource(cube, dn)
+          if (i == di) Left(d.nameOf(carriedId))
+          else Right((i, selections(i).distinct.map(sid => sid -> cube.dimensions(i).nameOf(sid))))
+        case CubeRefPart.AttrOf(dn, a) =>
+          val i = cubeRefSource(cube, dn)
+          val attrOf = cubeRefAttr(cube.dimensions(i), dn, a)
+          if (i == di) Left(attrOf(d.nameOf(carriedId)))
+          else Right((i, selections(i).distinct.map(sid => sid -> attrOf(cube.dimensions(i).nameOf(sid)))))
+      }
+      val sig = target.name + " " + resolved.map {
+        case Left(n) => s"=$n"
+        case Right((i, pairs)) => s"@$i:${pairs.map(p => p._1.toString + ">" + p._2).mkString(",")}"
+      }.mkString(" ")
+      (target, sig, resolved)
+    }
+
+    /** The target selections of a resolved ref's slice. */
+    def sliceSelections(target: Cube, resolved: Seq[Either[String, (Int, Seq[(Int, String)])]]): Seq[Seq[Int]] =
+      resolved.zip(target.dimensions).map {
+        case (Left(n), td) => Seq(cubeRefTargetId(target, td, n))
+        case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(cubeRefTargetId(target, td, _))
+      }
+  }
+
+  /** [[ruledGrid]] on driver rows: `g` pivoted on the ruled dimension by the
+    * other dimensions' keys (groups in first-seen order), the rule members
+    * computed deps-first, then stacked back per group in the requested
+    * order with empty cells dropped; cross-cube slices are collected once
+    * and looked up by key.
+    */
+  private def ruledRows(s: RuledShape, g: Cube.GridRows): Cube.GridRows = {
+    val n = s.cube.nDims
+    val di = s.di
+    val others = (0 until n).filter(_ != di)
+    val groups = mutable.LinkedHashMap[Seq[Any], Int]()
+    val rowGroup = g.rows.map(r => groups.getOrElseUpdate(others.map(r.get), groups.size))
+    val keys = groups.keys.toIndexedSeq
+    val cols = mutable.HashMap[Int, Cells]()
+    s.fetchIds.foreach { id =>
+      val vals = new Array[Any](keys.size)
+      g.rows.zip(rowGroup).foreach { case (r, k) =>
+        if (r.getInt(di) == id && vals(k) == null) vals(k) = r.get(n)
+      }
+      cols(id) = Cells(g.schema("value").dataType, nullable = true, vals(_))
+    }
+    val mode = DecimalMode.of(s.cube.spark)
+    val slices = mutable.HashMap[String, Cells]()
+    def cubeRefCells(cr: RuleExpr.CubeRef, carriedId: Int): Cells = {
+      val (target, sig, resolved) = s.cubeRef(cr, carriedId)
+      slices.getOrElseUpdate(sig,
+        if (resolved.forall(_.isLeft)) pinnedCells(target, resolved.map(_.swap.toOption.get))
+        else {
+          val slice = collected(ruledReport(target, s.sliceSelections(target, resolved), s.depth + 1, collectAny = true))
+          val parts = resolved.zipWithIndex.collect { case (Right((srcI, pairs)), p) =>
+            val td = target.dimensions(p)
+            (p, others.indexOf(srcI), pairs.map { case (sid, nm) => sid -> td.idOf(nm) }.toMap)
+          }
+          val m = slice.schema.length - 1
+          val byKey = slice.rows.map(r => parts.map(p => r.getInt(p._1)) -> r.get(m)).toMap
+          Cells(slice.schema("value").dataType, nullable = true, k => {
+            val key = parts.map { case (_, j, srcToTgt) => Option(keys(k)(j)).flatMap(id => srcToTgt.get(id.asInstanceOf[Int])) }
+            if (key.exists(_.isEmpty)) null else byKey.getOrElse(key.map(_.get), null)
+          })
+        })
+    }
+    s.order.foreach { id =>
+      val c = toCells(spec => cols.getOrElse(s.d.idOf(spec), throw new IllegalStateException(
+        s"ruled grid: no column for ref '$spec'")), cubeRefCells(_, id), mode)(s.ruled(id).expr)
+      val vals = Array.tabulate(keys.size)(c.at)
+      cols(id) = c.copy(at = vals(_))
+    }
+    val requested = s.selections(di)
+    val out = for (k <- keys.indices; id <- requested; v <- Option(toDouble(cols(id).at(k))))
+      yield Row.fromSeq((0 until n).map(i => if (i == di) Int.box(id) else keys(k)(others.indexOf(i))) :+ v)
+    Cube.GridRows(StructType((0 until n).map(i =>
+      if (i == di) StructField(s"a$di", IntegerType) else g.schema(s"a$i")) :+
+      StructField("value", DoubleType)), out)
+  }
+
+  /** [[ruledGrid]] as a DataFrame plan over the stored grid `g`: one pivot,
+    * one rule column per ruled member (cross-cube slices joined by
+    * broadcast), one stack.
+    */
+  private def ruledPlan(s: RuledShape, g: DataFrame): DataFrame = {
+    val di = s.di
+    val otherCols = s.cube.dimensions.indices.filterNot(_ == di).map(i => s"a$i")
     var pivoted = g.groupBy(otherCols.map(col): _*)
-      .pivot(s"a$di", allIds.map(_.asInstanceOf[AnyRef]).toSeq)
+      .pivot(s"a$di", s.fetchIds.map(_.asInstanceOf[AnyRef]))
       .agg(first(col("value")))
 
     // cross-cube slice joins, deduped per distinct resolved ref shape
     val crCols = mutable.LinkedHashMap[String, String]()
     def cubeRefColumn(cr: RuleExpr.CubeRef, carriedId: Int): Column = {
-      import RuleExpr.CubeRefPart
-      val db = cube.databaseRef.getOrElse(throw RuleError("#REF!",
-        s"cube '${cube.name}' is not attached to a database — cross-cube ref needs one"))
-      val target = try db.cube(cr.cubeName) catch {
-        case _: NoSuchElementException =>
-          throw RuleError("#REF!", s"unknown cube '${cr.cubeName}' in cross-cube ref")
-      }
-      if (cr.parts.size != target.nDims) throw RuleError("#REF!",
-        s"cross-cube ref to '${cr.cubeName}' needs ${target.nDims} members, got ${cr.parts.size}")
-      def srcDim(dn: String): Int = {
-        val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dn))
-        if (i < 0) throw RuleError("#REF!", s"unknown dimension '$dn' in cross-cube ref")
-        i
-      }
-      // per part: Left(constant target member NAME) or Right(source dim
-      // index, ordered (source id → target member name) pairs)
-      val resolved: Seq[Either[String, (Int, Seq[(Int, String)])]] = cr.parts.map {
-        case CubeRefPart.Fixed(mm) => Left(mm)
-        case CubeRefPart.Carry(dn) =>
-          val i = srcDim(dn)
-          if (i == di) Left(d.nameOf(carriedId))
-          else Right((i, selections(i).distinct.map(sid =>
-            sid -> cube.dimensions(i).nameOf(sid))))
-        case CubeRefPart.AttrOf(dn, a) =>
-          val i = srcDim(dn); val dim = cube.dimensions(i)
-          if (!dim.hasAttribute(a)) throw RuleError("#REF!",
-            s"dimension '$dn' has no attribute '$a' for cross-cube ref")
-          def attrOf(n: String): String = dim.getAttribute(a, n).getOrElse(
-            throw RuleError("#REF!",
-              s"member '$n' carries no '$a' attribute value for cross-cube ref"))
-          if (i == di) Left(attrOf(d.nameOf(carriedId)))
-          else Right((i, selections(i).distinct.map(sid =>
-            sid -> attrOf(dim.nameOf(sid)))))
-      }
-      val sig = target.name + " " + resolved.map {
-        case Left(n) => s"=$n"
-        case Right((i, pairs)) =>
-          s"@$i:${pairs.map(p => p._1.toString + ">" + p._2).mkString(",")}"
-      }.mkString(" ")
+      val (target, sig, resolved) = s.cubeRef(cr, carriedId)
       crCols.get(sig).map(col).getOrElse {
-        def idOfOr(td: graft.core.Dimension, n: String): Int =
-          if (td.contains(n)) td.idOf(n)
-          else throw RuleError("#REF!",
-            s"cross-cube ref to '${target.name}': no member '$n' in dimension '${td.name}'")
         val valName = s"__cr${crCols.size}"
         if (resolved.forall(_.isLeft)) {
-          val names = resolved.map {
-            case Left(n) => n
-            case Right(_) => throw new IllegalStateException("unreachable")
-          }
-          val v = try target.get(names) catch {
-            case e: RuleError => throw e
-            case _: NoSuchElementException => throw RuleError("#REF!",
-              s"cross-cube ref to '${target.name}': no such member address " +
-                names.mkString("(", ", ", ")"))
-          }
+          val v = pinnedRead(target, resolved.map(_.swap.toOption.get))
           pivoted = pivoted.withColumn(valName,
             v.map(lit(_)).getOrElse(lit(null).cast("double")))
         } else {
-          val selIds: Seq[Seq[Int]] = resolved.zip(target.dimensions).map {
-            case (Left(n), td) => Seq(idOfOr(td, n))
-            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(idOfOr(td, _))
-          }
-          var slice = ruledGrid(target, selIds, depth + 1)
+          var slice = ruledGrid(target, s.sliceSelections(target, resolved), s.depth + 1)
           val keys = resolved.zipWithIndex.collect {
             case (Right((srcI, pairs)), p) =>
               val td = target.dimensions(p)
               val kc = s"${valName}_k$p"
               // grid side: source id → target id, over the bounded selection
-              val srcToTgt = pairs.map { case (sid, n) => sid -> td.idOf(n) }
+              val srcToTgt = pairs.map { case (sid, nm) => sid -> td.idOf(nm) }
               (kc, col(s"a$p").as(kc),
                 map(srcToTgt.flatMap { case (s0, t0) =>
                   Seq(lit(s0), lit(t0)) }: _*)(col(s"a$srcI")))
@@ -1385,19 +1523,76 @@ object Rules {
       }
     }
 
-    order.foreach { id =>
+    s.order.foreach { id =>
       // build the Column FIRST: cross-cube resolution joins slices onto
       // `pivoted`, and the receiver must be the post-join frame
-      val c0 = toColumnWith(spec => col(s"`${d.idOf(spec)}`"), None,
-        cr => cubeRefColumn(cr, id))(ruled(id).expr)
+      val c0 = toColumnWith(spec => col(s"`${s.d.idOf(spec)}`"), None,
+        cr => cubeRefColumn(cr, id))(s.ruled(id).expr)
       pivoted = pivoted.withColumn(id.toString, c0)
     }
-    val requested = selections(di)
+    val requested = s.selections(di)
     val stackExpr = s"stack(${requested.size}, " +
       requested.map(id => s"$id, CAST(`$id` AS DOUBLE)").mkString(", ") + s") AS (a$di, value)"
     pivoted.select(otherCols.map(col) :+ expr(stackExpr): _*)
       .filter(col("value").isNotNull)
-      .select(cube.dimensions.indices.map(i => col(s"a$i")) :+ col("value"): _*)
+      .select(s.cube.dimensions.indices.map(i => col(s"a$i")) :+ col("value"): _*)
+  }
+
+  /** A report's grid as rows, collecting a plan if one came back. */
+  private[olap] def collected(g: Either[DataFrame, Cube.GridRows]): Cube.GridRows =
+    g.fold(df => Cube.GridRows(df.schema, df.collect().toIndexedSeq), identity)
+
+  // ---- cross-cube refs: resolution shared by every grid face -------------
+
+  /** The target cube of a cross-cube ref, or `#REF!`. */
+  private[olap] def cubeRefTarget(cube: Cube, cr: RuleExpr.CubeRef): Cube = {
+    val db = cube.databaseRef.getOrElse(throw RuleError("#REF!",
+      s"cube '${cube.name}' is not attached to a database — cross-cube ref needs one"))
+    val target = try db.cube(cr.cubeName) catch {
+      case _: NoSuchElementException =>
+        throw RuleError("#REF!", s"unknown cube '${cr.cubeName}' in cross-cube ref")
+    }
+    if (cr.parts.size != target.nDims) throw RuleError("#REF!",
+      s"cross-cube ref to '${cr.cubeName}' needs ${target.nDims} members, got ${cr.parts.size}")
+    target
+  }
+
+  /** The source dimension a cross-cube part names, or `#REF!`. */
+  private[olap] def cubeRefSource(cube: Cube, dn: String): Int = {
+    val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dn))
+    if (i < 0) throw RuleError("#REF!", s"unknown dimension '$dn' in cross-cube ref")
+    i
+  }
+
+  /** Member name → its attribute `a` value for an `AttrOf` part; strict. */
+  private[olap] def cubeRefAttr(dim: Dimension, dn: String, a: String): String => String = {
+    if (!dim.hasAttribute(a)) throw RuleError("#REF!",
+      s"dimension '$dn' has no attribute '$a' for cross-cube ref")
+    n => dim.getAttribute(a, n).getOrElse(throw RuleError("#REF!",
+      s"member '$n' carries no '$a' attribute value for cross-cube ref"))
+  }
+
+  /** Id of target member `n`, or `#REF!`. */
+  private[olap] def cubeRefTargetId(target: Cube, td: Dimension, n: String): Int =
+    if (td.contains(n)) td.idOf(n)
+    else throw RuleError("#REF!",
+      s"cross-cube ref to '${target.name}': no member '$n' in dimension '${td.name}'")
+
+  /** A fully pinned cross-cube address: a bounded scalar read through the
+    * target's full read path (its rules fire, its cache serves). */
+  private[olap] def pinnedRead(target: Cube, names: Seq[String]): Option[Double] =
+    try target.get(names) catch {
+      case e: RuleError => throw e
+      case _: NoSuchElementException => throw RuleError("#REF!",
+        s"cross-cube ref to '${target.name}': no such member address " +
+          names.mkString("(", ", ", ")"))
+    }
+
+  /** [[pinnedRead]] as a constant driver column (a literal, or a null one). */
+  private[olap] def pinnedCells(target: Cube, names: Seq[String]): Cells = {
+    val v = pinnedRead(target, names)
+    val b: Any = v.map(Double.box).orNull
+    Cells(DoubleType, v.isEmpty, _ => b)
   }
 
   /** All Ref specs in an expression (the one shared RuleExpr walker —

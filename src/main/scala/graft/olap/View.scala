@@ -1,8 +1,9 @@
 package graft.olap
 
-import graft.core.{Cube, MemberDef}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import graft.core.Cube
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import scala.collection.mutable
 
 /** One axis of a view: an ordered list of (dimension, members) entries; the
   * axis positions are the cartesian product of the member lists in order
@@ -36,8 +37,10 @@ final case class ViewDef(
   */
 final case class ViewWindow(top: Int, left: Int, bottom: Int, right: Int)
 
-/** Refresh statistics (≙ `ViewStatistics`, `view.py:46-63`): wall time, grid
-  * extent, how many positions were served from storage vs computed by rules.
+/** Refresh statistics (≙ `ViewStatistics`, `view.py:46-63`) of the last
+  * computed grid: the wall time to compute it, its extent — rows after
+  * suppression, before any window, and columns — and how many positions
+  * were served from storage vs computed by rules.
   */
 final case class ViewStats(
     durationMs: Long,
@@ -46,15 +49,21 @@ final case class ViewStats(
     aggregatedPositions: Int = 0,
     rulePositions: Int = 0)
 
-/** Pivot-grid report over a cube. The whole grid — every axis combination —
-  * is ONE grid aggregation ([[Cube.gridAggregate]]: a driver pass once
-  * base reads have built the point index, else a closure-join Spark job), then `groupBy(rowKeys)
-  * .pivot(colKey)` (≙ the per-cell loop `view.py:769-911`, re-planned as
-  * SURVEY §2.10 V3 prescribes).
+/** Pivot-grid report over a cube (≙ the per-cell loop `view.py:769-911`,
+  * re-planned as SURVEY §2.10 V3 prescribes). The whole grid — every axis
+  * combination — is ONE grid aggregation whose rows come to the driver
+  * ([[Cube.reportGrid]]: the kernel's pass over the point index once base
+  * reads have built it, else one collected closure-join Spark job). The
+  * rest of the report runs in Scala on those rows with no further Spark
+  * job: the pivot to one column per column-axis position, the row-member
+  * names in axis order, rule-derived positions, cross-cube slices
+  * (collected once, then looked up by key), sentinel columns, row and
+  * column zero suppression, and windows.
   *
-  * Measure rules: when the column axis is a single dimension, requested
-  * members backed by an ALL_LEVELS / AGGREGATION_LEVEL rule with same-dim
-  * refs are computed post-pivot as derived Columns — still one job.
+  * Measure rules: requested column-axis members backed by an ALL_LEVELS /
+  * AGGREGATION_LEVEL rule with same-dim refs are computed per position
+  * from the pivoted cells through [[Rules.toCells]], which gives what the
+  * column compiler would: the same types, nullability and bits.
   */
 final class View(val cube: Cube, val dfn: ViewDef) {
 
@@ -71,8 +80,13 @@ final class View(val cube: Cube, val dfn: ViewDef) {
     * of the column-axis member lists in entry order, last entry varying
     * fastest (≙ `view.py:167-171`). Multi-dimension positions are named
     * `m1/m2/…` (one member per axis entry). Cells are doubles (null = empty).
+    * The frame is a local relation over the computed rows.
     */
-  def refresh(): DataFrame = {
+  def refresh(): DataFrame = assemble().toDF(cube.spark)
+
+  /** Compute the grid: its rows in row-axis order, with the schema of
+    * [[refresh]]; sets [[stats]]. */
+  private def assemble(): Cube.GridRows = {
     val t0 = System.nanoTime()
     val rowDims = dfn.rows.entries.map(e => dimIdx(e._1))
     val colEntries = dfn.cols.entries
@@ -106,7 +120,7 @@ final class View(val cube: Cube, val dfn: ViewDef) {
       require(fetchIds.nonEmpty || errIds.nonEmpty,
         s"column axis dimension '$dName': no stored members to fetch — every " +
           "requested member is rule-backed with no stored refs; include at least one stored member")
-      val nameById = scala.collection.mutable.LinkedHashMap[Int, String]()
+      val nameById = mutable.LinkedHashMap[Int, String]()
       requested.foreach(m => nameById.getOrElseUpdate(d.idOf(m), m))
       (fetchIds ++ topoIds).foreach(id => nameById.getOrElseUpdate(id, d.nameOf(id)))
       if (colEntries.size > 1) nameById.values.foreach(m => require(!m.contains("/"),
@@ -118,6 +132,8 @@ final class View(val cube: Cube, val dfn: ViewDef) {
         topoIds.map(nameById),
         errIds.map { case (id, code) => nameById.getOrElse(id, d.nameOf(id)) -> code })
     }
+    val reqPositions = cartesian(perDim.map(_.requested))
+    val rowKeyNames = dfn.rows.entries.map(_._1)
 
     // a column dimension whose every requested member's rule chain is broken
     // has nothing to fetch — render the whole grid as sentinel codes (the
@@ -134,20 +150,16 @@ final class View(val cube: Cube, val dfn: ViewDef) {
             s"to fetch, but ${computable.mkString(", ")} are computable ruled members — " +
             "include at least one stored member to anchor the grid")
       }
-      val reqPositions = cartesian(perDim.map(_.requested))
       val posCode: Seq[(String, String)] = reqPositions.map { pos =>
         pos.mkString("/") -> pos.zip(perDim).collectFirst {
           case (m, pd) if pd.errs.contains(m) => pd.errs(m) }.getOrElse("#REF!")
       }
       val rowTuples = cartesian(dfn.rows.entries.map(_._2))
-      val schema = org.apache.spark.sql.types.StructType(
-        (dfn.rows.entries.map(_._1) ++ posCode.map(_._1)).map(n =>
-          org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
-      val rows = rowTuples.map(rt => org.apache.spark.sql.Row.fromSeq(rt ++ posCode.map(_._2)))
       stats = ViewStats((System.nanoTime() - t0) / 1000000, rowTuples.size,
         posCode.size, aggregatedPositions = 0, rulePositions = 0)
-      return cube.spark.createDataFrame(
-        cube.spark.sparkContext.parallelize(rows.toList, 1), schema)
+      return Cube.GridRows(
+        StructType((rowKeyNames ++ posCode.map(_._1)).map(StructField(_, StringType))),
+        rowTuples.map(rt => Row.fromSeq(rt ++ posCode.map(_._2))).toIndexedSeq)
     }
 
     // selections: filters fix single members; unmentioned dims → default
@@ -159,176 +171,147 @@ final class View(val cube: Cube, val dfn: ViewDef) {
       sel(i) = ms.map(cube.dimensions(i).idOf)
     }
     perDim.foreach(pd => sel(pd.cd) = pd.fetch.map(cube.dimensions(pd.cd).idOf))
+    val g = Rules.collected(cube.reportGrid(sel.toIndexedSeq, collectAny = true))
 
-    var df = cube.gridAggregate(sel.toIndexedSeq)
-
-    // row member names + position ordinals (axis order, not alphabetical)
-    rowDims.zip(dfn.rows.entries).foreach { case (i, (dName, members)) =>
-      val spark = cube.spark
-      val rows = members.zipWithIndex.map { case (m, ord) =>
-        org.apache.spark.sql.Row(cube.dimensions(i).idOf(m), m, ord)
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(s"__id$i", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField(dName, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(s"__ord$i", org.apache.spark.sql.types.IntegerType)))
-      val names = spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
-      df = df.join(broadcast(names), col(s"a$i") === col(s"__id$i")).drop(s"__id$i")
+    // the pivot: one row per combination of row-axis positions (a member
+    // listed twice is two rows), in axis order; one double cell per fetched
+    // column position, named by its members joined with '/'
+    val rowOrds = dfn.rows.entries.zip(rowDims).map { case ((_, ms), i) =>
+      ms.indices.groupBy(k => cube.dimensions(i).idOf(ms(k)))
     }
-
-    // pivot on the composite position key: per column dim an id→name map,
-    // joined with '/' — ONE pivot regardless of axis dimensionality
-    val nameCols = perDim.map { pd =>
-      val byId = pd.fetch.map(m => cube.dimensions(pd.cd).idOf(m) -> m)
-      map(byId.flatMap { case (id, n) => Seq(lit(id), lit(n)) }: _*)(col(s"a${pd.cd}"))
-    }
-    df = df.withColumn("__colName",
-      if (nameCols.size == 1) nameCols.head else concat_ws("/", nameCols: _*))
+    val colName = perDim.map(pd => pd.fetch.map(m => cube.dimensions(pd.cd).idOf(m) -> m).toMap)
     val fetchNames = cartesian(perDim.map(_.fetch)).map(_.mkString("/"))
-    val rowKeyCols = rowDims.zip(dfn.rows.entries).map(_._2._1)
-    val ordCols = rowDims.map(i => s"__ord$i")
-    var grid = df.groupBy((rowKeyCols ++ ordCols).map(col): _*)
-      .pivot("__colName", fetchNames)
-      .agg(first(col("value").cast("double")))
+    val fetchAt = fetchNames.zipWithIndex.toMap
+    val groups = mutable.HashMap[Seq[Int], Array[Any]]()
+    // with no row axis the pivot is one global row, present even when empty
+    if (rowDims.isEmpty) groups(Nil) = new Array[Any](fetchNames.size)
+    val n = cube.nDims
+    g.rows.foreach { r =>
+      if ((rowDims ++ perDim.map(_.cd)).forall(i => !r.isNullAt(i))) {
+        val j = fetchAt.get(perDim.indices.map(k => colName(k)(r.getInt(perDim(k).cd))).mkString("/"))
+        val cell = Rules.toDouble(r.get(n))
+        cartesian(rowDims.indices.map(k => rowOrds(k).getOrElse(r.getInt(rowDims(k)), Nil))).foreach { ords =>
+          val cells = groups.getOrElseUpdate(ords, new Array[Any](fetchNames.size))
+          j.foreach(j => if (cells(j) == null) cells(j) = cell)
+        }
+      }
+    }
+    val ordered = groups.keys.toIndexedSeq.sorted(Ordering.Implicits.seqOrdering[Seq, Int])
+    val nRows = ordered.size
 
-    // requested positions: cartesian product in axis order (last fastest)
-    val reqPositions = cartesian(perDim.map(_.requested))
+    // the grid's columns by case-insensitive name, as Spark resolves them;
+    // a column added under an existing name replaces it
+    val columns = mutable.HashMap[String, Rules.Cells]()
+    def put(name: String, c: Rules.Cells): Unit = columns(name.toLowerCase) = c
+    def column(name: String): Rules.Cells = columns.getOrElse(name.toLowerCase,
+      throw new IllegalStateException(s"view grid has no column '$name'"))
+    rowKeyNames.zipWithIndex.foreach { case (name, k) =>
+      val names = ordered.map(o => dfn.rows.entries(k)._2(o(k)))
+      put(name, Rules.Cells(StringType, nullable = true, names(_)))
+    }
+    fetchNames.zipWithIndex.foreach { case (name, j) =>
+      val vals = ordered.map(groups(_)(j))
+      put(name, Rules.Cells(DoubleType, nullable = true, vals(_)))
+    }
+
     // a position may carry a ruled member on at most ONE dimension
     reqPositions.foreach { pos =>
-      val n = pos.zip(perDim).count { case (m, pd) => pd.ruled.contains(m) }
-      require(n <= 1, s"position ${pos.mkString("/")}: rule-backed members on " +
+      val nr = pos.zip(perDim).count { case (m, pd) => pd.ruled.contains(m) }
+      require(nr <= 1, s"position ${pos.mkString("/")}: rule-backed members on " +
         "more than one column-axis dimension are not supported")
     }
     // positions carrying a BROKEN ruled member (dangling ref after a
     // dimension edit, cascaded through referencing rules) render the
     // sentinel code in every cell instead of aborting the whole view
-    // (≙ `rules.py:15-20`): the column is a string literal the renders
-    // pass through verbatim. `errPosCode` accumulates EVERY sentinel column
-    // (including rule-compile failures below) so chained rules propagate the
-    // code instead of doing string arithmetic, and zero suppression knows
-    // the grid carries non-numeric content.
-    val errPosCode = scala.collection.mutable.LinkedHashMap[String, String]()
+    // (≙ `rules.py:15-20`): the column is a string the renders pass through
+    // verbatim. `errPosCode` accumulates EVERY sentinel column (including
+    // rule-compile failures below) so chained rules propagate the code
+    // instead of doing string arithmetic, and zero suppression knows the
+    // grid carries non-numeric content.
+    val errPosCode = mutable.LinkedHashMap[String, String]()
+    def sentinel(posName: String, code: String): Unit = {
+      errPosCode(posName) = code
+      put(posName, Rules.Cells(StringType, nullable = false, _ => code))
+    }
     reqPositions.foreach { pos =>
       pos.zip(perDim).collectFirst {
-        case (m, pd) if pd.errs.contains(m) => pd.errs(m) }.foreach { code =>
-        errPosCode(pos.mkString("/")) = code
-        grid = grid.withColumn(pos.mkString("/"), lit(code))
-      }
+        case (m, pd) if pd.errs.contains(m) => pd.errs(m) }.foreach(sentinel(pos.mkString("/"), _))
     }
     // Cross-cube refs ([[RuleExpr.CubeRef]]) in GRID mode: each distinct ref
-    // shape — target cube + per-part resolution — becomes ONE broadcast
-    // LEFT join of the target cube's (rule-aware) slice onto the pivoted
-    // grid, so a report of currency-converted cells is a single job instead
-    // of N scalar reads (the scalar read path stays the per-cell semantics;
-    // this is its bulk face). Parts referencing ROW-axis dimensions vary
-    // per row (join key derived from the row's member name — identity for
-    // Carry, the driver-held attribute map for AttrOf); parts referencing
-    // pinned or column-axis dimensions are constants for the position. A
+    // shape — target cube + per-part resolution — reads the target cube's
+    // (rule-aware) slice ONCE and looks each row's cell up by key, so a
+    // report of currency-converted cells costs one slice instead of N scalar
+    // reads (the scalar read path stays the per-cell semantics; this is its
+    // bulk face). Parts referencing ROW-axis dimensions vary per row (key
+    // derived from the row's member name — identity for Carry, the
+    // driver-held attribute map for AttrOf); parts referencing pinned or
+    // column-axis dimensions are constants for the position. A
     // fully-pinned address is a bounded scalar read through the target's
     // full read path. Resolution failures (unknown cube/member, missing
     // attribute on any REQUESTED row member) raise RuleError, so the whole
     // position renders its sentinel code — coarser than the scalar path's
-    // per-cell error, on record here. Empty target cells stay empty (left
-    // join miss → null), matching the scalar read's None.
-    val crCols = scala.collection.mutable.LinkedHashMap[String, String]()
-    def cubeRefColumn(cr: RuleExpr.CubeRef,
-        memberAt: Int => Either[String, (String, Seq[String])]): Column = {
+    // per-cell error, on record here. Empty target cells stay empty
+    // (no key → null), matching the scalar read's None.
+    val slices = mutable.HashMap[String, Rules.Cells]()
+    def cubeRefCells(cr: RuleExpr.CubeRef,
+        memberAt: Int => Either[String, (Int, Seq[String])]): Rules.Cells = {
       import RuleExpr.CubeRefPart
-      val db = cube.databaseRef.getOrElse(throw RuleError("#REF!",
-        s"cube '${cube.name}' is not attached to a database — cross-cube ref needs one"))
-      val target = try db.cube(cr.cubeName) catch {
-        case _: NoSuchElementException =>
-          throw RuleError("#REF!", s"unknown cube '${cr.cubeName}' in cross-cube ref")
-      }
-      if (cr.parts.size != target.nDims) throw RuleError("#REF!",
-        s"cross-cube ref to '${cr.cubeName}' needs ${target.nDims} members, got ${cr.parts.size}")
-      def srcDim(dn: String): Int = {
-        val i = cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dn))
-        if (i < 0) throw RuleError("#REF!", s"unknown dimension '$dn' in cross-cube ref")
-        i
-      }
-      // per part: Left(constant target member) or Right(grid row column,
-      // ordered (source row member → target member) pairs)
-      val resolved: Seq[Either[String, (String, Seq[(String, String)])]] = cr.parts.map {
+      val target = Rules.cubeRefTarget(cube, cr)
+      // per part: Left(constant target member) or Right(row-axis entry,
+      // ordered (row member name → target member name) pairs)
+      val resolved: Seq[Either[String, (Int, Seq[(String, String)])]] = cr.parts.map {
         case CubeRefPart.Fixed(mm) => Left(mm)
-        case CubeRefPart.Carry(dn) => memberAt(srcDim(dn)) match {
+        case CubeRefPart.Carry(dn) => memberAt(Rules.cubeRefSource(cube, dn)) match {
           case Left(name) => Left(name)
-          case Right((rowCol, req)) => Right((rowCol, req.distinct.map(n => n -> n)))
+          case Right((k, req)) => Right((k, req.distinct.map(nm => nm -> nm)))
         }
         case CubeRefPart.AttrOf(dn, a) =>
-          val i = srcDim(dn); val dim = cube.dimensions(i)
-          if (!dim.hasAttribute(a)) throw RuleError("#REF!",
-            s"dimension '$dn' has no attribute '$a' for cross-cube ref")
-          def attrOf(n: String): String = dim.getAttribute(a, n).getOrElse(
-            throw RuleError("#REF!",
-              s"member '$n' carries no '$a' attribute value for cross-cube ref"))
+          val i = Rules.cubeRefSource(cube, dn)
+          val attrOf = Rules.cubeRefAttr(cube.dimensions(i), dn, a)
           memberAt(i) match {
             case Left(name) => Left(attrOf(name))
-            case Right((rowCol, req)) => Right((rowCol, req.distinct.map(n => n -> attrOf(n))))
+            case Right((k, req)) => Right((k, req.distinct.map(nm => nm -> attrOf(nm))))
           }
       }
-      val sig = target.name + " " + resolved.map {
-        case Left(n) => s"=$n"
-        case Right((rc, pairs)) =>
-          s"@$rc:${pairs.map(p => p._1 + ">" + p._2).mkString(",")}"
-      }.mkString(" ")
-      crCols.get(sig).map(col).getOrElse {
-        def idOfOr(td: graft.core.Dimension, n: String): Int =
-          if (td.contains(n)) td.idOf(n)
-          else throw RuleError("#REF!",
-            s"cross-cube ref to '${target.name}': no member '$n' in dimension '${td.name}'")
-        val valName = s"__cr${crCols.size}"
-        if (resolved.forall(_.isLeft)) {
-          // fully pinned address: bounded scalar read through the target's
-          // full read path (its rules fire, its cache serves)
-          val names = resolved.map {
-            case Left(n) => n
-            case Right(_) => throw new IllegalStateException("unreachable")
-          }
-          val v = try target.get(names) catch {
-            case e: RuleError => throw e
-            case _: NoSuchElementException => throw RuleError("#REF!",
-              s"cross-cube ref to '${target.name}': no such member address " +
-                names.mkString("(", ", ", ")"))
-          }
-          grid = grid.withColumn(valName,
-            v.map(lit(_)).getOrElse(lit(null).cast("double")))
-        } else {
-          val selIds: Seq[Seq[Int]] = resolved.zip(target.dimensions).map {
-            case (Left(n), td) => Seq(idOfOr(td, n))
-            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(idOfOr(td, _))
+      val sig = target.name + " " + resolved.map {
+        case Left(nm) => s"=$nm"
+        case Right((k, pairs)) => s"@$k:${pairs.map(p => p._1 + ">" + p._2).mkString(",")}"
+      }.mkString(" ")
+      slices.getOrElseUpdate(sig,
+        if (resolved.forall(_.isLeft)) Rules.pinnedCells(target, resolved.map(_.swap.toOption.get))
+        else {
+          val selIds = resolved.zip(target.dimensions).map {
+            case (Left(nm), td) => Seq(Rules.cubeRefTargetId(target, td, nm))
+            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(Rules.cubeRefTargetId(target, td, _))
           }
           // rule-aware target slice (the target's own grid-computable rules
-          // fire inside the slice plan) — bounded by the source axes, so
-          // broadcast is the right side for any fact-cube scale
-          var slice = Rules.ruledGrid(target, selIds)
-          val keys = resolved.zipWithIndex.collect {
-            case (Right((rowCol, pairs)), p) =>
-              val td = target.dimensions(p)
-              val kc = s"${valName}_k$p"
-              val idName = pairs.map(_._2).distinct.map(n => td.idOf(n) -> n)
-              slice = slice.withColumn(kc,
-                map(idName.flatMap { case (id, n) => Seq(lit(id), lit(n)) }: _*)(
-                  col(s"a$p")))
-              (kc, map(pairs.flatMap { case (s0, t0) =>
-                Seq(lit(s0), lit(t0)) }: _*)(col(rowCol)))
+          // fire inside it) — bounded by the source axes
+          val slice = Rules.collected(Rules.ruledReport(target, selIds, collectAny = true))
+          // keyed by target member NAME per row-varying part, as the rows
+          // name their members
+          val parts = resolved.zipWithIndex.collect { case (Right((k, pairs)), p) =>
+            val td = target.dimensions(p)
+            (p, pairs.map(_._2).distinct.map(nm => td.idOf(nm) -> nm).toMap, pairs.toMap, column(rowKeyNames(k)))
           }
-          slice = slice.select(keys.map(kv => col(kv._1)) :+ col("value").as(valName): _*)
-          grid = grid.join(broadcast(slice),
-            keys.map { case (kc, src) => col(kc) === src }.reduce(_ && _), "left")
-            .drop(keys.map(_._1): _*)
-        }
-        crCols(sig) = valName
-        col(valName)
-      }
+          val v = slice.schema.length - 1
+          val byKey = slice.rows.flatMap { r =>
+            val key = parts.map(p => p._2.get(r.getInt(p._1)))
+            if (key.forall(_.isDefined)) Some(key.map(_.get) -> r.get(v)) else None
+          }.toMap
+          Rules.Cells(slice.schema("value").dataType, nullable = true, i => {
+            val key = parts.map(p => p._3.get(p._4.at(i).asInstanceOf[String]))
+            if (key.forall(_.isDefined)) byKey.getOrElse(key.map(_.get), null) else null
+          })
+        })
     }
 
-    // rule-derived positions post-pivot (one job, no per-cell recursion):
-    // refs resolve to the sibling position with only the ruled dim's member
-    // replaced (Jan/Profit ← Jan/Sales − Jan/Cost). Chained ruled members are
+    // rule-derived positions (no per-cell recursion): refs resolve to the
+    // sibling position with only the ruled dim's member replaced
+    // (Jan/Profit ← Jan/Sales − Jan/Cost). Chained ruled members are
     // computed deps-first (topo order), so Margin sees the COMPUTED Profit
     // column, not the empty stored one — for every context over the other
     // dims' requested members.
+    val mode = Rules.DecimalMode.of(cube.spark)
     perDim.zipWithIndex.filter(_._1.ruled.nonEmpty).foreach { case (pd, k) =>
       val d = cube.dimensions(pd.cd)
       val contexts = cartesian(perDim.zipWithIndex.map { case (pd2, j) =>
@@ -347,35 +330,29 @@ final class View(val cube: Cube, val dfn: ViewDef) {
           // part resolution: ruled/column-axis dims are position constants,
           // row-axis dims vary per row (→ the row's name column), anything
           // else is pinned by filter/default (single-member by construction)
-          val memberAt: Int => Either[String, (String, Seq[String])] = i => {
+          val memberAt: Int => Either[String, (Int, Seq[String])] = i => {
             val rIdx = rowDims.indexOf(i)
-            if (rIdx >= 0)
-              Right((dfn.rows.entries(rIdx)._1, dfn.rows.entries(rIdx)._2))
+            if (rIdx >= 0) Right((rIdx, dfn.rows.entries(rIdx)._2))
             else perDim.indexWhere(_.cd == i) match {
               case j if j >= 0 => Left(if (j == k) m else ctx(j))
               case _ => Left(cube.dimensions(i).nameOf(sel(i).head))
             }
           }
-          grid = try {
-            // build the Column FIRST: cross-cube resolution may join slices
-            // onto `grid`, and the receiver must be the post-join grid
-            val c0 = Rules.toColumnWith({ ref =>
+          try {
+            val c = Rules.toCells({ ref =>
               val refPos = pos.updated(k, pd.nameById(d.idOf(ref))).mkString("/")
               // a ref to a sentinel column propagates the code (string
               // arithmetic would silently cast "#ERR!" to null)
               errPosCode.get(refPos).foreach(code =>
                 throw RuleError(code, s"position '$posName' reads error column '$refPos'"))
-              col(refPos)
-            }, None, cr => cubeRefColumn(cr, memberAt))(rule.expr)
-            grid.withColumn(posName, c0)
+              column(refPos)
+            }, cubeRefCells(_, memberAt), mode)(rule.expr)
+            val vals = Array.tabulate(nRows)(c.at)
+            put(posName, c.copy(at = vals(_)))
           }
           catch { // unknown fn / unresolvable ref at compile → sentinel column
-            case e: RuleError =>
-              errPosCode(posName) = e.code
-              grid.withColumn(posName, lit(e.code))
-            case _: NoSuchElementException =>
-              errPosCode(posName) = "#REF!"
-              grid.withColumn(posName, lit("#REF!"))
+            case e: RuleError => sentinel(posName, e.code)
+            case _: NoSuchElementException => sentinel(posName, "#REF!")
           }
         }
       }
@@ -385,32 +362,29 @@ final class View(val cube: Cube, val dfn: ViewDef) {
     // an error column makes every row non-empty (sentinels are content),
     // so suppression only applies when no position errored — including
     // rule-compile failures caught above, whose string columns would poison
-    // the numeric suppression sum (coalesce(string, double) is a string)
-    if (dfn.zeroSuppression && errPosCode.isEmpty) {
-      val cells = reqNames.map(m => abs(coalesce(col(m), lit(0.0))))
-      grid = grid.filter(cells.reduce(_ + _) =!= 0.0) // ≙ `view.py:844-885`
-    }
-    // column suppression (≙ `zero_suppression_on_columns`, `view.py:409-414`):
-    // drop positions whose every cell is empty/zero — one small aggregation
-    // over the already-aggregated grid (null sum ⇔ no non-empty cell)
+    // the numeric suppression sum
+    val keptRows =
+      if (dfn.zeroSuppression && errPosCode.isEmpty) (0 until nRows).filter { i =>
+        reqNames.map(nm => math.abs(Option(Rules.toDouble(column(nm).at(i))).fold(0.0)(_.doubleValue)))
+          .reduce(_ + _) != 0.0 // ≙ `view.py:844-885`
+      } else 0 until nRows
+    // column suppression (≙ `zero_suppression_on_columns`,
+    // `view.py:409-414`): drop positions whose every cell is empty or zero
     val keptNames =
-      if (dfn.zeroSuppressionColumns && errPosCode.isEmpty && reqNames.nonEmpty) {
-        val aggs = reqNames.map(m => sum(abs(col(m).cast("double"))).as(m))
-        val totals = grid.agg(aggs.head, aggs.tail: _*).head()
-        val kept = reqNames.zipWithIndex.collect {
-          case (m, i) if !totals.isNullAt(i) && totals.getDouble(i) != 0.0 => m
-        }
-        kept
+      if (dfn.zeroSuppressionColumns && errPosCode.isEmpty) reqNames.filter { nm =>
+        val c = column(nm)
+        keptRows.exists(i => Option(Rules.toDouble(c.at(i))).exists(v => math.abs(v) != 0.0))
       } else reqNames
 
-    val ordered = grid.orderBy(ordCols.map(col): _*)
-      .select((rowKeyCols.map(col) ++ keptNames.map(col)): _*)
+    // a column selected under another spelling takes that spelling
+    val out = (rowKeyNames ++ keptNames).map(nm => nm -> column(nm))
     val keptPositions = reqPositions.filter(p => keptNames.contains(p.mkString("/")))
     val nRuled = keptPositions.count(pos =>
       pos.zip(perDim).exists { case (m, pd) => pd.ruled.contains(m) })
-    stats = ViewStats((System.nanoTime() - t0) / 1000000, 0, keptNames.size,
+    stats = ViewStats((System.nanoTime() - t0) / 1000000, keptRows.size, keptNames.size,
       aggregatedPositions = keptNames.size - nRuled, rulePositions = nRuled)
-    ordered
+    Cube.GridRows(StructType(out.map { case (nm, c) => StructField(nm, c.dataType, c.nullable) }),
+      keptRows.map(i => Row.fromSeq(out.map(_._2.at(i)))))
   }
 
   /** One column-axis dimension's resolved request: stored members to fetch,
@@ -441,24 +415,17 @@ final class View(val cube: Cube, val dfn: ViewDef) {
 
   // ---- windowed / rendered output (≙ `view.py:746-767, 984-1331`) ---------
 
-  /** Collect (a window of) the grid driver-side for rendering. */
+  /** (A window of) the grid for rendering: column names and row values. */
   def collect(window: Option[ViewWindow] = None): (Seq[String], Seq[Seq[Any]]) = {
-    val grid = refresh()
-    val allCols = grid.columns.toSeq
+    val grid = assemble()
+    val allCols = grid.schema.fieldNames.toSeq
     val nRowKeys = dfn.rows.entries.size
-    val keptCols = window match {
+    window match {
       case Some(w) =>
-        allCols.take(nRowKeys) ++
-          allCols.drop(nRowKeys).slice(w.left, w.right + 1)
-      case None => allCols
+        val kept = allCols.indices.take(nRowKeys) ++ allCols.indices.drop(nRowKeys).slice(w.left, w.right + 1)
+        (kept.map(allCols), grid.rows.take(w.bottom + 1).drop(w.top).map(r => kept.map(r.get)))
+      case None => (allCols, grid.rows.map(_.toSeq))
     }
-    val rows = window match {
-      case Some(w) =>
-        grid.limit(w.bottom + 1).collect().drop(w.top).toSeq
-      case None => grid.collect().toSeq
-    }
-    stats = stats.copy(rows = rows.size)
-    (keptCols, rows.map(r => keptCols.map(c => r.get(r.fieldIndex(c)))))
   }
 
   /** Member number format cascade: the LAST column-axis member (usually the
@@ -509,7 +476,7 @@ final class View(val cube: Cube, val dfn: ViewDef) {
   def toHtml(window: Option[ViewWindow] = None): String = {
     val (cols, rows) = collect(window)
     val nRowKeys = dfn.rows.entries.size
-    val head = cols.map(c => s"<th>$c</th>").mkString
+    val head = cols.map(c => s"<th>${View.html(c)}</th>").mkString
     val body = rows.map { r =>
       val rowMembers = cols.take(nRowKeys).zip(r.take(nRowKeys))
         .map { case (c, v) => c.toLowerCase -> String.valueOf(v) }.toMap
@@ -523,10 +490,9 @@ final class View(val cube: Cube, val dfn: ViewDef) {
         val tooltip = if (idx < nRowKeys) "" else {
           val cs = cube.comments.get(cellAddress(rowMembers, c))
           if (cs.isEmpty) ""
-          else " title=\"" + cs.map(cm => s"${cm.user}: ${cm.text}").mkString("; ")
-            .replace("\"", "&quot;") + "\""
+          else " title=\"" + View.html(cs.map(cm => s"${cm.user}: ${cm.text}").mkString("; ")) + "\""
         }
-        s"<td$tooltip>$s</td>"
+        s"<td$tooltip>${View.html(s)}</td>"
       }.mkString + "</tr>"
     }.mkString("\n")
     s"<table><thead><tr>$head</tr></thead><tbody>\n$body\n</tbody></table>"
@@ -557,13 +523,22 @@ final class View(val cube: Cube, val dfn: ViewDef) {
           case null => "null"
           case d: java.lang.Double if d.isNaN => "\"" + graft.core.CellValue.DivZero + "\""
           case d: java.lang.Double => d.toString
-          case x => "\"" + x.toString.replace("\"", "\\\"") + "\""
+          case x => View.json(x.toString)
         }
-        "\"" + c.replace("\"", "\\\"") + "\":" + vs
+        View.json(c) + ":" + vs
       }.mkString("{", ",", "}")
     }
     items.mkString("[", ",", "]")
   }
+}
+
+object View {
+  /** A JSON string literal: quoted, escaped by json4s. */
+  private def json(s: String): String = "\"" + org.json4s.ParserUtil.quote(s, false) + "\""
+
+  /** Text escaped for HTML content and double-quoted attributes. */
+  private def html(s: String): String =
+    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
 }
 
 /** Named view registry per cube (≙ `ViewList`, `view.py:1334-1390`):

@@ -43,9 +43,11 @@ import org.json4s.jackson.JsonMethods
   *
   * Concurrency mirrors the reference's per-database read/write lock
   * (`dependencies.py` `gen_rlock`/`gen_wlock`): reads share, writes are
-  * exclusive. SCALE: this is a driver-side CONTROL PLANE — every read
-  * renders through the cube's one-job grid aggregation on the cluster;
-  * the HTTP layer carries only the view-sized result, never fact data.
+  * exclusive. SCALE: this is a driver-side CONTROL PLANE — every report
+  * takes its grid from [[graft.core.Cube.reportGrid]] (the driver kernel
+  * over the point index, else one grid job on the cluster) and finishes
+  * on the driver; the HTTP layer carries only the view-sized result,
+  * never fact data.
   * Status mapping follows the reference: 404 unknown entity, 400 invalid
   * request (e.g. aggregated-cell writeback), 500 otherwise.
   */

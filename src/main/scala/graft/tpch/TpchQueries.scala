@@ -1372,7 +1372,7 @@ object TpchQueries {
 
     // V+ (round 10): a whole VIEW through the navigator — same definition as
     // olap_view_pivot (regions × years, AllBrands/gross slicers), but the
-    // one-job pivot runs on the nation×year summary the navigator routes to
+    // grid job runs on the nation×year summary the navigator routes to
     // (every named member — regions, years, AllBrands, gross — is contained
     // in the derived dims). Same oracle as olap_view_pivot: routing must not
     // change a single cell.
@@ -1540,7 +1540,8 @@ object TpchQueries {
         .withColumn("value", col("value").cast("double"))
     }),
 
-    // V1-V3: pivot view — rows=regions, cols=years, one groupBy().pivot() job
+    // V1-V3: pivot view — rows=regions, cols=years: one grid (a Spark job
+    // unless base reads built the point index), pivoted on the driver
     "olap_view_pivot" -> ((s, dir) => {
       val m = TpchModel.get(s, dir)
       val years = (1995 to 2001).map(_.toString)
@@ -1552,8 +1553,8 @@ object TpchQueries {
     }),
 
     // V1 multi-dim column axis: cols = calendar × measures (cartesian product
-    // of member lists, ≙ view.py:167-171) — still ONE groupBy().pivot() job on
-    // the composite position key
+    // of member lists, ≙ view.py:167-171) — still one grid job, pivoted on
+    // the driver by the composite position key
     "olap_view_pivot2" -> ((s, dir) => {
       val m = TpchModel.get(s, dir)
       val view = new View(m.cube, ViewDef(

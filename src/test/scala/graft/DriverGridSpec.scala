@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Cube, Database, Dimension}
-import graft.olap.{AxisDef, Rules, View, ViewDef}
+import graft.olap.{AxisDef, Rules, View, ViewDef, ViewWindow}
 import graft.tpch.TpchModel
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -125,6 +125,212 @@ class DriverGridSpec extends AnyFunSuite {
         }
     edits.foreach { e => e(idx); e(ref) }
     assertParity(idx, ref, 953L)
+  }
+
+  /** Cartesian product in axis order, last list fastest. */
+  private def cartesian[A](xs: Seq[Seq[A]]): Seq[Seq[A]] =
+    xs.foldLeft(Seq(Seq.empty[A]))((acc, l) => acc.flatMap(p => l.map(p :+ _)))
+
+  /** The grid a view must render, read cell by cell with `Cube.get`: column
+    * names, then rows in axis order — a row is present when one of its
+    * cells is (every layout here fetches only requested members), then row
+    * and column zero suppression. */
+  private def expectedView(c: Cube, v: ViewDef): (Seq[String], Seq[Seq[Any]]) = {
+    def dimOf(n: String) = c.dimensions.indexWhere(_.name.equalsIgnoreCase(n))
+    val positions = cartesian(v.cols.entries.map(_._2))
+    def address(rt: Seq[String], pos: Seq[String]): Seq[String] = c.dimensions.indices.map { i =>
+      val r = v.rows.entries.indexWhere(e => dimOf(e._1) == i)
+      val p = v.cols.entries.indexWhere(e => dimOf(e._1) == i)
+      if (r >= 0) rt(r) else if (p >= 0) pos(p)
+      else v.filters.collectFirst { case (d, m) if dimOf(d) == i => m }.getOrElse(c.dimensions(i).defaultMember.name)
+    }
+    var rows = cartesian(v.rows.entries.map(_._2)).map(rt => rt -> positions.map(p => c.get(address(rt, p))))
+      .filter(_._2.exists(_.isDefined))
+    if (v.zeroSuppression) rows = rows.filter(_._2.map(_.fold(0.0)(math.abs)).sum != 0.0)
+    val kept = positions.indices.filter(j => !v.zeroSuppressionColumns || rows.exists(_._2(j).exists(_ != 0.0)))
+    (v.rows.entries.map(_._1) ++ kept.map(positions(_).mkString("/")),
+      rows.map { case (rt, cells) => rt ++ kept.map(cells(_).map(Double.box).orNull) })
+  }
+
+  private def viewLayouts: Seq[ViewDef] = {
+    val rnd = new scala.util.Random(961L)
+    val regions = model.geo.membersByLevel(2).map(_.name)
+    val years = model.calendar.membersByLevel(2).map(_.name)
+    val months = model.calendar.membersByLevel(1).map(_.name)
+    val brands = model.product("AllBrands").children.map(model.product.nameOf)
+    val types = model.product("AllTypes").children.map(model.product.nameOf)
+    def nationsOf(r: String) = model.geo(r).children.map(model.geo.nameOf)
+    // the served benchmark's two layouts on every row/product shape …
+    val served = (0 until 6).flatMap { i =>
+      val rows = if (i % 2 == 0) AxisDef(Seq("geo" -> regions)) else AxisDef(Seq("geo" -> nationsOf(pick(rnd, regions))))
+      val product = "product" -> (i % 3 match { case 0 => "AllBrands"; case 1 => pick(rnd, brands); case _ => pick(rnd, types) })
+      Seq(
+        ViewDef(filters = Seq("calendar" -> (if (i % 2 == 0) pick(rnd, years) else pick(rnd, months)), product),
+          rows = rows, cols = AxisDef(Seq("measures" -> Seq("gross", "net", "margin", "quantity")))),
+        ViewDef(filters = Seq(product, "measures" -> pick(rnd, IndexedSeq("gross", "net", "quantity"))),
+          rows = rows, cols = AxisDef(Seq("calendar" -> years))))
+    }
+    // … plus suppression, an empty stored measure and a two-dimension column axis
+    val month = months(rnd.nextInt(months.size))
+    served ++ Seq(
+      ViewDef(filters = Seq("product" -> brands.head, "calendar" -> month),
+        rows = AxisDef(Seq("geo" -> regions.flatMap(nationsOf))),
+        cols = AxisDef(Seq("measures" -> Seq("gross", "plan", "margin"))), zeroSuppression = true),
+      ViewDef(filters = Seq("product" -> brands.head, "calendar" -> month),
+        rows = AxisDef(Seq("geo" -> regions.flatMap(nationsOf))),
+        cols = AxisDef(Seq("measures" -> Seq("plan", "margin", "quantity"))), zeroSuppressionColumns = true),
+      ViewDef(filters = Seq("product" -> "AllBrands"), rows = AxisDef(Seq("geo" -> regions)),
+        cols = AxisDef(Seq("calendar" -> years.take(3), "measures" -> Seq("gross", "margin", "plan"))),
+        zeroSuppression = true, zeroSuppressionColumns = true))
+  }
+
+  test("views finish on the driver: an indexed cube, a collected Spark grid and per-cell reads agree") {
+    val (idx, _) = pair("views")
+    val cold = cubeOver("dg_views_cold", facts)
+    val served = idx.counterDriverAggregations
+    viewLayouts.foreach { v =>
+      val (a, b) = (new View(idx, v), new View(cold, v))
+      val (ga, gb) = (a.refresh(), b.refresh())
+      assert(ga.isLocal && gb.isLocal, s"view $v")
+      assert(ga.schema == gb.schema, s"schema of view $v")
+      assert(ga.schema.map(_.dataType) == v.rows.entries.map(_ => StringType) ++
+        Seq.fill(ga.schema.size - v.rows.entries.size)(DoubleType) && ga.schema.forall(_.nullable))
+      val (cols, rows) = expectedView(idx, v)
+      assert(ga.columns.toSeq == cols, s"columns of view $v")
+      assert(ga.collect().map(_.toSeq).toSeq == rows, s"cells of view $v")
+      assert(gb.collect().map(_.toSeq).toSeq == rows, s"cells of view $v on the Spark grid")
+      assert(a.stats.rows == rows.size && a.stats.columns == cols.size - v.rows.entries.size)
+      val json = a.toJson()
+      assert(json == b.toJson(), s"JSON of view $v")
+      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+      val parsed = org.json4s.jackson.JsonMethods.parse(json).extract[List[Map[String, Any]]]
+      assert(parsed.map(r => cols.map(r(_))) == rows.map(_.map {
+        case d: java.lang.Double if d.isNaN => "#DIV/0!"
+        case x => x
+      }), s"parsed JSON of view $v")
+      val w = ViewWindow(top = 1, left = 1, bottom = 3, right = 2)
+      assert(a.collect(Some(w)) == b.collect(Some(w)), s"window of view $v")
+      val keep = (0 until v.rows.entries.size) ++ (v.rows.entries.size until cols.size).slice(1, 3)
+      assert(a.collect(Some(w)) == ((keep.map(cols), rows.slice(1, 4).map(r => keep.map(r)))))
+      assert(a.toJson(Some(w)) == b.toJson(Some(w)) && a.toCsv() == b.toCsv() && a.toHtml() == b.toHtml())
+    }
+    assert(idx.counterDriverAggregations > served && cold.counterDriverAggregations == 0L)
+  }
+
+  test("dialect templates finish on the driver; a grid over the bound keeps the DataFrame plan") {
+    val (idx, _) = pair("dialect")
+    val cold = cubeOver("dg_dialect_cold", facts)
+    val rnd = new scala.util.Random(962L)
+    val regions = model.geo.membersByLevel(2).map(_.name)
+    val nations = model.geo.membersByLevel(1).map(_.name)
+    val years = model.calendar.membersByLevel(2).map(_.name)
+    val brands = model.product("AllBrands").children.map(model.product.nameOf)
+    val types = model.product("AllTypes").children.map(model.product.nameOf)
+    def q(s: String) = s"'$s'"
+    val sqls = Seq("gross", "net", "quantity", "margin").flatMap { m => Seq(
+      s"SELECT calendar, value FROM sales WHERE geo=${q(pick(rnd, regions))}, calendar=h1_1995, " +
+        s"product=${q(pick(rnd, brands))}, measures=$m",
+      s"SELECT geo, calendar, value FROM sales WHERE geo=${rnd.shuffle(nations).take(3).map(q).mkString("(", ",", ")")}, " +
+        s"calendar=${rnd.shuffle(years).take(2).map(q).mkString("(", ",", ")")}, product=${q(pick(rnd, types))}, measures=$m")
+    } :+ s"SELECT product, value FROM sales WHERE geo=${q(pick(rnd, nations))}, calendar=${q(pick(rnd, years))}, " +
+      "product='*', measures=gross"
+    def on(c: Cube, sql: String) = new graft.olap.OlapQuery(model.db, sql, Some((_: String) => c))
+    /** Each row's address and value (as a double), by projected field. */
+    def cells(query: graft.olap.OlapQuery, df: DataFrame): Seq[(Seq[String], String)] = df.collect().toSeq.map { r =>
+      val address = model.cube.dimensions.zipWithIndex.map { case (d, i) =>
+        if (df.columns.contains(d.name)) r.getAs[String](d.name) else d.nameOf(query.selections(i).head)
+      }
+      address -> (r.getAs[Any]("value") match {
+        case b: java.math.BigDecimal => b.doubleValue.toString
+        case d: java.lang.Double => d.toString
+      })
+    }
+    sqls.foreach { sql =>
+      val (qa, qb) = (on(idx, sql), on(cold, sql))
+      val (a, b) = (qa.execute(), qb.execute())
+      assert(a.isLocal && b.isLocal, sql)
+      assert(a.schema == b.schema, s"schema of $sql")
+      // a ruled grid is double; an unruled one keeps the decimal sum
+      assert(a.schema("value").dataType.isInstanceOf[DecimalType] != sql.contains("margin"), sql)
+      assert(rows(a) == rows(b), sql)
+      // every non-empty cell of the selection, each equal to its per-cell read
+      val want = cartesian(qa.selections.zipWithIndex.map { case (s, i) => s.map(model.cube.dimensions(i).nameOf) })
+        .flatMap(addr => idx.get(addr).map(addr -> _.toString))
+      assert(cells(qa, a).sortBy(_._1.mkString("/")) == want.sortBy(_._1.mkString("/")), sql)
+    }
+    // a '*' cross product over the bound: the plan, paged like the REST route
+    val big = "SELECT geo, calendar, value FROM sales WHERE geo='*', calendar='*', product=AllBrands, measures=gross"
+    val qBig = on(idx, big)
+    assert(qBig.selections.map(_.size.toLong).product > 65536L)
+    val served = idx.counterDriverAggregations
+    val page = qBig.execute()
+    assert(!page.isLocal && idx.counterDriverAggregations == served)
+    val got = cells(qBig, page.limit(10001)).take(50)
+    assert(got.size == 50)
+    got.foreach { case (addr, v) => assert(idx.get(addr).map(_.toString).contains(v), addr.mkString("/")) }
+  }
+
+  test("ruled decimal grids keep Spark's decimal arithmetic bit for bit") {
+    val db = new Database("dg_dec", spark)
+    val t = db.addDimension("t")
+    t.edit().add("All", Seq("a", "b", "c")).commit()
+    val m = db.addDimension("m")
+    m.edit().addMany(Seq("x", "y", "z", "sum", "diff", "sq", "ratio", "mix", "rnd", "dist", "cube")).commit()
+    val dec = DecimalType(21, 4)
+    def bd(s: String) = new java.math.BigDecimal(s)
+    val facts = Seq(("a", "x", "1234567.1234"), ("a", "y", "0.0003"), ("a", "z", "7.7777"), ("b", "x", "-2.5000"),
+      ("b", "y", "3.0001"), ("b", "z", "-0.0001"), ("c", "x", "99999999.9999"), ("c", "z", "0.0000"))
+      .map { case (a, b, v) => Row(t.idOf(a), m.idOf(b), bd(v)) }
+    val base = spark.createDataFrame(spark.sparkContext.parallelize(facts, 1), StructType(Seq(
+      StructField("d0", IntegerType), StructField("d1", IntegerType), StructField("value", dec)))).persist()
+    base.count()
+    val c = db.addCube("c", Seq(t, m), base)
+    import graft.olap.{RuleDef, RuleExpr, RuleScope}
+    import RuleExpr._
+    // deps first: 'dist' reads 'sum'
+    val rules = Seq(
+      "sum" -> Add(Ref("x"), Ref("y")),
+      "diff" -> Sub(Ref("x"), Mul(Ref("y"), Ref("z"))),
+      "sq" -> Mul(Ref("x"), Ref("x")),
+      "ratio" -> Div(Ref("x"), Ref("z")),
+      "mix" -> Add(Mul(Ref("x"), Lit(0.1)), Neg(Ref("y"))),
+      "rnd" -> Fn("round", Mul(Ref("y"), Ref("x"))),
+      "dist" -> Fn("abs", Sub(Ref("y"), Ref("sum"))),
+      "cube" -> Mul(Mul(Ref("x"), Ref("x")), Mul(Ref("y"), Ref("z"))))
+    rules.foreach { case (n, e) => c.registerRule(RuleDef(Map("m" -> n), RuleScope.AllLevels, e, n)) }
+    val stored = Seq("x", "y", "z").map(m.idOf)
+    val tSel = Seq("a", "b", "c", "All").map(t.idOf)
+    // the expected bits: the same expressions as Spark decimal columns over
+    // the pivoted stored grid, each cast to double
+    val pivoted = c.gridAggregate(Seq(tSel, stored)).groupBy("a0")
+      .pivot("a1", stored.map(Int.box)).agg(first("value"))
+    val computed = rules.foldLeft(pivoted) { case (df, (n, e)) =>
+      df.withColumn(m.idOf(n).toString, Rules.toColumnWith(spec => col(s"`${m.idOf(spec)}`"))(e))
+    }
+    val allM = stored ++ rules.map(r => m.idOf(r._1))
+    val want = computed.collect().toSeq.flatMap { r =>
+      allM.flatMap(id => Option(r.getAs[Any](id.toString)).map { v =>
+        (r.getInt(0), id) -> java.lang.Double.doubleToRawLongBits(v match {
+          case b: java.math.BigDecimal => b.doubleValue
+          case d: java.lang.Double => d.doubleValue
+        })
+      })
+    }.toMap
+    assert(computed.schema(m.idOf("sq").toString).dataType == DecimalType(38, 6), "× rounds to scale 6 here")
+    def bits(g: DataFrame) = g.collect().toSeq.map(r =>
+      (r.getInt(0), r.getInt(1)) -> java.lang.Double.doubleToRawLongBits(r.getDouble(2))).toMap
+    val cold = bits(Rules.ruledGrid(c, Seq(tSel, allM)))
+    c.get(Seq("a", "x"))
+    assert(c.pointIndexEnabled)
+    val served = c.counterDriverAggregations
+    val hot = bits(Rules.ruledGrid(c, Seq(tSel, allM)))
+    assert(c.counterDriverAggregations == served + 1)
+    assert(cold == want && hot == want)
+    // a product past 38 digits: Spark's ANSI overflow error, on both paths
+    c.set(Seq("c", "x"), 2e16)
+    val cx = Seq(Seq(t.idOf("c")), Seq(m.idOf("x")))
+    intercept[ArithmeticException](c.gridAggregate(cx).select((col("value") * col("value")).cast("double")).collect())
+    intercept[ArithmeticException](Rules.ruledGrid(c, Seq(Seq(t.idOf("c")), Seq(m.idOf("sq")))).collect())
   }
 
   /** A cube over `schema`-typed `rows` on the small dimensions `dims`. */

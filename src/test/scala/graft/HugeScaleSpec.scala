@@ -287,7 +287,21 @@ class HugeScaleSpec extends AnyFunSuite {
     val sel = Seq(cube.dimensions(0).leafMembers.map(_.id)) ++
       (1 until HugeModel.NDims - 1).map(i => Seq(cube.dimensions(i).idOf("All"))) ++
       Seq(Seq(cube.dimensions(7).idOf("m1"), cube.dimensions(7).idOf("scaled")))
-    val g = Rules.ruledGrid(cube, sel)
+    val m1Id = cube.dimensions(7).idOf("m1")
+    val scaledId = cube.dimensions(7).idOf("scaled")
+    val expected = cube.facts.filter(col("d7") === m1Id)
+      .agg(sum((col("d0") - 1).cast("double") * col("value"))).head.getDouble(0)
+    // 200 cells: one grid job, then pivot, rate lookup and stack on the
+    // driver — the answer is a local relation
+    val small = Rules.ruledGrid(cube, sel)
+    assert(small.isLocal, "a grid within the kernel bound finishes on the driver")
+    val smallScaled = small.filter(col(s"a${HugeModel.NDims - 1}") === scaledId)
+      .agg(sum(col("value")).as("s"), count(lit(1)).as("n")).head
+    assert(smallScaled.getLong(1) == HugeModel.LeavesPerDim.toLong)
+    assert(smallScaled.getDouble(0) == expected, s"scaled total ${smallScaled.getDouble(0)} != $expected")
+    // dims 0-2 at leaf grain: 2e6 cells, past the bound — the DataFrame plan
+    val wide = (0 until 3).map(i => cube.dimensions(i).leafMembers.map(_.id)) ++ sel.drop(3)
+    val g = Rules.ruledGrid(cube, wide)
     val plan = g.queryExecution.executedPlan.toString
     // the rate slice must arrive as a broadcast HASH join — never a
     // nested-loop/cartesian — and the whole ruled grid stays at the
@@ -299,15 +313,13 @@ class HugeScaleSpec extends AnyFunSuite {
     assert(exchangeCount(g) <= 3,
       s"cross-cube grid must hold to the aggregation shuffles:\n$plan")
     // self-check: scaled total = Σ_leafK m1count(K)·K, independently derived
-    // from the fact frame (leaf id = K+1); integer-valued doubles ⇒ exact
-    val m1Id = cube.dimensions(7).idOf("m1")
-    val scaledId = cube.dimensions(7).idOf("scaled")
-    val expected = cube.facts.filter(col("d7") === m1Id)
-      .agg(sum((col("d0") - 1).cast("double") * col("value"))).head.getDouble(0)
+    // from the fact frame (leaf id = K+1); integer-valued doubles ⇒ exact;
+    // one scaled cell per (d0, d1, d2) holding m1 facts
     val (gotRow, t) = time(
       g.filter(col(s"a${HugeModel.NDims - 1}") === scaledId)
         .agg(sum(col("value")).as("s"), count(lit(1)).as("n")).head)
-    assert(gotRow.getLong(1) == HugeModel.LeavesPerDim.toLong)
+    assert(gotRow.getLong(1) ==
+      cube.facts.filter(col("d7") === m1Id).select("d0", "d1", "d2").distinct().count())
     assert(gotRow.getDouble(0) == expected,
       s"scaled total ${gotRow.getDouble(0)} != $expected")
     assert(t < 120.0, f"cross-cube grid at $rows rows took $t%.1fs")

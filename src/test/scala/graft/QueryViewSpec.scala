@@ -1,10 +1,14 @@
 package graft
 
+import graft.core.{Cube, Database}
 import graft.olap._
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL dialect + View over the tiny model (parser fixtures from FIXTURES §5,
-  * `tests/test_query.py:15-24`; view semantics from `tests/test_view.py`).
+  * `tests/test_query.py:15-24`; view semantics from `tests/test_view.py`),
+  * plus the view behaviours on small purpose-built cubes: rule sentinels,
+  * row and column zero suppression, number formats and the ViewDef codec.
   */
 class QueryViewSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -17,6 +21,7 @@ class QueryViewSpec extends AnyFunSuite {
     c.set(Seq("2021", "Feb", "South", "sports", "Sales"), 50.0)
     c
   }
+  private def profitModel(): (Database, Cube) = QueryViewSpec.profitModel(spark)
 
   test("dialect: full-address point query") {
     cube
@@ -129,6 +134,8 @@ class QueryViewSpec extends AnyFunSuite {
       cols = AxisDef(Seq("measures" -> Seq("Sales", "Cost")))))
     val (cols, rows) = view.collect(Some(ViewWindow(0, 0, 1, 0)))
     assert(cols == Seq("months", "Sales") && rows.size == 2)
+    // stats describe the computed grid (Mar holds no data), not the window
+    assert(view.stats.rows == 3)
     val console = view.toConsole()
     assert(console.contains("Jan") && console.contains("579"))
     assert(view.toHtml().startsWith("<table>"))
@@ -186,5 +193,130 @@ class QueryViewSpec extends AnyFunSuite {
     assert(ViewFormat(Some("{:,.0f}"), 1234567.0) == "1,234,567")
     assert(ViewFormat(Some("{:.3f}"), 1.5) == "1.500")
     assert(ViewFormat(None, 42.0) == "42")
+  }
+
+  test("view renders #REF! cells (and cascades) instead of aborting the grid") {
+    val (db, cube) = profitModel()
+    db.dimension("m").edit().remove("Cost").commit()
+    cube.purgeUnknownMembers()
+    val v = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Profit", "Margin")))))
+    val console = v.toConsole()
+    assert(console.contains("#REF!"))
+    assert(console.contains("10")) // stored data still renders
+    val html = v.toHtml()
+    assert(html.contains("<td>#REF!</td>"))
+    val grid = v.refresh().collect()
+    assert(grid.forall(r => r.getAs[Any]("Profit") == "#REF!"))
+    assert(grid.forall(r => r.getAs[Any]("Margin") == "#REF!"))
+  }
+
+  test("rule-compile sentinels don't poison zero suppression or chained rules") {
+    val (_, cube) = profitModel()
+    // unknown fn on a REQUESTED column member: compiles to a sentinel column
+    cube.registerRule(RuleDef(Map("m" -> "Cost"), RuleScope.AllLevels,
+      RuleExpr.Fn("sqrt", RuleExpr.Ref("Sales")), "bad_fn"))
+    val v = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Cost", "Profit"))),
+      zeroSuppression = true))
+    val grid = v.refresh().collect()
+    // suppression must NOT run on the string sentinel (it would null the
+    // suppression sum and drop every row)
+    assert(grid.length == 2)
+    assert(grid.forall(_.getAs[Any]("Cost") == "#ERR!"))
+    // the chained rule (Profit = Sales − Cost) propagates the code instead
+    // of string arithmetic (which would cast "#ERR!" to null → blank cells)
+    assert(grid.forall(_.getAs[Any]("Profit") == "#ERR!"))
+    // intact columns still carry data
+    assert(grid.exists(_.getAs[Any]("Sales") == 10.0))
+  }
+
+  test("column-axis zero suppression drops all-empty positions; rows unaffected") {
+    import graft.olap._
+    val db = new Database("r7_colsup", spark)
+    val t = db.addDimension("t")
+    t.edit().add("All", Seq("Jan", "Feb")).commit()
+    val m = db.addDimension("m")
+    m.edit().addMany(Seq("Sales", "Cost", "Plan")).commit()
+    val cube = db.addCube("c", Seq(t, m))
+    cube.set(Seq("Jan", "Sales"), 10.0)
+    cube.set(Seq("Feb", "Cost"), 4.0) // Plan stays empty everywhere
+    val v = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan", "Cost"))),
+      zeroSuppressionColumns = true))
+    val grid = v.refresh()
+    assert(grid.columns.toSeq == Seq("t", "Sales", "Cost")) // Plan dropped, order kept
+    assert(v.stats.columns == 2)
+    // without the flag the empty column renders
+    val v2 = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan", "Cost")))))
+    assert(v2.refresh().columns.toSeq == Seq("t", "Sales", "Plan", "Cost"))
+    // both suppressions together: Plan column gone AND all-empty rows gone
+    val v3 = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan"))),
+      zeroSuppression = true, zeroSuppressionColumns = true))
+    val g3 = v3.refresh().collect()
+    assert(g3.map(_.getString(0)).toSeq == Seq("Jan")) // Feb has only Cost
+  }
+
+  test("ViewDef JSON round-trips the round-7 fields; legacy JSON gets defaults") {
+    import graft.olap._
+    val v = ViewDef(rows = AxisDef(Seq("t" -> Seq("Jan"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales"))),
+      zeroSuppression = true, zeroSuppressionColumns = true,
+      title = "Q1 report", description = "gross by month",
+      defaultNumberFormat = Some("{:.1f}"))
+    assert(ViewDef.fromJson(ViewDef.toJson(v)) == v)
+    // pre-round-7 persisted definitions lack the fields — must parse, defaults
+    val legacy = """{"filters":[],"rows":[{"dimension":"t","members":["Jan"]}],
+      "columns":[{"dimension":"m","members":["Sales"]}],"zeroSuppression":false}"""
+    val parsed = ViewDef.fromJson(legacy)
+    assert(!parsed.zeroSuppressionColumns && !parsed.zeroSuppression)
+    assert(parsed.title == "" && parsed.defaultNumberFormat.isEmpty)
+  }
+
+  test("default number format applies where the member carries none; member format wins") {
+    import graft.olap._
+    val db = new Database("r7_deffmt", spark)
+    val t = db.addDimension("t")
+    t.edit().add("All", Seq("Jan")).commit()
+    val m = db.addDimension("m")
+    m.edit().addMany(Seq("Sales", "Cost")).commit()
+    m.setFormat("Cost", "{:.3f}")
+    val cube = db.addCube("c", Seq(t, m))
+    cube.set(Seq("Jan", "Sales"), 1.5)
+    cube.set(Seq("Jan", "Cost"), 2.5)
+    val v = new View(cube, ViewDef(
+      rows = AxisDef(Seq("t" -> Seq("Jan"))),
+      cols = AxisDef(Seq("m" -> Seq("Sales", "Cost"))),
+      defaultNumberFormat = Some("{:.1f}")))
+    val csv = v.toCsv().split("\n")
+    assert(csv(1) == "Jan,1.5,2.500", s"unexpected render: ${csv(1)}")
+  }
+}
+
+object QueryViewSpec {
+  /** t: All → (Jan, Feb); m: Sales, Cost, Profit(=Sales−Cost), Margin(=Profit/Sales). */
+  def profitModel(spark: SparkSession): (Database, Cube) = {
+    val db = new Database("r3", spark)
+    val t = db.addDimension("t")
+    t.edit().add("All", Seq("Jan", "Feb")).commit()
+    val m = db.addDimension("m")
+    m.edit().addMany(Seq("Sales", "Cost", "Profit", "Margin")).commit()
+    val cube = db.addCube("c", Seq(t, m))
+    cube.registerRule(RuleDef(Map("m" -> "Profit"), RuleScope.AllLevels,
+      RuleExpr.Sub(RuleExpr.Ref("Sales"), RuleExpr.Ref("Cost")), "profit"))
+    cube.registerRule(RuleDef(Map("m" -> "Margin"), RuleScope.AllLevels,
+      RuleExpr.Div(RuleExpr.Ref("Profit"), RuleExpr.Ref("Sales")), "margin"))
+    cube.set(Seq("Jan", "Sales"), 10.0)
+    cube.set(Seq("Jan", "Cost"), 4.0)
+    cube.set(Seq("Feb", "Sales"), 20.0)
+    cube.set(Seq("Feb", "Cost"), 5.0)
+    (db, cube)
   }
 }

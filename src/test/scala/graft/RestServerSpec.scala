@@ -93,6 +93,34 @@ class RestServerSpec extends AnyFunSuite {
     assert(get("/views/tiny/sales/missing").statusCode() == 404)
   }
 
+  test("view bodies escape member names: JSON parses back, HTML stays text") {
+    val edb = new graft.core.Database("esc", spark)
+    val r = edb.addDimension("r")
+    val rows = Seq("a\\b", "x\\", "say \"hi\"", "<b>&")
+    r.edit().add("All", rows).commit()
+    val m = edb.addDimension("m")
+    m.edit().addMany(Seq("Sales", "net \"q\\")).commit()
+    val c = edb.addCube("c", Seq(r, m))
+    rows.zipWithIndex.foreach { case (n, i) => c.set(Seq(n, "Sales"), i + 1.5) }
+    val srv = new RestServer(Seq(edb)).start()
+    try {
+      val dfn = ViewDef(rows = AxisDef(Seq("r" -> rows)), cols = AxisDef(Seq("m" -> Seq("Sales", "net \"q\\"))))
+      def viewPost(fmt: String) = req(java.net.http.HttpRequest
+        .newBuilder(java.net.URI.create(s"http://127.0.0.1:${srv.boundPort}/views/esc/c?format=$fmt"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(ViewDef.toJson(dfn))))
+      val json = viewPost("json")
+      assert(json.statusCode() == 200, json.body())
+      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+      val parsed = org.json4s.jackson.JsonMethods.parse(json.body()).extract[List[Map[String, org.json4s.JValue]]]
+      assert(parsed.map(_("r").extract[String]) == rows)
+      assert(parsed.map(_("Sales").extract[Double]) == Seq(1.5, 2.5, 3.5, 4.5))
+      assert(parsed.forall(_("net \"q\\") == org.json4s.JNull))
+      val html = viewPost("html").body()
+      assert(html.contains("<td>&lt;b&gt;&amp;</td>") && html.contains("<td>say &quot;hi&quot;</td>"), html)
+      assert(html.contains("<th>net &quot;q\\</th>") && !html.contains("<b>"), html)
+    } finally srv.stop()
+  }
+
   test("batched cell reads: one job for base addresses, rollups included") {
     db.cube("sales").set(Seq("2023", "Jun", "East", "van", "Cost"), 5.5)
     val body = """{"addresses":[

@@ -13,24 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round3FixesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** t: All → (Jan, Feb); m: Sales, Cost, Profit(=Sales−Cost), Margin(=Profit/Sales). */
-  private def profitModel(): (Database, Cube) = {
-    val db = new Database("r3", spark)
-    val t = db.addDimension("t")
-    t.edit().add("All", Seq("Jan", "Feb")).commit()
-    val m = db.addDimension("m")
-    m.edit().addMany(Seq("Sales", "Cost", "Profit", "Margin")).commit()
-    val cube = db.addCube("c", Seq(t, m))
-    cube.registerRule(RuleDef(Map("m" -> "Profit"), RuleScope.AllLevels,
-      RuleExpr.Sub(RuleExpr.Ref("Sales"), RuleExpr.Ref("Cost")), "profit"))
-    cube.registerRule(RuleDef(Map("m" -> "Margin"), RuleScope.AllLevels,
-      RuleExpr.Div(RuleExpr.Ref("Profit"), RuleExpr.Ref("Sales")), "margin"))
-    cube.set(Seq("Jan", "Sales"), 10.0)
-    cube.set(Seq("Jan", "Cost"), 4.0)
-    cube.set(Seq("Feb", "Sales"), 20.0)
-    cube.set(Seq("Feb", "Cost"), 5.0)
-    (db, cube)
-  }
+  private def profitModel(): (Database, Cube) = QueryViewSpec.profitModel(spark)
 
   test("dangling rule ref after a dimension edit reads as #REF!, not an exception") {
     val (db, cube) = profitModel()
@@ -49,23 +32,6 @@ class Round3FixesSpec extends AnyFunSuite {
     assert(cube.get(Seq("All", "Sales")).contains(30.0))
   }
 
-  test("view renders #REF! cells (and cascades) instead of aborting the grid") {
-    val (db, cube) = profitModel()
-    db.dimension("m").edit().remove("Cost").commit()
-    cube.purgeUnknownMembers()
-    val v = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Profit", "Margin")))))
-    val console = v.toConsole()
-    assert(console.contains("#REF!"))
-    assert(console.contains("10")) // stored data still renders
-    val html = v.toHtml()
-    assert(html.contains("<td>#REF!</td>"))
-    val grid = v.refresh().collect()
-    assert(grid.forall(r => r.getAs[Any]("Profit") == "#REF!"))
-    assert(grid.forall(r => r.getAs[Any]("Margin") == "#REF!"))
-  }
-
   test("rule arithmetic over a text cell reads #VALUE!; error payloads propagate") {
     val (_, cube) = profitModel()
     cube.setPayload(Seq("Jan", "Sales"), "see note")
@@ -77,27 +43,6 @@ class Round3FixesSpec extends AnyFunSuite {
     cube.registerRule(RuleDef(Map("m" -> "Cost"), RuleScope.AllLevels,
       RuleExpr.Fn("sqrt", RuleExpr.Ref("Sales")), "bad_fn"))
     assert(cube.getCell(Seq("Feb", "Cost")).contains(CellValue.Err("#ERR!")))
-  }
-
-  test("rule-compile sentinels don't poison zero suppression or chained rules") {
-    val (_, cube) = profitModel()
-    // unknown fn on a REQUESTED column member: compiles to a sentinel column
-    cube.registerRule(RuleDef(Map("m" -> "Cost"), RuleScope.AllLevels,
-      RuleExpr.Fn("sqrt", RuleExpr.Ref("Sales")), "bad_fn"))
-    val v = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Cost", "Profit"))),
-      zeroSuppression = true))
-    val grid = v.refresh().collect()
-    // suppression must NOT run on the string sentinel (it would null the
-    // suppression sum and drop every row)
-    assert(grid.length == 2)
-    assert(grid.forall(_.getAs[Any]("Cost") == "#ERR!"))
-    // the chained rule (Profit = Sales − Cost) propagates the code instead
-    // of string arithmetic (which would cast "#ERR!" to null → blank cells)
-    assert(grid.forall(_.getAs[Any]("Profit") == "#ERR!"))
-    // intact columns still carry data
-    assert(grid.exists(_.getAs[Any]("Sales") == 10.0))
   }
 
   test("a column axis whose every member's rule chain is broken renders sentinels") {

@@ -184,72 +184,6 @@ class Round7FixesSpec extends AnyFunSuite {
     assert(cube.counterAggregations == 2)
   }
 
-  test("column-axis zero suppression drops all-empty positions; rows unaffected") {
-    import graft.olap._
-    val db = new Database("r7_colsup", spark)
-    val t = db.addDimension("t")
-    t.edit().add("All", Seq("Jan", "Feb")).commit()
-    val m = db.addDimension("m")
-    m.edit().addMany(Seq("Sales", "Cost", "Plan")).commit()
-    val cube = db.addCube("c", Seq(t, m))
-    cube.set(Seq("Jan", "Sales"), 10.0)
-    cube.set(Seq("Feb", "Cost"), 4.0) // Plan stays empty everywhere
-    val v = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan", "Cost"))),
-      zeroSuppressionColumns = true))
-    val grid = v.refresh()
-    assert(grid.columns.toSeq == Seq("t", "Sales", "Cost")) // Plan dropped, order kept
-    assert(v.stats.columns == 2)
-    // without the flag the empty column renders
-    val v2 = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan", "Cost")))))
-    assert(v2.refresh().columns.toSeq == Seq("t", "Sales", "Plan", "Cost"))
-    // both suppressions together: Plan column gone AND all-empty rows gone
-    val v3 = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan", "Feb"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Plan"))),
-      zeroSuppression = true, zeroSuppressionColumns = true))
-    val g3 = v3.refresh().collect()
-    assert(g3.map(_.getString(0)).toSeq == Seq("Jan")) // Feb has only Cost
-  }
-
-  test("ViewDef JSON round-trips the round-7 fields; legacy JSON gets defaults") {
-    import graft.olap._
-    val v = ViewDef(rows = AxisDef(Seq("t" -> Seq("Jan"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales"))),
-      zeroSuppression = true, zeroSuppressionColumns = true,
-      title = "Q1 report", description = "gross by month",
-      defaultNumberFormat = Some("{:.1f}"))
-    assert(ViewDef.fromJson(ViewDef.toJson(v)) == v)
-    // pre-round-7 persisted definitions lack the fields — must parse, defaults
-    val legacy = """{"filters":[],"rows":[{"dimension":"t","members":["Jan"]}],
-      "columns":[{"dimension":"m","members":["Sales"]}],"zeroSuppression":false}"""
-    val parsed = ViewDef.fromJson(legacy)
-    assert(!parsed.zeroSuppressionColumns && !parsed.zeroSuppression)
-    assert(parsed.title == "" && parsed.defaultNumberFormat.isEmpty)
-  }
-
-  test("default number format applies where the member carries none; member format wins") {
-    import graft.olap._
-    val db = new Database("r7_deffmt", spark)
-    val t = db.addDimension("t")
-    t.edit().add("All", Seq("Jan")).commit()
-    val m = db.addDimension("m")
-    m.edit().addMany(Seq("Sales", "Cost")).commit()
-    m.setFormat("Cost", "{:.3f}")
-    val cube = db.addCube("c", Seq(t, m))
-    cube.set(Seq("Jan", "Sales"), 1.5)
-    cube.set(Seq("Jan", "Cost"), 2.5)
-    val v = new View(cube, ViewDef(
-      rows = AxisDef(Seq("t" -> Seq("Jan"))),
-      cols = AxisDef(Seq("m" -> Seq("Sales", "Cost"))),
-      defaultNumberFormat = Some("{:.1f}")))
-    val csv = v.toCsv().split("\n")
-    assert(csv(1) == "Jan,1.5,2.500", s"unexpected render: ${csv(1)}")
-  }
-
   test("Area.alter derives a moved slice; addresses enumerates with or without data") {
     val (_, cube) = model("areaalter")
     cube.set(Seq("x", "p"), 1.0)

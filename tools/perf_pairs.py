@@ -7,7 +7,10 @@
 Exports the base commit (`git archive`) into DIR, once, then runs
 `perfbench/run.py` on both trees for each seed, alternating which side runs
 first. For every end-to-end metric of BENCHMARK.json it prints each side's
-median and quartiles and how many of the pairs the working tree won.
+median and quartiles and how many of the pairs the working tree won, then
+each side's median of the per-route p50 lines (`cell_p50_ms`, `view_p50_ms`,
+`query_p50_ms`, `write_p50_ms`) that `perfbench/run.py` prints, so a
+change can name the route it moved.
 A run that fails or is not `correct` is counted per side in the summary,
 left out of every pair it belongs to, and makes the script exit 1.
 Run it from the repository root on an otherwise idle host.
@@ -15,6 +18,7 @@ Run it from the repository root on an otherwise idle host.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -34,6 +38,10 @@ def export(rev, dest):
     return sha
 
 
+ROUTES = ("cell", "view", "query", "write")
+ROUTE_P50 = re.compile(r"^perfbench: (" + "|".join(ROUTES) + r")_p50_ms ([0-9.]+) ms")
+
+
 def run(tree, workload, seed, seconds):
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -44,7 +52,12 @@ def run(tree, workload, seed, seconds):
         print(f"  {tree} seed {seed}: failed run (exit {p.returncode})\n" +
               "\n".join((p.stdout + p.stderr).splitlines()[-15:]), file=sys.stderr)
         return None
-    return {k: v["value"] for k, v in res.get("metrics", {}).items()}
+    got = {k: v["value"] for k, v in res.get("metrics", {}).items()}
+    for line in p.stdout.splitlines():
+        m = ROUTE_P50.match(line)
+        if m:
+            got[f"{m.group(1)}_p50_ms"] = float(m.group(2))
+    return got
 
 
 def main():
@@ -86,6 +99,13 @@ def main():
         wins = sum((p["change"][name] > p["base"][name]) == higher
                    and p["change"][name] != p["base"][name] for p in ok)
         print(f"{name:20} {cols[0]:>30} {cols[1]:>30} {wins}/{len(ok)}")
+    routes = [f"{r}_p50_ms" for r in ROUTES if any(f"{r}_p50_ms" in p["base"] for p in pairs)]
+    if routes:
+        print(f"\n{'route p50':20} {'base median':>30} {'change median':>30}")
+        for name in routes:
+            cols = [statistics.median(vs) if (vs := [p[side][name] for p in pairs if name in p[side]])
+                    else float("nan") for side in ("base", "change")]
+            print(f"{name:20} {cols[0]:>30.4g} {cols[1]:>30.4g}")
     if any(failed.values()):
         sys.exit(1)
 
