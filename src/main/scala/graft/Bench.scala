@@ -196,13 +196,13 @@ object Bench {
     )
   }
 
-  /** The bench SparkSession config — the diagnostic tools (TimeOne,
-    * WarmBuild) build theirs HERE so a measurement can never silently run
+  /** The bench SparkSession config — the test-scope profiler (`Profile`)
+    * builds its session HERE so a measurement can never silently run
     * under a different configuration than the bench it isolates.
     */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val built = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -211,21 +211,15 @@ object Bench {
       // splits tried in round 2 flooded local[32] with tasks and regressed
       // the scan/join queries up to 6.9× — task scheduling overhead exceeds
       // what the extra map-side parallelism buys on these plans. The Spark
-      // default (128 MB) wins; env-overridable for re-measurement.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m"))
+      // default (128 MB) wins.
+      .config("spark.sql.files.maxPartitionBytes", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       // bucketed-table sink (saveAsTable) must land in a scratch dir, never
       // the working directory's spark-warehouse
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graftbenchwh").toString)
       .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_OFFHEAP=8g enables Tungsten off-heap memory — the 1e8 GC
-    // experiment lever (r16 verdict #5); unset = default on-heap
-    val withOffHeap = sys.env.get("SPARK_GRAFT_OFFHEAP").fold(spark)(sz =>
-      spark.config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", sz))
-    val built = withOffHeap.getOrCreate()
+      .getOrCreate()
     built.sparkContext.setLogLevel("ERROR")
     built
   }
@@ -1067,11 +1061,11 @@ object Bench {
             (col("id") % 97).cast("double").as("value"))
         val zc = Seq(col("a"), col("b"))
         // Shuffle width of the 1e8 range-exchange+sort: 64 output files ⇒
-        // ~50 MB in-flight sort runs per task at 32 threads — measured the
-        // fastest clean width, env-tunable because this row is the suite's
-        // most contention/spill-sensitive job (BENCH_r14's 3.44× trip) and
-        // re-measurement on a different host may prefer another width.
-        val zfiles = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ZFILES", "64").toInt
+        // ~50 MB in-flight sort runs per task at 32 threads. The 32/64/128
+        // sweep found no clear winner (ARCHITECTURE §6b15), so the
+        // measured 64 stays; this row is the suite's most
+        // contention/spill-sensitive job (BENCH_r14's 3.44× trip).
+        val zfiles = 64
         def zstoreBuild(dir: String): Unit = {
           graft.pipeline.Layout.zorderWrite(spark, dir, zframe(rows8, 0),
             zc, bits = 10, numFiles = zfiles)
@@ -1145,8 +1139,7 @@ object Bench {
         // 256 range slices bound per-task work (~400k docs each) — the
         // partitions-sized-to-memory discipline a 1000-executor run of
         // this operator applies
-        val minhashParts = sys.env.getOrElse(
-          "SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
+        val minhashParts = 256
         def minhashBody(): Unit = {
           val docs = spark.range(0, docs8, 1, minhashParts)
             .select(col("id").as("doc"),

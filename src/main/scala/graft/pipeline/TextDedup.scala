@@ -73,13 +73,16 @@ object TextDedup {
     * bound the r17 candidate-proportional path runs unchanged (the 1e8
     * rows never qualify: nDocs alone excludes them).
     */
-  private def VerifyAllDocsMax: Long =
-    // system-property override exists so the spec suite can force the
-    // LARGE (candidate-proportional) path on its small fixtures — without
-    // it the path would only ever execute at bench scale. The suite runs
-    // single-JVM-sequential (Test/fork with forked-parallel off), so the
-    // property flip in Round18FixesSpec cannot race another suite's run.
-    sys.props.get("graft.lsh.smallDocsMax").map(_.toLong).getOrElse(65536L)
+  private val verifyAllDocsMax = new scala.util.DynamicVariable[Long](65536L)
+
+  /** Run `body` with the small-corpus verify bound at `n` on this thread —
+    * the test seam that forces the LARGE (candidate-proportional) path on
+    * small spec fixtures (`n = 0`); without it that path would only ever
+    * execute at bench scale. Scoped to the calling thread and restored on
+    * exit, so no other caller sees the override.
+    */
+  private[graft] def withVerifyAllDocsMax[T](n: Long)(body: => T): T =
+    verifyAllDocsMax.withValue(n)(body)
   // 64 MB of OPTIMIZER-estimated input (for parquet: compressed file
   // bytes). Halved from r18's 128 MB (round-18 advice): highly
   // compressible text can decompress 3-4x, and TWO broadcast relations
@@ -115,12 +118,11 @@ object TextDedup {
     * 10.3 s vs 18.8 s, and peak execution memory 53.5 GB vs 35.0 GB —
     * i.e. with the cache off-heap the join actually gets its execution
     * memory. On disk the sorted frame streams back at sequential-read
-    * speed; sf0.1-scale corpora don't care (80k-row cache).
-    * `SPARK_GRAFT_LSH_CACHE_LEVEL` overrides for experiments.
+    * speed; sf0.1-scale corpora don't care (80k-row cache). The
+    * `SPARK_GRAFT_LSH_CACHE_LEVEL` override is deleted (its source is at
+    * commit cd93821).
     */
-  private lazy val lshCacheLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_LSH_CACHE_LEVEL", "DISK_ONLY"))
+  private val lshCacheLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** The capped, co-partitioned banded frame LSH candidate generation runs
     * on (round 17). ONE exchange: `banded` is hash-repartitioned by its
@@ -498,7 +500,7 @@ object TextDedup {
     val stage = minhashCandidateStage(df, idCol, textCol, k, bands, shingle, maxBucket)
     val (banded, docBhs) = (stage.banded, stage.docBhs)
     if (stage.small) {
-      // Small-corpus verify (round 18, [[VerifyAllDocsMax]]): the whole
+      // Small-corpus verify (round 18, [[withVerifyAllDocsMax]]): the whole
       // corpus' shingle arrays ride the two verify broadcasts — candidates
       // flow through candidate generation, the chain filter and the verify
       // merge-walk in ONE fused pass (cand has a single consumer, so the
@@ -635,7 +637,7 @@ object TextDedup {
     // scan); gates the small-corpus shortcuts together with nDocs
     val inputBytes = try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case _: Throwable => BigInt(Long.MaxValue) }
-    val small = nDocs <= VerifyAllDocsMax && inputBytes <= VerifySmallBytesMax
+    val small = nDocs <= verifyAllDocsMax.value && inputBytes <= VerifySmallBytesMax
     val useChain = bstats.hotBuckets == 0 &&
       bstats.candVolume > ChainVolumeFactor * bstats.bandedRows &&
       nDocs <= ChainDocsMax
@@ -1126,9 +1128,10 @@ object TextDedup {
 
   /** [[dedupSubstrings]] from PRECOMPUTED [[duplicateRuns]] output — the
     * production shape: the detection pass (the corpus-linear gram
-    * shuffle, ~1.1 M grams/s/node measured in tools/SubstringStress) runs
-    * ONCE, its runs frame is audited/persisted, and the purge reuses it
-    * instead of re-paying the shuffle inside its own plan. (Persisting
+    * shuffle, ~1.1 M grams/s/node measured by the SubstringStress main,
+    * since deleted — its source is at commit cd93821) runs ONCE, its
+    * runs frame is audited/persisted, and the purge reuses it instead of
+    * re-paying the shuffle inside its own plan. (Persisting
     * the runs frame also lets the composed [[dedupSubstrings]] hit
     * Spark's cache-fragment matching, but an explicit parameter beats
     * relying on CacheManager recognizing the subtree.)
@@ -1417,8 +1420,9 @@ object TextDedup {
     * `bh` at scale so even a non-broadcast probe sort-merges with no index
     * exchange). The per-batch serving cost is one SCAN of each index table
     * — never a shuffle of either — so intake batch sizing is the
-    * amortization lever (tools/IntakeStress: 2.3 s per 10k-doc batch
-    * against a 1e6-doc index at local[32]). Signature parameters must
+    * amortization lever (the IntakeStress main, since deleted — its source
+    * is at commit cd93821: 2.3 s per 10k-doc batch against a 1e6-doc
+    * index at local[32]). Signature parameters must
     * match between index and [[dropCorpusNearDups]] — they key the band
     * hashes.
     *

@@ -64,22 +64,9 @@ object HugeModel {
       d.commit()
       d
     }
-    val level = org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_HUGE_PERSIST", "MEMORY_AND_DISK"))
-    val facts = factsFrame(spark, rows).persist(level)
-    val groupKnob = sys.props.get("graft.huge.group")
-      .orElse(sys.env.get("SPARK_GRAFT_HUGE_GROUP"))
-    if (groupKnob.contains("packed_sort")) {
-      // the packed_sort variant's aggregates must plan as streaming
-      // sort-aggregates over the sorted exchange output
-      val prev = spark.conf.getOption("spark.sql.execution.replaceHashWithSortAgg")
-      spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", "true")
-      try facts.count()
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.execution.replaceHashWithSortAgg", v)
-        case None => spark.conf.unset("spark.sql.execution.replaceHashWithSortAgg")
-      }
-    } else facts.count()
+    val facts = factsFrame(spark, rows)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    facts.count()
     persisted.put(s"huge-$rows", facts)
     db.addCube("huge", dims, facts)
   }
@@ -89,71 +76,35 @@ object HugeModel {
     */
   private[graft] def factsFrame(spark: SparkSession, rows: Long): DataFrame = {
     // leaf ids are 1..100 ("All" gets id 0 as the first-created member).
-    // Input-slice width and storage level are env-tunable for the GC
-    // experiments the 1e8 rows drive (r16 verdict #5) — the default stays
-    // the measured-best configuration; see ARCHITECTURE §6e.
-    //  - SPARK_GRAFT_HUGE_SLICES=n: explicit range slices (map-side agg
-    //    hash tables shrink as rows/slices)
-    //  - SPARK_GRAFT_HUGE_PERSIST=MEMORY_AND_DISK_SER|OFF_HEAP|...
     // digit_i ∈ [0, 99] per dimension, one xxhash64 per dimension;
     // d_i = digit_i + 1 everywhere below
     val digitCols: Seq[Column] = (0 until NDims).map(i =>
       pmod(xxhash64(col("id"), lit(i)), lit(LeavesPerDim.toLong)))
-    val range = sys.env.get("SPARK_GRAFT_HUGE_SLICES").map(_.toInt) match {
-      case Some(n) => spark.range(0, rows, 1, n)
-      case None => spark.range(rows)
-    }
-    // sys.prop first so specs can pin the pre-r19 shape without forking
-    val group = sys.props.get("graft.huge.group")
-      .orElse(sys.env.get("SPARK_GRAFT_HUGE_GROUP"))
-    if (group.contains("ints")) {
-      // pre-round-19 shape, kept reachable for A/B: group by the 8 int
-      // columns directly (40 B grouping key) and sum the constant 1.0
-      range
-        .select(digitCols.zipWithIndex.map { case (c, i) =>
-          (c + 1).cast("int").as(s"d$i") } :+ lit(1.0).as("value"): _*)
-        .groupBy((0 until NDims).map(i => col(s"d$i")): _*)
-        .agg(sum(col("value")).as("value"))
-    } else {
-      // Packed-key aggregation (round 19, guide §2.3 "shuffle fewer
-      // bytes" / narrower keys): the 8 base-100 digits pack bijectively
-      // into ONE long (100^8 = 1e16 < 2^63), so the pre-aggregation
-      // groups by a single long instead of an 8-int UnsafeRow — the
-      // shuffle row shrinks 48 B → 16 B and both hash aggregates take
-      // the single-primitive-key fast path. The address space is 1e16,
-      // so the map-side aggregate combines ~nothing (1e8 in → 1e8
-      // shuffle rows) — the key width IS the cost. Measured at 1e8×32
-      // cores (Profile huge8, best-of-3): 24.0 s → 11.6 s, per-stage
-      // spill 13.0 GB mem + 2.2 GB disk → 8.2 + 1.5, executor CPU
-      // 697 s → 325 s. value ≡ 1.0 per generated row, so
-      // sum(value) = count(*)·1.0 exactly (integer-valued doubles);
-      // decode back to d0..d7 is exact long arithmetic (div/mod 100^i),
-      // byte-identical addresses by construction. Oracle-pinned at 1e6
-      // (olap_huge_top, point-read rows) + HugeModelSpec parity.
-      val packed = digitCols.zipWithIndex
-        .map { case (c, i) => c * pow100(i) }.reduce(_ + _)
-      val keys = range.select(packed.as("__p"))
-      val grouped =
-        if (group.contains("packed_sort"))
-          // A/B variant, measured WORSE — kept reachable to record the
-          // negative result: ship the RAW 8-byte key (no partial agg, no
-          // map-side hash table or spill) and sort-aggregate after the
-          // exchange (replaceHashWithSortAgg scoped in [[build]]). At
-          // 1e8×32 best-of-3 the map stage indeed drops to ~3-5 s with
-          // zero spill, but the reduce-side SORT of the raw rows spills
-          // 16 GB and triples GC (19.7 s vs 11.6 s for the hash-agg
-          // default): near-unique keys make the partial agg useless as a
-          // COMBINER, but its hash table is still a cheaper grouping
-          // structure than a full sort at this grain.
-          keys.repartition(col("__p")).sortWithinPartitions("__p")
-            .groupBy(col("__p")).agg(count(lit(1)).as("__n"))
-        else keys.groupBy(col("__p")).agg(count(lit(1)).as("__n"))
-      grouped
-        .select((0 until NDims).map(i => (pmod(
-            expr(s"__p div ${Seq.fill(i)(100L).foldLeft(1L)(_ * _)}"),
-            lit(LeavesPerDim.toLong)) + 1).cast("int").as(s"d$i")) :+
-          col("__n").cast("double").as("value"): _*)
-    }
+    // Packed-key aggregation (round 19, guide §2.3 "shuffle fewer
+    // bytes" / narrower keys): the 8 base-100 digits pack bijectively
+    // into ONE long (100^8 = 1e16 < 2^63), so the pre-aggregation
+    // groups by a single long instead of an 8-int UnsafeRow — the
+    // shuffle row shrinks 48 B → 16 B and both hash aggregates take
+    // the single-primitive-key fast path. The address space is 1e16,
+    // so the map-side aggregate combines ~nothing (1e8 in → 1e8
+    // shuffle rows) — the key width IS the cost. Measured at 1e8×32
+    // cores (Profile huge8, best-of-3): 24.0 s → 11.6 s, per-stage
+    // spill 13.0 GB mem + 2.2 GB disk → 8.2 + 1.5, executor CPU
+    // 697 s → 325 s. value ≡ 1.0 per generated row, so
+    // sum(value) = count(*)·1.0 exactly (integer-valued doubles);
+    // decode back to d0..d7 is exact long arithmetic (div/mod 100^i),
+    // byte-identical addresses by construction. Oracle-pinned at 1e6
+    // (olap_huge_top, point-read rows) + HugeModelSpec parity against
+    // the 8-int-column grouping. A raw-key sort-aggregate variant
+    // measured worse (19.7 s vs 11.6 s, OPTIMIZATION_r19.md).
+    val packed = digitCols.zipWithIndex
+      .map { case (c, i) => c * pow100(i) }.reduce(_ + _)
+    spark.range(rows).select(packed.as("__p"))
+      .groupBy(col("__p")).agg(count(lit(1)).as("__n"))
+      .select((0 until NDims).map(i => (pmod(
+          expr(s"__p div ${Seq.fill(i)(100L).foldLeft(1L)(_ * _)}"),
+          lit(LeavesPerDim.toLong)) + 1).cast("int").as(s"d$i")) :+
+        col("__n").cast("double").as("value"): _*)
   }
 
   /** Batched random base-cell point reads: `n` pseudo-random addresses

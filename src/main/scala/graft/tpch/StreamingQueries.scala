@@ -82,35 +82,27 @@ object StreamingQueries {
     * after — the streaming twins SIZE their state-store layout to the
     * replayed volume (inheriting the session's 32 means 32 store
     * loads+commits per trigger, pure commit overhead; measured 12.3 s →
-    * 8.3 s with the sized layout, ARCHITECTURE §6b9) — optionally on
-    * the RocksDB state store. Provider and size follow the MEASURED
-    * numbers (ARCHITECTURE §6b9, re-measured round 12 with
-    * tools/StreamProfile): when store fan-out dominates (the two-sided
-    * join at 8 partitions × 4 stores) changelog-checkpointed RocksDB beat
-    * HDFS 18.5 vs 21.9 s — but CUTTING the partition count beats both
+    * 8.3 s with the sized layout, ARCHITECTURE §6b9), on the session's
+    * state-store provider (HDFS-backed by default). Provider and size
+    * follow the MEASURED numbers (ARCHITECTURE §6b9, re-measured round 12
+    * with the StreamProfile main, since deleted — its source is at commit
+    * cd93821): when store fan-out dominates (the two-sided join at 8
+    * partitions × 4 stores) changelog-checkpointed RocksDB beat HDFS
+    * 18.5 vs 21.9 s — but CUTTING the partition count beats both
     * (2p+HDFS 13.5 s), because RocksDB's per-store-instance overhead is
     * exactly what the changelog win was paying for; the join twin now
     * sizes to 2 and stays on the default provider. Single-aggregation
     * window state commits cheaply at 8p and LOSES parallelism below it
     * (Complete-mode re-emission), so the window twins stay at 8p+HDFS.
-    * `rocksdb = true` remains for A/B runs; GRAFT_STATE_PROVIDER=hdfs
-    * force-disables it for environments without the rocksdbjni native
-    * library.
+    * The RocksDB switch and its `GRAFT_STATE_PROVIDER` /
+    * `GRAFT_STREAM_STATE_PARTS` overrides are deleted (source at commit
+    * cd93821).
     */
   private def withStatePartitions[A](s: SparkSession, n: Int,
-      rocksdb: Boolean = false, noDataBatch: Boolean = true)(body: => A): A = {
+      noDataBatch: Boolean = true)(body: => A): A = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     val prevNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    // A/B + production-tuning override of the sized defaults (r19
-    // re-measurement; defaults unchanged — see ARCHITECTURE §6b9)
-    val nEff = sys.env.get("GRAFT_STREAM_STATE_PARTS").map(_.toInt).getOrElse(n)
-    s.conf.set("spark.sql.shuffle.partitions", nEff.toString)
-    if (rocksdb && !sys.env.get("GRAFT_STATE_PROVIDER").contains("hdfs")) {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
+    s.conf.set("spark.sql.shuffle.partitions", n.toString)
     // `noDataBatch = false` skips the final zero-row watermark-finalization
     // micro-batch (round 19, guide §2.4 "fewer jobs"): on a finite
     // AvailableNow replay of an INNER stream-stream join every match is
@@ -123,10 +115,6 @@ object StreamingQueries {
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
       prevNoData match {
         case Some(v) => s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
         case None => s.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
@@ -502,8 +490,9 @@ object StreamingQueries {
       val sinkName = s"pairs_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       // SMALLER layout than the window twins: the join keeps 4 stores per
       // partition, so store fan-out dominates until the partition count is
-      // cut — r12 profile (tools/StreamProfile, summed triggerExecution):
-      // 8p+RocksDB 18.5 s, 8p+HDFS 21.9 s, 2p+HDFS 13.5 s, 1p+HDFS 13.2 s.
+      // cut — r12 profile (the StreamProfile main, since deleted; summed
+      // triggerExecution): 8p+RocksDB 18.5 s, 8p+HDFS 21.9 s,
+      // 2p+HDFS 13.5 s, 1p+HDFS 13.2 s.
       // At the sized-down layout the HDFS provider wins — RocksDB's
       // per-store-instance overhead is what the changelog win was paying
       // for at 8p — and the residual ~1 s/trigger is addBatch stage

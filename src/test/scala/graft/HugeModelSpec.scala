@@ -25,28 +25,32 @@ class HugeModelSpec extends AnyFunSuite {
     assert(cube.get(Seq("m5", "m7") ++ Seq.fill(6)("All")).contains(expected2))
   }
 
+  /** The 8-int-column reference for the packed build: the same
+    * `pmod(xxhash64(id, i), 100) + 1` digits, grouped by the 8 int columns
+    * directly, summing the constant 1.0 (the pre-round-19 shape).
+    */
+  private def intColumnFacts(rows: Long) =
+    spark.range(rows)
+      .select((0 until HugeModel.NDims).map(i =>
+        (pmod(xxhash64(col("id"), lit(i)), lit(HugeModel.LeavesPerDim.toLong)) + 1)
+          .cast("int").as(s"d$i")) :+ lit(1.0).as("value"): _*)
+      .groupBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*)
+      .agg(sum(col("value")).as("value"))
+
   test("packed-key build ≡ 8-int-column build (grouping-shape parity)") {
-    // round 19: the default build groups by ONE packed long (base-100
-    // digits, bijective) and counts; the pre-r19 shape groups by the 8 int
-    // columns and sums 1.0. Same facts by construction — pin it row-for-row
-    // at a row count no other suite memoizes.
+    // round 19: the build groups by ONE packed long (base-100 digits,
+    // bijective) and counts; the reference groups by the 8 int columns
+    // and sums 1.0. Same facts by construction — pin it row-for-row at a
+    // row count no other suite memoizes.
     val rows = 54321L
-    val packed = HugeModel.at(spark, rows).facts
-      .orderBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*)
-      .collect()
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*).collect()
     try {
-      Seq("ints", "packed_sort").foreach { variant =>
-        System.setProperty("graft.huge.group", variant)
-        val other = HugeModel.rebuild(spark, rows).facts
-          .orderBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*)
-          .collect()
-        assert(packed.length == other.length, s"row count differs ($variant)")
-        packed.zip(other).foreach { case (p, n) => assert(p == n, s"($variant)") }
-      }
-    } finally {
-      System.clearProperty("graft.huge.group")
-      HugeModel.drop(rows)
-    }
+      val packed = sorted(HugeModel.at(spark, rows).facts)
+      val other = sorted(intColumnFacts(rows))
+      assert(packed.length == other.length, "row count differs")
+      packed.zip(other).foreach { case (p, n) => assert(p == n) }
+    } finally HugeModel.drop(rows)
   }
 
   test("identity rollups skip the closure join; partial/weighted covers keep it") {

@@ -3,22 +3,21 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-18 pins:
-  *   - the LSH pair-dedup strategy choice (r18): the exactly-once chain
-  *     filter on high-dup corpora and the lean groupBy elsewhere must be
-  *     RESULT-IDENTICAL, and the choice itself is asserted so a threshold
-  *     regression is loud;
-  *   - the candidate stage's exchange budget (r17 verdict #5): the bucket
-  *     self-join must add ZERO shuffle exchanges beyond the cache builds
-  *     (chain path) / exactly the pair-dedup exchange (groupBy path), and
-  *     the banded cache must hold the EXPLICIT shuffle-partition count (a
-  *     bare repartition(cols) is AQE-coalescable and the join would then
-  *     re-exchange both sides — the measured 32 GB failure);
-  *   - read-only snapshots reject the remaining mutation faces (r17
-  *     advice): clear, compactTo*, appendZorderedStore — while views.define
-  *     stays exempt (a view is a query definition over the read surface).
+/** MinHash-LSH and SimHash near-duplicate pairs ([[graft.pipeline.TextDedup]]):
+  *   - the LSH pair-dedup strategy choice: the exactly-once chain filter on
+  *     high-dup corpora and the lean groupBy elsewhere must be
+  *     RESULT-IDENTICAL to brute force, and the choice itself is asserted
+  *     so a threshold regression is loud;
+  *   - the large (candidate-proportional) verify path equals the small
+  *     fast path;
+  *   - the candidate stage's exchange budget: the bucket self-join must add
+  *     ZERO shuffle exchanges beyond the cache builds (chain path) /
+  *     exactly the pair-dedup exchange (groupBy path), and the banded cache
+  *     must hold the EXPLICIT shuffle-partition count (a bare
+  *     repartition(cols) is AQE-coalescable and the join would then
+  *     re-exchange both sides — the measured 32 GB failure).
   */
-class Round18FixesSpec extends AnyFunSuite {
+class LshPairsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import graft.pipeline.TextDedup
 
@@ -82,21 +81,20 @@ class Round18FixesSpec extends AnyFunSuite {
     // the r18 small-corpus fast path means every spec fixture would
     // otherwise exercise ONLY the broadcast-everything verify; force the
     // LARGE path (persisted cand + measured candN + candIds semi-join)
-    // through the documented test override and pin parity on both regimes
-    System.setProperty("graft.lsh.smallDocsMax", "0")
-    try {
-      Seq(highDupDocs -> "chain", nearUniqueDocs -> "groupby").foreach {
-        case (docs, strat) =>
-          val pairs = TextDedup.minhashLshPairs(docs, "doc_id", "text",
+    // through the thread-scoped test seam and pin parity on both regimes
+    Seq(highDupDocs -> "chain", nearUniqueDocs -> "groupby").foreach {
+      case (docs, strat) =>
+        val pairs = TextDedup.withVerifyAllDocsMax(0L) {
+          TextDedup.minhashLshPairs(docs, "doc_id", "text",
             k = 64, bands = 16, threshold = 0.9)
-          assert(TextDedup.lastPairDedupStrategy == strat)
-          val got = pairs.select("i", "j").collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          assert(got == bruteJaccard(docs, 0.9),
-            s"large-path pairs diverge from brute force on the $strat fixture")
-          pairs.unpersist()
-      }
-    } finally System.clearProperty("graft.lsh.smallDocsMax")
+        }
+        assert(TextDedup.lastPairDedupStrategy == strat)
+        val got = pairs.select("i", "j").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == bruteJaccard(docs, 0.9),
+          s"large-path pairs diverge from brute force on the $strat fixture")
+        pairs.unpersist()
+    }
   }
 
   test("candidate stage adds no exchange beyond the caches; banded cache holds explicit N") {
@@ -156,44 +154,5 @@ class Round18FixesSpec extends AnyFunSuite {
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(approx == exact, s"simhash chain dedup diverges: ${approx.size} vs ${exact.size}")
     assert(exact.nonEmpty, "fixture must produce hamming-close pairs")
-  }
-
-  test("read-only snapshots reject clear/compact/append; views.define stays usable") {
-    import graft.olap.{AxisDef, ViewDef}
-    val db = TinyModel.build(spark)
-    val c0 = db.cube("sales")
-    val cube = new graft.core.Cube("sales_ro18", c0.dimensions, spark, None)
-    cube.cacheEnabled = false
-    cube.set(Seq("2021", "Jan", "North", "motorcycles", "Sales"), 100.0)
-    val dir = java.nio.file.Files.createTempDirectory("r18zs").toString
-    try {
-      assert(cube.compactToZorderedStore(dir, Seq(0, 1), files = 2))
-      val snap = cube.snapshotAtGeneration(1L)
-      snap.cacheEnabled = false
-      def rejects(op: String)(body: => Any): Unit = {
-        val e = intercept[UnsupportedOperationException](body)
-        assert(e.getMessage.contains("read-only"), s"$op: $e")
-      }
-      rejects("clear")(snap.clear())
-      rejects("compactToBucketed")(snap.compactToBucketed("r18_snap_bucketed"))
-      rejects("compactToZorderedStore")(
-        snap.compactToZorderedStore(dir + "_x", Seq(0, 1), files = 2))
-      rejects("appendZorderedStore")(snap.appendZorderedStore(cube.facts.limit(1)))
-      // the rejections left no residue and reads still serve
-      assert(snap.get(Seq("2021", "Jan", "North", "motorcycles", "Sales"))
-        .contains(100.0))
-      // views stay exempt: defining + rendering a view over the snapshot is
-      // the supported way to read history
-      snap.views.define("asof", ViewDef(
-        filters = Seq("years" -> "2021", "regions" -> "North",
-          "products" -> "motorcycles"),
-        rows = AxisDef(Seq("months" -> Seq("Jan"))),
-        cols = AxisDef(Seq("measures" -> Seq("Sales")))))
-      val grid = snap.views("asof").refresh().collect()
-      assert(grid.length == 1)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir + "_x"))
-    }
   }
 }

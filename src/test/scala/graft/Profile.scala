@@ -13,9 +13,7 @@ import org.apache.spark.sql.SparkSession
   *                                              gc/spill/shuffle) of a warm
   *                                              pass
   *   Test/runMain graft.Profile huge8 [build|zstore|both] [passes]
-  *                                              1e8 variant harness (env:
-  *                                              SPARK_GRAFT_HUGE_SLICES/
-  *                                              PERSIST, SPARK_GRAFT_OFFHEAP,
+  *                                              1e8 build harness (env:
   *                                              SPARK_GRAFT_HUGE8_ROWS)
   *
   * `SP_SF` picks the testdata dir (default sf0.1). Numbers from this light
@@ -78,7 +76,7 @@ object Profile {
           pmod, when, xxhash64}
         val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
           "100000000").toLong
-        val parts = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
+        val parts = 256 // the bench's range slices
         val spark = Bench.session()
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -162,7 +160,7 @@ object Profile {
           col, concat, concat_ws, lit, pmod, posexplode, slice, xxhash64}
         val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
           "100000000").toLong
-        val parts = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
+        val parts = 256 // the bench's range slices
         val passes = rest.headOption.map(_.toInt).getOrElse(3)
         val spark = Bench.session()
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -197,9 +195,8 @@ object Profile {
         }
         spark.stop()
       case "hugeplan" =>
-        // explain("formatted") of the huge-model facts aggregation under
-        // the current group knob (SPARK_GRAFT_HUGE_GROUP / graft.huge.group)
-        // — the committable plan evidence for the huge_build rows.
+        // explain("formatted") of the huge-model facts aggregation — the
+        // committable plan evidence for the huge_build rows.
         val rows = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ROWS", "100000000").toLong
         val spark = Bench.session()
         graft.tpch.HugeModel.factsFrame(spark, rows).explain("formatted")
@@ -236,12 +233,7 @@ object Profile {
           println(f"[huge8] $name ${(System.nanoTime() - t0) / 1e9}%8.2f s " +
             f"gc=${gcMs - g0} ms")
         }
-        val variant = Seq("SPARK_GRAFT_HUGE_SLICES",
-          "SPARK_GRAFT_HUGE_PERSIST", "SPARK_GRAFT_OFFHEAP", "SPARK_GRAFT_HUGE_GROUP")
-          .flatMap(k => sys.env.get(k).map(v => s"$k=$v")).mkString(" ") match {
-          case "" => "baseline"; case s => s
-        }
-        println(s"[huge8] variant: $variant rows=$rows what=$what")
+        println(s"[huge8] rows=$rows what=$what")
         // JIT warmup at 1e6 (untimed)
         graft.tpch.HugeModel.rebuild(spark, 1000000L)
         graft.tpch.HugeModel.drop(1000000L, blocking = true)

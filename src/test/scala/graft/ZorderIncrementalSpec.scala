@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Layout.zorderAppend]] / [[Layout.zorderRead]]): only files whose
   * z-range overlaps the batch are re-clustered; everything else stays
   * byte-identical on disk, and the manifest-driven read never loses or
-  * duplicates a row.
+  * duplicates a row. A cube's as-of snapshot of its z-store is read-only:
+  * every mutation face rejects, while reads and views keep serving.
   */
 class ZorderIncrementalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -147,5 +148,44 @@ class ZorderIncrementalSpec extends AnyFunSuite {
     val slice = got.filter(col("a") < 4 && col("b") < 4)
     val expect = all.filter(col("a") < 4 && col("b") < 4)
     assert(rowsOf(slice) == rowsOf(expect))
+  }
+
+  test("read-only snapshots reject clear/compact/append; views.define stays usable") {
+    import graft.olap.{AxisDef, ViewDef}
+    val db = TinyModel.build(spark)
+    val c0 = db.cube("sales")
+    val cube = new graft.core.Cube("sales_ro18", c0.dimensions, spark, None)
+    cube.cacheEnabled = false
+    cube.set(Seq("2021", "Jan", "North", "motorcycles", "Sales"), 100.0)
+    val dir = java.nio.file.Files.createTempDirectory("r18zs").toString
+    try {
+      assert(cube.compactToZorderedStore(dir, Seq(0, 1), files = 2))
+      val snap = cube.snapshotAtGeneration(1L)
+      snap.cacheEnabled = false
+      def rejects(op: String)(body: => Any): Unit = {
+        val e = intercept[UnsupportedOperationException](body)
+        assert(e.getMessage.contains("read-only"), s"$op: $e")
+      }
+      rejects("clear")(snap.clear())
+      rejects("compactToBucketed")(snap.compactToBucketed("r18_snap_bucketed"))
+      rejects("compactToZorderedStore")(
+        snap.compactToZorderedStore(dir + "_x", Seq(0, 1), files = 2))
+      rejects("appendZorderedStore")(snap.appendZorderedStore(cube.facts.limit(1)))
+      // the rejections left no residue and reads still serve
+      assert(snap.get(Seq("2021", "Jan", "North", "motorcycles", "Sales"))
+        .contains(100.0))
+      // views stay exempt: defining + rendering a view over the snapshot is
+      // the supported way to read history
+      snap.views.define("asof", ViewDef(
+        filters = Seq("years" -> "2021", "regions" -> "North",
+          "products" -> "motorcycles"),
+        rows = AxisDef(Seq("months" -> Seq("Jan"))),
+        cols = AxisDef(Seq("measures" -> Seq("Sales")))))
+      val grid = snap.views("asof").refresh().collect()
+      assert(grid.length == 1)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir + "_x"))
+    }
   }
 }
