@@ -1136,7 +1136,8 @@ final class Cube(
       case Right((g, schema)) => Right(Cube.GridRows(schema, kernelRows(g)))
       case Left((df, value)) =>
         val plan = sumPlan(df, value)
-        val bounded = !selections.contains(Seq(Dimension.DegenerateLeafAllId)) && withinKernelBound(selections)
+        val bounded = !Cube.plannedReports.value &&
+          !selections.contains(Seq(Dimension.DegenerateLeafAllId)) && withinKernelBound(selections)
         if (collectAny || bounded) Right(Cube.GridRows(plan.schema, plan.collect().toIndexedSeq))
         else Left(plan)
     }
@@ -1399,6 +1400,12 @@ object Cube {
       base: DataFrame,
       overlay: scala.collection.immutable.HashMap[Vector[Int], Option[Double]],
       payloads: scala.collection.immutable.HashMap[Vector[Int], String])
+
+  /** Test seam: inside [[withPlannedReports]], on this thread, a report
+    * the kernel does not serve keeps its Spark plan however small its grid,
+    * so a ruled grid takes its DataFrame path. */
+  private val plannedReports = new scala.util.DynamicVariable(false)
+  private[graft] def withPlannedReports[A](body: => A): A = plannedReports.withValue(true)(body)
 
   /** Largest base frame (in cells) the driver point index will hold. */
   val PointIndexCap: Long = 2000000L

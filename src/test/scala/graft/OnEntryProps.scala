@@ -26,23 +26,28 @@ object OnEntryProps extends Properties("OnEntryBulk") {
 
   private lazy val spark = TestSpark.spark
 
-  private def genExpr(depth: Int): Gen[RuleExpr] = {
+  /** A random expression tree of depth ≤ `depth` over `leaf`: every
+    * arithmetic node (Add, Sub, Mul, Div, Neg, abs, round). */
+  private[graft] def genTree(depth: Int, leaf: Gen[RuleExpr]): Gen[RuleExpr] = {
     import RuleExpr._
-    val leaf: Gen[RuleExpr] = Gen.oneOf(
-      Gen.const(Input),
-      // values that exercise sign, halves, and fractions
-      Gen.oneOf(-2.5, -1.0, -0.5, 0.0, 0.5, 1.5, 2.0, 3.25).map(Lit(_)))
     if (depth <= 0) leaf
     else Gen.frequency(
       2 -> leaf,
-      1 -> Gen.zip(genExpr(depth - 1), genExpr(depth - 1)).map { case (a, b) => Add(a, b) },
-      1 -> Gen.zip(genExpr(depth - 1), genExpr(depth - 1)).map { case (a, b) => Sub(a, b) },
-      1 -> Gen.zip(genExpr(depth - 1), genExpr(depth - 1)).map { case (a, b) => Mul(a, b) },
-      1 -> Gen.zip(genExpr(depth - 1), genExpr(depth - 1)).map { case (a, b) => Div(a, b) },
-      1 -> genExpr(depth - 1).map(Neg(_)),
-      1 -> genExpr(depth - 1).map(Fn("abs", _)),
-      1 -> genExpr(depth - 1).map(Fn("round", _)))
+      1 -> Gen.zip(genTree(depth - 1, leaf), genTree(depth - 1, leaf)).map { case (a, b) => Add(a, b) },
+      1 -> Gen.zip(genTree(depth - 1, leaf), genTree(depth - 1, leaf)).map { case (a, b) => Sub(a, b) },
+      1 -> Gen.zip(genTree(depth - 1, leaf), genTree(depth - 1, leaf)).map { case (a, b) => Mul(a, b) },
+      1 -> Gen.zip(genTree(depth - 1, leaf), genTree(depth - 1, leaf)).map { case (a, b) => Div(a, b) },
+      1 -> genTree(depth - 1, leaf).map(Neg(_)),
+      1 -> genTree(depth - 1, leaf).map(Fn("abs", _)),
+      1 -> genTree(depth - 1, leaf).map(Fn("round", _)))
   }
+
+  // values that exercise sign, halves, and fractions
+  private[graft] val genLit: Gen[RuleExpr] =
+    Gen.oneOf(-2.5, -1.0, -0.5, 0.0, 0.5, 1.5, 2.0, 3.25).map(RuleExpr.Lit(_))
+
+  private def genExpr(depth: Int): Gen[RuleExpr] =
+    genTree(depth, Gen.oneOf(Gen.const(RuleExpr.Input), genLit))
 
   private def usesInput(e: RuleExpr): Boolean = {
     import RuleExpr._
@@ -69,23 +74,8 @@ object OnEntryProps extends Properties("OnEntryBulk") {
   // post-write state; parity target is per-cell set with ref cells written
   // FIRST (the order the bulk semantics correspond to). Absent ref cells
   // exercise the None-keeps-input branch and Add's +0 branch.
-  private def genRefExpr(depth: Int): Gen[RuleExpr] = {
-    import RuleExpr._
-    val leaf: Gen[RuleExpr] = Gen.oneOf(
-      Gen.const(Input),
-      Gen.const(Ref("Fx")),
-      Gen.oneOf(-2.5, -1.0, -0.5, 0.0, 0.5, 1.5, 2.0, 3.25).map(Lit(_)))
-    if (depth <= 0) leaf
-    else Gen.frequency(
-      2 -> leaf,
-      1 -> Gen.zip(genRefExpr(depth - 1), genRefExpr(depth - 1)).map { case (a, b) => Add(a, b) },
-      1 -> Gen.zip(genRefExpr(depth - 1), genRefExpr(depth - 1)).map { case (a, b) => Sub(a, b) },
-      1 -> Gen.zip(genRefExpr(depth - 1), genRefExpr(depth - 1)).map { case (a, b) => Mul(a, b) },
-      1 -> Gen.zip(genRefExpr(depth - 1), genRefExpr(depth - 1)).map { case (a, b) => Div(a, b) },
-      1 -> genRefExpr(depth - 1).map(Neg(_)),
-      1 -> genRefExpr(depth - 1).map(Fn("abs", _)),
-      1 -> genRefExpr(depth - 1).map(Fn("round", _)))
-  }
+  private def genRefExpr(depth: Int): Gen[RuleExpr] =
+    genTree(depth, Gen.oneOf(Gen.const(RuleExpr.Input), Gen.const(RuleExpr.Ref("Fx")), genLit))
 
   private val genRefCase = for {
     expr <- genRefExpr(3) if usesInput(expr)
