@@ -1,9 +1,12 @@
 package graft.olap
 
 import graft.core.{Bolt, Cube, Dimension}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, InterpretedMutableProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, IntegerType, StructField, StructType}
 import scala.collection.mutable
 
 /** Rule scopes (≙ `rules.py:24-41`). */
@@ -695,8 +698,8 @@ object Rules {
     }
   }
 
-  // ---- rule arithmetic on doubles: one definition for scalar reads and
-  // driver grids, agreeing bit for bit with the column compiler ----------
+  // ---- rule arithmetic on doubles for scalar reads, agreeing bit for bit
+  // with the column compiler ----------------------------------------------
 
   private def plus(x: Option[Double], y: Option[Double]): Option[Double] =
     if (x.isEmpty && y.isEmpty) None else Some(x.getOrElse(0.0) + y.getOrElse(0.0))
@@ -769,20 +772,11 @@ object Rules {
     c(e)
   }
 
-  /** A rule column held on the driver over a grid's rows: the Spark type
-    * and nullability [[toColumnWith]] gives the same expression, and the
-    * value at each row — a boxed Double, a `java.math.BigDecimal` at the
-    * type's scale, or null.
+  /** A column held on the driver over a report's rows: its Spark type and
+    * nullability, and the value at each row — a boxed Double, a
+    * `java.math.BigDecimal` at the type's scale, a String, or null.
     */
   private[olap] final case class Cells(dataType: DataType, nullable: Boolean, at: Int => Any)
-
-  /** The session settings decimal arithmetic depends on. */
-  private[olap] final case class DecimalMode(ansi: Boolean, precisionLoss: Boolean)
-  private[olap] object DecimalMode {
-    def of(spark: org.apache.spark.sql.SparkSession): DecimalMode = DecimalMode(
-      spark.conf.get("spark.sql.ansi.enabled").toBoolean,
-      spark.conf.get("spark.sql.decimalOperations.allowPrecisionLoss").toBoolean)
-  }
 
   /** A decimal or double cell as the double Spark's cast gives. */
   private[olap] def toDouble(v: Any): java.lang.Double = v match {
@@ -791,97 +785,85 @@ object Rules {
     case b: java.math.BigDecimal => Decimal(b).toDouble
   }
 
-  /** The driver interpreter of [[toColumnWith]]: the same expression gives
-    * the same type, nullability and bits with no Spark job. Doubles use the
-    * scalar path's arithmetic. Decimal `+`, `−` and `×` take Spark's
-    * decimal result type (capped at 38 digits, HALF_UP to the result scale,
-    * an overflow raising under ANSI and null otherwise); a decimal meeting a
-    * double, and every `/`, is a double. Operands compile in the column
-    * compiler's order, so the first error it would raise is the one raised
-    * here.
+  /** A rule compiled for the driver: [[toColumnWith]]'s column as Spark's
+    * analyzer resolves it over positional inputs `r0..rk`, bound. */
+  private final case class Compiled(expr: Expression, dataType: DataType, nullable: Boolean)
+
+  /** Compiled rules by (positional expression, input fields, ANSI mode,
+    * decimal precision loss) — everything the analysis depends on, so an
+    * entry never goes stale; least recently used beyond the bound. */
+  private val MaxCompiled = 1024
+  private val compiled = new java.util.LinkedHashMap[AnyRef, Compiled](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Compiled]): Boolean = size > MaxCompiled
+  }
+  private val compiles = new java.util.concurrent.atomic.AtomicLong
+
+  /** Rule compiles so far, in this JVM (a test seam: a served report
+    * reuses the compile, it never analyzes). */
+  private[graft] def ruleCompiles: Long = compiles.get
+
+  /** Rule `e` evaluated on the driver over `n` rows, with no Spark job:
+    * [[toColumnWith]] is the only compiler, and Spark evaluates its column
+    * — the types, nullability, decimal rounding and overflow a plan gives.
+    * Each distinct input column (`resolve` per unqualified ref, `cubeRef`
+    * per cross-cube ref, called in the column compiler's order, so the
+    * first error it would raise is the one raised here) becomes a
+    * positional input; the analyzed expression over those inputs is cached
+    * (see [[compiled]]) and runs in a fresh interpreted projection per call,
+    * so concurrent reports share no mutable row. An analysis failure is a
+    * `#ERR!` [[RuleError]].
     */
-  private[olap] def toCells(resolve: String => Cells, cubeRef: RuleExpr.CubeRef => Cells,
-      mode: DecimalMode)(e: RuleExpr): Cells = {
+  private[olap] def ruleCells(spark: SparkSession, n: Int, resolve: String => Cells,
+      cubeRef: RuleExpr.CubeRef => Cells)(e: RuleExpr): Cells = {
     import RuleExpr._
-    def opt(c: Cells, i: Int): Option[Double] = Option(toDouble(c.at(i))).map(_.doubleValue)
-    def boxed(v: Option[Double]): Any = v.map(Double.box).orNull
-    def fit(d: Decimal, t: DecimalType): Any =
-      if (d.changePrecision(t.precision, t.scale)) d.toJavaBigDecimal
-      else if (mode.ansi) throw new ArithmeticException(
-        s"rule value ${d.toJavaBigDecimal} cannot be represented as decimal(${t.precision}, ${t.scale})")
-      else null
-    def dec(v: Any): Decimal = if (v == null) Decimal(0) else Decimal(v.asInstanceOf[java.math.BigDecimal])
-    def resultType(p: Int, s: Int): DecimalType =
-      if (p <= DecimalType.MAX_PRECISION) DecimalType(p, s)
-      else if (!mode.precisionLoss) DecimalType(DecimalType.MAX_PRECISION, math.min(s, DecimalType.MAX_PRECISION))
-      else DecimalType(DecimalType.MAX_PRECISION, math.max(DecimalType.MAX_PRECISION - (p - s), math.min(s, 6)))
-    // the type of coalesce(x, 0): an int zero widens a decimal to 10 integer digits
-    def orZero(t: DataType): DataType = t match {
-      case d: DecimalType if d.precision - d.scale < 10 =>
-        DecimalType(math.min(DecimalType.MAX_PRECISION, 10 + d.scale), d.scale)
-      case other => other
+    val inputs = mutable.ArrayBuffer[Cells]()
+    def slot(c: Cells): RuleExpr = {
+      val k = inputs.indexWhere(_ eq c)
+      if (k >= 0) Ref(s"r$k") else { inputs += c; Ref(s"r${inputs.size - 1}") }
     }
-    def additive(a: Cells, b: Cells, sub: Boolean): Cells = (orZero(a.dataType), orZero(b.dataType)) match {
-      case (x: DecimalType, y: DecimalType) =>
-        val s = math.max(x.scale, y.scale)
-        val t = resultType(math.max(x.precision - x.scale, y.precision - y.scale) + s + 1, s)
-        Cells(t, nullable = true, i => {
-          val (x, y) = (a.at(i), b.at(i))
-          if (x == null && y == null) null else fit(if (sub) dec(x) - dec(y) else dec(x) + dec(y), t)
-        })
-      case _ =>
-        Cells(DoubleType, nullable = true, i => boxed(if (sub) minus(opt(a, i), opt(b, i)) else plus(opt(a, i), opt(b, i))))
+    def positional(x: RuleExpr): RuleExpr = x match {
+      case Ref(spec) if !spec.contains(":") => slot(resolve(spec))
+      case cr: CubeRef => slot(cubeRef(cr))
+      case Add(a, b) => val pa = positional(a); Add(pa, positional(b))
+      case Sub(a, b) => val pa = positional(a); Sub(pa, positional(b))
+      case Mul(a, b) => val pa = positional(a); Mul(pa, positional(b))
+      case Div(a, b) => val pb = positional(b); Div(positional(a), pb)
+      case Neg(a) => Neg(positional(a))
+      case Fn(f @ ("abs" | "round"), a) => Fn(f, positional(a))
+      case Lit(_) => x
+      case _ => toColumnWith(_ => lit(null))(x); x // raises the compiler's error
     }
-    def c(x: RuleExpr): Cells = x match {
-      case Lit(v) => val b = Double.box(v); Cells(DoubleType, nullable = false, _ => b)
-      case Ref(spec) if !spec.contains(":") => resolve(spec)
-      case Ref(spec) => throw new IllegalArgumentException(
-        s"cross-dimension ref '$spec' not expressible in column mode")
-      case Add(a, b) => val ca = c(a); additive(ca, c(b), sub = false)
-      case Sub(a, b) => val ca = c(a); additive(ca, c(b), sub = true)
-      case Mul(a, b) =>
-        val ca = c(a); val cb = c(b)
-        (ca.dataType, cb.dataType) match {
-          case (x: DecimalType, y: DecimalType) =>
-            val t = resultType(x.precision + y.precision + 1, x.scale + y.scale)
-            Cells(t, ca.nullable || cb.nullable || !mode.ansi, i => {
-              val (x, y) = (ca.at(i), cb.at(i))
-              if (x == null || y == null) null else fit(dec(x) * dec(y), t)
-            })
-          case _ => Cells(DoubleType, ca.nullable || cb.nullable, i => boxed(times(opt(ca, i), opt(cb, i))))
+    val pe = positional(e)
+    val fields = StructType(inputs.indices.map(k => StructField(s"r$k", inputs(k).dataType, inputs(k).nullable)))
+    val key = (pe, fields, spark.conf.get("spark.sql.ansi.enabled"),
+      spark.conf.get("spark.sql.decimalOperations.allowPrecisionLoss"))
+    val c = compiled.synchronized {
+      Option(compiled.get(key)).getOrElse {
+        val bound = try Bridge.boundExpression(spark, toColumnWith(col)(pe), fields) catch {
+          case err: org.apache.spark.sql.AnalysisException => throw RuleError("#ERR!", err.getMessage)
         }
-      case Div(a, b) =>
-        // the column compiler reads the denominator first
-        val cb = c(b); val ca = c(a)
-        Cells(DoubleType, nullable = true, i => boxed(div(opt(ca, i), opt(cb, i))))
-      case Neg(a) => unary(c(a), -_, _.negate)
-      case Fn("abs", a) => unary(c(a), math.abs, _.abs)
-      case Fn("round", a) =>
-        val ca = c(a)
-        ca.dataType match {
-          case t: DecimalType =>
-            Cells(DecimalType(math.min(DecimalType.MAX_PRECISION, t.precision - t.scale + 1), 0), nullable = true, i =>
-              ca.at(i) match {
-                case null => null
-                case v: java.math.BigDecimal => v.setScale(0, java.math.RoundingMode.HALF_UP)
-              })
-          // Spark's round is nullable whatever its input
-          case _ => unary(ca, roundHalfUp, identity).copy(nullable = true)
-        }
-      case Fn(n, _) => throw RuleError("#ERR!", s"unknown rule function '$n'")
-      case Shift(d, _) => throw new IllegalArgumentException(
-        s"relative shift on '$d' not expressible in column mode")
-      case cr @ CubeRef(_, _) => cubeRef(cr)
-      case Input => throw new IllegalArgumentException(
-        "on-entry Input is not expressible in column mode")
+        compiles.incrementAndGet()
+        val fresh = Compiled(bound, bound.dataType, bound.nullable)
+        compiled.put(key, fresh)
+        fresh
+      }
     }
-    def unary(a: Cells, onDouble: Double => Double, onDecimal: java.math.BigDecimal => java.math.BigDecimal): Cells =
-      Cells(a.dataType, a.nullable, i => a.at(i) match {
-        case null => null
-        case d: java.lang.Double => Double.box(onDouble(d))
-        case b: java.math.BigDecimal => onDecimal(b)
-      })
-    c(e)
+    val toCatalyst = fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType)).toArray
+    val toScala = CatalystTypeConverters.createToScalaConverter(c.dataType)
+    val out = new Array[Any](n)
+    Bridge.withConf(spark) {
+      val project = InterpretedMutableProjection.createProjection(Seq(c.expr))
+      val row = new GenericInternalRow(inputs.size)
+      var i = 0
+      while (i < n) {
+        var k = 0
+        while (k < inputs.size) { row.update(k, toCatalyst(k)(inputs(k).at(i))); k += 1 }
+        val r = project(row)
+        out(i) = if (r.isNullAt(0)) null else toScala(r.get(0, c.dataType))
+        i += 1
+      }
+    }
+    Cells(c.dataType, c.nullable, out(_))
   }
 
   /** Column compiler over a measure-pivoted row where sibling measures appear
@@ -1345,9 +1327,11 @@ object Rules {
     * (A→B→A).
     *
     * When [[Cube.reportGrid]] hands back the stored grid as driver rows,
-    * the pivot, the rule cells ([[toCells]]) and the stack back to one row
-    * per address run in Scala, with no Spark job; a grid too large to
-    * collect keeps the DataFrame plan (pivot → rule columns → stack).
+    * the pivot and the stack back to one row per address run in Scala and
+    * the rule cells in Spark's interpreted projection ([[ruleCells]]), with
+    * no Spark job; a grid too large to collect keeps the DataFrame plan
+    * (pivot → rule columns → stack). Both build their rule columns through
+    * one walk ([[RuledShape.ruleColumns]]) and the same compiler.
     *
     * Output: `a0..aN-1, value`, non-empty addresses only; the value is a
     * double once a rule-backed member is selected, else the grid's own sum.
@@ -1390,46 +1374,37 @@ object Rules {
       ruled: Map[Int, RuleDef], order: Seq[Int], fetchIds: Seq[Int], depth: Int) {
     def d: Dimension = cube.dimensions(di)
 
-    /** A cross-cube ref of the rule carried by member `carriedId`, resolved
-      * against this grid: the target cube, a signature naming the slice,
-      * and per target part a constant member NAME (Left) or the source
-      * dimension with ordered (source id → target member name) pairs.
-      */
-    def cubeRef(cr: RuleExpr.CubeRef, carriedId: Int): (Cube, String, Seq[Either[String, (Int, Seq[(Int, String)])]]) = {
-      import RuleExpr.CubeRefPart
-      val target = cubeRefTarget(cube, cr)
-      val resolved = cr.parts.map {
-        case CubeRefPart.Fixed(mm) => Left(mm)
-        case CubeRefPart.Carry(dn) =>
-          val i = cubeRefSource(cube, dn)
-          if (i == di) Left(d.nameOf(carriedId))
-          else Right((i, selections(i).distinct.map(sid => sid -> cube.dimensions(i).nameOf(sid))))
-        case CubeRefPart.AttrOf(dn, a) =>
-          val i = cubeRefSource(cube, dn)
-          val attrOf = cubeRefAttr(cube.dimensions(i), dn, a)
-          if (i == di) Left(attrOf(d.nameOf(carriedId)))
-          else Right((i, selections(i).distinct.map(sid => sid -> attrOf(cube.dimensions(i).nameOf(sid)))))
-      }
-      val sig = target.name + " " + resolved.map {
-        case Left(n) => s"=$n"
-        case Right((i, pairs)) => s"@$i:${pairs.map(p => p._1.toString + ">" + p._2).mkString(",")}"
-      }.mkString(" ")
-      (target, sig, resolved)
-    }
+    /** A cross-cube ref of the rule carried by member `carriedId`: parts
+      * over the ruled dimension name the carried member, parts over another
+      * dimension vary with its selected ids. */
+    def cubeRef(cr: RuleExpr.CubeRef, carriedId: Int): CubeRefSlice =
+      cubeRefSlice(cube, cr, i =>
+        if (i == di) Left(d.nameOf(carriedId))
+        else Right((i, selections(i).distinct.map(sid => sid -> cube.dimensions(i).nameOf(sid)))))
 
-    /** The target selections of a resolved ref's slice. */
-    def sliceSelections(target: Cube, resolved: Seq[Either[String, (Int, Seq[(Int, String)])]]): Seq[Seq[Int]] =
-      resolved.zip(target.dimensions).map {
-        case (Left(n), td) => Seq(cubeRefTargetId(target, td, n))
-        case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(cubeRefTargetId(target, td, _))
+    /** The ruled members' values, deps first, as the columns `C` that
+      * `compile(id, expr, ref, cubeRef)` gives for each, from the columns
+      * `stored` of the fetched members; a cross-cube slice is built once
+      * per resolved ref (`slice`) and shared by every rule reading it. */
+    def ruleColumns[C](stored: Int => C, slice: CubeRefSlice => C)(
+        compile: (Int, RuleExpr, String => C, RuleExpr.CubeRef => C) => C): Map[Int, C] = {
+      val cols = mutable.HashMap[Int, C]()
+      fetchIds.foreach(id => cols(id) = stored(id))
+      val slices = mutable.HashMap[String, C]()
+      order.foreach { id =>
+        cols(id) = compile(id, ruled(id).expr,
+          spec => cols.getOrElse(d.idOf(spec), throw new IllegalStateException(
+            s"ruled grid: no column for ref '$spec'")),
+          cr => { val r = cubeRef(cr, id); slices.getOrElseUpdate(r.sig, slice(r)) })
       }
+      cols.toMap
+    }
   }
 
   /** [[ruledGrid]] on driver rows: `g` pivoted on the ruled dimension by the
     * other dimensions' keys (groups in first-seen order), the rule members
-    * computed deps-first, then stacked back per group in the requested
-    * order with empty cells dropped; cross-cube slices are collected once
-    * and looked up by key.
+    * computed deps-first by [[ruleCells]], then stacked back per group in
+    * the requested order with empty cells dropped.
     */
   private def ruledRows(s: RuledShape, g: Cube.GridRows): Cube.GridRows = {
     val n = s.cube.nDims
@@ -1438,39 +1413,14 @@ object Rules {
     val groups = mutable.LinkedHashMap[Seq[Any], Int]()
     val rowGroup = g.rows.map(r => groups.getOrElseUpdate(others.map(r.get), groups.size))
     val keys = groups.keys.toIndexedSeq
-    val cols = mutable.HashMap[Int, Cells]()
-    s.fetchIds.foreach { id =>
+    val cols = s.ruleColumns[Cells]({ id =>
       val vals = new Array[Any](keys.size)
       g.rows.zip(rowGroup).foreach { case (r, k) =>
         if (r.getInt(di) == id && vals(k) == null) vals(k) = r.get(n)
       }
-      cols(id) = Cells(g.schema("value").dataType, nullable = true, vals(_))
-    }
-    val mode = DecimalMode.of(s.cube.spark)
-    val slices = mutable.HashMap[String, Cells]()
-    def cubeRefCells(cr: RuleExpr.CubeRef, carriedId: Int): Cells = {
-      val (target, sig, resolved) = s.cubeRef(cr, carriedId)
-      slices.getOrElseUpdate(sig,
-        if (resolved.forall(_.isLeft)) pinnedCells(target, resolved.map(_.swap.toOption.get))
-        else {
-          val slice = collected(ruledReport(target, s.sliceSelections(target, resolved), s.depth + 1, collectAny = true))
-          val parts = resolved.zipWithIndex.collect { case (Right((srcI, pairs)), p) =>
-            val td = target.dimensions(p)
-            (p, others.indexOf(srcI), pairs.map { case (sid, nm) => sid -> td.idOf(nm) }.toMap)
-          }
-          val m = slice.schema.length - 1
-          val byKey = slice.rows.map(r => parts.map(p => r.getInt(p._1)) -> r.get(m)).toMap
-          Cells(slice.schema("value").dataType, nullable = true, k => {
-            val key = parts.map { case (_, j, srcToTgt) => Option(keys(k)(j)).flatMap(id => srcToTgt.get(id.asInstanceOf[Int])) }
-            if (key.exists(_.isEmpty)) null else byKey.getOrElse(key.map(_.get), null)
-          })
-        })
-    }
-    s.order.foreach { id =>
-      val c = toCells(spec => cols.getOrElse(s.d.idOf(spec), throw new IllegalStateException(
-        s"ruled grid: no column for ref '$spec'")), cubeRefCells(_, id), mode)(s.ruled(id).expr)
-      val vals = Array.tabulate(keys.size)(c.at)
-      cols(id) = c.copy(at = vals(_))
+      Cells(g.schema("value").dataType, nullable = true, vals(_))
+    }, _.cells(s.depth + 1, keys.size, (srcI, k) => keys(k)(others.indexOf(srcI)))) {
+      (_, e, ref, cubeRef) => ruleCells(s.cube.spark, keys.size, ref, cubeRef)(e)
     }
     val requested = s.selections(di)
     val out = for (k <- keys.indices; id <- requested; v <- Option(toDouble(cols(id).at(k))))
@@ -1490,45 +1440,37 @@ object Rules {
     var pivoted = g.groupBy(otherCols.map(col): _*)
       .pivot(s"a$di", s.fetchIds.map(_.asInstanceOf[AnyRef]))
       .agg(first(col("value")))
-
-    // cross-cube slice joins, deduped per distinct resolved ref shape
-    val crCols = mutable.LinkedHashMap[String, String]()
-    def cubeRefColumn(cr: RuleExpr.CubeRef, carriedId: Int): Column = {
-      val (target, sig, resolved) = s.cubeRef(cr, carriedId)
-      crCols.get(sig).map(col).getOrElse {
-        val valName = s"__cr${crCols.size}"
-        if (resolved.forall(_.isLeft)) {
-          val v = pinnedRead(target, resolved.map(_.swap.toOption.get))
-          pivoted = pivoted.withColumn(valName,
-            v.map(lit(_)).getOrElse(lit(null).cast("double")))
-        } else {
-          var slice = ruledGrid(target, s.sliceSelections(target, resolved), s.depth + 1)
-          val keys = resolved.zipWithIndex.collect {
+    var nSlices = 0
+    def sliceColumn(r: CubeRefSlice): Column = {
+      val valName = s"__cr$nSlices"
+      nSlices += 1
+      r.pinned match {
+        case Some(names) =>
+          val v = pinnedRead(r.target, names)
+          pivoted = pivoted.withColumn(valName, v.map(lit(_)).getOrElse(lit(null).cast("double")))
+        case None =>
+          val keys = r.parts.zipWithIndex.collect {
             case (Right((srcI, pairs)), p) =>
-              val td = target.dimensions(p)
+              val td = r.target.dimensions(p)
               val kc = s"${valName}_k$p"
               // grid side: source id → target id, over the bounded selection
-              val srcToTgt = pairs.map { case (sid, nm) => sid -> td.idOf(nm) }
               (kc, col(s"a$p").as(kc),
-                map(srcToTgt.flatMap { case (s0, t0) =>
-                  Seq(lit(s0), lit(t0)) }: _*)(col(s"a$srcI")))
+                map(pairs.flatMap { case (sid, nm) => Seq(lit(sid), lit(td.idOf(nm))) }: _*)(col(s"a$srcI")))
           }
-          slice = slice.select(keys.map(_._2) :+ col("value").as(valName): _*)
+          val slice = ruledGrid(r.target, r.selections, s.depth + 1)
+            .select(keys.map(_._2) :+ col("value").as(valName): _*)
           pivoted = pivoted.join(broadcast(slice),
             keys.map { case (kc, _, src) => col(kc) === src }.reduce(_ && _), "left")
             .drop(keys.map(_._1): _*)
-        }
-        crCols(sig) = valName
-        col(valName)
       }
+      col(valName)
     }
-
-    s.order.foreach { id =>
+    s.ruleColumns[Column](id => col(s"`$id`"), sliceColumn) { (id, e, ref, cubeRef) =>
       // build the Column FIRST: cross-cube resolution joins slices onto
       // `pivoted`, and the receiver must be the post-join frame
-      val c0 = toColumnWith(spec => col(s"`${s.d.idOf(spec)}`"), None,
-        cr => cubeRefColumn(cr, id))(s.ruled(id).expr)
+      val c0 = toColumnWith(ref, None, cubeRef)(e)
       pivoted = pivoted.withColumn(id.toString, c0)
+      col(s"`$id`")
     }
     val requested = s.selections(di)
     val stackExpr = s"stack(${requested.size}, " +
@@ -1588,11 +1530,71 @@ object Rules {
           names.mkString("(", ", ", ")"))
     }
 
-  /** [[pinnedRead]] as a constant driver column (a literal, or a null one). */
-  private[olap] def pinnedCells(target: Cube, names: Seq[String]): Cells = {
-    val v = pinnedRead(target, names)
-    val b: Any = v.map(Double.box).orNull
-    Cells(DoubleType, v.isEmpty, _ => b)
+  /** A cross-cube ref resolved against a report: its target cube, a
+    * signature naming its slice, and per target part a constant member name
+    * (Left) or a report key with ordered (source value → target member
+    * name) pairs (Right). Every report face — ruled grids on rows and as a
+    * plan, and views — resolves refs here.
+    */
+  private[olap] final case class CubeRefSlice(target: Cube, sig: String,
+      parts: Seq[Either[String, (Int, Seq[(Any, String)])]]) {
+    /** The target address, when every part is constant. */
+    def pinned: Option[Seq[String]] =
+      if (parts.forall(_.isLeft)) Some(parts.map(_.swap.toOption.get)) else None
+
+    /** The target selections the slice reads. */
+    def selections: Seq[Seq[Int]] = parts.zip(target.dimensions).map {
+      case (Left(n), td) => Seq(cubeRefTargetId(target, td, n))
+      case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(cubeRefTargetId(target, td, _))
+    }
+
+    /** The ref as a driver column over `n` rows: a pinned read, or the
+      * slice (rule-aware, reported at `depth`) collected once and looked up
+      * per row, `valueAt(key, row)` giving the row's source value of each
+      * varying part; an unmapped or absent key reads empty. */
+    def cells(depth: Int, n: Int, valueAt: (Int, Int) => Any): Cells = pinned match {
+      case Some(names) =>
+        val v: Any = pinnedRead(target, names).map(Double.box).orNull
+        Cells(DoubleType, v == null, _ => v)
+      case None =>
+        val slice = collected(ruledReport(target, selections, depth, collectAny = true))
+        val varying = parts.zipWithIndex.collect { case (Right((key, pairs)), p) =>
+          val td = target.dimensions(p)
+          (p, key, pairs.map { case (src, nm) => src -> td.idOf(nm) }.toMap)
+        }
+        val m = slice.schema.length - 1
+        val byKey = slice.rows.map(r => varying.map(v => r.getInt(v._1)) -> r.get(m)).toMap
+        Cells(slice.schema("value").dataType, nullable = true, i => {
+          val key = varying.map { case (_, k, srcToTgt) => Option(valueAt(k, i)).flatMap(srcToTgt.get) }
+          if (key.exists(_.isEmpty)) null else byKey.getOrElse(key.map(_.get), null)
+        })
+    }
+  }
+
+  /** Resolve `cr` against a report: `memberAt(i)` is the member name a
+    * report cell has on source dimension `i` when it is constant (Left),
+    * else the report key and the (source value → member name) pairs it
+    * ranges over (Right). Resolution failures raise `#REF!`. */
+  private[olap] def cubeRefSlice(cube: Cube, cr: RuleExpr.CubeRef,
+      memberAt: Int => Either[String, (Int, Seq[(Any, String)])]): CubeRefSlice = {
+    import RuleExpr.CubeRefPart
+    val target = cubeRefTarget(cube, cr)
+    val parts = cr.parts.map {
+      case CubeRefPart.Fixed(mm) => Left(mm)
+      case CubeRefPart.Carry(dn) => memberAt(cubeRefSource(cube, dn))
+      case CubeRefPart.AttrOf(dn, a) =>
+        val i = cubeRefSource(cube, dn)
+        val attrOf = cubeRefAttr(cube.dimensions(i), dn, a)
+        memberAt(i) match {
+          case Left(nm) => Left(attrOf(nm))
+          case Right((k, pairs)) => Right((k, pairs.map { case (src, nm) => src -> attrOf(nm) }))
+        }
+    }
+    val sig = target.name + " " + parts.map {
+      case Left(nm) => s"=$nm"
+      case Right((k, pairs)) => s"@$k:${pairs.map(p => s"${p._1}>${p._2}").mkString(",")}"
+    }.mkString(" ")
+    CubeRefSlice(target, sig, parts)
   }
 
   /** All Ref specs in an expression (the one shared RuleExpr walker —

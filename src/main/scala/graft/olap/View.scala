@@ -62,8 +62,10 @@ final case class ViewStats(
   *
   * Measure rules: requested column-axis members backed by an ALL_LEVELS /
   * AGGREGATION_LEVEL rule with same-dim refs are computed per position
-  * from the pivoted cells through [[Rules.toCells]], which gives what the
-  * column compiler would: the same types, nullability and bits.
+  * from the pivoted cells by [[Rules.ruleCells]]: the column compiler's
+  * expression, analyzed once by Spark and cached, evaluated by Spark's
+  * interpreted projection over the position's input columns — the types,
+  * nullability and bits a Spark plan gives, with no Spark job.
   */
 final class View(val cube: Cube, val dfn: ViewDef) {
 
@@ -255,54 +257,10 @@ final class View(val cube: Cube, val dfn: ViewDef) {
     val slices = mutable.HashMap[String, Rules.Cells]()
     def cubeRefCells(cr: RuleExpr.CubeRef,
         memberAt: Int => Either[String, (Int, Seq[String])]): Rules.Cells = {
-      import RuleExpr.CubeRefPart
-      val target = Rules.cubeRefTarget(cube, cr)
-      // per part: Left(constant target member) or Right(row-axis entry,
-      // ordered (row member name → target member name) pairs)
-      val resolved: Seq[Either[String, (Int, Seq[(String, String)])]] = cr.parts.map {
-        case CubeRefPart.Fixed(mm) => Left(mm)
-        case CubeRefPart.Carry(dn) => memberAt(Rules.cubeRefSource(cube, dn)) match {
-          case Left(name) => Left(name)
-          case Right((k, req)) => Right((k, req.distinct.map(nm => nm -> nm)))
-        }
-        case CubeRefPart.AttrOf(dn, a) =>
-          val i = Rules.cubeRefSource(cube, dn)
-          val attrOf = Rules.cubeRefAttr(cube.dimensions(i), dn, a)
-          memberAt(i) match {
-            case Left(name) => Left(attrOf(name))
-            case Right((k, req)) => Right((k, req.distinct.map(nm => nm -> attrOf(nm))))
-          }
-      }
-      val sig = target.name + " " + resolved.map {
-        case Left(nm) => s"=$nm"
-        case Right((k, pairs)) => s"@$k:${pairs.map(p => p._1 + ">" + p._2).mkString(",")}"
-      }.mkString(" ")
-      slices.getOrElseUpdate(sig,
-        if (resolved.forall(_.isLeft)) Rules.pinnedCells(target, resolved.map(_.swap.toOption.get))
-        else {
-          val selIds = resolved.zip(target.dimensions).map {
-            case (Left(nm), td) => Seq(Rules.cubeRefTargetId(target, td, nm))
-            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(Rules.cubeRefTargetId(target, td, _))
-          }
-          // rule-aware target slice (the target's own grid-computable rules
-          // fire inside it) — bounded by the source axes
-          val slice = Rules.collected(Rules.ruledReport(target, selIds, collectAny = true))
-          // keyed by target member NAME per row-varying part, as the rows
-          // name their members
-          val parts = resolved.zipWithIndex.collect { case (Right((k, pairs)), p) =>
-            val td = target.dimensions(p)
-            (p, pairs.map(_._2).distinct.map(nm => td.idOf(nm) -> nm).toMap, pairs.toMap, column(rowKeyNames(k)))
-          }
-          val v = slice.schema.length - 1
-          val byKey = slice.rows.flatMap { r =>
-            val key = parts.map(p => p._2.get(r.getInt(p._1)))
-            if (key.forall(_.isDefined)) Some(key.map(_.get) -> r.get(v)) else None
-          }.toMap
-          Rules.Cells(slice.schema("value").dataType, nullable = true, i => {
-            val key = parts.map(p => p._3.get(p._4.at(i).asInstanceOf[String]))
-            if (key.forall(_.isDefined)) byKey.getOrElse(key.map(_.get), null) else null
-          })
-        })
+      // a row-axis part varies with the row's member name
+      val r = Rules.cubeRefSlice(cube, cr, i => memberAt(i).map { case (k, names) =>
+        (k, names.distinct.map(nm => nm -> nm)) })
+      slices.getOrElseUpdate(r.sig, r.cells(0, nRows, (k, i) => column(rowKeyNames(k)).at(i)))
     }
 
     // rule-derived positions (no per-cell recursion): refs resolve to the
@@ -311,7 +269,6 @@ final class View(val cube: Cube, val dfn: ViewDef) {
     // computed deps-first (topo order), so Margin sees the COMPUTED Profit
     // column, not the empty stored one — for every context over the other
     // dims' requested members.
-    val mode = Rules.DecimalMode.of(cube.spark)
     perDim.zipWithIndex.filter(_._1.ruled.nonEmpty).foreach { case (pd, k) =>
       val d = cube.dimensions(pd.cd)
       val contexts = cartesian(perDim.zipWithIndex.map { case (pd2, j) =>
@@ -339,18 +296,16 @@ final class View(val cube: Cube, val dfn: ViewDef) {
             }
           }
           try {
-            val c = Rules.toCells({ ref =>
+            put(posName, Rules.ruleCells(cube.spark, nRows, { ref =>
               val refPos = pos.updated(k, pd.nameById(d.idOf(ref))).mkString("/")
               // a ref to a sentinel column propagates the code (string
               // arithmetic would silently cast "#ERR!" to null)
               errPosCode.get(refPos).foreach(code =>
                 throw RuleError(code, s"position '$posName' reads error column '$refPos'"))
               column(refPos)
-            }, cubeRefCells(_, memberAt), mode)(rule.expr)
-            val vals = Array.tabulate(nRows)(c.at)
-            put(posName, c.copy(at = vals(_)))
+            }, cubeRefCells(_, memberAt))(rule.expr))
           }
-          catch { // unknown fn / unresolvable ref at compile → sentinel column
+          catch { // unknown fn / unresolvable ref / analysis failure → sentinel column
             case e: RuleError => sentinel(posName, e.code)
             case _: NoSuchElementException => sentinel(posName, "#REF!")
           }

@@ -25,6 +25,29 @@ object Bridge {
   def sqlExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `c` as `spark`'s own analyzer resolves it over a relation with the
+    * columns `inputs`, bound to their positions: the expression a plan over
+    * such rows evaluates, for an interpreted projection on the driver.
+    * Analysis runs under `spark`'s conf, so the result types, the decimal
+    * precision and the ANSI mode in the expression are that session's. */
+  def boundExpression(spark: org.apache.spark.sql.SparkSession, c: Column,
+      inputs: org.apache.spark.sql.types.StructType): Expression = {
+    val rel = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(inputs)
+    val analyzed = org.apache.spark.sql.classic.Dataset
+      .ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rel)
+      .select(c).queryExecution.analyzed
+    val e = analyzed.expressions.head match {
+      case org.apache.spark.sql.catalyst.expressions.Alias(child, _) => child
+      case other => other
+    }
+    org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(e, rel.output)
+  }
+
+  /** `body` with `spark`'s conf as the thread's active one. */
+  def withConf[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)(body)
+
   /** The materialized RDD behind a `localCheckpoint`ed DataFrame (its plan
     * is a `LogicalRDD` over the checkpoint blocks). Exposed so iterative
     * drivers can `unpersist` a SUPERSEDED checkpoint deterministically —
