@@ -262,7 +262,8 @@ object Bench {
     // PROCESS-level GC per row (round 17): the listener's gc_ms sums
     // jvmGCTime across CONCURRENT tasks, so one stop-the-world pause under
     // 32 running tasks is attributed ~32× — r16's "huge8_build gc 95 s"
-    // was ~0.7 s of real pauses (measured, ARCHITECTURE §6e). The MXBean
+    // was ~0.7 s of real pauses (measured: ARCHITECTURE "Round 17", the
+    // GC attribution paragraph). The MXBean
     // delta is the single-counted truth; both ship so a reader never
     // mistakes attribution for memory pressure again.
     val rowProcGc = scala.collection.concurrent.TrieMap[String, Long]()
@@ -1185,7 +1186,7 @@ object Bench {
         // is ~1.5e8 false candidates flooding the verify join (measured:
         // a 12.6 GB verify exchange, 125 s), at rows=8 it is ~10³. The
         // corpus-size-driven rows choice is the documented LSH scaling
-        // contract (ARCHITECTURE §6e).
+        // contract (ARCHITECTURE "Round 17", LSH rows-per-band).
         val pairDocs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
           docs8.toString).toLong
         def minhashPairsBody(): Unit = {

@@ -175,50 +175,33 @@ object Rules {
         }
       }
 
-  private def usesInput(e: RuleExpr): Boolean = {
+  /** Every node of an expression, pre-order, left operand first — the one
+    * RuleExpr walker the predicates and collectors below share. */
+  private def nodes(e: RuleExpr): Iterator[RuleExpr] = {
     import RuleExpr._
-    e match {
-      case Input => true
-      case Add(a, b) => usesInput(a) || usesInput(b)
-      case Sub(a, b) => usesInput(a) || usesInput(b)
-      case Mul(a, b) => usesInput(a) || usesInput(b)
-      case Div(a, b) => usesInput(a) || usesInput(b)
-      case Neg(a) => usesInput(a)
-      case Fn(_, a) => usesInput(a)
-      case Lit(_) | Ref(_) | Shift(_, _) | CubeRef(_, _) => false
-    }
+    Iterator(e) ++ (e match {
+      case Add(a, b) => nodes(a) ++ nodes(b)
+      case Sub(a, b) => nodes(a) ++ nodes(b)
+      case Mul(a, b) => nodes(a) ++ nodes(b)
+      case Div(a, b) => nodes(a) ++ nodes(b)
+      case Neg(a) => nodes(a)
+      case Fn(_, a) => nodes(a)
+      case _ => Iterator.empty
+    })
   }
+
+  private def usesInput(e: RuleExpr): Boolean = nodes(e).contains(RuleExpr.Input)
 
   /** Cube names referenced via [[RuleExpr.CubeRef]] anywhere in the expr —
     * the source cube folds their stateVersions into its result-cache key so
     * cross-cube rule values can never serve stale after the TARGET mutates.
     */
-  private[graft] def cubeRefTargets(e: RuleExpr): Seq[String] = {
-    import RuleExpr._
-    e match {
-      case CubeRef(cn, _) => Seq(cn)
-      case Add(a, b) => cubeRefTargets(a) ++ cubeRefTargets(b)
-      case Sub(a, b) => cubeRefTargets(a) ++ cubeRefTargets(b)
-      case Mul(a, b) => cubeRefTargets(a) ++ cubeRefTargets(b)
-      case Div(a, b) => cubeRefTargets(a) ++ cubeRefTargets(b)
-      case Neg(a) => cubeRefTargets(a)
-      case Fn(_, a) => cubeRefTargets(a)
-      case Lit(_) | Ref(_) | Shift(_, _) | Input => Nil
-    }
-  }
+  private[graft] def cubeRefTargets(e: RuleExpr): Seq[String] =
+    nodes(e).collect { case RuleExpr.CubeRef(cn, _) => cn }.toSeq
 
-  private def usesCellReads(e: RuleExpr): Boolean = {
-    import RuleExpr._
-    e match {
-      case Ref(_) | Shift(_, _) | CubeRef(_, _) => true
-      case Add(a, b) => usesCellReads(a) || usesCellReads(b)
-      case Sub(a, b) => usesCellReads(a) || usesCellReads(b)
-      case Mul(a, b) => usesCellReads(a) || usesCellReads(b)
-      case Div(a, b) => usesCellReads(a) || usesCellReads(b)
-      case Neg(a) => usesCellReads(a)
-      case Fn(_, a) => usesCellReads(a)
-      case Lit(_) | Input => false
-    }
+  private def usesCellReads(e: RuleExpr): Boolean = nodes(e).exists {
+    case RuleExpr.Ref(_) | RuleExpr.Shift(_, _) | RuleExpr.CubeRef(_, _) => true
+    case _ => false
   }
 
   /** Bulk write-path hook: the cube's ON_ENTRY rules compiled to ONE
@@ -278,76 +261,27 @@ object Rules {
   /** Relative ordinal shifts — per-cell member-catalog navigation that no
     * bulk column path can express (CubeRef, by contrast, IS bulk-computable
     * since round 9 via broadcast slice joins). */
-  private def usesOrdinalShift(e: RuleExpr): Boolean = {
-    import RuleExpr._
-    e match {
-      case Shift(_, _) => true
-      case CubeRef(_, _) => false
-      case Add(a, b) => usesOrdinalShift(a) || usesOrdinalShift(b)
-      case Sub(a, b) => usesOrdinalShift(a) || usesOrdinalShift(b)
-      case Mul(a, b) => usesOrdinalShift(a) || usesOrdinalShift(b)
-      case Div(a, b) => usesOrdinalShift(a) || usesOrdinalShift(b)
-      case Neg(a) => usesOrdinalShift(a)
-      case Fn(_, a) => usesOrdinalShift(a)
-      case Lit(_) | Ref(_) | Input => false
-    }
-  }
+  private def usesOrdinalShift(e: RuleExpr): Boolean = shiftDims(e).nonEmpty
 
   /** Dimensions navigated by ordinal `Shift` refs in an expression — a
     * summary materialization must not re-register a rule shifting over a
     * COARSENED dimension (the derived catalog renumbers ordinals, so the
     * shift would land on a different member there). */
-  private[graft] def shiftDims(e: RuleExpr): Set[String] = {
-    import RuleExpr._
-    e match {
-      case Shift(d, _) => Set(d)
-      case Add(a, b) => shiftDims(a) ++ shiftDims(b)
-      case Sub(a, b) => shiftDims(a) ++ shiftDims(b)
-      case Mul(a, b) => shiftDims(a) ++ shiftDims(b)
-      case Div(a, b) => shiftDims(a) ++ shiftDims(b)
-      case Neg(a) => shiftDims(a)
-      case Fn(_, a) => shiftDims(a)
-      case Lit(_) | Ref(_) | Input | CubeRef(_, _) => Set.empty
-    }
-  }
+  private[graft] def shiftDims(e: RuleExpr): Set[String] =
+    nodes(e).collect { case RuleExpr.Shift(d, _) => d }.toSet
 
   /** Member names referenced by `Ref`s in an expression, lowercased and
     * stripped of a dim qualifier — the summary materialization's cascade
     * screen: a rule whose Refs land in a SKIPPED rule's trigger territory
     * would compute from stored rule-less operands on the summary. */
-  private[graft] def refMemberNames(e: RuleExpr): Set[String] = {
-    import RuleExpr._
-    e match {
-      case Ref(spec) => spec.split(":", 2) match {
-        case Array(_, m) => Set(m.toLowerCase)
-        case Array(m) => Set(m.toLowerCase)
-      }
-      case Add(a, b) => refMemberNames(a) ++ refMemberNames(b)
-      case Sub(a, b) => refMemberNames(a) ++ refMemberNames(b)
-      case Mul(a, b) => refMemberNames(a) ++ refMemberNames(b)
-      case Div(a, b) => refMemberNames(a) ++ refMemberNames(b)
-      case Neg(a) => refMemberNames(a)
-      case Fn(_, a) => refMemberNames(a)
-      case Lit(_) | Shift(_, _) | Input | CubeRef(_, _) => Set.empty
-    }
-  }
+  private[graft] def refMemberNames(e: RuleExpr): Set[String] =
+    collectRefs(e).map(spec => spec.split(":", 2).last.toLowerCase).toSet
 
   /** Scalar-only on the WRITE path: relative shifts and cross-cube lookups
     * are rejected for bulk ON_ENTRY transforms (an import's rate lookup
     * belongs in the model as a BASE_LEVEL CubeRef rule, not a write hook). */
-  private def usesShift(e: RuleExpr): Boolean = {
-    import RuleExpr._
-    e match {
-      case Shift(_, _) | CubeRef(_, _) => true
-      case Add(a, b) => usesShift(a) || usesShift(b)
-      case Sub(a, b) => usesShift(a) || usesShift(b)
-      case Mul(a, b) => usesShift(a) || usesShift(b)
-      case Div(a, b) => usesShift(a) || usesShift(b)
-      case Neg(a) => usesShift(a)
-      case Fn(_, a) => usesShift(a)
-      case Lit(_) | Ref(_) | Input => false
-    }
-  }
+  private def usesShift(e: RuleExpr): Boolean =
+    usesOrdinalShift(e) || cubeRefTargets(e).nonEmpty
 
   /** Apply the cube's ON_ENTRY rules to a whole resolved fact frame
     * `(d0…dN-1, value)` being bulk-imported — the compute-then-write face of
@@ -785,16 +719,14 @@ object Rules {
     case b: java.math.BigDecimal => Decimal(b).toDouble
   }
 
-  /** A rule compiled for the driver: [[toColumnWith]]'s column as Spark's
-    * analyzer resolves it over positional inputs `r0..rk`, bound. */
-  private final case class Compiled(expr: Expression, dataType: DataType, nullable: Boolean)
-
-  /** Compiled rules by (positional expression, input fields, ANSI mode,
-    * decimal precision loss) — everything the analysis depends on, so an
-    * entry never goes stale; least recently used beyond the bound. */
+  /** Rules compiled for the driver — [[toColumnWith]]'s column as Spark's
+    * analyzer resolves it over positional inputs `r0..rk`, bound — by
+    * (positional expression, input fields, ANSI mode, decimal precision
+    * loss): everything the analysis depends on, so an entry never goes
+    * stale; least recently used beyond the bound. */
   private val MaxCompiled = 1024
-  private val compiled = new java.util.LinkedHashMap[AnyRef, Compiled](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Compiled]): Boolean = size > MaxCompiled
+  private val compiled = new java.util.LinkedHashMap[AnyRef, Expression](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, Expression]): Boolean = size > MaxCompiled
   }
   private val compiles = new java.util.concurrent.atomic.AtomicLong
 
@@ -837,33 +769,33 @@ object Rules {
     val fields = StructType(inputs.indices.map(k => StructField(s"r$k", inputs(k).dataType, inputs(k).nullable)))
     val key = (pe, fields, spark.conf.get("spark.sql.ansi.enabled"),
       spark.conf.get("spark.sql.decimalOperations.allowPrecisionLoss"))
-    val c = compiled.synchronized {
+    val bound = compiled.synchronized {
       Option(compiled.get(key)).getOrElse {
-        val bound = try Bridge.boundExpression(spark, toColumnWith(col)(pe), fields) catch {
+        val fresh = try Bridge.boundExpression(spark, toColumnWith(col)(pe), fields) catch {
           case err: org.apache.spark.sql.AnalysisException => throw RuleError("#ERR!", err.getMessage)
         }
         compiles.incrementAndGet()
-        val fresh = Compiled(bound, bound.dataType, bound.nullable)
         compiled.put(key, fresh)
         fresh
       }
     }
+    val dataType = bound.dataType
     val toCatalyst = fields.map(f => CatalystTypeConverters.createToCatalystConverter(f.dataType)).toArray
-    val toScala = CatalystTypeConverters.createToScalaConverter(c.dataType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(dataType)
     val out = new Array[Any](n)
     Bridge.withConf(spark) {
-      val project = InterpretedMutableProjection.createProjection(Seq(c.expr))
+      val project = InterpretedMutableProjection.createProjection(Seq(bound))
       val row = new GenericInternalRow(inputs.size)
       var i = 0
       while (i < n) {
         var k = 0
         while (k < inputs.size) { row.update(k, toCatalyst(k)(inputs(k).at(i))); k += 1 }
         val r = project(row)
-        out(i) = if (r.isNullAt(0)) null else toScala(r.get(0, c.dataType))
+        out(i) = if (r.isNullAt(0)) null else toScala(r.get(0, dataType))
         i += 1
       }
     }
-    Cells(c.dataType, c.nullable, out(_))
+    Cells(dataType, bound.nullable, out(_))
   }
 
   /** Column compiler over a measure-pivoted row where sibling measures appear
@@ -1117,12 +1049,10 @@ object Rules {
     // degenerate dimensions carry no member catalog to map and are
     // rejected.
     var frame = renamed
-    val crCols = mutable.LinkedHashMap[String, String]()
+    val slices = mutable.HashMap[String, Column]()
     def cubeRefColumn(cr: RuleExpr.CubeRef): Column = {
-      import RuleExpr.CubeRefPart
-      val target = cubeRefTarget(cube, cr)
       // the cell's member name(s) on source dim i at base grain
-      def nameAt(i: Int): Either[String, Seq[(Int, String)]] =
+      val r = cubeRefSlice(cube, cr, i =>
         if (i == measureDim) Left(rule.trigger.collectFirst {
           case (dn, m) if cube.dimensions.indexWhere(_.name.equalsIgnoreCase(dn)) == measureDim => m
         }.getOrElse(throw RuleError("#REF!",
@@ -1136,58 +1066,13 @@ object Rules {
           // an unbounded leafMembers map over a 100k-leaf dimension emits a
           // 2N-entry map literal into the plan, and strict attrOf/idOfOr
           // would raise #REF! for leaves the selection never touches
-          Right(cube.leafIdsOf(i, selections(i)).map(id => id -> dim.nameOf(id)))
-        }
-      val resolved: Seq[Either[String, (Int, Seq[(Int, String)])]] = cr.parts.map {
-        case CubeRefPart.Fixed(mm) => Left(mm)
-        case CubeRefPart.Carry(dn) =>
-          val i = cubeRefSource(cube, dn)
-          nameAt(i) match {
-            case Left(n) => Left(n)
-            case Right(pairs) => Right((i, pairs))
-          }
-        case CubeRefPart.AttrOf(dn, a) =>
-          val i = cubeRefSource(cube, dn)
-          val attrOf = cubeRefAttr(cube.dimensions(i), dn, a)
-          nameAt(i) match {
-            case Left(n) => Left(attrOf(n))
-            case Right(pairs) => Right((i, pairs.map { case (id, n) => id -> attrOf(n) }))
-          }
-      }
-      val sig = target.name + " " + resolved.map {
-        case Left(n) => s"=$n"
-        case Right((i, pairs)) =>
-          s"@$i:${pairs.map(p => p._1.toString + ">" + p._2).mkString(",")}"
-      }.mkString(" ")
-      crCols.get(sig).map(col).getOrElse {
-        val valName = s"__cr${crCols.size}"
-        if (resolved.forall(_.isLeft)) {
-          val v = pinnedRead(target, resolved.map(_.swap.toOption.get))
-          frame = frame.withColumn(valName,
-            v.map(lit(_)).getOrElse(lit(null).cast("double")))
-        } else {
-          val selIds: Seq[Seq[Int]] = resolved.zip(target.dimensions).map {
-            case (Left(n), td) => Seq(cubeRefTargetId(target, td, n))
-            case (Right((_, pairs)), td) => pairs.map(_._2).distinct.map(cubeRefTargetId(target, td, _))
-          }
-          var slice = ruledGrid(target, selIds, 1)
-          val keys = resolved.zipWithIndex.collect {
-            case (Right((srcI, pairs)), p) =>
-              val td = target.dimensions(p)
-              val kc = s"${valName}_k$p"
-              val srcToTgt = pairs.map { case (sid, n) => sid -> td.idOf(n) }
-              (kc, col(s"a$p").as(kc),
-                map(srcToTgt.flatMap { case (s0, t0) =>
-                  Seq(lit(s0), lit(t0)) }: _*)(col(s"d$srcI")))
-          }
-          slice = slice.select(keys.map(_._2) :+ col("value").as(valName): _*)
-          frame = frame.join(broadcast(slice),
-            keys.map { case (kc, _, src) => col(kc) === src }.reduce(_ && _), "left")
-            .drop(keys.map(_._1): _*)
-        }
-        crCols(sig) = valName
+          Right((i, cube.leafIdsOf(i, selections(i)).map(id => id -> dim.nameOf(id))))
+        })
+      slices.getOrElseUpdate(r.sig, {
+        val valName = s"__cr${slices.size}"
+        frame = withSlice(frame, r, valName, 1, i => col(s"d$i"))
         col(valName)
-      }
+      })
     }
 
     val ruleCol = toColumnWith(
@@ -1444,25 +1329,7 @@ object Rules {
     def sliceColumn(r: CubeRefSlice): Column = {
       val valName = s"__cr$nSlices"
       nSlices += 1
-      r.pinned match {
-        case Some(names) =>
-          val v = pinnedRead(r.target, names)
-          pivoted = pivoted.withColumn(valName, v.map(lit(_)).getOrElse(lit(null).cast("double")))
-        case None =>
-          val keys = r.parts.zipWithIndex.collect {
-            case (Right((srcI, pairs)), p) =>
-              val td = r.target.dimensions(p)
-              val kc = s"${valName}_k$p"
-              // grid side: source id → target id, over the bounded selection
-              (kc, col(s"a$p").as(kc),
-                map(pairs.flatMap { case (sid, nm) => Seq(lit(sid), lit(td.idOf(nm))) }: _*)(col(s"a$srcI")))
-          }
-          val slice = ruledGrid(r.target, r.selections, s.depth + 1)
-            .select(keys.map(_._2) :+ col("value").as(valName): _*)
-          pivoted = pivoted.join(broadcast(slice),
-            keys.map { case (kc, _, src) => col(kc) === src }.reduce(_ && _), "left")
-            .drop(keys.map(_._1): _*)
-      }
+      pivoted = withSlice(pivoted, r, valName, s.depth + 1, i => col(s"a$i"))
       col(valName)
     }
     s.ruleColumns[Column](id => col(s"`$id`"), sliceColumn) { (id, e, ref, cubeRef) =>
@@ -1571,6 +1438,28 @@ object Rules {
     }
   }
 
+  /** `frame` with the slice of `r` as column `valName`: a pinned read as a
+    * literal, or the slice's plan (reported at `depth`) broadcast and left
+    * joined on each varying part's target id, mapped from the frame's
+    * column `source(i)` of source dimension `i` over the bounded selection.
+    */
+  private def withSlice(frame: DataFrame, r: CubeRefSlice, valName: String, depth: Int,
+      source: Int => Column): DataFrame = r.pinned match {
+    case Some(names) =>
+      frame.withColumn(valName, pinnedRead(r.target, names).map(lit(_)).getOrElse(lit(null).cast("double")))
+    case None =>
+      val keys = r.parts.zipWithIndex.collect { case (Right((srcI, pairs)), p) =>
+        val td = r.target.dimensions(p)
+        val kc = s"${valName}_k$p"
+        (kc, col(s"a$p").as(kc),
+          map(pairs.flatMap { case (sid, nm) => Seq(lit(sid), lit(td.idOf(nm))) }: _*)(source(srcI)))
+      }
+      val slice = ruledGrid(r.target, r.selections, depth)
+        .select(keys.map(_._2) :+ col("value").as(valName): _*)
+      frame.join(broadcast(slice), keys.map { case (kc, _, src) => col(kc) === src }.reduce(_ && _), "left")
+        .drop(keys.map(_._1): _*)
+  }
+
   /** Resolve `cr` against a report: `memberAt(i)` is the member name a
     * report cell has on source dimension `i` when it is constant (Left),
     * else the report key and the (source value → member name) pairs it
@@ -1597,20 +1486,8 @@ object Rules {
     CubeRefSlice(target, sig, parts)
   }
 
-  /** All Ref specs in an expression (the one shared RuleExpr walker —
-    * callers filter for unqualified refs as needed).
+  /** All Ref specs in an expression (callers filter for unqualified refs
+    * as needed).
     */
-  def collectRefs(e: RuleExpr): Seq[String] = {
-    import RuleExpr._
-    e match {
-      case Ref(s) => Seq(s)
-      case Add(a, b) => collectRefs(a) ++ collectRefs(b)
-      case Sub(a, b) => collectRefs(a) ++ collectRefs(b)
-      case Mul(a, b) => collectRefs(a) ++ collectRefs(b)
-      case Div(a, b) => collectRefs(a) ++ collectRefs(b)
-      case Neg(a) => collectRefs(a)
-      case Fn(_, a) => collectRefs(a)
-      case _ => Nil
-    }
-  }
+  def collectRefs(e: RuleExpr): Seq[String] = nodes(e).collect { case RuleExpr.Ref(s) => s }.toSeq
 }
