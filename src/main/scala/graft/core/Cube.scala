@@ -205,7 +205,7 @@ final class Cube(
     * instead of a Spark job ([[gridAggregate]]). Driver-side observability
     * only.
     */
-  private val counters = new java.util.concurrent.atomic.AtomicLongArray(6)
+  private val counters = new java.util.concurrent.atomic.AtomicLongArray(7)
   private def bump(i: Int): Unit = { counters.incrementAndGet(i); () }
   def counterCellRequests: Long = counters.get(0)
   def counterRuleRequests: Long = counters.get(1)
@@ -213,6 +213,9 @@ final class Cube(
   def counterCacheHits: Long = counters.get(3)
   def counterWeightedAggregations: Long = counters.get(4)
   def counterDriverAggregations: Long = counters.get(5)
+  /** Index rows the driver kernel visited, over every grid it ran: its
+    * candidate rows, not the whole index. */
+  private[graft] def counterKernelRowsVisited: Long = counters.get(6)
   def resetCounters(): Unit = (0 until counters.length).foreach(counters.set(_, 0L))
 
   private var historyOpt: Option[History] = None
@@ -955,7 +958,8 @@ final class Cube(
     * base read is a binary search — no Spark job. The build is
     * single-flight: concurrent readers wait on [[pointIdxBuildLock]], while
     * writers never do (the build runs outside [[stateLock]]). A refusal —
-    * over the cap, or [[disablePointIndex]] — is remembered for that frame,
+    * over the cap, a base made mostly of decimals past a long, or
+    * [[disablePointIndex]] — is remembered for that frame,
     * so a 1e8-cell cube counts itself once. Unpersisted bases (as-of
     * snapshots, store- and table-backed bases, streaming merges) keep the
     * pushed-down filter job: collecting them would re-read their source.
@@ -979,7 +983,8 @@ final class Cube(
   /** Point-index builds attempted on this cube (each runs one count job). */
   private[graft] def pointIndexBuilds: Int = pointIdxBuilds.get
 
-  /** Bytes the point index holds (0 when none is in place). */
+  /** Bytes the point index holds, its postings included once the kernel
+    * has built them (0 when no index is in place). */
   private[graft] def pointIndexBytes: Long = stateLock.synchronized {
     if (pointIdx != null && (pointIdxBase eq base)) pointIdx.byteSize else 0L
   }
@@ -1093,18 +1098,21 @@ final class Cube(
     * This replaces the reference's per-cell loop (`query.py:101-136`,
     * `view.py:769-911`) with one pass over the facts, on one of two paths
     * that answer identically (same rows, same schema):
-    *  - the DRIVER KERNEL ([[DriverGrid]]) scans the base frame's
-    *    [[PointIndex]] plus the overlay and returns a local relation. It
-    *    serves a grid when base reads have already put an index in place
-    *    for the current base frame (a grid never starts a build), no
-    *    dimension is degenerate, the grid has at most
-    *    [[DriverGrid.MaxCells]] cells, `valueExpr` is the identity, and the
-    *    sums can be made exact (double values, or decimal values with at
-    *    most one weighted closure join, no null-valued base row and no
-    *    overflow). At working-set size a scan of ~200k indexed cells takes
-    *    milliseconds, where planning and scheduling a job costs hundreds.
-    *    The kernel runs when this method is called (its result is already
-    *    computed); [[disablePointIndex]] turns it off for the frame.
+    *  - the DRIVER KERNEL ([[DriverGrid]]) sums the rows of the base
+    *    frame's [[PointIndex]] that the selections can reach — the
+    *    intersection of the restricting axes' postings — merged with the
+    *    overlay, and returns a local relation. It serves a grid when base
+    *    reads have already put an index in place for the current base
+    *    frame (a grid never starts a build), no dimension is degenerate,
+    *    the grid has at most [[DriverGrid.MaxCells]] cells, `valueExpr` is
+    *    the identity, and the sums can be made exact (double values, or
+    *    decimal values with at most one weighted closure join, no
+    *    null-valued base row, no candidate row past a long, and no
+    *    overflow). A served report selects a small share of a working-set
+    *    cube, and summing it takes well under a millisecond, where
+    *    planning and scheduling a job costs hundreds. The kernel runs when
+    *    this method is called (its result is already computed);
+    *    [[disablePointIndex]] turns it off for the frame.
     *  - otherwise ONE Catalyst-planned Spark job: per dimension one
     *    broadcast join against the closure subset (fan-out = matching
     *    ancestors), then one hash aggregation — at scale it shuffles once,
@@ -1193,9 +1201,20 @@ final class Cube(
   private def grid(selections: Seq[Seq[Int]], kinds: Array[Int],
       valueExpr: Column => Column): Either[(DataFrame, Column), (DriverGrid.Result, StructType)] = {
     val (b, ov, idx) = stateLock.synchronized((base, overlay, if (pointIdxBase eq base) pointIdx else null))
-    val served = if (idx == null || idx.nullRows > 0) None
+    kernel(b, ov, idx, selections, kinds, valueExpr, fullScan = false) match {
+      case Some(g) => bump(5); counters.addAndGet(6, g._1.rowsVisited); Right(g)
+      case None => Left(sparkGridInput(factsOf(b, ov), selections, kinds, valueExpr))
+    }
+  }
+
+  /** The driver kernel's answer over one (base, overlay, index) snapshot,
+    * with the schema the Spark plan would have; None when it gives none. */
+  private def kernel(b: DataFrame, ov: scala.collection.Map[Vector[Int], Option[Double]], idx: PointIndex,
+      selections: Seq[Seq[Int]], kinds: Array[Int], valueExpr: Column => Column,
+      fullScan: Boolean): Option[(DriverGrid.Result, StructType)] =
+    if (idx == null || idx.nullRows > 0) None
     else driverPlan(selections, kinds, valueExpr, b).flatMap { case (axes, decimal, resultPrecision) =>
-      DriverGrid.run(idx, ov, axes, decimal, resultPrecision).map { r =>
+      DriverGrid.run(idx, ov, axes, decimal, resultPrecision, fullScan).map { r =>
         val keyFields = (0 until nDims).map { i =>
           val f = b.schema(s"d$i")
           kinds(i) match {
@@ -1208,10 +1227,14 @@ final class Cube(
         (r, StructType(keyFields :+ StructField("value", vt)))
       }
     }
-    served match {
-      case Some(g) => bump(5); Right(g)
-      case None => Left(sparkGridInput(factsOf(b, ov), selections, kinds, valueExpr))
-    }
+
+  /** Test seam: the kernel's grid rows for `selections` on the current
+    * state, from the postings or (`fullScan`) from every index row; None
+    * when the kernel does not serve the grid. Counts nothing. */
+  private[core] def kernelGrid(selections: Seq[Seq[Int]], fullScan: Boolean): Option[Cube.GridRows] = {
+    val (b, ov, idx) = stateLock.synchronized((base, overlay, if (pointIdxBase eq base) pointIdx else null))
+    kernel(b, ov, idx, selections, gridKinds(selections), identity, fullScan)
+      .map { case (g, schema) => Cube.GridRows(schema, kernelRows(g)) }
   }
 
   /** The kernel's axes for a grid it may answer, with the decimal
@@ -1242,12 +1265,8 @@ final class Cube(
         val ms = members(i)
         kinds(i) match {
           case Cube.GridIdentity => DriverGrid.Axis.identity(ms.head)
-          case Cube.GridClosure =>
-            val slot = ms.zipWithIndex.toMap
-            DriverGrid.Axis(ms, dimAt(i).closureRows.flatMap(r => slot.get(r.anc).map((r.leaf, _, r.weight))),
-              weighted = needsWeight(i))
-          case _ =>
-            DriverGrid.Axis(ms, ms.indices.map(k => (ms(k), k, 1.0)), weighted = false)
+          case Cube.GridClosure => DriverGrid.Axis.closure(ms, dimAt(i).closureIndex, weighted = needsWeight(i))
+          case _ => DriverGrid.Axis.leaves(ms)
         }
       }
       (axes, decimal, resultPrecision)

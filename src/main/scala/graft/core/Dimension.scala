@@ -69,6 +69,26 @@ object Dimension {
     */
   val DegenerateAllId: Int = Int.MaxValue
 
+  /** The closure table grouped by ancestor (compressed rows): ancestor `a`
+    * owns the entries `start(a) until start(a + 1)` of `leaves` and
+    * `weights`, in closure-row order. */
+  private[core] final class ClosureIndex(rows: Vector[ClosureRow]) {
+    val start: Array[Int] = {
+      val s = new Array[Int](rows.foldLeft(0)((m, r) => math.max(m, r.anc + 1)) + 1)
+      rows.foreach(r => s(r.anc + 1) += 1)
+      (1 until s.length).foreach(a => s(a) += s(a - 1))
+      s
+    }
+    val leaves: Array[Int] = new Array[Int](rows.size)
+    val weights: Array[Double] = new Array[Double](rows.size)
+    locally {
+      val fill = start.clone()
+      rows.foreach { r => leaves(fill(r.anc)) = r.leaf; weights(fill(r.anc)) = r.weight; fill(r.anc) += 1 }
+    }
+    /** Closure entries of ancestor `a`. */
+    def count(a: Int): Int = if (a >= 0 && a < start.length - 1) start(a + 1) - start(a) else 0
+  }
+
   /** Sentinel SELECTION id for grid paths over a degenerate dimension:
     * "every raw key, at leaf resolution" — no filter, group by the fact
     * column itself. Exists because the key space of a degenerate dimension
@@ -351,6 +371,7 @@ final class Dimension(val name: String) {
     // eager: publish the memo with the new closure so concurrent readers
     // never observe a stale identity set after a dimension edit
     identityCovers = computeIdentityCovers()
+    closureIdx = new Dimension.ClosureIndex(closure)
     allParentsMap = buildAllParents()
     // members REMOVED by this edit: ids committed before the edit whose slot
     // is now a tombstone — their facts must not survive the commit
@@ -567,6 +588,14 @@ final class Dimension(val name: String) {
       identityCovers(id)
     }
   @volatile private var identityCovers: Set[Int] = null
+
+  /** The closure grouped by ancestor, for the driver grid kernel's axes;
+    * memoized per closure build like [[coversAllLeavesUnit]]'s set. */
+  private[core] def closureIndex: Dimension.ClosureIndex = {
+    if (closureIdx == null) closureIdx = new Dimension.ClosureIndex(closure)
+    closureIdx
+  }
+  @volatile private var closureIdx: Dimension.ClosureIndex = null
   private def computeIdentityCovers(): Set[Int] = {
     val nLeaves = leafMembers.size
     closure.groupBy(_.anc).collect {

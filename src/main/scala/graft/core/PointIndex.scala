@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.roaringbitmap.RoaringBitmap
 
 /** Driver-resident base-cell index (≙ the reference's in-process fact dict,
   * `facttable.py:146-170`): the base frame's addresses sorted, stored
@@ -16,18 +17,35 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   * A decimal value field is stored EXACTLY, as its unscaled long at the
   * field's `scale`; any other value type is stored as the bits of its double
-  * (`scale == -1`). Rows with a null value are absent — they read as empty,
-  * like the filter-job path — and counted in `nullRows`.
+  * (`scale == -1`). A decimal whose unscaled form exceeds a long is a
+  * "wide" row: its value lives in a sparse side table (`wideRows`, sorted,
+  * beside `wideValues`) and its slot in the pages holds 0. Rows with a null
+  * value are absent — they read as empty, like the filter-job path — and
+  * counted in `nullRows`.
+  *
+  * Postings (≙ the reference's `FactTableIndex` row sets per member,
+  * `facttable.py:46-64`): per (dimension, member id) a [[RoaringBitmap]] of
+  * the rows holding that id, built once, on first use by the grid kernel.
+  * They depend on the rows only, so they live and die with the index.
   */
 private[graft] final class PointIndex private (
     nDims: Int, val size: Int, val nullRows: Int, val scale: Int,
-    keys: Array[Array[Int]], values: Array[Array[Long]]) {
+    keys: Array[Array[Int]], values: Array[Array[Long]],
+    wideRows: Array[Int], wideValues: Array[java.math.BigDecimal]) {
   import PointIndex.{PageBits, PageMask}
 
-  /** Bytes held by the pages and their page tables, headers included. */
+  /** The wide rows as a set, for the kernel's candidate check. */
+  val wide: RoaringBitmap = RoaringBitmap.bitmapOf(wideRows: _*)
+
+  @volatile private var postingLists: Array[Array[RoaringBitmap]] = null
+
+  /** Bytes held by the pages and their page tables, headers included, the
+    * side table (~64 B per wide value), and the postings once built. */
   def byteSize: Long =
     keys.map(16L + 4L * _.length).sum + values.map(16L + 8L * _.length).sum +
-      2 * 16L + 4L * (keys.length + values.length)
+      2 * 16L + 4L * (keys.length + values.length) + 64L * wideRows.length +
+      Option(postingLists).fold(0L)(_.map(d => 16L + 4L * d.length +
+        d.iterator.filter(_ != null).map(_.getLongSizeInBytes + 16L).sum).sum)
 
   def get(ids: Vector[Int]): Option[Double] = {
     var lo = 0
@@ -39,7 +57,11 @@ private[graft] final class PointIndex private (
       else if (c > 0) hi = mid - 1
       else return Some(
         if (scale < 0) java.lang.Double.longBitsToDouble(rawAt(mid))
-        else java.math.BigDecimal.valueOf(rawAt(mid), scale).doubleValue)
+        else {
+          val w = if (wideRows.isEmpty) -1 else java.util.Arrays.binarySearch(wideRows, mid)
+          if (w >= 0) wideValues(w).doubleValue
+          else java.math.BigDecimal.valueOf(rawAt(mid), scale).doubleValue
+        })
     }
     None
   }
@@ -51,7 +73,7 @@ private[graft] final class PointIndex private (
   }
 
   /** The stored value at `row`: an unscaled decimal at [[scale]], or the
-    * bits of a double when `scale < 0`. */
+    * bits of a double when `scale < 0`; 0 for a [[wide]] row. */
   def rawAt(row: Int): Long = values(row >>> PageBits)(row & PageMask)
 
   /** Compare the address at `row` with `ids`, lexicographically. */
@@ -64,6 +86,41 @@ private[graft] final class PointIndex private (
       i += 1
     }
     0
+  }
+
+  /** The rows holding member `id` on dimension `dim`; null when none does.
+    * The first call builds every dimension's postings (single-flight). Ids
+    * are non-negative catalog ids: the kernel, the only caller, never
+    * serves a cube with a degenerate dimension. */
+  def posting(dim: Int, id: Int): RoaringBitmap = {
+    val byId = postings(dim)
+    if (id >= 0 && id < byId.length) byId(id) else null
+  }
+
+  /** Whether the postings are built. */
+  def postingsBuilt: Boolean = postingLists != null
+
+  private def postings: Array[Array[RoaringBitmap]] = {
+    val p = postingLists
+    if (p != null) p
+    else synchronized {
+      if (postingLists == null) postingLists = Array.tabulate(nDims) { d =>
+        var maxId = -1
+        var row = 0
+        while (row < size) { maxId = math.max(maxId, idAt(row, d)); row += 1 }
+        val byId = new Array[RoaringBitmap](maxId + 1)
+        row = 0
+        while (row < size) {
+          val id = idAt(row, d)
+          if (byId(id) == null) byId(id) = new RoaringBitmap
+          byId(id).add(row) // ascending: an append
+          row += 1
+        }
+        byId.foreach(b => if (b != null) { b.runOptimize(); b.trim() })
+        byId
+      }
+      postingLists
+    }
   }
 }
 
@@ -79,9 +136,11 @@ private[graft] object PointIndex {
 
   /** Collect `base` — columns `d0…dN-1, value` — into an index, sorted by
     * address on the driver. Each partition ships as one compact chunk (ids,
-    * values, positions of null values), never as per-row objects. Returns
-    * null — a refusal — when a decimal value's unscaled form does not fit a
-    * long. Throws an [[IllegalStateException]] naming the address (through
+    * values, positions of null values, wide values), never as per-row
+    * objects. Returns null — a refusal — when wide values (unscaled forms
+    * past a long) outnumber the other values: the side table is for sparse
+    * outliers, and the kernel could serve almost no grid of such a base.
+    * Throws an [[IllegalStateException]] naming the address (through
     * `describe`) when two base rows share one: a point read there has no
     * single answer.
     */
@@ -96,7 +155,7 @@ private[graft] object PointIndex {
         val ids = Array.newBuilder[Int]
         val vals = Array.newBuilder[Long]
         val nulls = Array.newBuilder[Int]
-        var fits = true
+        val wide = Array.newBuilder[(Int, java.math.BigDecimal)]
         var n = 0
         rows.foreach { r =>
           var i = 0
@@ -104,26 +163,33 @@ private[graft] object PointIndex {
           if (r.isNullAt(nDims)) { nulls += n; vals += 0L }
           else if (scale < 0) vals += java.lang.Double.doubleToRawLongBits(r.getDouble(nDims))
           else {
-            val u = r.getDecimal(nDims, precision, scale).toJavaBigDecimal.unscaledValue
-            if (u.bitLength > 63) fits = false
-            vals += u.longValue
+            val v = r.getDecimal(nDims, precision, scale).toJavaBigDecimal
+            if (v.unscaledValue.bitLength > 63) { wide += ((n, v)); vals += 0L }
+            else vals += v.unscaledValue.longValue
           }
           n += 1
         }
-        Iterator((ids.result(), vals.result(), nulls.result(), fits))
+        Iterator((ids.result(), vals.result(), nulls.result(), wide.result()))
       }
       .collect()
-    if (!chunks.forall(_._4)) return null
     val ids = chunks.flatMap(_._1)
     val vals = chunks.flatMap(_._2)
     val isNull = new java.util.BitSet(vals.length)
+    val wideAt = new java.util.HashMap[Integer, java.math.BigDecimal]
     var off = 0
-    chunks.foreach { case (_, v, nulls, _) => nulls.foreach(r => isNull.set(off + r)); off += v.length }
+    chunks.foreach { case (_, v, nulls, wide) =>
+      nulls.foreach(r => isNull.set(off + r))
+      wide.foreach { case (r, w) => wideAt.put(off + r, w) }
+      off += v.length
+    }
+    if (2 * wideAt.size > vals.length - isNull.cardinality) return null
     val order = Array.tabulate[Integer](vals.length)(Int.box)
     java.util.Arrays.sort(order, (a: Integer, b: Integer) => compareRows(ids, a, b, nDims))
     val n = vals.length - isNull.cardinality
     val keys = pages[Int](n * nDims)
     val values = pages[Long](n)
+    val wideRows = Array.newBuilder[Int]
+    val wideValues = Array.newBuilder[java.math.BigDecimal]
     var out = 0
     var i = 0
     while (i < order.length) {
@@ -140,11 +206,12 @@ private[graft] object PointIndex {
           d += 1
         }
         values(out >>> PageBits)(out & PageMask) = vals(r)
+        if (wideAt.containsKey(r)) { wideRows += out; wideValues += wideAt.get(r) }
         out += 1
       }
       i += 1
     }
-    new PointIndex(nDims, n, vals.length - n, scale, keys, values)
+    new PointIndex(nDims, n, vals.length - n, scale, keys, values, wideRows.result(), wideValues.result())
   }
 
   private def compareRows(ids: Array[Int], a: Int, b: Int, nDims: Int): Int = {

@@ -17,9 +17,10 @@ import org.apache.spark.sql.types._
   *
   * Execution deviates from the reference by design (SURVEY §3.2): instead of
   * a per-address `cube[...]` loop over the cartesian product, the whole grid
-  * is ONE aggregation pass — [[graft.core.Cube.gridAggregate]]: a driver
-  * scan of the point index once base reads have built it, else one Catalyst job
-  * (closure joins + hash aggregation); only non-empty cells are returned.
+  * is ONE aggregation pass — [[graft.core.Cube.reportGrid]]: the driver
+  * kernel over the rows the query selects once base reads have built the
+  * point index, else one Catalyst job (closure joins + hash aggregation);
+  * only non-empty cells are returned.
   */
 final class OlapQuery(db: Database, sql: String,
     resolveCube: Option[String => Cube] = None) {
@@ -122,22 +123,31 @@ final class OlapQuery(db: Database, sql: String,
     * deps-first ordering are the shared
     * [[Rules.gridRuleFor]]/[[Rules.expandRuled]] helpers — one semantics
     * for dialect grids, views, and the scalar path.
+    *
+    * The answer is the projected rows on the driver when
+    * [[Cube.reportGrid]] keeps the grid there (the driver kernel, or a
+    * collected small Spark grid), else the DataFrame plan with broadcast
+    * name joins — a `'*'` cross product past [[Cube.reportGrid]]'s bound,
+    * which the REST route pages. Either way the rows, fields and types are
+    * the same; the REST route renders driver rows with no Spark job.
     */
+  def result(): Either[DataFrame, Cube.GridRows] = resultOn(cube, selections)
+
+  /** [[result]] as a DataFrame: driver rows become a local relation. */
   def execute(): DataFrame = executeOn(cube, selections)
 
   /** The same grid + projection against a ROUTED target (an aggregate
     * summary whose derived dimensions carry the same member names) — used
     * by [[OlapQuery.routed]]; `sels` are the target cube's member ids.
-    * A grid [[Cube.reportGrid]] keeps on the driver is named and projected
-    * there, and the answer is a local relation (no Spark job); a larger
-    * grid — a `'*'` cross product the REST route pages — keeps the
-    * DataFrame plan with broadcast name joins.
     */
-  private[olap] def executeOn(target: Cube, sels: Vector[Seq[Int]]): DataFrame =
+  private[olap] def resultOn(target: Cube, sels: Vector[Seq[Int]]): Either[DataFrame, Cube.GridRows] =
     Rules.ruledReport(target, sels) match {
-      case Right(g) => project(target, g).toDF(target.spark)
-      case Left(df) => projectPlan(target, df)
+      case Right(g) => Right(project(target, g))
+      case Left(df) => Left(projectPlan(target, df))
     }
+
+  private[olap] def executeOn(target: Cube, sels: Vector[Seq[Int]]): DataFrame =
+    resultOn(target, sels).fold(identity, _.toDF(target.spark))
 
   private def wantAll: Boolean = fields.exists(_ == "*")
   private def wantDim(d: Dimension): Boolean = wantAll || fields.exists(_.equalsIgnoreCase(d.name))
@@ -221,11 +231,6 @@ final class OlapQuery(db: Database, sql: String,
 
 object OlapQuery {
   def apply(db: Database, sql: String): DataFrame = new OlapQuery(db, sql).execute()
-
-  /** As [[apply]] with a cube-resolution override — the REST `/query`
-    * route's `?asOfGeneration=` snapshot plumbing (round 17). */
-  def apply(db: Database, sql: String, resolveCube: String => Cube): DataFrame =
-    new OlapQuery(db, sql, Some(resolveCube)).execute()
 
   /** Dialect query ROUTED through an aggregate navigator: parsed and
     * member-resolved against the navigator's BASE cube, then the one-job

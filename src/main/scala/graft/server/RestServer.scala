@@ -4,6 +4,9 @@ import graft.core.{Cube, Database}
 import graft.olap.{OlapQuery, View, ViewDef, ViewWindow}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.util.concurrent.locks.ReentrantReadWriteLock
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions.{broadcast, col, sum}
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -36,7 +39,10 @@ import org.json4s.jackson.JsonMethods
   *  - `POST /query/{db}[?limit=n&offset=n]` body = dialect SQL — run
   *    [[OlapQuery]], rows as JSON records, capped at
   *    [[RestServer.QueryRowCap]] rows per response with
-  *    `truncated`/`next_offset` paging markers
+  *    `truncated`/`next_offset` paging markers. Driver rows
+  *    ([[OlapQuery.result]]) are sorted, cut and rendered here with no
+  *    Spark job; only a grid past the driver bound pages through its
+  *    DataFrame plan
   *  - `?asOfGeneration=g` on the cell (r16), view and dialect-query
   *    routes (r17): the read serves from the z-store snapshot at commit
   *    generation g ([[graft.core.Cube.snapshotAtGeneration]], read-only)
@@ -354,38 +360,22 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
           if (limit < 1 || limit > RestServer.QueryRowCap)
             throw BadRequest(s"limit must be 1..${RestServer.QueryRowCap}")
           if (offset < 0) throw BadRequest("offset must be >= 0")
-          val (rows, truncated) = withRead(d) {
-            // ?asOfGeneration=g resolves the dialect's FROM cube through
-            // the snapshot plumbing (round 17); absent → the live cube
-            val df = OlapQuery(d, sql, name => asOfCube(cubeOf(d, name), qp))
-            val cols = df.columns.toSeq
-            val paging = qp.contains("limit") || qp.contains("offset")
-            val paged =
-              (if (paging) df.orderBy(cols.map(col): _*).offset(offset)
-               else df).limit(limit + 1)
-            val got = paged.collect()
-            (got.take(limit).map(r => cols.zipWithIndex.map { case (cn, i) =>
-              cn -> (r.get(i) match {
-                case null => JNull
-                case dd: java.lang.Double => JDouble(dd)
-                case l: java.lang.Long => JLong(l)
-                case ii: java.lang.Integer => JInt(BigInt(ii.intValue))
-                case x => JString(x.toString)
-              })
-            }.foldLeft(JObject()) { case (o, (k, v)) => o ~ (k -> v) }).toList,
-              got.length > limit)
-          }
-          val base = ("rows" -> rows) ~ ("limit" -> limit) ~
-            ("offset" -> offset) ~ ("truncated" -> truncated)
-          // next_offset only on PAGED requests: an unpaged response is in
-          // arbitrary plan order, so an offset computed against it would
-          // continue a DIFFERENT (sorted) sequence — overlapping and
-          // missing rows. A truncated unpaged client restarts with
-          // ?limit=…&offset=0 to enter the total order.
           val paged = qp.contains("limit") || qp.contains("offset")
-          json(ex, 200,
-            if (truncated && paged) base ~ ("next_offset" -> (offset + limit))
-            else base)
+          val (cols, got) = withRead(d) {
+            // ?asOfGeneration=g resolves the dialect's FROM cube through
+            // the snapshot plumbing; absent → the live cube
+            new OlapQuery(d, sql, Some(name => asOfCube(cubeOf(d, name), qp))).result() match {
+              case Right(g) =>
+                // driver rows: sorted and cut here, with no Spark job
+                (g.schema.fieldNames.toSeq,
+                  (if (paged) RestServer.sorted(g).drop(offset) else g.rows).take(limit + 1))
+              case Left(df) =>
+                val cols = df.columns.toSeq
+                (cols, (if (paged) df.orderBy(cols.map(col): _*).offset(offset) else df)
+                  .limit(limit + 1).collect().toSeq)
+            }
+          }
+          respond(ex, 200, "application/json", RestServer.queryBody(cols, got, limit, offset, paged))
         case other => throw NotFound(other.mkString("/"))
       }
     })
@@ -419,4 +409,38 @@ object RestServer {
     * through the driver; clients page with `limit`/`offset`.
     */
   val QueryRowCap = 10000
+
+  /** Driver grid rows in the order `orderBy` on every column gives them:
+    * Spark's own natural ascending ordering (nulls first, strings by UTF-8
+    * bytes, doubles as Spark compares them) over the rows' catalyst form. */
+  private[graft] def sorted(g: Cube.GridRows): IndexedSeq[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(g.schema)
+    val order = RowOrdering.createNaturalAscendingOrdering(g.schema.map(_.dataType))
+    g.rows.map(r => (r, toCatalyst(r).asInstanceOf[InternalRow]))
+      .sortWith((a, b) => order.compare(a._2, b._2) < 0).map(_._1)
+  }
+
+  /** The `/query` response: the first `limit` of `got` as JSON records
+    * (one more row than `limit` says the page was cut), the paging fields,
+    * and `next_offset` on a cut PAGED request only — an unpaged response is
+    * in arbitrary plan order, so an offset computed against it would
+    * continue a DIFFERENT (sorted) sequence, overlapping and missing rows.
+    * A truncated unpaged client restarts with `?limit=…&offset=0` to enter
+    * the total order. */
+  private[graft] def queryBody(cols: Seq[String], got: Seq[Row], limit: Int, offset: Int,
+      paged: Boolean): String = {
+    val rows = got.take(limit).map(r => cols.zipWithIndex.map { case (cn, i) =>
+      cn -> (r.get(i) match {
+        case null => JNull
+        case dd: java.lang.Double => JDouble(dd)
+        case l: java.lang.Long => JLong(l)
+        case ii: java.lang.Integer => JInt(BigInt(ii.intValue))
+        case x => JString(x.toString)
+      })
+    }.foldLeft(JObject()) { case (o, (k, v)) => o ~ (k -> v) }).toList
+    val truncated = got.length > limit
+    val body = ("rows" -> rows) ~ ("limit" -> limit) ~ ("offset" -> offset) ~ ("truncated" -> truncated)
+    JsonMethods.compact(JsonMethods.render(
+      if (truncated && paged) body ~ ("next_offset" -> (offset + limit)) else body))
+  }
 }

@@ -431,6 +431,25 @@ class DriverGridSpec extends AnyFunSuite {
     assert(outcome(oRef.gridAggregate(oneWeighted)).isLeft, "the overflowing write must fail the Spark plan")
   }
 
+  test("a one-nation, one-month grid visits only its candidate rows; an unrestricted grid visits every row") {
+    val (idx, _) = pair("visits")
+    val nation = model.geo.membersByLevel(1).head.id
+    val month = model.calendar.membersByLevel(1).head.id
+    val gross = model.measures.idOf("gross")
+    def visits(sels: Seq[Seq[Int]]): Long = {
+      val (before, served) = (idx.counterKernelRowsVisited, idx.counterDriverAggregations)
+      idx.gridAggregate(sels)
+      assert(idx.counterDriverAggregations == served + 1, s"the kernel serves $sels")
+      idx.counterKernelRowsVisited - before
+    }
+    val candidates = facts.filter(col("d0").isin(idx.leafIdsOf(0, Seq(nation)): _*) &&
+      col("d1").isin(idx.leafIdsOf(1, Seq(month)): _*) && col("d3") === gross).count()
+    assert(candidates > 0L && candidates < facts.count() / 100)
+    assert(visits(Seq(Seq(nation), Seq(month), Seq(model.product.idOf("AllBrands")), Seq(gross))) == candidates)
+    assert(visits(Seq(Seq(model.geo.idOf("World")), Seq(model.calendar.idOf("AllTime")),
+      Seq(model.product.idOf("AllBrands")), model.measures.leafMembers.map(_.id))) == facts.count())
+  }
+
   test("16 readers racing writes and a base swap see the state before or after the race") {
     val (idx, _) = pair("race")
     val gross = model.measures.idOf("gross")

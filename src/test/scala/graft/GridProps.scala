@@ -41,7 +41,7 @@ object GridProps extends Properties("Grid") {
     * beside a weighted `odd` parent; `m`: stored `x`, `y`, `z` and
     * `xy = x − y`. Leaf `v47` and member `v_gone` are removed after the
     * facts are in, which purges `v47`'s facts. */
-  private def fixture(k: Int, valueType: DataType): Fixture = {
+  private def fixture(k: Int, valueType: DataType, rough: Boolean = false): Fixture = {
     val db = new Database(s"gprop$k", spark)
     val t = db.addDimension("t")
     t.edit().add("X", Seq("a", "b", "c", "d")).add("Y", Seq("e", "f", "g", "h")).add("All", Seq("X", "Y"))
@@ -63,6 +63,7 @@ object GridProps extends Properties("Grid") {
     m.edit().addMany(stored).add("xy", Seq("x", "y"), Seq(1.0, -1.0)).commit()
     val rnd = new scala.util.Random(9100L + k)
     def value(): Any = valueType match {
+      case DoubleType if rough => Double.box(rnd.nextGaussian() * 1000.0)
       case DoubleType => Double.box((rnd.nextInt(4001) - 2000) / 8.0)
       case d: DecimalType =>
         java.math.BigDecimal.valueOf(rnd.nextLong() % math.pow(10, math.min(11, d.precision - 3)).toLong, d.scale)
@@ -87,6 +88,10 @@ object GridProps extends Properties("Grid") {
 
   private lazy val fixtures: IndexedSeq[Fixture] = IndexedSeq(
     fixture(0, DoubleType), fixture(1, DecimalType(21, 4)), fixture(2, DecimalType(12, 2)))
+
+  /** Doubles with every bit of the mantissa in use, where a change in
+    * summation order shows. */
+  private lazy val roughFixture = fixture(3, DoubleType, rough = true)
 
   /** One write: an upsert of a multiple of 1/8 at a random leaf address,
     * or a tombstone at a base address. */
@@ -114,10 +119,10 @@ object GridProps extends Properties("Grid") {
 
   /** One case in five selects most members of every dimension, a grid past
     * [[DriverGrid.MaxCells]] that both cubes send to Spark. */
-  private val genCase = for {
-    f <- Gen.choose(0, fixtures.size - 1)
+  private def genCase(nFixtures: Int) = for {
+    f <- Gen.choose(0, nFixtures - 1)
     writes <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, genWrite))
-    dims = fixtures(f).idx.dimensions
+    dims = (fixtures :+ roughFixture)(f).idx.dimensions
     wide <- Gen.frequency((1, true), (4, false))
     sels <- Gen.sequence[Seq[Seq[Int]], Seq[Int]](dims.zip(Seq("All", "u_all", "v_all", "x")).map { case (d, top) =>
       if (wide) Gen.choose(d.members.size * 7 / 8, d.members.size).flatMap(Gen.pick(_, d.members.map(_.id))).map(_.toSeq)
@@ -137,16 +142,19 @@ object GridProps extends Properties("Grid") {
     case Right(rows) => canonical(rows.schema, rows.rows)
   }
 
+  /** The same writes on both cubes of `f`. */
+  private def write(f: Fixture, writes: Seq[Write]): Unit = writes.foreach {
+    case Upsert(a, v) => Seq(f.idx, f.ref).foreach(_.set(a, v))
+    case Tombstone(r) => Seq(f.idx, f.ref).foreach(_.delete(f.based(r % f.based.size)))
+  }
+
   private var withinBound = 0
   private var kernelServed = 0
 
   property("the driver kernel and the Spark plan give the same grids") =
-    forAllNoShrink(genCase) { case (f, writes, sels) =>
-      val Fixture(idx, ref, based) = fixtures(f)
-      writes.foreach {
-        case Upsert(a, v) => Seq(idx, ref).foreach(_.set(a, v))
-        case Tombstone(r) => Seq(idx, ref).foreach(_.delete(based(r % based.size)))
-      }
+    forAllNoShrink(genCase(fixtures.size)) { case (f, writes, sels) =>
+      val Fixture(idx, ref, _) = fixtures(f)
+      write(fixtures(f), writes)
       val served = idx.counterDriverAggregations
       val driver = canonical(idx.reportGrid(sels))
       val inside = sels.map(_.distinct.size.toLong).product <= DriverGrid.MaxCells
@@ -162,4 +170,24 @@ object GridProps extends Properties("Grid") {
   property("the kernel served grids inside the bound, and some were outside it") =
     Prop(kernelServed > withinBound / 3 && withinBound < 180 && fixtures.forall(_.idx.counterDriverAggregations > 0L)) :|
       s"$kernelServed of $withinBound grids inside the bound served by the kernel"
+
+  property("the kernel sums the same rows in the same order from the postings as from a full scan") =
+    forAllNoShrink(genCase(fixtures.size + 1)) { case (f, writes, sels) =>
+      val fx = (fixtures :+ roughFixture)(f)
+      write(fx, writes)
+      def exact(g: Option[Cube.GridRows]) = g.map(r => (r.schema, r.rows.map(_.toSeq.map {
+        case d: java.lang.Double => "d" + java.lang.Double.doubleToRawLongBits(d)
+        case v => String.valueOf(v)
+      })))
+      val postings = exact(fx.idx.kernelGrid(sels, fullScan = false))
+      val scan = exact(fx.idx.kernelGrid(sels, fullScan = true))
+      if (postings != scan) println(s"MISMATCH fixture=$f sels=$sels\n  postings=$postings\n  scan    =$scan")
+      if (postings.isDefined) postingServed += 1
+      postings == scan
+    }
+
+  private var postingServed = 0
+
+  property("the postings property compared grids the kernel served") =
+    Prop(postingServed > 60) :| s"$postingServed grids served"
 }

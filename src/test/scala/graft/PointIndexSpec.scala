@@ -275,4 +275,20 @@ class PointIndexSpec extends AnyFunSuite {
     val perCell = cube.pointIndexBytes.toDouble / (k * k * k * k)
     assert(perCell > 0 && perCell <= 32.0, s"$perCell B per cell")
   }
+
+  test("the postings a grid builds are counted, and index plus postings hold at most 32 bytes per cell") {
+    val k = 14
+    val cube = gridCube("postings", k, persist = true)
+    assert(cube.get(gridAddr(Seq(1, 2, 3, 4))).contains(gridValue(Seq(1, 2, 3, 4))))
+    val indexOnly = cube.pointIndexBytes
+    val dims = cube.dimensions
+    val sels = Seq(Seq(dims(0).idOf("m1")), Seq(dims(1).idOf("All")), Seq(dims(2).idOf("All")),
+      (0 until k).map(m => dims(3).idOf(s"m$m")))
+    val served = cube.counterDriverAggregations
+    assert(cube.gridAggregate(sels).count() == k)
+    assert(cube.counterDriverAggregations == served + 1)
+    val perCell = cube.pointIndexBytes.toDouble / (k * k * k * k)
+    assert(cube.pointIndexBytes > indexOnly, "the postings are counted once built")
+    assert(perCell <= 32.0, s"$perCell B per cell")
+  }
 }

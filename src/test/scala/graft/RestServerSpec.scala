@@ -243,6 +243,63 @@ class RestServerSpec extends AnyFunSuite {
     assert(post("/query/tiny?limit=abc", sql).statusCode() == 400)
   }
 
+  test("paged /query on a kernel-served grid: Spark-sorted pages, disjoint and exhaustive, no Spark job") {
+    import org.apache.spark.sql.functions.col
+    val db2 = TinyModel.build(spark)
+    val c = db2.cube("sales")
+    val rnd = new scala.util.Random(71L)
+    // ties in value, a negative zero, and names that sort apart by UTF-8 bytes
+    for (y <- Seq("2021", "2022"); m <- Seq("Jan", "Feb", "Mar", "Apr", "Mai"); r <- Seq("North", "South", "East");
+         p <- Seq("sedan", "van") if rnd.nextInt(3) > 0)
+      c.set(Seq(y, m, r, p, "Sales"), if (rnd.nextInt(9) == 0) -0.0 else rnd.nextInt(12) / 4.0 - 1.0)
+    assert(c.compact())
+    c.get(Seq("2021", "Jan", "North", "sedan", "Sales"))
+    assert(c.pointIndexEnabled)
+    val sql = "SELECT years, months, regions, value FROM sales WHERE years=('2022','2021','All years'), " +
+      "months='*', regions='*', products=cars, 'Sales'"
+    val q = new graft.olap.OlapQuery(db2, sql)
+    assert(q.result().isRight, "the kernel's grid stays on the driver")
+    val df = q.execute()
+    val cols = df.columns.toSeq
+    val sortedBySpark = df.orderBy(cols.map(col): _*).collect().toSeq
+    assert(sortedBySpark.size > 40)
+    val limit = 7
+    val expected = (0 until sortedBySpark.size by limit).map(off =>
+      RestServer.queryBody(cols, sortedBySpark.drop(off).take(limit + 1), limit, off, paged = true))
+
+    val srv = new RestServer(Seq(db2)).start()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("graft.test.sentinel") != null) sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    val served = c.counterDriverAggregations
+    spark.sparkContext.addSparkListener(listener)
+    val pages = try {
+      val got = expected.indices.map { i =>
+        req(java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${srv.boundPort}/query/tiny?limit=$limit&offset=${i * limit}"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(sql)))
+      }
+      // a job started after the requests: once its start is seen, every
+      // earlier job start has been delivered
+      spark.sparkContext.setLocalProperty("graft.test.sentinel", "1")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty("graft.test.sentinel", null)
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      got
+    } finally { spark.sparkContext.removeSparkListener(listener); srv.stop() }
+    assert(jobs.get() == 0, s"${jobs.get()} Spark job(s) ran for paged driver rows")
+    assert(c.counterDriverAggregations == served + expected.size)
+    pages.zip(expected).zipWithIndex.foreach { case ((r, want), i) =>
+      assert(r.statusCode() == 200 && r.body() == want, s"page $i")
+    }
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val rows = pages.flatMap(p => (org.json4s.jackson.JsonMethods.parse(p.body()) \ "rows").extract[List[org.json4s.JValue]])
+    assert(rows.size == sortedBySpark.size && rows.distinct.size == rows.size, "pages are disjoint and exhaustive")
+  }
+
   test("the control plane composes with at-rest encryption (r14 verdict #6)") {
     import graft.core.{Crypto, Database}
     // an AES-encrypted store, mounted through Database.load — the server

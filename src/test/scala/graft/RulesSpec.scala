@@ -162,6 +162,26 @@ class RulesSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.ansi.enabled") == ansi, "the shared session's conf is untouched")
   }
 
+  test("a decimal(21,4) value past a long keeps the point index; only grids that cover it run on Spark") {
+    val ref = overflowCube(spark, "wide_ref")
+    val c = overflowCube(spark, "wide_idx")
+    val addrs = Seq(Seq("a", "x"), Seq("c", "x"), Seq("a", "sq"))
+    val jobReads = addrs.map(ref.get)
+    assert(c.enablePointIndex())
+    assert(addrs.map(c.get) == jobReads && jobReads(1).contains(2e16))
+    assert(!ref.pointIndexEnabled)
+    val (t, m) = (c.dimensions(0), c.dimensions(1))
+    val x = Seq(m.idOf("x"))
+    val served = c.counterDriverAggregations
+    val misses = Seq(Seq(t.idOf("a")), x)
+    assert(rows(c.gridAggregate(misses)) == rows(ref.gridAggregate(misses)))
+    assert(c.counterDriverAggregations == served + 1, "a grid that misses the wide row is the kernel's")
+    val covers = Seq(Seq(t.idOf("a"), t.idOf("c")), x)
+    assert(rows(c.gridAggregate(covers)) == rows(ref.gridAggregate(covers)))
+    assert(rows(c.gridAggregate(covers)).exists(_.contains("20000000000000000.0000")))
+    assert(c.counterDriverAggregations == served + 1, "a grid that covers it runs on Spark")
+  }
+
   test("8 threads render one ruled view and grid: serial answers, one compile per rule") {
     val db = new Database("rules_conc", spark)
     val t = db.addDimension("t")

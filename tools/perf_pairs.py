@@ -2,7 +2,7 @@
 """A/B the served-cube benchmark: a base commit against the working tree.
 
     python3 tools/perf_pairs.py --base-dir DIR [--base HEAD] \
-        --workload mixed_writes --seeds 921-930 [--seconds 20] [--out pairs.json]
+        --workload mixed_writes --seeds 921-930 [--seconds 20] [--trace 1] [--out pairs.json]
 
 Exports the base commit (`git archive`) into DIR, once, then runs
 `perfbench/run.py` on both trees for each seed, alternating which side runs
@@ -11,6 +11,12 @@ median and quartiles and how many of the pairs the working tree won, then
 each side's median of the per-route p50 lines (`cell_p50_ms`, `view_p50_ms`,
 `query_p50_ms`, `write_p50_ms`) that `perfbench/run.py` prints, so a
 change can name the route it moved.
+With `--trace 1` each run traces its layers (`perfbench/run.py --trace 1`),
+and each side's median of every per-layer metric of BENCHMARK.json is
+printed too. perfbench's in-process replay answers a dialect query with
+`execute().limit().collect()`, not with the REST route's rendering, so a
+change to the route shows in `query_p50_ms` and `server.overhead_ms`, not
+in `olap.query_exec_ms`.
 A run that fails or is not `correct` is counted per side in the summary,
 left out of every pair it belongs to, and makes the script exit 1.
 Run it from the repository root on an otherwise idle host.
@@ -42,9 +48,9 @@ ROUTES = ("cell", "view", "query", "write")
 ROUTE_P50 = re.compile(r"^perfbench: (" + "|".join(ROUTES) + r")_p50_ms ([0-9.]+) ms")
 
 
-def run(tree, workload, seed, seconds):
+def run(tree, workload, seed, seconds, trace):
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", trace],
                        cwd=tree, text=True, stdout=subprocess.PIPE, stderr=subprocess.PIPE)
     last = p.stdout.strip().splitlines()[-1:] or ["{}"]
     res = json.loads(last[0]) if p.returncode == 0 and last[0].startswith("{") else {}
@@ -63,7 +69,8 @@ def run(tree, workload, seed, seconds):
 def main():
     ap = argparse.ArgumentParser()
     for flag, dflt in [("--base", "HEAD"), ("--base-dir", None), ("--workload", None),
-                       ("--seeds", "921-930"), ("--seconds", "20"), ("--out", None)]:
+                       ("--seeds", "921-930"), ("--seconds", "20"), ("--trace", "0"),
+                       ("--out", None)]:
         ap.add_argument(flag, default=dflt, required=flag in ("--base-dir", "--workload"))
     a = ap.parse_args()
     lo, _, hi = a.seeds.partition("-")
@@ -73,7 +80,7 @@ def main():
     pairs = []
     for i, seed in enumerate(seeds):
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
-        pair = {side: run(trees[side], a.workload, seed, a.seconds) for side in order}
+        pair = {side: run(trees[side], a.workload, seed, a.seconds, a.trace) for side in order}
         pairs.append({"seed": seed, "first": order[0], **pair})
         print(f"seed {seed}: " + "  ".join(
             f"{s} {pair[s].get('throughput_ops_s', float('nan')):.2f}/s" if pair[s] is not None
@@ -81,7 +88,8 @@ def main():
             for s in order), flush=True)
     if a.out:
         json.dump({"base": sha, "workload": a.workload, "pairs": pairs}, open(a.out, "w"), indent=1)
-    metrics = json.load(open("BENCHMARK.json"))["end_to_end"]
+    bench = json.load(open("BENCHMARK.json"))
+    metrics = bench["end_to_end"]
     failed = {side: sum(p[side] is None for p in pairs) for side in ("base", "change")}
     pairs = [p for p in pairs if p["base"] is not None and p["change"] is not None]
     print(f"\n{a.workload}, base {sha[:10]} vs working tree, {len(pairs)} complete pairs; "
@@ -106,6 +114,13 @@ def main():
             cols = [statistics.median(vs) if (vs := [p[side][name] for p in pairs if name in p[side]])
                     else float("nan") for side in ("base", "change")]
             print(f"{name:20} {cols[0]:>30.4g} {cols[1]:>30.4g}")
+    layers = [m["name"] for m in bench["per_layer"] if any(m["name"] in p["base"] for p in pairs)]
+    if layers:
+        print(f"\n{'per-layer median':32} {'base':>18} {'change':>18}")
+        for name in layers:
+            cols = [statistics.median(vs) if (vs := [p[side][name] for p in pairs if name in p[side]])
+                    else float("nan") for side in ("base", "change")]
+            print(f"{name:32} {cols[0]:>18.4g} {cols[1]:>18.4g}")
     if any(failed.values()):
         sys.exit(1)
 
