@@ -44,7 +44,7 @@ private[core] object DriverGrid {
   final class Axis private (val members: Array[Int], val start: Array[Int],
       val slots: Array[Int], val weights: Array[Double]) {
     /** The leaves with at least one entry, ascending. */
-    def leaves: Iterator[Int] =
+    def selectedLeaves: Iterator[Int] =
       if (start == null) Iterator.empty else (0 until start.length - 1).iterator.filter(l => start(l) < start(l + 1))
   }
 
@@ -54,7 +54,7 @@ private[core] object DriverGrid {
     /** Each selected member is its own leaf, unweighted. */
     def leaves(members: Array[Int]): Axis = {
       val n = members.length
-      build(members, Array.tabulate(n + 1)(k => k), members, null, n)
+      build(members, Array.tabulate(n + 1)(k => k), members, null)
     }
 
     /** Slot `k` takes member `members(k)`'s closure from `closure`; weights
@@ -72,21 +72,20 @@ private[core] object DriverGrid {
           if (weighted) System.arraycopy(closure.weights, e, weights, from(k), n)
         }
       }
-      build(members, from, leaves, weights, leaves.length)
+      build(members, from, leaves, weights)
     }
 
     /** Slot `k` takes the entries `from(k) until from(k + 1)` of `leaves`
       * (and `weights`, when not null), regrouped by leaf. */
-    private def build(members: Array[Int], from: Array[Int], leaves: Array[Int],
-        weights: Array[Double], n: Int): Axis = {
+    private def build(members: Array[Int], from: Array[Int], leaves: Array[Int], weights: Array[Double]): Axis = {
       val maxLeaf = leaves.foldLeft(-1)(math.max)
       val start = new Array[Int](maxLeaf + 2)
       leaves.foreach(l => start(l + 1) += 1)
       var l = 0
       while (l <= maxLeaf) { start(l + 1) += start(l); l += 1 }
       val fill = start.clone()
-      val slots = new Array[Int](n)
-      val ws = if (weights == null) null else new Array[Double](n)
+      val slots = new Array[Int](leaves.length)
+      val ws = if (weights == null) null else new Array[Double](leaves.length)
       var k = 0
       while (k < members.length) {
         var i = from(k)
@@ -140,7 +139,7 @@ private[core] object DriverGrid {
     * restricts it (every row can). */
   private def candidates(idx: PointIndex, axes: Array[Axis]): RoaringBitmap = {
     val unions = axes.indices.flatMap { d =>
-      val lists = axes(d).leaves.map(idx.posting(d, _)).filter(_ != null).toArray
+      val lists = axes(d).selectedLeaves.map(idx.posting(d, _)).filter(_ != null).toArray
       if (axes(d).start == null || lists.iterator.map(_.getLongCardinality).sum == idx.size) None
       else Some(if (lists.length == 1) lists(0) else RoaringBitmap.or(lists: _*))
     }.sortBy(_.getLongCardinality)

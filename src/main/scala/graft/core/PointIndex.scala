@@ -18,10 +18,10 @@ import org.roaringbitmap.RoaringBitmap
   * A decimal value field is stored EXACTLY, as its unscaled long at the
   * field's `scale`; any other value type is stored as the bits of its double
   * (`scale == -1`). A decimal whose unscaled form exceeds a long is a
-  * "wide" row: its value lives in a sparse side table (`wideRows`, sorted,
-  * beside `wideValues`) and its slot in the pages holds 0. Rows with a null
-  * value are absent — they read as empty, like the filter-job path — and
-  * counted in `nullRows`.
+  * "wide" row: its value lives in a sparse side table (the rows in
+  * [[wide]], their values in row order in `wideValues`) and its slot in
+  * the pages holds 0. Rows with a null value are absent — they read as
+  * empty, like the filter-job path — and counted in `nullRows`.
   *
   * Postings (≙ the reference's `FactTableIndex` row sets per member,
   * `facttable.py:46-64`): per (dimension, member id) a [[RoaringBitmap]] of
@@ -31,11 +31,8 @@ import org.roaringbitmap.RoaringBitmap
 private[graft] final class PointIndex private (
     nDims: Int, val size: Int, val nullRows: Int, val scale: Int,
     keys: Array[Array[Int]], values: Array[Array[Long]],
-    wideRows: Array[Int], wideValues: Array[java.math.BigDecimal]) {
+    val wide: RoaringBitmap, wideValues: Array[java.math.BigDecimal]) {
   import PointIndex.{PageBits, PageMask}
-
-  /** The wide rows as a set, for the kernel's candidate check. */
-  val wide: RoaringBitmap = RoaringBitmap.bitmapOf(wideRows: _*)
 
   @volatile private var postingLists: Array[Array[RoaringBitmap]] = null
 
@@ -43,7 +40,7 @@ private[graft] final class PointIndex private (
     * side table (~64 B per wide value), and the postings once built. */
   def byteSize: Long =
     keys.map(16L + 4L * _.length).sum + values.map(16L + 8L * _.length).sum +
-      2 * 16L + 4L * (keys.length + values.length) + 64L * wideRows.length +
+      2 * 16L + 4L * (keys.length + values.length) + 64L * wideValues.length +
       Option(postingLists).fold(0L)(_.map(d => 16L + 4L * d.length +
         d.iterator.filter(_ != null).map(_.getLongSizeInBytes + 16L).sum).sum)
 
@@ -57,11 +54,8 @@ private[graft] final class PointIndex private (
       else if (c > 0) hi = mid - 1
       else return Some(
         if (scale < 0) java.lang.Double.longBitsToDouble(rawAt(mid))
-        else {
-          val w = if (wideRows.isEmpty) -1 else java.util.Arrays.binarySearch(wideRows, mid)
-          if (w >= 0) wideValues(w).doubleValue
-          else java.math.BigDecimal.valueOf(rawAt(mid), scale).doubleValue
-        })
+        else if (wide.contains(mid)) wideValues(wide.rank(mid).toInt - 1).doubleValue
+        else java.math.BigDecimal.valueOf(rawAt(mid), scale).doubleValue)
     }
     None
   }
@@ -188,7 +182,7 @@ private[graft] object PointIndex {
     val n = vals.length - isNull.cardinality
     val keys = pages[Int](n * nDims)
     val values = pages[Long](n)
-    val wideRows = Array.newBuilder[Int]
+    val wideRows = new RoaringBitmap
     val wideValues = Array.newBuilder[java.math.BigDecimal]
     var out = 0
     var i = 0
@@ -206,12 +200,12 @@ private[graft] object PointIndex {
           d += 1
         }
         values(out >>> PageBits)(out & PageMask) = vals(r)
-        if (wideAt.containsKey(r)) { wideRows += out; wideValues += wideAt.get(r) }
+        if (wideAt.containsKey(r)) { wideRows.add(out); wideValues += wideAt.get(r) }
         out += 1
       }
       i += 1
     }
-    new PointIndex(nDims, n, vals.length - n, scale, keys, values, wideRows.result(), wideValues.result())
+    new PointIndex(nDims, n, vals.length - n, scale, keys, values, wideRows, wideValues.result())
   }
 
   private def compareRows(ids: Array[Int], a: Int, b: Int, nDims: Int): Int = {
