@@ -74,10 +74,25 @@ class MinHashSignatureParitySpec extends AnyFunSuite {
     }
     assert(offending.isEmpty,
       s"signature plan must be exchange/aggregate-free:\n$plan")
-    // and the expression sits inside whole-stage codegen (not a fallback)
-    val wsc = plan.collect {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
-    assert(wsc.nonEmpty, s"signatures must run inside WholeStageCodegen:\n$plan")
+    // and the signature is computed ONCE per row, inside whole-stage
+    // codegen: exactly one operator evaluates it, and that operator belongs
+    // to a codegen stage (a WholeStageCodegenExec subtree up to its
+    // InputAdapter boundaries). A mere "some WholeStageCodegenExec exists"
+    // passes as soon as the scan alone is codegen'd.
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    def sigCount(p: SparkPlan): Int = p.expressions.map(_.collect {
+      case m: graft.functions.MinHashSignature => m }.size).sum
+    val carriers = plan.collect { case p if sigCount(p) > 0 => p }
+    assert(carriers.map(sigCount).sum == 1,
+      s"the signature must appear exactly once in the executed plan:\n$plan")
+    def stageMembers(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case q => q +: q.children.flatMap(stageMembers)
+    }
+    val codegend = plan.collect {
+      case w: WholeStageCodegenExec => stageMembers(w.child) }.flatten
+    assert(carriers.forall(c => codegend.exists(_ eq c)),
+      s"the operator evaluating the signature must sit inside WholeStageCodegen:\n$plan")
   }
 
   test("the near-dup operator still equals exact Jaccard through the new shape") {
