@@ -1132,9 +1132,8 @@ object Bench {
       // are gated at sf0.01 (pipe_dedup_minhash). k=16/bands=4; k-scaling
       // is linear.
       try {
-        import org.apache.spark.sql.functions.{approx_count_distinct, array,
-          col, concat, concat_ws, hash, lit, pmod, posexplode, slice, when,
-          xxhash64}
+        import org.apache.spark.sql.functions.{approx_count_distinct, col,
+          concat, concat_ws, lit, pmod, posexplode, when, xxhash64}
         val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
           rows8.toString).toLong
         // 256 range slices bound per-task work (~400k docs each) — the
@@ -1149,13 +1148,12 @@ object Bench {
                 .as("text"))
           val sig = graft.pipeline.TextDedup.minhashSignatures(
             docs, "doc", "text", k = 16)
-          val rowsPerBand = 4
-          // xxhash64 band buckets, mirroring the operator (round 18: 32-bit
-          // bucket hashes manufactured ~4.7M birthday-collision candidates
-          // at 1e8 docs — see TextDedup.minhashCandidateStage)
-          val banded = sig.select(posexplode(array((0 until 4).map(bi =>
-            xxhash64(lit(bi), slice(col("sig"), bi * rowsPerBand + 1, rowsPerBand))): _*))
-            .as(Seq("band", "bh")))
+          // the operator's own xxhash64 band buckets, 4 bands of 4 rows
+          // (round 18: 32-bit bucket hashes manufactured ~4.7M
+          // birthday-collision candidates at 1e8 docs — see
+          // TextDedup.minhashCandidateStage)
+          val banded = sig.select(posexplode(
+            graft.pipeline.TextDedup.bandHashArrOf(4, 4)).as(Seq("band", "bh")))
           val nb = banded.agg(approx_count_distinct(col("bh")).as("nb"))
             .collect()(0).getLong(0)
           require(nb > 0, "banded bucket hashes must materialize")

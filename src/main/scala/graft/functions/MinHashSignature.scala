@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -20,14 +20,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (measured, BENCH r16 bring-up) — while the signature of a document is a
   * pure function of its own row. This expression computes it in place
   * inside whole-stage codegen: zero exchange, zero aggregation state, and
-  * the LSH banding that follows is more projection. [[MinHashSketch]]
-  * remains the right shape when the input is ALREADY exploded to
-  * (group, hash) grain.
+  * the LSH banding that follows is more projection. Its input should be
+  * codegen'd too ([[ShingleHashes]], not a `transform` lambda, which
+  * would drop the whole operator out of codegen), and the k slots are
+  * emitted as an `UnsafeArrayData` over the primitive buffer, never boxed.
+  * [[MinHashSketch]] remains the right shape when the input is ALREADY
+  * exploded to (group, hash) grain.
   *
   * Null contract: null for a null or empty/all-null-element array —
   * matching the aggregate, which emits null for a group with no non-null
-  * input (callers filter those rows to reproduce the grouped output, where
-  * such documents simply have no group).
+  * input. Callers reproduce the grouped output (where such documents have
+  * no group) by dropping those rows BEFORE the projection, on a column the
+  * signature is null exactly when: a filter on the signature itself is
+  * pushed below the projection and evaluates it a second time per row.
   */
 case class MinHashSignature(child: Expression, k: Int)
     extends UnaryExpression {
@@ -64,7 +69,7 @@ case class MinHashSignature(child: Expression, k: Int)
       }
       j += 1
     }
-    if (!any) null else new GenericArrayData(buf)
+    if (!any) null else UnsafeArrayData.fromPrimitiveArray(buf)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -98,7 +103,8 @@ case class MinHashSignature(child: Expression, k: Int)
          |if (!$any) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($buf);
+         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |    .fromPrimitiveArray($buf);
          |}
        """.stripMargin
     })

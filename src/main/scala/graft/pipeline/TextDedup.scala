@@ -392,7 +392,9 @@ object TextDedup {
     * 16): each document's k-slot signature is a function of its own row,
     * computed in place by the codegen'd
     * [[graft.functions.MinHashSignature]] expression over the per-row
-    * shingle-hash array. Zero exchange: the former
+    * shingle-hash array ([[graft.functions.ShingleHashes]]), evaluated
+    * once per row inside one whole-stage-codegen'd projection (see
+    * [[signaturesAnd]]). Zero exchange: the former
     * `explode(shingles) → groupBy(doc)` + [[graft.functions.MinHashSketch]]
     * shape shuffled one k·8-byte sketch per document — 13.5 GB and the
     * dominant cost at 1e8 docs (measured, BENCH r16 bring-up) — for an
@@ -417,24 +419,26 @@ object TextDedup {
     * band hashes AND the verify shingle array in one corpus scan instead
     * of two. Values are identical to the separate derivations by
     * construction (same expressions over the same input).
+    *
+    * Null-text documents drop BEFORE the projection, on the text: the
+    * signature is null exactly when the text is (`split` of a string
+    * never yields an empty array, and n > 1 always yields one shingle).
+    * The former `where(sig IS NOT NULL)` was pushed below the projection
+    * by the optimizer, so the whole text → split → hash → signature chain
+    * ran twice per row, and its `transform(…, xxhash64)` lambda kept both
+    * operators out of whole-stage codegen; the plan is now one codegen'd
+    * Project over the scan (MinHashSignatureParitySpec pins it).
     */
   private def signaturesAnd(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingle: Int, extra: (String, Column)*): DataFrame = {
-    val words = col("__w")
-    val hashes =
-      if (shingle <= 1) transform(words, w => xxhash64(w))
-      else transform(
-        sequence(lit(1), greatest(size(words) - (shingle - 1), lit(1))),
-        i => xxhash64(array_join(slice(words, i, lit(shingle)), "")))
+      k: Int, shingle: Int, extra: (String, Column)*): DataFrame =
     // split bound behind a projection boundary: CollapseProject keeps it
-    // (multi-reference, non-cheap) for shingle > 1, and for shingle = 1 the
-    // collapsed form still evaluates split once per row (it is the
-    // transform's input, never inside the lambda)
-    df.select(col(idCol), split(col(textCol), " ").as("__w"))
-      .select(col(idCol) +: graft.functions.MinHashSignature(hashes, k).as("sig") +:
+    // when `extra` references it too (multi-reference, non-cheap), and the
+    // collapsed single-reference form still evaluates split once per row
+    df.where(col(textCol).isNotNull)
+      .select(col(idCol), split(col(textCol), " ").as("__w"))
+      .select(col(idCol) +: graft.functions.MinHashSignature(
+          graft.functions.ShingleHashes(col("__w"), shingle), k).as("sig") +:
         extra.map { case (n, c) => c.as(n) }: _*)
-      .where(col("sig").isNotNull)
-  }
 
   /** Sorted distinct shingle-hash array per document (the exact-verify side
     * of [[minhashLshPairs]]); `shingle = 1` hashes words, `shingle = n`
@@ -443,13 +447,10 @@ object TextDedup {
   private def shingleHashArr(textCol: Column, shingle: Int): Column =
     shingleHashFromWords(split(textCol, " "), shingle)
 
-  /** Same array computed from an already-split words column. */
-  private def shingleHashFromWords(words: Column, shingle: Int): Column = {
-    if (shingle <= 1) array_sort(array_distinct(transform(words, w => xxhash64(w))))
-    else array_sort(array_distinct(transform(
-      sequence(lit(1), greatest(size(words) - (shingle - 1), lit(1))),
-      i => xxhash64(array_join(slice(words, i, lit(shingle)), "")))))
-  }
+  /** Same array computed from an already-split words column (a shingle's
+    * words joined by chr(1), so no two distinct shingles share bytes). */
+  private def shingleHashFromWords(words: Column, shingle: Int): Column =
+    array_sort(array_distinct(graft.functions.ShingleHashes(words, shingle, "\u0001")))
 
   /** MinHash-LSH near-dup pairs: band the k-wide signature into `bands`
     * groups of k/bands rows, hash each band, bucket-join candidates on
@@ -607,8 +608,13 @@ object TextDedup {
       col("band") <= b || col("__bi").getItem(b) =!= col("__bj").getItem(b))
       .reduceOption(_ && _).getOrElse(lit(true))
 
-  /** The per-signature band-hash array (64-bit buckets, round 18). */
-  private def bandHashArrOf(bands: Int, rows: Int): Column =
+  /** The per-signature band-hash array (64-bit buckets, round 18) of a
+    * `sig` column: band `bi` hashes slots `bi·rows .. bi·rows + rows - 1`.
+    * The one definition of the band hash: the operator, the serving index
+    * and the bench and profile harnesses all call it, so they cannot
+    * disagree on a bucket.
+    */
+  private[graft] def bandHashArrOf(bands: Int, rows: Int): Column =
     array((0 until bands).map(bi =>
       xxhash64(lit(bi), slice(col("sig"), bi * rows + 1, rows))): _*)
 
@@ -715,10 +721,12 @@ object TextDedup {
     * already at (group, hash) grain.
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), graft.functions.SimHashSignature(
-        transform(array_distinct(split(col(textCol), " ")), w => xxhash64(w)))
-        .as("simhash"))
-      .where(col("simhash").isNotNull)
+    // null-text docs drop on the text, not on the signature, for the same
+    // reason as [[signaturesAnd]]: the simhash is null exactly when the
+    // text is, and a filter on it would be pushed down and evaluate it twice
+    df.where(col(textCol).isNotNull)
+      .select(col(idCol), graft.functions.SimHashSignature(graft.functions.ShingleHashes(
+        array_distinct(split(col(textCol), " ")), 1)).as("simhash"))
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming (≤ 3): band
     * the 64-bit hash into 4×16-bit chunks; by pigeonhole any pair within
@@ -1079,9 +1087,7 @@ object TextDedup {
     val grams = df
       .select(col(idCol), split(col(textCol), " ").as("__w"))
       .filter(size(arr) >= k)
-      .select(col(idCol), posexplode(transform(
-        sequence(lit(0), size(arr) - lit(k)),
-        i => xxhash64(concat_ws(" ", slice(arr, i + 1, lit(k)))))))
+      .select(col(idCol), posexplode(graft.functions.ShingleHashes(arr, k, " ")))
       .withColumnRenamed("pos", "gpos")
       .withColumnRenamed("col", "__g")
     val canon = grams.groupBy(col("__g"))
@@ -1404,13 +1410,12 @@ object TextDedup {
   private def bandedSignatures(df: DataFrame, idCol: String, textCol: String,
       k: Int, bands: Int, shingle: Int): DataFrame = {
     val rows = k / bands
-    // xxhash64 buckets like [[minhashCandidateStage]] (round 18) — the
+    // the 64-bit buckets of [[minhashCandidateStage]] (round 18) — the
     // 32-bit birthday term would manufacture false probe candidates
-    // against a large index; index and probe share THIS definition, so
-    // they can never disagree on the hash.
+    // against a large index; index and probe share this banding, so they
+    // can never disagree on the hash.
     minhashSignatures(df, idCol, textCol, k, shingle)
-      .select(col(idCol), posexplode(array((0 until bands).map(bi =>
-        xxhash64(lit(bi), slice(col("sig"), bi * rows + 1, rows))): _*)).as(Seq("band", "bh")))
+      .select(col(idCol), posexplode(bandHashArrOf(bands, rows)).as(Seq("band", "bh")))
   }
 
   /** NEAR-dup serving index of an ingested corpus — the lexical analog of
