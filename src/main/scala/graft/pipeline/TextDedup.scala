@@ -423,10 +423,9 @@ object TextDedup {
     * Null-text documents drop BEFORE the projection, on the text: the
     * signature is null exactly when the text is (`split` of a string
     * never yields an empty array, and n > 1 always yields one shingle).
-    * The former `where(sig IS NOT NULL)` was pushed below the projection
-    * by the optimizer, so the whole text → split → hash → signature chain
-    * ran twice per row, and its `transform(…, xxhash64)` lambda kept both
-    * operators out of whole-stage codegen; the plan is now one codegen'd
+    * A filter on the signature itself would be pushed below the
+    * projection by the optimizer and run the whole text → split → hash →
+    * signature chain a second time per row. The plan is one codegen'd
     * Project over the scan (MinHashSignatureParitySpec pins it).
     */
   private def signaturesAnd(df: DataFrame, idCol: String, textCol: String,

@@ -75,23 +75,13 @@ class MinHashSignatureParitySpec extends AnyFunSuite {
     assert(offending.isEmpty,
       s"signature plan must be exchange/aggregate-free:\n$plan")
     // and the signature is computed ONCE per row, inside whole-stage
-    // codegen: exactly one operator evaluates it, and that operator belongs
-    // to a codegen stage (a WholeStageCodegenExec subtree up to its
-    // InputAdapter boundaries). A mere "some WholeStageCodegenExec exists"
-    // passes as soon as the scan alone is codegen'd.
-    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
-    def sigCount(p: SparkPlan): Int = p.expressions.map(_.collect {
-      case m: graft.functions.MinHashSignature => m }.size).sum
-    val carriers = plan.collect { case p if sigCount(p) > 0 => p }
-    assert(carriers.map(sigCount).sum == 1,
+    // codegen. A mere "some WholeStageCodegenExec exists" passes as soon as
+    // the scan alone is codegen'd.
+    val (count, codegend) = MinHashSignatureParitySpec.evaluations(plan) {
+      case _: graft.functions.MinHashSignature => }
+    assert(count == 1,
       s"the signature must appear exactly once in the executed plan:\n$plan")
-    def stageMembers(p: SparkPlan): Seq[SparkPlan] = p match {
-      case _: InputAdapter => Nil
-      case q => q +: q.children.flatMap(stageMembers)
-    }
-    val codegend = plan.collect {
-      case w: WholeStageCodegenExec => stageMembers(w.child) }.flatten
-    assert(carriers.forall(c => codegend.exists(_ eq c)),
+    assert(codegend,
       s"the operator evaluating the signature must sit inside WholeStageCodegen:\n$plan")
   }
 
@@ -116,5 +106,26 @@ class MinHashSignatureParitySpec extends AnyFunSuite {
     } yield (math.min(i, j), math.max(i, j))).toSet
     assert(pairs == exact,
       s"missing=${(exact -- pairs).take(3)} extra=${(pairs -- exact).take(3)}")
+  }
+}
+
+object MinHashSignatureParitySpec {
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+
+  /** How many times `target` expressions appear across the operators of an
+    * executed plan, and whether every operator holding one belongs to a
+    * codegen stage (a WholeStageCodegenExec subtree up to its InputAdapter
+    * boundaries). */
+  def evaluations(plan: SparkPlan)(target: PartialFunction[Expression, Unit]): (Int, Boolean) = {
+    def count(p: SparkPlan): Int = p.expressions.map(_.collect(target).size).sum
+    val carriers = plan.collect { case p if count(p) > 0 => p }
+    def stageMembers(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case q => q +: q.children.flatMap(stageMembers)
+    }
+    val codegend = plan.collect {
+      case w: WholeStageCodegenExec => stageMembers(w.child) }.flatten
+    (carriers.map(count).sum, carriers.forall(c => codegend.exists(_ eq c)))
   }
 }

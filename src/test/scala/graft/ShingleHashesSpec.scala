@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -122,16 +121,9 @@ class ShingleHashesSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val plan = TextDedup.simhash(docs, "doc_id", "text").queryExecution.executedPlan
-    def sigCount(p: SparkPlan): Int = p.expressions.map(_.collect {
-      case e: graft.functions.SimHashSignature => e }.size).sum
-    val carriers = plan.collect { case p if sigCount(p) > 0 => p }
-    assert(carriers.map(sigCount).sum == 1, s"simhash must appear once:\n$plan")
-    def stageMembers(p: SparkPlan): Seq[SparkPlan] = p match {
-      case _: InputAdapter => Nil
-      case q => q +: q.children.flatMap(stageMembers)
-    }
-    val codegend = plan.collect {
-      case w: WholeStageCodegenExec => stageMembers(w.child) }.flatten
-    assert(carriers.forall(c => codegend.exists(_ eq c)), s"simhash must be codegen'd:\n$plan")
+    val (count, codegend) = MinHashSignatureParitySpec.evaluations(plan) {
+      case _: graft.functions.SimHashSignature => }
+    assert(count == 1, s"simhash must appear once:\n$plan")
+    assert(codegend, s"simhash must be codegen'd:\n$plan")
   }
 }
