@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{approx_count_distinct, col, concat, concat_ws,
+  hash, lit, pmod, posexplode, when, xxhash64}
 
 /** Benchmark main (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -12,6 +14,25 @@ import org.apache.spark.sql.SparkSession
   * (`samples/huge.py:115-201` times load and reads separately).
   */
 object Bench {
+
+  // Run constants. The noise mechanisms (canaries, steal gate, pass
+  // retries, tripwire) have only ever run at these thresholds; whether each
+  // mechanism stays is judged against executor CPU beside wall time
+  // (ROADMAP item 1), not by tuning a threshold.
+  private val Passes = 2             // timed passes per row, min-merged; the 1e8 block's too
+  private val SettleMs = 8000L       // idle wait before floor calibration
+  private val PreflightTries = 6     // idle-gate attempts before an invalid artifact
+  private val StealDirtyPct = 2.0    // steal share (%) that marks a pass dirty, holds the preflight
+  private val StealProbeSec = 15.0   // length of one preflight steal probe
+  private val StealGateMaxSec = 600L // longest preflight wait for steal to settle
+  private val PassRetries = 2        // re-runs of a dirty pass
+  private val PassDirtyK = 1.75      // spin, mem and io canary / floor ratios
+  private val MemDirtyK = 2.0        // that mark a pass dirty
+  private val IoDirtyK = 4.0
+  private val MinimaPath = "tools/bench_clean_minima.json" // the tripwire's clean minima
+  private val TripwireK = 1.25       // row / clean-minimum ratio that trips a row
+  private val TripwireSlackSec = 0.1 // absolute seconds a row must also exceed to trip
+  private val TripwireRetries = 8    // re-measurements of tripped rows per run
 
   /** Stage-total task metrics per bench row (r15 verdict #1) — see the
     * `rowMetrics` wiring in [[main]]. Thread-safe: the listener bus
@@ -119,7 +140,6 @@ object Bench {
     * production path, not the correctness harness around it.
     */
   private[graft] val rawOps: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.functions.col
     Map(
       "pipe_dedup_simhash" -> ((s, dir) => graft.pipeline.TextDedup.simhashPairs(
         s.read.parquet(s"$dir/documents.parquet"), "doc_id", "text", 3)),
@@ -222,6 +242,114 @@ object Bench {
       .getOrCreate()
     built.sparkContext.setLogLevel("ERROR")
     built
+  }
+
+  // ---- the 1e8 block's pipeline row bodies, sized by the caller: the
+  // bench passes SPARK_GRAFT_HUGE8_ROWS, the test-scope profiler its own
+  // argument, so an attribution run times exactly what the row times.
+
+  /** `n` synthetic facts from id `offset`: two z-order keys in 0..1023 and
+    * a value — the 1e8 z-store rows' input. */
+  private def zframe(spark: SparkSession, n: Long, offset: Long): DataFrame =
+    spark.range(offset, offset + n).select(col("id"),
+      pmod(hash(col("id")), lit(1024)).cast("long").as("a"),
+      pmod(hash(col("id") * 3), lit(1024)).cast("long").as("b"),
+      (col("id") % 97).cast("double").as("value"))
+
+  /** The `huge8_pipe_zstore_build` body: a z-ordered store of `rows` facts
+    * into `dir`. Shuffle width of the range-exchange+sort: 64 output files
+    * ⇒ ~50 MB in-flight sort runs per task at 32 threads at 1e8. The
+    * 32/64/128 sweep found no clear winner (ARCHITECTURE §6b15), so the
+    * measured 64 stays; this row is the suite's most contention/spill-
+    * sensitive job (BENCH_r14's 3.44× trip). */
+  private[graft] def huge8ZstoreBuild(spark: SparkSession, dir: String, rows: Long): Unit = {
+    graft.pipeline.Layout.zorderWrite(spark, dir, zframe(spark, rows, 0),
+      Seq(col("a"), col("b")), bits = 10, numFiles = 64)
+    ()
+  }
+
+  /** Range slices of the MinHash corpora: 256 bound per-task work (~400k
+    * docs each at 1e8) — the partitions-sized-to-memory discipline a
+    * 1000-executor run of this operator applies. */
+  private val MinhashParts = 256
+
+  /** `n` synthetic short docs (8 words from a 50k vocab) in
+    * [[MinhashParts]] range slices; with `plantDups`, every doc whose id
+    * ends in 99 carries the text of id-1. */
+  private def minhashCorpus(spark: SparkSession, n: Long, plantDups: Boolean): DataFrame = {
+    val base = if (plantDups) when(pmod(col("id"), lit(100)) === 99, col("id") - 1)
+      .otherwise(col("id")) else col("id")
+    spark.range(0, n, 1, MinhashParts)
+      .select(col("id").as("doc"),
+        concat_ws(" ", (0 until 8).map(j =>
+          concat(lit("w"), pmod(xxhash64(base, lit(j)), lit(50000)))): _*)
+          .as("text"))
+  }
+
+  /** The `huge8_pipe_minhash` body over `n` docs: MinHash-LSH's corpus-
+    * proportional stage — per-doc signatures + banded bucket hashes — and
+    * the distinct band-hash count it returns. Bringing this row up found
+    * the real 100 TB lever: the former explode→groupBy signature shape
+    * shuffled one sketch per doc (13.5 GB at 1e8, OOM at the suite's 32
+    * partitions) for an aggregation a one-row-per-doc corpus never needed
+    * — signatures are now a codegen'd per-row projection
+    * (MinHashSignature, r16), so the row measures the production path:
+    * scan → project → HLL distinct over band hashes (map-side-combinable),
+    * zero exchange of doc-grain data. The bucket JOIN that follows in
+    * minhashLshPairs costs what collisions cost (data-dependent), and its
+    * semantics are gated at sf0.01 (pipe_dedup_minhash). k=16/bands=4;
+    * k-scaling is linear. */
+  private[graft] def huge8Minhash(spark: SparkSession, n: Long): Long = {
+    val sig = graft.pipeline.TextDedup.minhashSignatures(
+      minhashCorpus(spark, n, plantDups = false), "doc", "text", k = 16)
+    // the operator's own xxhash64 band buckets, 4 bands of 4 rows (round
+    // 18: 32-bit bucket hashes manufactured ~4.7M birthday-collision
+    // candidates at 1e8 docs — see TextDedup.minhashCandidateStage)
+    val banded = sig.select(posexplode(
+      graft.pipeline.TextDedup.bandHashArrOf(4, 4)).as(Seq("band", "bh")))
+    val nb = banded.agg(approx_count_distinct(col("bh")).as("nb"))
+      .collect()(0).getLong(0)
+    require(nb > 0, "banded bucket hashes must materialize")
+    nb
+  }
+
+  /** The `huge8_pipe_minhash_pairs` body over `n` docs with 1% planted
+    * duplicates: the operator must return EXACTLY n/100 verified pairs
+    * (sim = 1.0), so the row self-verifies; returns the pair count. This
+    * prices the data-dependent stage huge8_pipe_minhash deliberately
+    * excludes: the banded bucket self-join (hot-bucket-capped), the pair
+    * groupBy, and the candidate-proportional verify joins. `onPairs` sees
+    * the pairs frame before it is released (the profiler's plan dump).
+    *
+    * k=32/bands=4 (rows-per-band 8), deliberately: noise candidates scale
+    * as n²·(J_bg)^rows, and at 1e8 this corpus has ~6e12 doc pairs sharing
+    * one of 50k vocab words (J_bg = 1/15) — at rows=4 that is ~1.5e8 false
+    * candidates flooding the verify join (measured: a 12.6 GB verify
+    * exchange, 125 s), at rows=8 it is ~10³. The corpus-size-driven rows
+    * choice is the documented LSH scaling contract (ARCHITECTURE "Round
+    * 17", LSH rows-per-band). */
+  private[graft] def huge8MinhashPairs(spark: SparkSession, n: Long,
+      onPairs: DataFrame => Unit = _ => ()): Long = {
+    // partitions-sized-to-memory: the banded self-join shuffles 4 bands ×
+    // docs rows per side — at the suite's 32 partitions each task sorts
+    // ~12.5M rows against a 4e8-row persisted frame and dies in
+    // execution-memory acquisition (measured, r17 bring-up); 256 gives
+    // ~25 MB sort runs, AQE coalesces the small stages
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", MinhashParts.toString)
+    try {
+      val pairs = graft.pipeline.TextDedup.minhashLshPairs(
+        minhashCorpus(spark, n, plantDups = true), "doc", "text",
+        k = 32, bands = 4, threshold = 0.9)
+      val got = pairs.count()
+      onPairs(pairs)
+      pairs.unpersist(blocking = false)
+      // 8-word sets only reach Jaccard ≥ 0.9 when identical, so the
+      // planted pairs are the whole answer — any other count means the
+      // candidate or verify stage broke
+      require(got == n / 100, s"expected ${n / 100} planted duplicate pairs, got $got")
+      got
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   def main(args: Array[String]): Unit = {
@@ -379,27 +507,25 @@ object Bench {
     // encrypted-pricing pair order, toggled per pass (see the pricing rows)
     var zPairFlip = false
 
-    // Contention-proofing: run the whole headline set `passes` times in one
+    // Contention-proofing: run the whole headline set `Passes` times in one
     // process and report the per-query MINIMUM — steady-state latency, as the
     // reference benchmarks steady state too (samples/huge.py:115-201). A
     // transient host spike (e.g. round-3's official artifact, 2× inflated by
     // a concurrent driver job) poisons one pass, not the min of two.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
+    //
     // Settle delay BEFORE floor calibration: the official runner invokes the
     // bench immediately after the full verify — residual host state (page
     // cache writeback, task-cleanup, compaction debris) inflates the warm-up
     // canaries and therefore the FLOOR itself, letting the preflight pass
     // against a poisoned baseline (the documented self-calibration blind
     // spot; likely what let r7's 17.5 s model_build through).
-    Thread.sleep(sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS", "8000").toLong)
+    Thread.sleep(SettleMs)
     // Untimed warm-up spins ×3: C2-compile the spin loop + warm thread
     // startup (the first canary otherwise reads ~1.5× its successors on an
     // idle host), and CALIBRATE the idle floor for this hardware — the min
     // observed median is the best available idle estimate (a hardcoded
     // floor false-positives on marginally slower hosts, r6 advice).
-    // SPARK_GRAFT_CANARY_FLOOR still overrides for cross-host pinning.
     val warm = (1 to 3).map(_ => spinCanary())
-    val envFloor = sys.env.get("SPARK_GRAFT_CANARY_FLOOR").map(_.toDouble)
     // Floor estimator = the SECOND-smallest observation (round 17): the
     // plain min let ONE anomalously fast sample (a 0.004 s mem canary on a
     // host whose steady idle reads 0.010) calibrate an unattainable floor
@@ -413,21 +539,18 @@ object Bench {
     }
     val obsMin = new Min2
     warm.foreach(w => obsMin.add(w._1))
-    def floor: Double = envFloor.getOrElse(obsMin.floor)
+    def floor: Double = obsMin.floor
     // mem/io floors: same min-observed self-calibration (same blind spot:
     // contention present from warm-up through the end poisons the floor —
-    // the preflight backoff is the mitigation), env-overridable for
-    // cross-host pinning
+    // the preflight backoff is the mitigation)
     val warmMem = (1 to 3).map(_ => memCanary())
     val warmIo = (1 to 3).map(_ => ioCanary())
-    val envMemFloor = sys.env.get("SPARK_GRAFT_MEM_FLOOR").map(_.toDouble)
-    val envIoFloor = sys.env.get("SPARK_GRAFT_IO_FLOOR").map(_.toDouble)
     val obsMemMin = new Min2
     val obsIoMin = new Min2
     warmMem.foreach(obsMemMin.add)
     warmIo.foreach(obsIoMin.add)
-    def memFloor: Double = envMemFloor.getOrElse(obsMemMin.floor)
-    def ioFloor: Double = envIoFloor.getOrElse(obsIoMin.floor)
+    def memFloor: Double = obsMemMin.floor
+    def ioFloor: Double = obsIoMin.floor
 
     // PRE-FLIGHT idle gate (r6 verdict: the official artifact ran ~20% hot
     // with contended:false — min-of-passes cannot protect against SUSTAINED
@@ -436,10 +559,9 @@ object Bench {
     // 1.25× the floor, waiting out residual host state with retry/backoff;
     // if it never settles, emit an EXPLICITLY INVALID artifact (value -1,
     // error marker) instead of plausible-but-poisoned numbers.
-    val preflightTries = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_TRIES", "6").toInt
     var preflightOk = false
     var tries = 0
-    while (!preflightOk && tries < preflightTries) {
+    while (!preflightOk && tries < PreflightTries) {
       val (med, _) = spinCanary()
       val mem = memCanary()
       obsMin.add(med) // an observation can only lower the idle estimate
@@ -449,13 +571,13 @@ object Bench {
         tries += 1
         System.err.println(f"[graft.Bench] preflight: canary spin $med%.3fs " +
           f"(floor ${floor}%.3f) / mem $mem%.3fs (floor ${memFloor}%.3f) — " +
-          f"host not idle, backing off (try $tries/$preflightTries)")
+          f"host not idle, backing off (try $tries/$PreflightTries)")
         Thread.sleep(15000)
       }
     }
     if (!preflightOk) {
       System.err.println("[graft.Bench] REFUSING to bench: host never settled " +
-        s"within $preflightTries preflight retries; artifact below is marked invalid")
+        s"within $PreflightTries preflight retries; artifact below is marked invalid")
       println(f"""{"metric":"total","value":-1.0,"unit":"sec","queries":{},"sf":"$sfDir","error":"preflight_contended","canary_floor_sec":$floor%.3f,"contended":true}""")
       spark.stop()
       return
@@ -470,9 +592,6 @@ object Bench {
     // (bounded) and re-probe. If the window never opens, proceed anyway —
     // the per-pass brackets and per-row steal attribution carry the
     // evidence — but the artifact records the gate's verdict.
-    val stealDirtyPct = sys.env.getOrElse("SPARK_GRAFT_STEAL_DIRTY_PCT", "2.0").toDouble
-    val stealProbeSec = sys.env.getOrElse("SPARK_GRAFT_STEAL_PROBE_SEC", "15").toDouble
-    val stealGateMaxSec = sys.env.getOrElse("SPARK_GRAFT_STEAL_GATE_MAX_SEC", "600").toLong
     def probeSteal(sec: Double): Double = {
       val (c0, s0) = cpuStat()
       val end = System.nanoTime() + (sec * 1e9).toLong
@@ -483,17 +602,17 @@ object Bench {
       val (c1, s1) = cpuStat()
       if (c1 > c0) 100.0 * (s1 - s0) / (c1 - c0) else 0.0
     }
-    var preflightSteal = probeSteal(stealProbeSec)
+    var preflightSteal = probeSteal(StealProbeSec)
     var stealGateWaited = 0L
-    while (preflightSteal > stealDirtyPct && stealGateWaited < stealGateMaxSec) {
+    while (preflightSteal > StealDirtyPct && stealGateWaited < StealGateMaxSec) {
       System.err.println(f"[graft.Bench] preflight: hypervisor steal " +
-        f"$preflightSteal%.2f%% > $stealDirtyPct%.2f%% under full-core load — " +
-        f"delaying (waited ${stealGateWaited}s/${stealGateMaxSec}s)")
+        f"$preflightSteal%.2f%% > $StealDirtyPct%.2f%% under full-core load — " +
+        f"delaying (waited ${stealGateWaited}s/${StealGateMaxSec}s)")
       Thread.sleep(30000)
-      stealGateWaited += 30 + stealProbeSec.toLong
-      preflightSteal = probeSteal(stealProbeSec)
+      stealGateWaited += 30 + StealProbeSec.toLong
+      preflightSteal = probeSteal(StealProbeSec)
     }
-    if (preflightSteal > stealDirtyPct) System.err.println(
+    if (preflightSteal > StealDirtyPct) System.err.println(
       f"[graft.Bench] WARNING: steal window never closed " +
       f"($preflightSteal%.2f%% after ${stealGateWaited}s) — proceeding; " +
       "per-row steal attribution carries the evidence")
@@ -543,24 +662,20 @@ object Bench {
     // mid-run contention plateau — pass-2 canary 2.7× the floor — but only
     // WARNED; six rows shipped >2× inflated with no clean sample). Now each
     // pass is bracketed by canaries; a pass whose pre- OR post-canary median
-    // exceeds `dirtyK`× the floor is DIRTY and is re-run (bounded retries,
+    // exceeds `PassDirtyK`× the floor is DIRTY and is re-run (bounded retries,
     // min-of-passes merges the retry). Rows that never land in a clean pass
     // are published in `dirty_rows` and flip `contended` so the driver knows
     // to retry the artifact rather than trust plausible-but-poisoned numbers.
-    val passRetries = sys.env.getOrElse("SPARK_GRAFT_PASS_RETRIES", "2").toInt
-    val dirtyK = sys.env.getOrElse("SPARK_GRAFT_PASS_DIRTY_K", "1.75").toDouble
     // Clean-minima tripwire config, loaded BEFORE the passes (r14 verdict
     // #1): the minima both flag divergent rows in the artifact AND drive
     // the in-run RE-measurement of tripped multi-second rows below — a
     // transient spike no longer poisons the official number permanently.
-    val minimaPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_MINIMA",
-      "tools/bench_clean_minima.json")
     val minimaLoaded: BenchTripwire.Minima = try {
-      val p = java.nio.file.Paths.get(minimaPath)
+      val p = java.nio.file.Paths.get(MinimaPath)
       if (!java.nio.file.Files.exists(p)) BenchTripwire.Empty
       else BenchTripwire.parse(java.nio.file.Files.readString(p))
     } catch { case t: Throwable =>
-      System.err.println(s"[graft.Bench] minima file unreadable ($minimaPath): $t")
+      System.err.println(s"[graft.Bench] minima file unreadable ($MinimaPath): $t")
       BenchTripwire.Empty }
     // The minima are recorded from clean 32-core sign-off runs; at any
     // other core count every compute-bound row legitimately exceeds them
@@ -574,12 +689,10 @@ object Bench {
     if (benchCpus != 32 && minimaLoaded.size > 0) System.err.println(
       s"[graft.Bench] tripwire disarmed: minima are 32-core-armed, this run " +
       s"has cpus=$benchCpus — per-row scaling is the driver's comparison to make")
-    val tripK = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_K", "1.25").toDouble
-    // absolute slack: sub-second rows jitter 40-80 ms between CLEAN runs
+    // TripwireSlackSec: sub-second rows jitter 40-80 ms between CLEAN runs
     // (JIT/GC/page cache) — a relative-only threshold flags 0.15 s rows at
     // 1.3x while the tripwire exists for the 2-4x build-row divergences;
     // a row must exceed BOTH the ratio and this absolute delta to trip
-    val tripSlack = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_SLACK", "0.1").toDouble
     // the tripped ratio of a recorded row vs its HOST-PHASE-ADJUSTED clean
     // minimum (r15 verdict #2: minima from a fast host window flagged
     // 12-27 clean slow-phase rows at 1.3-1.7× — the comparison now scales
@@ -591,10 +704,10 @@ object Bench {
       results.get(name).filter(_ > 0).flatMap(v =>
         minima.rows.get(name).flatMap(row => BenchTripwire.trippedRatio(
           v, row, minima.defaultFloors, Some(floor), Some(memFloor),
-          tripK, tripSlack)))
+          TripwireK, TripwireSlackSec)))
     // in-run re-measurement budget: ≤5 rows total, one retry each, only
     // rows ≥1 s (sub-second trips are jitter-class, the slack's domain)
-    var retryBudget = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_RETRIES", "8").toInt
+    var retryBudget = TripwireRetries
     val tripwireRetried = scala.collection.mutable.ArrayBuffer[String]()
     var retriesUsed = 0
     var dirtyResidue = false
@@ -717,8 +830,9 @@ object Bench {
       // repeated key joins plan with NO Exchange on the fact side. The
       // one-time compaction is timed once (guarded on the cube, not the pass
       // number, so a retried first pass can't re-time it); the per-pass read
-      // is the cube's batched point read with broadcast disabled — the
-      // 100 TB shape, an address list too big to broadcast.
+      // is the cube's batched point read as a shuffle join (readBatch's
+      // merge hint on the address side) — the 100 TB shape, an address
+      // list too big to broadcast.
       if (bucketedCube == null && want("huge_reads_bucketed_10k"))
         rec("huge_bucketed_write", try mtime("huge_bucketed_write") {
         spark.sql("DROP TABLE IF EXISTS bench_huge_bucketed")
@@ -727,26 +841,12 @@ object Bench {
           spark, Some(base.facts))
         bucketedCube.compactToBucketed("bench_huge_bucketed", 8)
       } catch { case _: Throwable => -1.0 })
-      if (want("huge_reads_bucketed_10k")) rec("huge_reads_bucketed_10k", try {
-        val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      if (want("huge_reads_bucketed_10k")) rec("huge_reads_bucketed_10k",
         try mtime("huge_reads_bucketed_10k") {
           graft.tpch.HugeModel
             .pointReadBatch(bucketedCube, 10000, broadcastAddrs = false)
             .count(); ()
-        } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-          // unset, not skip: leaving -1 behind would run every later pass
-          // with AQE broadcast conversion disabled — a different planner
-          // config than pass 1, poisoning min_of_passes comparability
-          prevA match {
-            case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-            case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-          }
-        }
-      } catch { case t: Throwable =>
+        } catch { case t: Throwable =>
         System.err.println(s"[graft.Bench] huge_reads_bucketed_10k failed: $t"); -1.0 })
       // r14 verdict #3: PRICE at-rest encryption — the same z-store build
       // and manifest-read aggregate over the events table, plain vs
@@ -755,7 +855,7 @@ object Bench {
       // remembered claim. Key material derives ONCE outside the timers
       // (PBKDF2 at 600k iterations is deliberately slow).
       if (want("pipe_zstore_build_encrypted")) {
-        import org.apache.spark.sql.functions.{col, sum}
+        import org.apache.spark.sql.functions.sum
         // force the lazy key derivation HERE — a lazy val first touched
         // inside the encrypted build's time{} would put the deliberately
         // slow 600k-iteration PBKDF2 inside the very timer the pairing
@@ -808,8 +908,6 @@ object Bench {
     // the pass brackets sample all three channels; mem/io thresholds are
     // looser than spin (their idle variance is larger), and io is the
     // loosest — page-cache state makes a single fsync the noisiest probe
-    val memDirtyK = sys.env.getOrElse("SPARK_GRAFT_MEM_DIRTY_K", "2.0").toDouble
-    val ioDirtyK = sys.env.getOrElse("SPARK_GRAFT_IO_DIRTY_K", "4.0").toDouble
     // Hypervisor-steal bracket per pass (round 16): the r16 sign-off runs
     // measured 1.7-4.7% steal windows inflating rows 1.3-1.9× while EVERY
     // in-guest canary sat near its floor (spin phase 1.10) — steal is the
@@ -819,7 +917,6 @@ object Bench {
     // each pass is bracketed and a pass whose steal share exceeds the
     // threshold is DIRTY like a hot canary: re-run, min-merge, and rows
     // without a steal-quiet sample self-report in dirty_rows.
-    // (stealDirtyPct is hoisted above — the preflight steal gate shares it.)
     val passSteal = scala.collection.mutable.ArrayBuffer[Double]()
     def stealBracket[A](body: => A): (A, Double) = {
       val (c0, s0) = cpuStat()
@@ -834,7 +931,7 @@ object Bench {
     val memSamples = scala.collection.mutable.ArrayBuffer[Double]()
     val ioSamples = scala.collection.mutable.ArrayBuffer[Double]()
     var pass = 1
-    while (pass <= passes) {
+    while (pass <= Passes) {
       val pre = spinCanary(); canaries += pre
       val preMem = memCanary(); memSamples += preMem
       val preIo = ioCanary(); ioSamples += preIo
@@ -850,18 +947,18 @@ object Bench {
       obsMin.add(post._1)
       obsMemMin.add(postMem)
       obsIoMin.add(postIo)
-      val dirty = pre._1 > dirtyK * floor || post._1 > dirtyK * floor ||
-        preMem > memDirtyK * memFloor || postMem > memDirtyK * memFloor ||
-        preIo > ioDirtyK * ioFloor || postIo > ioDirtyK * ioFloor ||
-        steal > stealDirtyPct
-      if (dirty && retriesUsed < passRetries) {
+      val dirty = pre._1 > PassDirtyK * floor || post._1 > PassDirtyK * floor ||
+        preMem > MemDirtyK * memFloor || postMem > MemDirtyK * memFloor ||
+        preIo > IoDirtyK * ioFloor || postIo > IoDirtyK * ioFloor ||
+        steal > StealDirtyPct
+      if (dirty && retriesUsed < PassRetries) {
         retriesUsed += 1
         System.err.println(f"[graft.Bench] pass $pass dirty: spin " +
-          f"(${pre._1}%.3f, ${post._1}%.3f) vs ${dirtyK}x${floor}%.3f, mem " +
-          f"($preMem%.3f, $postMem%.3f) vs ${memDirtyK}x${memFloor}%.3f, io " +
-          f"($preIo%.3f, $postIo%.3f) vs ${ioDirtyK}x${ioFloor}%.3f, steal " +
-          f"$steal%.2f%% vs $stealDirtyPct%.2f%% — " +
-          f"re-running pass (retry $retriesUsed/$passRetries)")
+          f"(${pre._1}%.3f, ${post._1}%.3f) vs ${PassDirtyK}x${floor}%.3f, mem " +
+          f"($preMem%.3f, $postMem%.3f) vs ${MemDirtyK}x${memFloor}%.3f, io " +
+          f"($preIo%.3f, $postIo%.3f) vs ${IoDirtyK}x${ioFloor}%.3f, steal " +
+          f"$steal%.2f%% vs $StealDirtyPct%.2f%% — " +
+          f"re-running pass (retry $retriesUsed/$PassRetries)")
         Thread.sleep(10000)
         // do not advance `pass`: min-of-passes merges the retry's numbers
       } else {
@@ -908,7 +1005,7 @@ object Bench {
           retryCleanup.clear()
           val post = spinCanary(); canaries += post
           obsMin.add(post._1)
-          if (pre._1 <= dirtyK * floor && post._1 <= dirtyK * floor)
+          if (pre._1 <= PassDirtyK * floor && post._1 <= PassDirtyK * floor)
             cleanNames += n
           tripwireRetried += n
         }
@@ -950,7 +1047,6 @@ object Bench {
              "huge_reads_bucketed_10k" | "huge_top_cached" => None
         case "pipe_zstore_build_plain" | "pipe_zstore_build_encrypted" =>
           Some(() => {
-            import org.apache.spark.sql.functions.col
             val ev = spark.read.parquet(s"$sfDir/events.parquet")
               .select(col("event_id"), col("user_id"), col("value"))
             val zcols = Seq(col("user_id"),
@@ -982,11 +1078,10 @@ object Bench {
       // huge8_build shipped 71.3 s against a 36.2 s clean sign-off — the
       // one-shot sample had no second chance). Each pass drops the memoized
       // model and rebuilds for real; pass 2 rides warmed JIT.
-      val passes8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_PASSES", "2").toInt
       val pre8 = spinCanary(); canaries += pre8
       obsMin.add(pre8._1)
       val (cpu80, steal80) = cpuStat()
-      for (_ <- 1 to passes8) {
+      for (_ <- 1 to Passes) {
         record("huge8_build",
           try mtime("huge8_build") { graft.tpch.HugeModel.rebuild(spark, rows8); () }
           catch { case t: Throwable =>
@@ -1053,34 +1148,18 @@ object Bench {
       // track the interleaving data (a z-confined batch re-clusters the
       // touched tail files only), not the store size.
       try {
-        import org.apache.spark.sql.functions.{col, hash, lit, pmod}
         val zdir = java.nio.file.Files.createTempDirectory("bench_zstore8").toString
-        def zframe(n: Long, offset: Long) =
-          spark.range(offset, offset + n).select(col("id"),
-            pmod(hash(col("id")), lit(1024)).cast("long").as("a"),
-            pmod(hash(col("id") * 3), lit(1024)).cast("long").as("b"),
-            (col("id") % 97).cast("double").as("value"))
         val zc = Seq(col("a"), col("b"))
-        // Shuffle width of the 1e8 range-exchange+sort: 64 output files ⇒
-        // ~50 MB in-flight sort runs per task at 32 threads. The 32/64/128
-        // sweep found no clear winner (ARCHITECTURE §6b15), so the
-        // measured 64 stays; this row is the suite's most
-        // contention/spill-sensitive job (BENCH_r14's 3.44× trip).
-        val zfiles = 64
-        def zstoreBuild(dir: String): Unit = {
-          graft.pipeline.Layout.zorderWrite(spark, dir, zframe(rows8, 0),
-            zc, bits = 10, numFiles = zfiles)
-          ()
-        }
-        results("huge8_pipe_zstore_build") = try mtime("huge8_pipe_zstore_build") { zstoreBuild(zdir) }
-        catch { case t: Throwable =>
-          System.err.println(s"[graft.Bench] huge8_pipe_zstore_build failed: $t"); -1.0 }
+        results("huge8_pipe_zstore_build") =
+          try mtime("huge8_pipe_zstore_build") { huge8ZstoreBuild(spark, zdir, rows8) }
+          catch { case t: Throwable =>
+            System.err.println(s"[graft.Bench] huge8_pipe_zstore_build failed: $t"); -1.0 }
         var off = rows8
         if (results("huge8_pipe_zstore_build") >= 0) {
           // z-confined 1e5-row batches (keys < 32 → z in the lowest 1/1024
           // of the space), one append per pass — min-of-passes
-          for (_ <- 1 to passes8) {
-            val batch = zframe(100000L, off)
+          for (_ <- 1 to Passes) {
+            val batch = zframe(spark, 100000L, off)
               .withColumn("a", col("a") % 32)
               .withColumn("b", col("b") % 32)
             record("huge8_pipe_zappend",
@@ -1099,10 +1178,10 @@ object Bench {
             val zdir2 = java.nio.file.Files.createTempDirectory("bench_zstore8r").toString
             retryCleanup += (() =>
               { org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(zdir2)); () })
-            zstoreBuild(zdir2)
+            huge8ZstoreBuild(spark, zdir2, rows8)
           })
           case "huge8_pipe_zappend" => Some(() => {
-            val batch = zframe(100000L, off)
+            val batch = zframe(spark, 100000L, off)
               .withColumn("a", col("a") % 32)
               .withColumn("b", col("b") % 32)
             graft.pipeline.Layout.zorderAppend(spark, zdir, batch, zc, bits = 10)
@@ -1117,113 +1196,29 @@ object Bench {
       } catch { case t: Throwable =>
         System.err.println(s"[graft.Bench] huge8 pipe block failed: $t") }
       // ---- pipeline-side 1e8 row #2 (r15 verdict #4): MinHash-LSH's
-      // corpus-proportional stage — per-doc signatures + banded bucket
-      // hashes — over 1e8 synthetic short docs (8 words from a 50k
-      // vocab), measured every round with minima armed like its z-store
-      // sibling. Bringing this row up found the real 100 TB lever: the
-      // former explode→groupBy signature shape shuffled one sketch per
-      // doc (13.5 GB here, OOM at the suite's 32 partitions) for an
-      // aggregation a one-row-per-doc corpus never needed — signatures
-      // are now a codegen'd per-row projection (MinHashSignature, r16),
-      // so the row measures the production path: scan → project → HLL
-      // distinct over band hashes (map-side-combinable), zero exchange of
-      // doc-grain data. The bucket JOIN that follows in minhashLshPairs
-      // costs what collisions cost (data-dependent), and its semantics
-      // are gated at sf0.01 (pipe_dedup_minhash). k=16/bands=4; k-scaling
-      // is linear.
-      try {
-        import org.apache.spark.sql.functions.{approx_count_distinct, col,
-          concat, concat_ws, lit, pmod, posexplode, when, xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
-          rows8.toString).toLong
-        // 256 range slices bound per-task work (~400k docs each) — the
-        // partitions-sized-to-memory discipline a 1000-executor run of
-        // this operator applies
-        val minhashParts = 256
-        def minhashBody(): Unit = {
-          val docs = spark.range(0, docs8, 1, minhashParts)
-            .select(col("id").as("doc"),
-              concat_ws(" ", (0 until 8).map(j =>
-                concat(lit("w"), pmod(xxhash64(col("id"), lit(j)), lit(50000)))): _*)
-                .as("text"))
-          val sig = graft.pipeline.TextDedup.minhashSignatures(
-            docs, "doc", "text", k = 16)
-          // the operator's own xxhash64 band buckets, 4 bands of 4 rows
-          // (round 18: 32-bit bucket hashes manufactured ~4.7M
-          // birthday-collision candidates at 1e8 docs — see
-          // TextDedup.minhashCandidateStage)
-          val banded = sig.select(posexplode(
-            graft.pipeline.TextDedup.bandHashArrOf(4, 4)).as(Seq("band", "bh")))
-          val nb = banded.agg(approx_count_distinct(col("bh")).as("nb"))
-            .collect()(0).getLong(0)
-          require(nb > 0, "banded bucket hashes must materialize")
-        }
-        // measured ONCE like its z-store sibling (the row runs ~a minute at
-        // 1e8 — per-pass repeats would double the guarded block for JIT
-        // margin the long row doesn't need); a trip re-measures below
-        record("huge8_pipe_minhash",
-          try mtime("huge8_pipe_minhash") { minhashBody() }
-          catch { case t: Throwable =>
-            System.err.println(s"[graft.Bench] huge8_pipe_minhash failed: $t"); -1.0 })
-        retryTripped(Seq("huge8_pipe_minhash"), {
-          case "huge8_pipe_minhash" => Some(() => minhashBody())
-          case _ => None
-        })
-        // ---- pipeline-side 1e8 row #3 (r16 verdict #4): the LSH candidate
-        // JOIN + exact verify, end-to-end, with a CONTROLLED 1% duplicate
-        // fraction — every doc whose id ends in 99 carries the text of
-        // id-1, so the operator must return EXACTLY docs8/100 verified
-        // pairs (sim = 1.0) and the row self-verifies. This prices the
-        // data-dependent stage huge8_pipe_minhash deliberately excludes:
-        // the banded bucket self-join (now hot-bucket-capped), the
-        // pair groupBy, and the candidate-proportional verify joins.
-        //
-        // k=32/bands=4 (rows-per-band 8), deliberately: noise candidates
-        // scale as n²·(J_bg)^rows, and this corpus has ~6e12 doc pairs
-        // sharing one of 50k vocab words (J_bg = 1/15) — at rows=4 that
-        // is ~1.5e8 false candidates flooding the verify join (measured:
-        // a 12.6 GB verify exchange, 125 s), at rows=8 it is ~10³. The
-        // corpus-size-driven rows choice is the documented LSH scaling
-        // contract (ARCHITECTURE "Round 17", LSH rows-per-band).
-        val pairDocs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
-          docs8.toString).toLong
-        def minhashPairsBody(): Unit = {
-          // partitions-sized-to-memory: the banded self-join shuffles 4
-          // bands × docs rows per side — at the suite's 32 partitions each
-          // task sorts ~12.5M rows against a 4e8-row persisted frame and
-          // dies in execution-memory acquisition (measured, r17 bring-up);
-          // 256 gives ~25 MB sort runs, AQE coalesces the small stages
-          val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", minhashParts.toString)
-          try {
-            val base = when(pmod(col("id"), lit(100)) === 99, col("id") - 1)
-              .otherwise(col("id"))
-            val docs = spark.range(0, pairDocs8, 1, minhashParts)
-              .select(col("id").as("doc"),
-                concat_ws(" ", (0 until 8).map(j =>
-                  concat(lit("w"), pmod(xxhash64(base, lit(j)), lit(50000)))): _*)
-                  .as("text"))
-            val pairs = graft.pipeline.TextDedup.minhashLshPairs(
-              docs, "doc", "text", k = 32, bands = 4, threshold = 0.9)
-            val n = pairs.count()
-            pairs.unpersist(blocking = false)
-            // 8-word sets only reach Jaccard ≥ 0.9 when identical, so the
-            // planted pairs are the whole answer — any other count means the
-            // candidate or verify stage broke
-            require(n == pairDocs8 / 100,
-              s"expected ${pairDocs8 / 100} planted duplicate pairs, got $n")
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-        record("huge8_pipe_minhash_pairs",
-          try mtime("huge8_pipe_minhash_pairs") { minhashPairsBody() }
-          catch { case t: Throwable =>
-            System.err.println(s"[graft.Bench] huge8_pipe_minhash_pairs failed: $t"); -1.0 })
-        retryTripped(Seq("huge8_pipe_minhash_pairs"), {
-          case "huge8_pipe_minhash_pairs" => Some(() => minhashPairsBody())
-          case _ => None
-        })
-      } catch { case t: Throwable =>
-        System.err.println(s"[graft.Bench] huge8 minhash block failed: $t") }
+      // corpus-proportional stage over rows8 docs (huge8Minhash), measured
+      // ONCE like its z-store sibling (the row runs ~a minute at 1e8 —
+      // per-pass repeats would double the guarded block for JIT margin the
+      // long row doesn't need); a trip re-measures below
+      record("huge8_pipe_minhash",
+        try mtime("huge8_pipe_minhash") { huge8Minhash(spark, rows8); () }
+        catch { case t: Throwable =>
+          System.err.println(s"[graft.Bench] huge8_pipe_minhash failed: $t"); -1.0 })
+      retryTripped(Seq("huge8_pipe_minhash"), {
+        case "huge8_pipe_minhash" => Some(() => { huge8Minhash(spark, rows8); () })
+        case _ => None
+      })
+      // ---- pipeline-side 1e8 row #3 (r16 verdict #4): the LSH candidate
+      // JOIN + exact verify, end-to-end, over the same corpus size with 1%
+      // planted duplicates (huge8MinhashPairs)
+      record("huge8_pipe_minhash_pairs",
+        try mtime("huge8_pipe_minhash_pairs") { huge8MinhashPairs(spark, rows8); () }
+        catch { case t: Throwable =>
+          System.err.println(s"[graft.Bench] huge8_pipe_minhash_pairs failed: $t"); -1.0 })
+      retryTripped(Seq("huge8_pipe_minhash_pairs"), {
+        case "huge8_pipe_minhash_pairs" => Some(() => { huge8MinhashPairs(spark, rows8); () })
+        case _ => None
+      })
       val post8 = spinCanary(); canaries += post8
       obsMin.add(post8._1)
       // the block's own steal bracket — same verdict channel as the passes
@@ -1236,8 +1231,8 @@ object Bench {
         "huge8_pipe_minhash_pairs")
         .filter(results.contains)
       allNames ++= names8
-      if (pre8._1 <= dirtyK * floor && post8._1 <= dirtyK * floor &&
-          steal8 <= stealDirtyPct)
+      if (pre8._1 <= PassDirtyK * floor && post8._1 <= PassDirtyK * floor &&
+          steal8 <= StealDirtyPct)
         cleanNames ++= names8
     }
 
@@ -1246,7 +1241,7 @@ object Bench {
     val canaryMed = canaries.map(c => f"${c._1}%.3f").mkString("[", ",", "]")
     val canaryMax = canaries.map(c => f"${c._2}%.3f").mkString("[", ",", "]")
     // Contention verdict: floor = the min canary median this run has ever
-    // observed (warm-up + preflight calibration above; env-overridable). A
+    // observed (warm-up + preflight calibration above). A
     // competing load must time-slice against the per-core spins and
     // stretches the canary MEDIAN past 1.3× the floor. Real contention (a
     // concurrent verify/spec job — the r5 artifact's 2× poisoning) is
@@ -1286,10 +1281,10 @@ object Bench {
     // official artifact diverged 2-4× from the builder's sign-off on
     // one-shot rows and nobody noticed until the judge read it): every row
     // is compared against the best clean minimum recorded in
-    // tools/bench_clean_minima.json (written from builder sign-off runs;
-    // SPARK_GRAFT_BENCH_MINIMA overrides the path; loaded above, before
-    // the passes). Rows exceeding `tripK`× their clean minimum self-report
-    // in the artifact's `tripwire` object and on stderr — and multi-second
+    // tools/bench_clean_minima.json (written from clean sign-off runs;
+    // loaded above, before the passes). Rows exceeding `TripwireK`× their
+    // clean minimum self-report in the artifact's `tripwire` object and on
+    // stderr — and multi-second
     // rows were already RE-measured in-run (`tripwire_retried`), so a
     // surviving trip is persistent, not a transient spike. An absent/empty
     // minima file disarms the tripwire (first round on a new host).
@@ -1300,9 +1295,8 @@ object Bench {
     val tripRetriedJson = tripwireRetried.distinct
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // "timing" is the semantics marker: per-query values are the MINIMUM
-    // over `passes` warmed in-process passes (steady state), not one cold
+    // over `Passes` warmed in-process passes (steady state), not one cold
     // pass — artifacts before round 4 were single-pass and not comparable
-    val floorSource = if (envFloor.isDefined) "env" else "derived_min_observed"
     val phasesJson = buildPhases.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val dirtyRowsJson = dirtyRows.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -1342,7 +1336,7 @@ object Bench {
     // `queries` serializes LAST (r16 verdict #2): the driver's tail capture
     // keeps the END of the line, and two rounds of artifacts shipped with
     // the per-row results dict truncated out of the front
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$benchCpus,"sf":"$sfDir","passes":$passes,"timing":"min_of_passes","model_build_phases":$phasesJson,"canary_spin_med_sec":$canaryMed,"canary_spin_max_sec":$canaryMax,"canary_threads":$nSpin,"canary_floor_sec":$floor%.3f,"canary_floor_source":"$floorSource","canary_mem_med_sec":$memJson,"mem_floor_sec":$memFloor%.3f,"canary_io_sec":$ioJson,"io_floor_sec":$ioFloor%.3f,"contended":$contended,"canary_ramp":$ramped,"pass_retries_used":$retriesUsed,"dirty_rows":$dirtyRowsJson,"steal_pct":$stealPct%.2f,"preflight_steal_pct":$preflightSteal%.2f,"steal_gate_wait_sec":$stealGateWaited,"tripwire":$tripJson,"tripwire_retried":$tripRetriedJson,"tripwire_threshold":$tripK%.2f,"tripwire_slack_sec":$tripSlack%.2f,"tripwire_rows_known":${minima.size},"tripwire_phase":$phaseJson,"pass_steal_pct":$passStealJson,"row_steal":$rowStealJson,"row_metrics":$rowMetricsJson,"queries":$qs}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$benchCpus,"sf":"$sfDir","passes":$Passes,"timing":"min_of_passes","model_build_phases":$phasesJson,"canary_spin_med_sec":$canaryMed,"canary_spin_max_sec":$canaryMax,"canary_threads":$nSpin,"canary_floor_sec":$floor%.3f,"canary_floor_source":"derived_min_observed","canary_mem_med_sec":$memJson,"mem_floor_sec":$memFloor%.3f,"canary_io_sec":$ioJson,"io_floor_sec":$ioFloor%.3f,"contended":$contended,"canary_ramp":$ramped,"pass_retries_used":$retriesUsed,"dirty_rows":$dirtyRowsJson,"steal_pct":$stealPct%.2f,"preflight_steal_pct":$preflightSteal%.2f,"steal_gate_wait_sec":$stealGateWaited,"tripwire":$tripJson,"tripwire_retried":$tripRetriedJson,"tripwire_threshold":$TripwireK%.2f,"tripwire_slack_sec":$TripwireSlackSec%.2f,"tripwire_rows_known":${minima.size},"tripwire_phase":$phaseJson,"pass_steal_pct":$passStealJson,"row_steal":$rowStealJson,"row_metrics":$rowMetricsJson,"queries":$qs}""")
     // r18 verdict #1: ALL stderr warnings print BEFORE the final rows line.
     // sbt re-logs the program's stderr as "[error] ..." lines into the same
     // captured stream, and r18's TRIPWIRE warning (printed after the rows)
@@ -1352,7 +1346,7 @@ object Bench {
     // object lives in the long line above and in BENCH_FULL.
     val topTrip = tripped.headOption.map(_._2).getOrElse(0.0)
     if (tripped.nonEmpty) System.err.println(
-      s"[graft.Bench] TRIPWIRE: ${tripped.size} row(s) exceed ${tripK}x their " +
+      s"[graft.Bench] TRIPWIRE: ${tripped.size} row(s) exceed ${TripwireK}x their " +
       s"recorded clean minimum — ${tripped.take(5).map { case (k, r) => f"$k ($r%.2fx)" }
         .mkString(", ")}${if (tripped.size > 5) ", ..." else ""}; " +
       "treat this artifact's deltas with suspicion")

@@ -819,12 +819,14 @@ final class Cube(
     * point-read loop `samples/huge.py:134-157`, batched the Spark-native
     * way — per-cell driver round-trips can never amortize the per-job
     * floor). `broadcastAddrs = false` is the at-scale shape for address
-    * lists too big to broadcast: a shuffle semi join, exchange-free on the
-    * fact side when the cube is [[compactToBucketed]]-backed.
+    * lists too big to broadcast: a sort-merge semi join, chosen by a `merge`
+    * hint on the address side whatever the broadcast thresholds say, and
+    * exchange-free on the fact side when the cube is
+    * [[compactToBucketed]]-backed.
     */
   def readBatch(addrs: DataFrame, broadcastAddrs: Boolean = true): DataFrame = {
     val a = addrs.select(dimCols.map(col): _*)
-    facts.join(if (broadcastAddrs) broadcast(a) else a, dimCols, "left_semi")
+    facts.join(if (broadcastAddrs) broadcast(a) else a.hint("merge"), dimCols, "left_semi")
   }
 
   def cellsCount: Long = facts.count()
@@ -1076,7 +1078,7 @@ final class Cube(
     val sels = ids.map(Seq(_))
     val kinds = gridKinds(sels)
     if ((0 until nDims).exists(i => kinds(i) == Cube.GridClosure && needsWeight(i))) bump(4)
-    grid(sels, kinds, identity) match {
+    grid(sels, kinds) match {
       case Right((g, _)) => if (g.present(0)) Some(g.doubleValue(0)) else None
       case Left((df, value)) =>
         // one cell: a global sum — a constant grid key would only add a
@@ -1104,11 +1106,10 @@ final class Cube(
     *    overlay, and returns a local relation. It serves a grid when base
     *    reads have already put an index in place for the current base
     *    frame (a grid never starts a build), no dimension is degenerate,
-    *    the grid has at most [[DriverGrid.MaxCells]] cells, `valueExpr` is
-    *    the identity, and the sums can be made exact (double values, or
-    *    decimal values with at most one weighted closure join, no
-    *    null-valued base row, no candidate row past a long, and no
-    *    overflow). A served report selects a small share of a working-set
+    *    the grid has at most [[DriverGrid.MaxCells]] cells, and the sums
+    *    can be made exact (double values, or decimal values with at most
+    *    one weighted closure join, no null-valued base row, no candidate
+    *    row past a long, and no overflow). A served report selects a small share of a working-set
     *    cube, and summing it takes well under a millisecond, where
     *    planning and scheduling a job costs hundreds. The kernel runs when
     *    this method is called (its result is already computed);
@@ -1121,9 +1122,9 @@ final class Cube(
     * Reports (views, dialect queries, cross-cube slices) take their grid
     * through [[reportGrid]] instead, which keeps small grids on the driver.
     */
-  def gridAggregate(selections: Seq[Seq[Int]], valueExpr: Column => Column = identity): DataFrame = {
+  def gridAggregate(selections: Seq[Seq[Int]]): DataFrame = {
     require(selections.length == nDims)
-    grid(selections, gridKinds(selections), valueExpr) match {
+    grid(selections, gridKinds(selections)) match {
       case Left((df, value)) => sumPlan(df, value)
       case Right((g, schema)) => Cube.GridRows(schema, kernelRows(g)).toDF(spark)
     }
@@ -1140,7 +1141,7 @@ final class Cube(
     */
   def reportGrid(selections: Seq[Seq[Int]], collectAny: Boolean = false): Either[DataFrame, Cube.GridRows] = {
     require(selections.length == nDims)
-    grid(selections, gridKinds(selections), identity) match {
+    grid(selections, gridKinds(selections)) match {
       case Right((g, schema)) => Right(Cube.GridRows(schema, kernelRows(g)))
       case Left((df, value)) =>
         val plan = sumPlan(df, value)
@@ -1198,22 +1199,22 @@ final class Cube(
     * the kernel runs lock-free. It never starts an index build: only an
     * index that base reads (or [[enablePointIndex]]) put in place for the
     * current frame is used. */
-  private def grid(selections: Seq[Seq[Int]], kinds: Array[Int],
-      valueExpr: Column => Column): Either[(DataFrame, Column), (DriverGrid.Result, StructType)] = {
+  private def grid(selections: Seq[Seq[Int]],
+      kinds: Array[Int]): Either[(DataFrame, Column), (DriverGrid.Result, StructType)] = {
     val (b, ov, idx) = stateLock.synchronized((base, overlay, if (pointIdxBase eq base) pointIdx else null))
-    kernel(b, ov, idx, selections, kinds, valueExpr, fullScan = false) match {
+    kernel(b, ov, idx, selections, kinds, fullScan = false) match {
       case Some(g) => bump(5); counters.addAndGet(6, g._1.rowsVisited); Right(g)
-      case None => Left(sparkGridInput(factsOf(b, ov), selections, kinds, valueExpr))
+      case None => Left(sparkGridInput(factsOf(b, ov), selections, kinds))
     }
   }
 
   /** The driver kernel's answer over one (base, overlay, index) snapshot,
     * with the schema the Spark plan would have; None when it gives none. */
   private def kernel(b: DataFrame, ov: scala.collection.Map[Vector[Int], Option[Double]], idx: PointIndex,
-      selections: Seq[Seq[Int]], kinds: Array[Int], valueExpr: Column => Column,
+      selections: Seq[Seq[Int]], kinds: Array[Int],
       fullScan: Boolean): Option[(DriverGrid.Result, StructType)] =
     if (idx == null || idx.nullRows > 0) None
-    else driverPlan(selections, kinds, valueExpr, b).flatMap { case (axes, decimal, resultPrecision) =>
+    else driverPlan(selections, kinds, b).flatMap { case (axes, decimal, resultPrecision) =>
       DriverGrid.run(idx, ov, axes, decimal, resultPrecision, fullScan).map { r =>
         val keyFields = (0 until nDims).map { i =>
           val f = b.schema(s"d$i")
@@ -1233,7 +1234,7 @@ final class Cube(
     * when the kernel does not serve the grid. Counts nothing. */
   private[core] def kernelGrid(selections: Seq[Seq[Int]], fullScan: Boolean): Option[Cube.GridRows] = {
     val (b, ov, idx) = stateLock.synchronized((base, overlay, if (pointIdxBase eq base) pointIdx else null))
-    kernel(b, ov, idx, selections, gridKinds(selections), identity, fullScan)
+    kernel(b, ov, idx, selections, gridKinds(selections), fullScan)
       .map { case (g, schema) => Cube.GridRows(schema, kernelRows(g)) }
   }
 
@@ -1242,7 +1243,7 @@ final class Cube(
     * sum type; None sends the grid to the Spark plan. A decimal cube with
     * two weighted joins goes to Spark: there the product type exceeds 38
     * digits and Spark rounds. */
-  private def driverPlan(selections: Seq[Seq[Int]], kinds: Array[Int], valueExpr: Column => Column,
+  private def driverPlan(selections: Seq[Seq[Int]], kinds: Array[Int],
       b: DataFrame): Option[(Array[DriverGrid.Axis], Option[(Int, Int)], Int)] = {
     val members = selections.map(_.distinct.toArray)
     val schema = b.schema
@@ -1258,8 +1259,7 @@ final class Cube(
     }
     if (kinds.contains(Cube.GridRaw) || vt != valueField.dataType ||
         !withinKernelBound(selections) ||
-        dimCols.exists(c => schema(c).dataType != IntegerType) ||
-        valueExpr(col("value")) != col("value")) None
+        dimCols.exists(c => schema(c).dataType != IntegerType)) None
     else numeric.map { case (decimal, resultPrecision) =>
       val axes = Array.tabulate(nDims) { i =>
         val ms = members(i)
@@ -1276,8 +1276,8 @@ final class Cube(
   /** The Spark plan's input to the grid sum: `facts` filtered and
     * closure-joined per dimension, with the grid keys `a0 … aN-1`, and the
     * weighted value column to sum per key. */
-  private def sparkGridInput(facts: DataFrame, selections: Seq[Seq[Int]], kinds: Array[Int],
-      valueExpr: Column => Column): (DataFrame, Column) = {
+  private def sparkGridInput(facts: DataFrame, selections: Seq[Seq[Int]],
+      kinds: Array[Int]): (DataFrame, Column) = {
     var df = facts
     var weightCols = List.empty[Column]
     selections.zipWithIndex.foreach { case (sel, i) =>
@@ -1322,7 +1322,7 @@ final class Cube(
           if (needsWeight(i)) weightCols ::= col(s"w_$i")
       }
     }
-    (df, weightCols.foldLeft(valueExpr(col("value")))(_ * _))
+    (df, weightCols.foldLeft(col("value"))(_ * _))
   }
 
   /** Leaf-level ids under the given members (no weights — membership only). */

@@ -397,7 +397,9 @@ object Rules {
       .select((dimCols.map(col) :+ col("value")): _*)
   }
 
-  private def matchRule(cube: Cube, b: Bolt): Option[RuleDef] =
+  /** The read rule that matches `b`, if any: the first registered rule,
+    * neither ON_ENTRY nor COMMAND, whose trigger `b` satisfies. */
+  private[graft] def matchRule(cube: Cube, b: Bolt): Option[RuleDef] =
     cube.rules.find(r => r.scope != RuleScope.OnEntry &&
       r.scope != RuleScope.Command && matches(cube, r, b))
 

@@ -1,7 +1,7 @@
 package graft.server
 
 import graft.core.{Cube, Database}
-import graft.olap.{OlapQuery, View, ViewDef, ViewWindow}
+import graft.olap.{OlapQuery, Rules, View, ViewDef, ViewWindow}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.util.concurrent.locks.ReentrantReadWriteLock
 import org.apache.spark.sql.Row
@@ -238,7 +238,9 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
         // amortize the per-request floor, so the engine-native shape
         // (Cube.readBatch's join) gets its own route. Each address listed
         // more than once is read once and answers every listing. Addresses
-        // naming AGGREGATED members fall back to per-address rollup gets.
+        // naming AGGREGATED members, and base addresses a read rule matches
+        // (a rule on a leaf measure), are read through Cube.get, as
+        // GET /cells reads them.
         case Seq("cells", dbName, cubeName, "batch")
             if ex.getRequestMethod == "POST" =>
           implicit val fmts: Formats = DefaultFormats
@@ -255,7 +257,10 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
               c.dimensions(i).idOf(m) })
             val isBase = (b: Seq[Int]) => b.zipWithIndex.forall { case (id, i) =>
               c.dimensions(i).isDegenerate || c.dimensions(i).levelOf(id) == 0 }
-            val (baseIdx, aggIdx) = bolts.zipWithIndex.partition(x => isBase(x._1))
+            val ruled = (a: List[String]) =>
+              c.rules.nonEmpty && Rules.matchRule(c, c.bolt(a)).isDefined
+            val (baseIdx, getIdx) = bolts.zipWithIndex.partition { case (b, i) =>
+              isBase(b) && !ruled(addrs(i)) }
             val resolved = new Array[Option[Double]](bolts.size)
             if (baseIdx.nonEmpty) {
               val s = c.spark
@@ -276,7 +281,7 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
               // the frame, so the single job is already write-correct
               baseIdx.foreach { case (b, i) => resolved(i) = got.get(b.toVector) }
             }
-            aggIdx.foreach { case (_, i) => resolved(i) = c.get(addrs(i)) }
+            getIdx.foreach { case (_, i) => resolved(i) = c.get(addrs(i)) }
             resolved.toSeq
           }
           json(ex, 200, "cells" -> addrs.zip(values).map { case (a, v) =>

@@ -101,12 +101,9 @@ class HugeScaleSpec extends AnyFunSuite {
     val addrs = spark.range(10000).select(addrCols: _*)
     val nDistinct = addrs.distinct().count()
 
-    // force the shuffle-join shape (the 100 TB shape: an address list too
-    // big to broadcast) and compare layouts
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqeBc = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    // the shuffle-join shape (the 100 TB shape: an address list too big to
+    // broadcast), planned by a merge hint on the address side — no session
+    // conf flip — and compared across layouts
     try {
       // node lines print as "+- Exchange …" / ":- Exchange …" at any tree
       // depth; ReusedExchange deliberately not counted ("- Reused…")
@@ -114,7 +111,7 @@ class HugeScaleSpec extends AnyFunSuite {
         "[+:]- Exchange".r
           .findAllIn(df.queryExecution.executedPlan.toString).length
 
-      val plainJoin = plain.join(addrs, dimCols, "left_semi")
+      val plainJoin = plain.join(addrs.hint("merge"), dimCols, "left_semi")
       // the CUBE-API read over the bucketed-backed cube — not a hand join
       val bucketedJoin = bcube.readBatch(addrs, broadcastAddrs = false)
       // plain layout shuffles BOTH sides; bucketed shuffles only the
@@ -159,13 +156,6 @@ class HugeScaleSpec extends AnyFunSuite {
       info(f"$rows rows: bucketedCompact=$tWrite%.1fs shuffleSemiJoin " +
         f"plain=$tPlain%.2fs bucketed=$tBucketed%.2fs hits=$nBucketed")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      // unset when originally unset — restoring nothing would leak -1 into
-      // the shared session and disable AQE broadcast joins for later suites
-      prevAqeBc match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None => spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
       spark.sql("DROP TABLE IF EXISTS huge_bucketed")
       cube.facts.unpersist(blocking = true)
     }

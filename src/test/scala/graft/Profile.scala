@@ -12,10 +12,19 @@ import org.apache.spark.sql.SparkSession
   *   Test/runMain graft.Profile stages <gate>   per-stage metrics (run/cpu/
   *                                              gc/spill/shuffle) of a warm
   *                                              pass
+  *   Test/runMain graft.Profile pairs8 [docs] [plan]
+  *                                              Bench's huge8_pipe_minhash_pairs
+  *                                              body over `docs` (default 1e8)
+  *   Test/runMain graft.Profile minhash8 [docs] [passes]
+  *                                              Bench's huge8_pipe_minhash body
+  *   Test/runMain graft.Profile stream <gate…>  per-trigger streaming metrics
+  *   Test/runMain graft.Profile hugeplan        plan of the huge-model build
   *   Test/runMain graft.Profile huge8 [build|zstore|both] [passes]
   *                                              1e8 build harness (env:
   *                                              SPARK_GRAFT_HUGE8_ROWS)
   *
+  * The 1e8 modes print per-stage metrics of stages ≥ 0.5 s and run
+  * Bench's own row bodies, so they time exactly what the rows time.
   * `SP_SF` picks the testdata dir (default sf0.1). Numbers from this light
   * context are for ITERATION; quote full-bench minima in records.
   */
@@ -48,20 +57,7 @@ object Profile {
         val name = rest.headOption.getOrElse("pipe_dedup_minhash")
         val spark = Bench.session()
         @volatile var show = false
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = if (show) {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            System.err.println(f"[stage ${si.stageId}%3d] ${dur}%6.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%5d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%5d " +
-              f"in=${tm.inputMetrics.recordsRead}%9d shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.split("\n").head.take(50)}")
-          }
-        })
+        printStages(spark, on = () => show)
         SparkEntry.queries(name)(spark, sfDir).count() // warm pass, unlisted
         show = true
         val t0 = System.nanoTime()
@@ -69,45 +65,17 @@ object Profile {
         println(f"[stages] $name total ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
         spark.stop()
       case "pairs8" =>
-        // the huge8_pipe_minhash_pairs body (Bench.scala 1e8 block), with
-        // per-stage metrics — attribution for the suite's biggest row.
-        // SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS sizes it down for iteration.
-        import org.apache.spark.sql.functions.{col, concat, concat_ws, lit,
-          pmod, when, xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
-          "100000000").toLong
-        val parts = 256 // the bench's range slices
+        // Bench's huge8_pipe_minhash_pairs body with per-stage metrics —
+        // attribution for the suite's biggest row; `plan` also prints the
+        // pairs frame's formatted plan
+        val docs = rest.headOption.map(_.toLong).getOrElse(100000000L)
         val spark = Bench.session()
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
-              f"in=${tm.inputMetrics.recordsRead}%10d shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
-        val base = when(pmod(col("id"), lit(100)) === 99, col("id") - 1)
-          .otherwise(col("id"))
-        val docs = spark.range(0, docs8, 1, parts)
-          .select(col("id").as("doc"),
-            concat_ws(" ", (0 until 8).map(j =>
-              concat(lit("w"), pmod(xxhash64(base, lit(j)), lit(50000)))): _*)
-              .as("text"))
+        printStages(spark, minSec = 0.5)
         val t0 = System.nanoTime()
-        val pairs = graft.pipeline.TextDedup.minhashLshPairs(
-          docs, "doc", "text", k = 32, bands = 4, threshold = 0.9)
-        val n = pairs.count()
+        val n = Bench.huge8MinhashPairs(spark, docs,
+          onPairs = p => if (rest.drop(1).contains("plan")) p.explain("formatted"))
         println(f"[pairs8] total ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"pairs=$n (expect ${docs8 / 100})")
-        if (sys.env.contains("SPARK_GRAFT_PAIRS8_PLAN")) pairs.explain("formatted")
+          f"pairs=$n (expect ${docs / 100})")
         spark.stop()
       case "stream" =>
         // per-trigger attribution for the streaming twins: queryProgress
@@ -153,42 +121,15 @@ object Profile {
         }
         spark.stop()
       case "minhash8" =>
-        // the huge8_pipe_minhash body (signatures + band hashes + HLL
-        // distinct, zero doc-grain exchange) with per-stage metrics —
-        // adjudication harness for the r18 50.3-s-vs-37.9-min question.
-        import org.apache.spark.sql.functions.{approx_count_distinct,
-          col, concat, concat_ws, lit, pmod, posexplode, xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
-          "100000000").toLong
-        val parts = 256 // the bench's range slices
-        val passes = rest.headOption.map(_.toInt).getOrElse(3)
+        // Bench's huge8_pipe_minhash body (signatures + band hashes + HLL
+        // distinct, zero doc-grain exchange) with per-stage metrics
+        val docs = rest.headOption.map(_.toLong).getOrElse(100000000L)
+        val passes = rest.drop(1).headOption.map(_.toInt).getOrElse(3)
         val spark = Bench.session()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
+        printStages(spark, minSec = 0.5)
         (1 to passes).foreach { i =>
           val t0 = System.nanoTime()
-          val docs = spark.range(0, docs8, 1, parts)
-            .select(col("id").as("doc"),
-              concat_ws(" ", (0 until 8).map(j =>
-                concat(lit("w"), pmod(xxhash64(col("id"), lit(j)), lit(50000)))): _*)
-                .as("text"))
-          val sig = graft.pipeline.TextDedup.minhashSignatures(
-            docs, "doc", "text", k = 16)
-          val banded = sig.select(posexplode(
-            graft.pipeline.TextDedup.bandHashArrOf(4, 4)).as(Seq("band", "bh")))
-          val nb = banded.agg(approx_count_distinct(col("bh")).as("nb"))
-            .collect()(0).getLong(0)
+          val nb = Bench.huge8Minhash(spark, docs)
           println(f"[minhash8] pass$i ${(System.nanoTime() - t0) / 1e9}%8.2f s nb=$nb")
         }
         spark.stop()
@@ -204,24 +145,9 @@ object Profile {
         val passes = rest.drop(1).headOption.map(_.toInt).getOrElse(2)
         val rows = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ROWS", "100000000").toLong
         val spark = Bench.session()
-        // per-stage attribution (same shape as pairs8): where does the
-        // build row actually spend — generation+hash, exchange, final
-        // agg, or cache materialization?
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
-              f"shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
+        // per-stage attribution: where does the build row actually spend —
+        // generation+hash, exchange, final agg, or cache materialization?
+        printStages(spark, minSec = 0.5)
         import scala.jdk.CollectionConverters._
         def gcMs: Long = java.lang.management.ManagementFactory
           .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -243,24 +169,37 @@ object Profile {
           System.gc(); Thread.sleep(1500)
         }
         if (what == "zstore" || what == "both") {
-          import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-          def zframe(n: Long) = spark.range(0, n).select(col("id"),
-            pmod(hash(col("id")), lit(1024)).cast("long").as("a"),
-            pmod(hash(col("id") * 3), lit(1024)).cast("long").as("b"),
-            (col("id") % 97).cast("double").as("value"))
           (1 to passes).foreach { _ =>
             val d = java.nio.file.Files.createTempDirectory("profile_z8").toString
-            timed("huge8_pipe_zstore_build") {
-              graft.pipeline.Layout.zorderWrite(spark, d, zframe(rows),
-                Seq(col("a"), col("b")), bits = 10, numFiles = 64); ()
-            }
+            timed("huge8_pipe_zstore_build") { Bench.huge8ZstoreBuild(spark, d, rows) }
             org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
           }
         }
         spark.stop()
       case other =>
         System.err.println(s"unknown Profile mode '$other' — " +
-          "use warm|cold|plan|stages|huge8")
+          "use warm|cold|plan|stages|pairs8|stream|minhash8|hugeplan|huge8")
     }
   }
+
+  /** Prints each completed stage's duration and task metrics to stderr;
+    * stages shorter than `minSec`, and any completing while `on` is false,
+    * are skipped. */
+  private def printStages(spark: SparkSession, minSec: Double = 0.0,
+      on: () => Boolean = () => true): Unit =
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val si = s.stageInfo
+        val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
+        val tm = si.taskMetrics
+        if (on() && dur >= minSec) System.err.println(
+          f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
+          f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
+          f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
+          f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
+          f"in=${tm.inputMetrics.recordsRead}%10d shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
+          f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
+      }
+    })
 }

@@ -165,6 +165,33 @@ class RestServerSpec extends AnyFunSuite {
     assert(values.head.contains(12.5))
   }
 
+  test("a batch answers a rule on a leaf measure like GET /cells") {
+    // "Profit in %" is a leaf of `measures` with an ALL_LEVELS rule, so an
+    // all-leaf address naming it is a base address the rule answers
+    val c = db.cube("sales")
+    c.set(Seq("2021", "Apr", "East", "coupe", "Sales"), 40.0)
+    c.set(Seq("2021", "Apr", "East", "coupe", "Cost"), 30.0)
+    val ruled = List("2021", "Apr", "East", "coupe", "Profit in %")
+    val listed = List(ruled, List("2021", "Apr", "East", "coupe", "Sales"),
+      List("2021", "Mai", "East", "coupe", "Profit in %"),
+      List("All years", "Q2", "Total", "Total", "Profit in %"), ruled)
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val r = post("/cells/tiny/sales/batch", compact(render("addresses" -> listed)))
+    assert(r.statusCode() == 200, r.body())
+    val values = (parse(r.body()) \ "cells").extract[List[org.json4s.JValue]]
+      .map(cell => (cell \ "value").extractOpt[Double])
+    val viaGet = listed.map { a =>
+      val g = get("/cells/tiny/sales?address=" +
+        java.net.URLEncoder.encode(a.mkString(","), "UTF-8"))
+      assert(g.statusCode() == 200, g.body())
+      (parse(g.body()) \ "value").extractOpt[Double]
+    }
+    assert(values == viaGet, s"batch $values vs GET /cells $viaGet")
+    assert(values.head.contains(0.25), "(40 - 30) / 40 from the rule")
+  }
+
   test("indexed GET /cells answers under the 40 ms delayed-ACK floor") {
     // a dedicated database+server: compact() persists the base, so base
     // reads serve from the driver point index instead of Spark jobs
